@@ -729,29 +729,6 @@ def _group_scope_select(df: DataFrame, group_by: list, key_columns: tuple) -> li
     ]
 
 
-def run_sequence_pattern(
-    df: DataFrame, c: SequencePattern, key_columns: tuple
-) -> DataFrame:
-    """Per-group ordered sequence vs regex: collect (order_by..., value)
-    tuples, sort_array for a total in-group order (ties broken by the
-    value itself), join with the separator, regex once per GROUP.
-    collect_list keeps NULL values only inside the ordering struct;
-    they are filtered before the join — matching SQL string_agg. No
-    window, no per-row regex. Single-check facade over
-    run_group_scope_checks (suites fuse same-group_by checks there)."""
-    return run_group_scope_checks(df, [c], key_columns)
-
-
-def run_group_agg_bounds(
-    df: DataFrame, c: GroupAggBounds, key_columns: tuple
-) -> DataFrame:
-    """Per-group statistic bound; out-of-bounds groups become
-    group-scoped violation rows (bounded by #groups). NULL statistic
-    => vacuous pass (all-NULL group). Single-check facade over
-    run_group_scope_checks."""
-    return run_group_scope_checks(df, [c], key_columns)
-
-
 def _seq_agg_expr(c: SequencePattern) -> Column:
     ob = [F.col(x) for x in c.order_by]
     return F.array_join(

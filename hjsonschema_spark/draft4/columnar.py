@@ -1,4 +1,4 @@
-"""Columnar (whole-stage-codegen) Draft-4 validation of a JSON column.
+"""Columnar (pure Catalyst expression) Draft-4 validation of a JSON column.
 
 The mapInPandas path (draft4/udf.py) is exact for every schema but
 loops per document inside each Arrow batch — the slowest operator per
@@ -57,10 +57,28 @@ and arrays here are per-row payload fields, not the engine's many-row
 x many-iteration hot path that CLAUDE.md's higher-order-function rule
 targets).
 
-Scale: the columnar plan is one projection inside whole-stage codegen
-— no Python worker, no Arrow transfer, no per-document interpreter —
-so it scans at parquet-read speed and scales with executors like any
-other fused row check.
+Scale: the columnar plan runs in the JVM — no Python worker, no Arrow
+transfer, no per-document interpreter — and scales with executors like
+any other row check. Its work is staged as projections over the input:
+(1) the parsed variant; (2) the root's type class and views, and one
+``try_variant_get`` per property or required key; (3) each property's
+views (``_views``: type class, string, decimal, double, boolean,
+array); (4) the failure array and verdict, built from column
+references only, after which the temporary columns are dropped. So
+each document is parsed once and each property extracted once. The
+staging is needed because every failure sits in a ``CaseWhen`` branch
+(guarded by the root being an object), and Catalyst's subexpression
+elimination does not reach into conditional branches: inlined, the
+parse and the extractions ran again for every keyword. It holds
+because ``CollapseProject`` does not inline a non-cheap expression
+that its consumer references more than once, and ``ColumnPruning``
+drops the views no failure reads. Both are Catalyst behaviour, not
+API; tests/test_columnar_json.py::test_staged_plan_parses_once pins
+them (on pyspark 4.1.2). The failure projection itself runs outside
+whole-stage codegen: ``array_compact`` is a higher-order ``filter``,
+which falls back to interpreted evaluation (a ``flatten`` of
+0/1-element arrays keeps codegen, but ran 10-20% slower in a trial on
+12k tool-call documents at 4 cores).
 """
 
 from __future__ import annotations
@@ -314,20 +332,44 @@ def _fail(
     )
 
 
-def _scalar_failures(vk: Column, sub: dict, ip: Column | str, sp: str) -> list[Column]:
+def _views(vk: Column) -> dict[str, Column]:
+    """The reads of one variant instance that its failure expressions
+    share: the JSON type class (``schema_of_variant``) and the value as
+    string, decimal(38,18), double, boolean and array<variant> (each
+    NULL when the instance does not have that shape)."""
+    return {
+        "sch": F.schema_of_variant(vk),
+        "str": F.try_variant_get(vk, "$", "string"),
+        "dec": F.try_variant_get(vk, "$", "decimal(38,18)"),
+        "dbl": F.try_variant_get(vk, "$", "double"),
+        "bool": F.try_variant_get(vk, "$", "boolean"),
+        "arr": F.try_variant_get(vk, "$", "array<variant>"),
+    }
+
+
+def _has_class(sch: Column, cls: str) -> Column:
+    """``schema_of_variant`` output names JSON type ``cls`` (never NULL)."""
+    return F.coalesce(sch.startswith(cls), F.lit(False))
+
+
+def _scalar_failures(
+    vk: Column, sub: dict, ip: Column | str, sp: str,
+    views: dict[str, Column] | None = None,
+) -> list[Column]:
     """Failure structs for one scalar-subschema instance (a property
     value or an array element); every condition is vacuously false
     when the instance is absent or the type class doesn't match the
-    keyword (reference type-mismatch ⇒ pass)."""
+    keyword (reference type-mismatch ⇒ pass). ``views`` are the staged
+    ``_views(vk)`` columns; without them (inside a per-element lambda,
+    where nothing can be staged) they are built here."""
+    v = views or _views(vk)
     present = vk.isNotNull()
-    sch = F.schema_of_variant(vk)
+    sch = v["sch"]
     is_str = sch == "STRING"
     is_bool = sch == "BOOLEAN"
     is_null = sch == "VOID"
     is_num = sch.isin("BIGINT", "DOUBLE", "FLOAT") | sch.startswith("DECIMAL")
-    as_str = F.try_variant_get(vk, "$", "string")
-    as_dec = F.try_variant_get(vk, "$", "decimal(38,18)")
-    as_dbl = F.try_variant_get(vk, "$", "double")
+    as_str, as_dec, as_dbl, as_bool = v["str"], v["dec"], v["dbl"], v["bool"]
     # mathematical integrality (reference Utils.hs:94-119: 1e3 and 1.0
     # ARE integers): variant stores 1e3 as DOUBLE, so the type tag
     # alone is not enough — test the VALUE for wholeness, exact
@@ -339,7 +381,6 @@ def _scalar_failures(vk: Column, sub: dict, ip: Column | str, sp: str) -> list[C
         as_dbl % F.lit(1.0) == 0.0,
         F.lit(False),
     )
-    as_bool = F.try_variant_get(vk, "$", "boolean")
     out: list[Column] = []
 
     def num_cmp(op) -> Column:
@@ -361,14 +402,17 @@ def _scalar_failures(vk: Column, sub: dict, ip: Column | str, sp: str) -> list[C
         out.append(_fail(present & ~ok, "type", ip, f"{sp}/type", as_str))
     if "enum" in sub:
         hits = []
+        # string members as ONE isin (an InSet hash lookup above 10
+        # members), not an OR chain of equalities
+        strs = [m for m in sub["enum"] if isinstance(m, str)]
+        if strs:
+            hits.append(is_str & as_str.isin(*strs))
         for m in sub["enum"]:
             if isinstance(m, bool):
                 hits.append(is_bool & (as_bool == F.lit(m)))
             elif m is None:
                 hits.append(is_null)
-            elif isinstance(m, str):
-                hits.append(is_str & (as_str == F.lit(m)))
-            else:  # number: mathematical equality via decimal compare
+            elif not isinstance(m, str):  # number: mathematical equality
                 hits.append(is_num & num_cmp(lambda x, _m=m: x == _num_lit(_m)))
         matched = F.coalesce(reduce_or(hits), F.lit(False))
         out.append(_fail(present & ~matched, "enum", ip, f"{sp}/enum", as_str))
@@ -418,29 +462,27 @@ def _empty_fails() -> Column:
     return F.array().cast(_FAIL_DDL)
 
 
-def _array_failures(vk: Column, sub: dict, ip: str, sp: str) -> Column:
-    """Array-of-scalars checks on one variant instance: returns an
-    ARRAY of failure structs (empty when the instance is not an array
-    — type-mismatch ⇒ vacuous, matching validator._array which only
-    runs on list instances). The ``type`` keyword itself is handled by
-    the caller so its failure joins the scalar struct stream."""
-    arr = F.try_variant_get(vk, "$", "array<variant>")
-    is_arr = arr.isNotNull()
+def _array_failures(v: dict[str, Column], sub: dict, ip: str, sp: str) -> Column:
+    """Array-of-scalars checks on one variant instance, given its
+    ``_views``: returns an ARRAY of failure structs (empty when the
+    instance is not an array — type-mismatch ⇒ vacuous, matching
+    validator._array which only runs on list instances). The ``type``
+    keyword itself is handled by the caller so its failure joins the
+    scalar struct stream."""
+    arr = v["arr"]
     singles: list[Column] = []
     if "maxItems" in sub:
         singles.append(
             _fail(
                 F.size(arr) > F.lit(sub["maxItems"]),
-                "maxItems", ip, f"{sp}/maxItems",
-                F.try_variant_get(vk, "$", "string"),
+                "maxItems", ip, f"{sp}/maxItems", v["str"],
             )
         )
     if "minItems" in sub:
         singles.append(
             _fail(
                 F.size(arr) < F.lit(sub["minItems"]),
-                "minItems", ip, f"{sp}/minItems",
-                F.try_variant_get(vk, "$", "string"),
+                "minItems", ip, f"{sp}/minItems", v["str"],
             )
         )
     parts: list[Column] = []
@@ -467,27 +509,28 @@ def _array_failures(vk: Column, sub: dict, ip: str, sp: str) -> Column:
             )
         )
     if not parts:
-        return F.when(is_arr, _empty_fails()).otherwise(_empty_fails())
+        return _empty_fails()
     total = parts[0]
     for p in parts[1:]:
         total = F.concat(total, p)
-    return F.when(is_arr, total).otherwise(_empty_fails())
+    return F.when(arr.isNotNull(), total).otherwise(_empty_fails())
 
 
-def _nested_required_failure(vk: Column, sub: dict, ip: str, sp: str) -> Column | None:
+def _nested_required_failure(
+    vk: Column, v: dict[str, Column], sub: dict, ip: str, sp: str
+) -> Column | None:
     """required inside a one-level nested object property: ONE failure
     listing applies only when the nested instance IS an object
     (validator._object runs only on dict instances)."""
     req = sub.get("required") or []
     if not req:
         return None
-    is_obj = F.coalesce(F.schema_of_variant(vk).startswith("OBJECT"), F.lit(False))
     any_missing = reduce_or(
         [F.try_variant_get(vk, f"$.{k}", "variant").isNull() for k in req]
     )
     return _fail(
-        is_obj & any_missing, "required", ip, f"{sp}/required",
-        F.try_variant_get(vk, "$", "string"),
+        _has_class(v["sch"], "OBJECT") & any_missing, "required", ip,
+        f"{sp}/required", v["str"],
     )
 
 
@@ -496,6 +539,16 @@ def reduce_or(cols: list[Column]) -> Column:
     for c in cols[1:]:
         out = out | c
     return out
+
+
+def _temp_prefix(taken: list[str]) -> str:
+    """A column-name prefix that no name in ``taken`` starts with,
+    compared case-insensitively as Spark resolves names by default."""
+    prefix = "_d4c"
+    low = [c.lower() for c in taken]
+    while any(c.startswith(prefix) for c in low):
+        prefix += "_"
+    return prefix
 
 
 def validate_json_column_columnar(
@@ -507,81 +560,77 @@ def validate_json_column_columnar(
 ) -> DataFrame:
     """Compile a liftable schema (see ``liftable``) to pure columns.
     Same output contract as draft4.udf.validate_json_column: NULL json
-    ⇒ NULL verdict, unparseable json ⇒ (False, [parse failure])."""
+    ⇒ NULL verdict, unparseable json ⇒ (False, [parse failure]).
+
+    The work is staged as projections (see the module docstring,
+    "Scale"): the parsed variant; the root's views and one extraction
+    per property or required key; each property's views; the failure
+    array; the verdict. The first three stages' columns are named with
+    a prefix no input column starts with, and are dropped at the end."""
     if not liftable(schema):
         raise ValueError("schema outside the columnar subset; use the UDF path")
+    t = _temp_prefix([*df.columns, valid_col, failures_col])
     j = F.col(json_col)
-    var = F.try_parse_json(j)
-    root_sch = F.schema_of_variant(var)
-    root_is_obj = F.coalesce(root_sch.startswith("OBJECT"), F.lit(False))
-    root_is_arr = F.coalesce(root_sch.startswith("ARRAY"), F.lit(False))
+    props = schema.get("properties", {})
+    keys = list(dict.fromkeys([*props, *(schema.get("required") or [])]))
+    kcol = {k: f"{t}k{i}" for i, k in enumerate(keys)}
+    parsed = {f"{t}v": F.try_parse_json(j)}
+    var = F.col(f"{t}v")
+    root_views = _views(var)
+    extracted = {
+        **{f"{t}r_{n}": e for n, e in root_views.items()},
+        **{kcol[k]: F.try_variant_get(var, f"$.{k}", "variant") for k in keys},
+    }
+    # unreferenced views are pruned by Catalyst
+    typed = {
+        f"{kcol[k]}_{n}": e for k in props for n, e in _views(F.col(kcol[k])).items()
+    }
+    root = {n: F.col(f"{t}r_{n}") for n in root_views}
+    root_is_obj = _has_class(root["sch"], "OBJECT")
 
     fails: list[Column] = []
     fail_arrays: list[Column] = []
-    if schema.get("type") == "object":
-        fails.append(
-            _fail(~root_is_obj, "type", "", "/type", F.try_variant_get(var, "$", "string"))
-        )
-    elif schema.get("type") == "array":
-        fails.append(
-            _fail(~root_is_arr, "type", "", "/type", F.try_variant_get(var, "$", "string"))
-        )
+    if schema.get("type") in ("object", "array"):
+        cls = "OBJECT" if schema["type"] == "object" else "ARRAY"
+        fails.append(_fail(~_has_class(root["sch"], cls), "type", "", "/type", root["str"]))
     if schema.get("required"):
         # ONE failure regardless of how many keys are missing (the
         # exact path reports a single required failure listing them);
         # required applies only to objects (type-mismatch => pass).
-        any_missing = reduce_or(
-            [
-                F.try_variant_get(var, f"$.{k}", "variant").isNull()
-                for k in schema["required"]
-            ]
-        )
+        any_missing = reduce_or([F.col(kcol[k]).isNull() for k in schema["required"]])
         fails.append(_fail(root_is_obj & any_missing, "required", "", "/required", j))
-    for k, sub in schema.get("properties", {}).items():
-        vk = F.try_variant_get(var, f"$.{k}", "variant")
+    for k, sub in props.items():
+        vk = F.col(kcol[k])
+        v = {n: F.col(f"{kcol[k]}_{n}") for n in root_views}
         ip, sp = f"/{k}", f"/properties/{k}"
         if _scalar_liftable(sub):
             fails.extend(
-                F.when(root_is_obj, f) for f in _scalar_failures(vk, sub, ip, sp)
+                F.when(root_is_obj, f) for f in _scalar_failures(vk, sub, ip, sp, v)
             )
-        elif _array_liftable(sub):
-            if sub.get("type") == "array":
-                is_arr_k = F.coalesce(
-                    F.schema_of_variant(vk).startswith("ARRAY"), F.lit(False)
+            continue
+        if sub.get("type") in ("array", "object"):
+            cls = "ARRAY" if sub["type"] == "array" else "OBJECT"
+            fails.append(
+                F.when(
+                    root_is_obj,
+                    _fail(
+                        vk.isNotNull() & ~_has_class(v["sch"], cls), "type", ip,
+                        f"{sp}/type", v["str"],
+                    ),
                 )
-                fails.append(
-                    F.when(
-                        root_is_obj,
-                        _fail(
-                            vk.isNotNull() & ~is_arr_k, "type", ip, f"{sp}/type",
-                            F.try_variant_get(vk, "$", "string"),
-                        ),
-                    )
-                )
+            )
+        if _array_liftable(sub):
             fail_arrays.append(
-                F.when(root_is_obj, _array_failures(vk, sub, ip, sp)).otherwise(
+                F.when(root_is_obj, _array_failures(v, sub, ip, sp)).otherwise(
                     _empty_fails()
                 )
             )
         else:  # nested required-only object
-            if sub.get("type") == "object":
-                is_obj_k = F.coalesce(
-                    F.schema_of_variant(vk).startswith("OBJECT"), F.lit(False)
-                )
-                fails.append(
-                    F.when(
-                        root_is_obj,
-                        _fail(
-                            vk.isNotNull() & ~is_obj_k, "type", ip, f"{sp}/type",
-                            F.try_variant_get(vk, "$", "string"),
-                        ),
-                    )
-                )
-            nf = _nested_required_failure(vk, sub, ip, sp)
+            nf = _nested_required_failure(vk, v, sub, ip, sp)
             if nf is not None:
                 fails.append(F.when(root_is_obj, nf))
     if any(kw in schema for kw in ("items", "minItems", "maxItems")):
-        fail_arrays.append(_array_failures(var, schema, "", ""))
+        fail_arrays.append(_array_failures(root, schema, "", ""))
 
     parse_fail = F.struct(
         F.lit("parse").alias("keyword"),
@@ -598,10 +647,11 @@ def validate_json_column_columnar(
         .when(var.isNull(), F.array(parse_fail))
         .otherwise(fail_arr)
     )
-    return df.withColumn(failures_col, failures).withColumn(
-        valid_col,
-        F.when(j.isNull(), F.lit(None)).otherwise(F.size(F.col(failures_col)) == 0),
-    )
+    valid = F.when(j.isNull(), F.lit(None)).otherwise(F.size(F.col(failures_col)) == 0)
+    stages = [parsed, extracted, typed, {failures_col: failures}, {valid_col: valid}]
+    for exprs in stages:
+        df = df.withColumns(exprs)
+    return df.drop(*[n for exprs in stages[:3] for n in exprs])
 
 
 def validate_json_column_auto(

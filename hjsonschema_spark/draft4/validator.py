@@ -126,10 +126,6 @@ def canonical(v: Any) -> Any:
     return ("o", frozenset((k, canonical(x)) for k, x in v.items()))
 
 
-def deep_equal(a: Any, b: Any) -> bool:
-    return canonical(a) == canonical(b)
-
-
 def _dump(v: Any) -> str:
     try:
         return json.dumps(v, default=str, sort_keys=True)[:512]

@@ -1,10 +1,11 @@
 """SparkSession construction with scale-oriented defaults.
 
 All engine entry points accept an existing SparkSession; this builder is
-for tests / bench / CLI use. Defaults are chosen for the sandbox
-(local[N], single JVM) but every knob matters identically on a real
-cluster: AQE for runtime re-planning + skew-join splitting, Arrow for
-the pandas-UDF boundary, shuffle partitions sized to the core count.
+for tests / bench / CLI use. Defaults fit the host they run on
+(local[N] over the CPUs this process may use, one JVM with half the
+host's memory) but every knob matters identically on a real cluster:
+AQE for runtime re-planning + skew-join splitting, Arrow for the
+pandas-UDF boundary, shuffle partitions sized to the core count.
 """
 
 from __future__ import annotations
@@ -19,8 +20,45 @@ from pyspark.sql import SparkSession
 _ICEBERG_AVAILABLE: bool | None = None
 
 
+_MEMINFO = "/proc/meminfo"
+_MAX_DRIVER_MB = 48 * 1024
+_FALLBACK_DRIVER_MB = 2 * 1024
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the number of CPUs this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_memory_kb() -> int | None:
+    """``MemTotal`` from ``/proc/meminfo``, else physical pages times
+    page size (``os.sysconf``, also on macOS), else None."""
+    try:
+        with open(_MEMINFO) as f:
+            return next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        pass
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else half of the host's memory, capped at
+    48g; 2g where the host's memory cannot be read. In local mode the
+    driver heap is the whole executor memory pool, and a heap larger
+    than the host lets the JVM grow until the machine runs out."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    kb = _host_memory_kb()
+    if kb is None:
+        return f"{_FALLBACK_DRIVER_MB}m"
+    return f"{min(kb // 2048, _MAX_DRIVER_MB)}m"
 
 
 def _local_dir() -> str:
@@ -65,8 +103,8 @@ def get_spark(
         # Timestamps in the transcript model are instants (UTC).
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = ONE JVM: the driver heap is the entire executor
-        # memory pool; size it so 32 concurrent tasks don't spill/GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # memory pool (see default_driver_memory)
+        .config("spark.driver.memory", default_driver_memory())
         # shuffle spill dir: this sandbox has ONE shared disk, so disk
         # shuffle IO is a serial term that caps multi-core scaling; on a
         # real cluster shuffle disks scale with nodes, so tmpfs is the

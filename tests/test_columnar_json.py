@@ -22,6 +22,7 @@ import json
 import pathlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from hjsonschema_spark.draft4.columnar import (
     liftable,
@@ -367,3 +368,66 @@ def test_dollar_terminator_deviation(spark):
     assert col_rows[1] is True and udf_rows[1] is True
     # THE deviation: Java '$' accepts the \r\n-terminated value
     assert col_rows[2] is True and udf_rows[2] is False
+
+
+# The benchmark's liftable shape: required, enum, pattern, integer and
+# number bounds over a flat object.
+STAGED_SCHEMA = {
+    "type": "object",
+    "required": ["tool", "call_id", "tokens"],
+    "properties": {
+        "tool": {"type": "string", "enum": ["search", "fetch"]},
+        "call_id": {"type": "string", "pattern": "^k[0-9]+$"},
+        "tokens": {"type": "integer", "minimum": 1, "maximum": 100000},
+        "score": {"type": "number", "minimum": 0, "maximum": 1},
+    },
+}
+
+
+@pytest.mark.parametrize(
+    "schema", [STAGED_SCHEMA, ARRAY_BATTERY_SCHEMA], ids=["scalar", "array_nested"]
+)
+def test_staged_plan_parses_once(spark, schema):
+    """The columnar compile stages the parse and each property
+    extraction as projections of their own, so the executed plan holds
+    ONE parseJson and one '$.k' read per property. Catalyst does not
+    eliminate common subexpressions inside CaseWhen branches, so
+    inlining them would repeat the work per keyword; CollapseProject
+    keeps a non-cheap expression that is referenced more than once in
+    its own projection. Pinned on the Catalyst in use (pyspark 4.1)."""
+    df = spark.createDataFrame([(1, '{"id": 1}')], "i int, j string")
+    out = validate_json_column_columnar(df, "j", schema)
+    plan = out.select("_valid", "_failures_json")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("parseJson(") == 1, plan
+    for k in schema["properties"]:
+        assert plan.count(f"$.{k},") == 1, (k, plan)
+    assert out.columns == ["i", "j", "_failures_json", "_valid"]
+
+
+def test_staged_names_avoid_input_columns(spark):
+    """Input columns named like the staged temporaries survive, and the
+    verdicts do not change."""
+    docs = [
+        '{"tool": "search", "call_id": "k1", "tokens": 5}',
+        '{"tool": "nope", "call_id": "x", "tokens": 0, "score": 2}',
+        '{"tool": "fetch"}',
+        "{bad",
+        None,
+    ]
+    plain = spark.createDataFrame(list(enumerate(docs)), "i int, j string")
+    want = [
+        (r._valid, sorted((f.keyword, f.instance_path) for f in r._failures_json or []))
+        for r in validate_json_column_columnar(plain, "j", STAGED_SCHEMA).orderBy("i").collect()
+    ]
+    assert [w[0] for w in want] == [True, False, False, False, None]
+    taken = ["_d4cv", "_D4CK0", "_d4c_", "_d4c__k0_str"]
+    df = plain.select("i", "j", *[F.lit(n).alias(n) for n in taken])
+    out = validate_json_column_columnar(df, "j", STAGED_SCHEMA)
+    assert out.columns == ["i", "j", *taken, "_failures_json", "_valid"]
+    rows = out.orderBy("i").collect()
+    assert [
+        (r._valid, sorted((f.keyword, f.instance_path) for f in r._failures_json or []))
+        for r in rows
+    ] == want
+    assert all(r[n] == n for r in rows for n in taken)
+
