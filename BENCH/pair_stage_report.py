@@ -1,17 +1,17 @@
-"""Per-execution N->4N scaling decomposition for one banked pair.
+"""Per-execution N->4N scaling decomposition for one scaling run.
 
-VERDICT (round 3) item 2: every qualifying scaling pair should carry
-event-log proof that the fused ordered pass's per-row cost stays flat
-(<= 1.5x) from 8 to 32 threads — wall-clock efficiency alone can hide
-an operator whose CPU cost inflates with parallelism (exactly the
-round-3 whole-group window-buffer defect).
+A scaling run should carry event-log proof that the fused ordered
+pass's per-row cost stays flat (<= 1.5x) from N to 4N threads —
+wall-clock efficiency alone can hide an operator whose CPU cost
+inflates with parallelism (exactly the round-3 whole-group
+window-buffer defect).
 
 Usage:
-  python BENCH/pair_stage_report.py <app_id_8> <app_id_32> [--json]
-  python BENCH/pair_stage_report.py --pair <index|last> [--json]
+  python BENCH/pair_stage_report.py <app_id_n> <app_id_4n> [--json]
 
-With --pair, the app ids come from BENCH/pair_samples.jsonl (written
-per completed pair by bench.py --scaling --paired; apps = [id8, id32]).
+The two app ids are the `app_id_n` / `app_id_4n` fields of the JSON line
+`bench.py --scaling` prints. Output fields suffixed `_8` / `_32` name
+the N and 4N sides (the names date from the 8- vs 32-core host).
 
 Matching strategy: stage names are useless here — every action comes
 through py4j, so every stage is named `count at
@@ -24,7 +24,7 @@ Exchange, HashAggregate, ...) with AQE bookkeeping wrappers stripped —
 the AQE runtime inserts `ShuffleQueryStage`/`AQEShuffleRead`/... nodes
 at different times at different core counts, so they cannot be part of
 the key. Each scaling child runs warm-ups + a cached-scan control +
-SPARK_GRAFT_SCALING_RUNS engine runs in one JVM, so a signature recurs
+bench.py's SCALING_RUNS engine runs in one JVM, so a signature recurs
 several times per log; matching the reported min-of-N wall estimator,
 we take the MINIMUM execution wall (and its task-time sum) per
 signature at each core count:
@@ -49,7 +49,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from analyze_eventlog import load  # noqa: E402
 
-BENCH = os.path.dirname(os.path.abspath(__file__))
 ELOG_DIR = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/spark_graft_eventlogs")
 
 # AQE/runtime bookkeeping wrappers: inserted lazily as query stages
@@ -169,25 +168,14 @@ def compare(app8: str, app32: str) -> dict:
             "unmatched_sigs": [s[:80] for s in unmatched]}
 
 
-def _pair_apps(sel: str) -> tuple[str, str]:
-    path = os.path.join(BENCH, "pair_samples.jsonl")
-    recs = [json.loads(l) for l in open(path)]
-    recs = [r for r in recs if r.get("apps") and all(r["apps"])]
-    r = recs[-1] if sel == "last" else recs[int(sel)]
-    return r["apps"][0], r["apps"][1]
-
-
 def main() -> int:
     argv = sys.argv[1:]
-    if "--pair" in argv:
-        app8, app32 = _pair_apps(argv[argv.index("--pair") + 1])
-    else:
-        app8, app32 = argv[0], argv[1]
+    app8, app32 = argv[0], argv[1]
     out = compare(app8, app32)
     if "--json" in argv:
         print(json.dumps(out))
         return 0
-    print(f"== pair: {app8} (8) vs {app32} (32)")
+    print(f"== N: {app8} vs 4N: {app32}")
     print(
         f"{'wall8':>7} {'wall32':>7} {'spd':>5} {'tsum8':>8} {'tsum32':>8}"
         f" {'cost×':>6} {'maxT32':>7}  execution"

@@ -10,16 +10,19 @@ line: {"metric": ..., "value": <total sec>, "unit": "sec",
 (turns validated/sec for the full transcript check-suite) — used as the
 child job of --scaling.
 
---scaling: run the identical transcripts job at local[8] and local[32]
-(separate JVMs — Spark master is fixed per process), compute the
-throughput scaling efficiency tps_32/(4*tps_8) required >= 0.8 by the
-north rule, and write BENCH/BASELINE.md.
+--scaling: run the identical transcripts job at local[N] and local[4N]
+(separate JVMs — Spark master is fixed per process), N being a quarter
+of the cores this process may run on, and print one JSON line with the
+throughput scaling efficiency tps_4n/(4*tps_n) (north rule: >= 0.8).
+Writes no files and applies no gate.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import subprocess
 import sys
 import time
@@ -27,10 +30,14 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from hjsonschema_spark.session import default_driver_memory, default_parallelism  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 N_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "400000"))
 N_PARTS = int(os.environ.get("SPARK_GRAFT_BENCH_PARTS", "128"))
+# measured engine runs per scaling child, after its two warm-ups
+SCALING_RUNS = 5
 
 HEADLINE = [
     "suite_violations_lineitem",
@@ -65,12 +72,6 @@ def _materialize(df) -> int:
     return df.write.format("noop").mode("overwrite").save() or df.count()
 
 
-def _force(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def _force_query(fn, spark, sf_dir) -> float:
     """Time construction AND execution: queries with eager driver-side
     stages (iterative CC convergence counts, IVF codebook training) do
@@ -83,19 +84,7 @@ def _force_query(fn, spark, sf_dir) -> float:
 
 
 def _transcripts_path() -> str:
-    override = os.environ.get("SPARK_GRAFT_TRANSCRIPTS_PATH")
-    if override:
-        return override
-    # the skew knobs change the generated DATA, so they must change the
-    # cache path too — otherwise setting them silently reuses a stale
-    # non-skewed table, or poisons the shared path for later plain runs
-    # (round-4 ADVICE, bench.py:90)
-    hot = (
-        os.environ.get("SPARK_GRAFT_HOT_CONVS", "0"),
-        os.environ.get("SPARK_GRAFT_HOT_LEN", "0"),
-    )
-    suffix = "" if hot == ("0", "0") else f"_hot{hot[0]}x{hot[1]}"
-    return f"/tmp/spark_graft_bench_transcripts_{N_CONVS}{suffix}"
+    return f"/tmp/spark_graft_bench_transcripts_{N_CONVS}"
 
 
 def _ensure_transcripts(spark) -> str:
@@ -109,9 +98,6 @@ def _ensure_transcripts(spark) -> str:
         gen = TranscriptGen(
             n_convs=N_CONVS, seed=42, n_partitions=N_PARTS,
             dup_rate=0.001, bad_role_rate=0.001, gap_rate=0.001, ts_regress_rate=0.001,
-            # pathological-skew knobs (--skew-demo): a few mega-convs
-            hot_convs=int(os.environ.get("SPARK_GRAFT_HOT_CONVS", "0")),
-            hot_len=int(os.environ.get("SPARK_GRAFT_HOT_LEN", "0")),
         )
         gen.df(spark).write.mode("overwrite").parquet(path)
     return path
@@ -193,33 +179,9 @@ def run_transcripts_job(spark, df=None) -> dict:
     return {"n_turns": n_turns, "wall_sec": wall, "turns_per_sec": n_turns / wall}
 
 
-def _host_probe() -> dict | None:
-    """One 30s host-health probe line (BENCH/host_probe.py), or None.
-    Embedded in every bench JSON so each BENCH_r*.json is
-    self-describing about host state: the round-3 driver bench printed
-    a 5.5s minhash that the probed-clean window showed was 2.4s, and
-    nothing in the artifact recorded the degradation."""
-    probe = os.path.join(REPO, "BENCH", "host_probe.py")
-    if not os.path.exists(probe):
-        return None
-    try:
-        p = subprocess.run(
-            [sys.executable, probe], capture_output=True, text=True, timeout=180,
-        )
-        rec = json.loads(p.stdout.strip().splitlines()[-1])
-        return {
-            x: rec.get(x)
-            for x in ("compute_eff", "bandwidth_eff", "rand_eff", "clean")
-        }
-    except Exception:
-        return None  # a broken probe must never block the bench
-
-
 def main_default() -> None:
     from hjsonschema_spark.session import get_spark
     import __spark_entry__ as entrymod
-
-    probe_start = _host_probe()
 
     # The transcripts throughput job runs FIRST, in its own subprocess,
     # BEFORE this process creates its SparkSession: (a) a JVM polluted
@@ -227,62 +189,13 @@ def main_default() -> None:
     # drains asynchronously; localCheckpoint blocks + tmpfs shuffle
     # debris die only with the JVM), and (b) running the child AFTER
     # the query loop doesn't help because SparkSession.stop() does NOT
-    # exit the parent's py4j JVM — its 64g heap would starve the child
+    # exit the parent's py4j JVM — its heap would starve the child
     # (same trap as --gen-only, see main_scaling).
-    # Headline gate (round-4 VERDICT item 3): BENCH_r04 was self-flagged
-    # dirty (probe clean:false, every query 2-10x its clean wall), making
-    # round-over-round comparison meaningless without a judge re-measure.
-    # Reuse the engine's own absolute throughput as the regime signal
-    # (same philosophy as the scaling pair gate — host probes are
-    # non-signals, PLANS.md round-5 study): the transcripts child
-    # self-aborts after its JIT-steady warm-up 2 when below the floor;
-    # retry within a bounded budget, then proceed anyway (the driver
-    # must never hang) — the output's "gate" block says whether the
-    # query loop ran in a clean window.
-    floor = float(
-        os.environ.get(
-            "SPARK_GRAFT_HEADLINE_GATE_TPS",
-            {"32": "2400000", "8": "850000"}.get(str(CPUS), "0"),
-        )
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--transcripts-once"],
+        capture_output=True, text=True, timeout=1200,
     )
-    budget = float(os.environ.get("SPARK_GRAFT_HEADLINE_GATE_BUDGET", "900"))
-    gate: dict = {"floor_tps": floor, "attempts": 0, "passed": None}
-    t_gate = time.time()
-    while True:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--transcripts-once"],
-            capture_output=True, text=True, timeout=1200,
-            env=dict(os.environ, SPARK_GRAFT_CHILD_MIN_TPS=str(floor)),
-        )
-        tj = json.loads(proc.stdout.strip().splitlines()[-1])
-        gate["attempts"] += 1
-        if floor <= 0:
-            break
-        if not tj.get("aborted") and tj["turns_per_sec"] >= floor:
-            gate["passed"] = True
-            break
-        if time.time() - t_gate + 120 > budget:
-            gate["passed"] = False
-            print(
-                f"[bench] headline gate: budget exhausted at "
-                f"{tj.get('turns_per_sec')} tps < {floor:.0f} — proceeding dirty",
-                file=sys.stderr,
-            )
-            break
-        print(
-            f"[bench] headline gate: {tj.get('turns_per_sec')} tps < "
-            f"{floor:.0f} floor — sleeping 120s", file=sys.stderr,
-        )
-        time.sleep(120)
-    gate["waited_sec"] = round(time.time() - t_gate, 1)
-    if tj.get("aborted"):
-        # budget ran out on an aborted (timing-less) child: one ungated
-        # rerun so the headline still reports real transcript numbers
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--transcripts-once"],
-            capture_output=True, text=True, timeout=1200, env=dict(os.environ),
-        )
-        tj = json.loads(proc.stdout.strip().splitlines()[-1])
+    tj = json.loads(proc.stdout.strip().splitlines()[-1])
 
     spark = get_spark(app_name="bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -331,12 +244,11 @@ def main_default() -> None:
                 "cpus": CPUS,
                 "turns_per_sec": round(tj["turns_per_sec"], 1),
                 "bench_turns": tj["n_turns"],
-                # host state at bench start/end; rand_eff < ~0.7 marks
-                # the memory-stall regime in which window/sort-heavy
-                # queries inflate 2-3x (BENCH/BASELINE.md)
-                "probe": probe_start,
-                "probe_end": _host_probe(),
-                "gate": gate,
+                # always null: kept so the key set matches the r01-r06
+                # records
+                "probe": None,
+                "probe_end": None,
+                "gate": None,
             }
         )
     )
@@ -371,8 +283,8 @@ def main_transcripts_only() -> None:
     # Event logs (cheap at this task count — hundreds of task events
     # per run) give a stage-level timeline per child: scheduling gaps,
     # per-stage walls, straggler tasks, GC time. That is the offline
-    # evidence for WHERE a 32-thread run loses its scaling, without
-    # spending a separate profiled Spark session.
+    # evidence for WHERE a 4N run loses its scaling, without spending
+    # a separate profiled Spark session.
     elog_dir = os.environ.get(
         "SPARK_GRAFT_EVENTLOG_DIR", "/tmp/spark_graft_eventlogs"
     )
@@ -382,391 +294,121 @@ def main_transcripts_only() -> None:
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": elog_dir,
     }
-    # --skew-demo passes per-child conf (e.g. AQE off) as a JSON dict
-    extra.update(json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "{}")))
     spark = get_spark(app_name=f"bench-scaling-{CPUS}", cores=CPUS, extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
     df = spark.read.parquet(_ensure_transcripts(spark)).persist()
     # two warm-ups: the first fills the cache, the second lets C2 JIT
     # reach steady state (observed: run 3+ can be 2x faster than run 1)
     run_transcripts_job(spark, df)
-    w2 = run_transcripts_job(spark, df)
-    # Child-level regime abort (paired mode sets SPARK_GRAFT_CHILD_MIN_TPS):
-    # the second warm-up is JIT-steady, so its absolute turns/sec is an
-    # input-size-independent regime signal (clean anchors from the sample
-    # history: ~3.7M tps at local[32], ~1.15M at local[8]; the host's
-    # memory-stall regime reads 0.7-1.1M / 0.4-0.8M). Aborting here costs
-    # ~2 runs instead of a full 7-run child plus its sibling — host
-    # probes mispredict the regime in both directions (pair 08-20 05:35
-    # started at rand_eff 1.129 and still collapsed to eff 0.228), so
-    # the engine's own throughput is the authoritative gate.
-    min_tps = float(os.environ.get("SPARK_GRAFT_CHILD_MIN_TPS", "0") or 0)
-    if min_tps > 0 and w2["turns_per_sec"] < min_tps:
-        print(
-            json.dumps(
-                {
-                    "aborted": True,
-                    "cpus": CPUS,
-                    "n_turns": w2["n_turns"],
-                    "turns_per_sec": round(w2["turns_per_sec"], 1),
-                    "warmup_wall_sec": round(w2["wall_sec"], 2),
-                    "app_id": spark.sparkContext.applicationId,
-                }
-            )
-        )
-        spark.stop()
-        return
+    run_transcripts_job(spark, df)
     # control scans IMMEDIATELY after warm-up, while the input cache is
     # certainly resident (after the engine runs it may be partially
     # evicted, and a disk-bound control measures the shared disk — the
     # same ~600MB/s at any core count — not the memory ceiling)
     ctl = [run_control_scan(spark, df) for _ in range(3)]
     # Estimator: min-of-N wall (= max tps), same as the headline child
-    # and every per-query bench number (commits aac4e92, 8c1ef32).
-    # Hypervisor steal on this shared VM is strictly ADDITIVE noise —
-    # isolated 2-5x outlier runs (measured 46.8 / 92.0 / 35.8 in one
-    # child; 63.7 vs 347.0 in another) — so min-of-N is the maximum-
-    # likelihood estimate of the clean wall. A median over n=2 (the
-    # paired-mode run count) degenerates to WORSE-of-2, biasing every
-    # pair efficiency downward whenever steal hits any one of the 4
-    # measured runs; min-of-2 sheds exactly that one-sided spike.
-    # The control uses min-of-3 for the same reason — a mixed
-    # estimator (min engine / median control) would skew the
-    # normalized efficiency instead of cancelling host state.
-    n_runs = int(os.environ.get("SPARK_GRAFT_SCALING_RUNS", "5"))
-    runs = [run_transcripts_job(spark, df) for _ in range(n_runs)]
+    # and every per-query bench number. Hypervisor steal on a shared VM
+    # is strictly ADDITIVE noise — isolated 2-5x outlier runs — so
+    # min-of-N is the maximum-likelihood estimate of the clean wall.
+    # The control uses min-of-3 for the same reason — a mixed estimator
+    # (min engine / median control) would skew the normalized
+    # efficiency instead of cancelling host state.
+    runs = [run_transcripts_job(spark, df) for _ in range(SCALING_RUNS)]
     out = min(runs, key=lambda r: r["wall_sec"])  # min-of-N
-    out["cpus"] = CPUS
     # app id ties this child to its event-log dir
     # (eventlog_v2_<app_id> under SPARK_GRAFT_EVENTLOG_DIR), so every
-    # banked scaling pair is traceable to a per-stage decomposition
-    # via BENCH/analyze_eventlog.py.
+    # scaling run is traceable to a per-stage decomposition via
+    # BENCH/analyze_eventlog.py and BENCH/pair_stage_report.py.
     out["app_id"] = spark.sparkContext.applicationId
     out["runs_sec"] = [round(r["wall_sec"], 2) for r in runs]
-    out["median_tps"] = round(
-        sorted(r["turns_per_sec"] for r in runs)[len(runs) // 2], 1
-    )
-    out["best_tps"] = round(max(r["turns_per_sec"] for r in runs), 1)
     out["control_tps"] = round(max(c["turns_per_sec"] for c in ctl), 1)  # min-wall
     print(json.dumps(out))
     spark.stop()
 
 
+def _heap_mb(mem: str) -> int:
+    """A JVM memory string (``512m``, ``16g``; no suffix = MiB) in MiB."""
+    m = re.fullmatch(r"(\d+)(?:([kmgt])b?)?", mem.strip().lower())
+    if m is None:
+        raise ValueError(f"unreadable heap size {mem!r}")
+    scale = {"k": 1 / 1024, None: 1, "m": 1, "g": 1024, "t": 1024 * 1024}[m.group(2)]
+    return int(int(m.group(1)) * scale)
+
+
+def _cpu_list(cpus: list[int]) -> str:
+    """taskset CPU list for sorted ids: [0, 1, 2, 3, 6] -> '0-3,6'."""
+    spans: list[list[int]] = []
+    for c in cpus:
+        if spans and c == spans[-1][1] + 1:
+            spans[-1][1] = c
+        else:
+            spans.append([c, c])
+    return ",".join(str(a) if a == b else f"{a}-{b}" for a, b in spans)
+
+
 def main_scaling() -> None:
-    # scaling needs enough rows that per-stage fixed costs do not
-    # dominate at 32 cores: ~80M turns (~2.5M rows/core at local[32])
-    scaling_convs = os.environ.get("SPARK_GRAFT_SCALING_CONVS", "16000000")
-    # pre-generate the shared input at full parallelism so neither
-    # child pays generation or cold-read noise
-    global N_CONVS
-    N_CONVS = int(scaling_convs)
+    cores = sorted(os.sched_getaffinity(0))
+    n = len(cores) // 4
+    if n < 1:
+        sys.exit(
+            f"bench.py --scaling needs at least 4 cores to run local[N] against "
+            f"local[4N]; this process may run on {len(cores)}"
+        )
+    taskset = shutil.which("taskset")
+    if taskset is None:
+        sys.exit("bench.py --scaling needs taskset to pin each child to its cores")
     # Generation runs in its OWN subprocess: SparkSession.stop() does
-    # not exit the py4j JVM, and a lingering ~36g gen heap starves the
-    # measurement children's cache (observed: local[32] evicts and goes
-    # disk-bound, efficiency collapses to 0.24). A subprocess guarantees
-    # the gen JVM is dead before the first measurement starts.
+    # not exit the py4j JVM, and a lingering gen heap starves the
+    # measurement children's cache (observed: the 4N child evicts and
+    # goes disk-bound, efficiency collapses to 0.24). A subprocess
+    # guarantees the gen JVM is dead before the first measurement.
     if not os.path.exists(os.path.join(_transcripts_path(), "_SUCCESS")):
-        env = dict(os.environ, SPARK_GRAFT_BENCH_CONVS=scaling_convs)
         subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--gen-only"],
-            env=env, check=True, timeout=3600,
+            check=True, timeout=3600,
         )
     # Faithful N-vs-4N proxy: an N-executor cluster has N cores TOTAL
     # (GC/JIT/OS threads included) and 1/4 the aggregate memory of the
     # 4N cluster. So each child is (a) pinned to exactly its core set
-    # via taskset — otherwise the local[8] JVM parallelizes GC/JIT over
-    # all 32 host cores, inflating tps@N and understating efficiency —
+    # via taskset — otherwise the local[N] JVM parallelizes GC/JIT over
+    # all host cores, inflating tps@N and understating efficiency —
     # and (b) given a proportional heap.
-    sizes = {8: {"affinity": "0-7", "mem": "16g"}, 32: {"affinity": "0-31", "mem": "64g"}}
-
-    def _child(cpus: int, extra_env: dict | None = None) -> dict:
-        cfg = sizes[cpus]
-        env = dict(
-            os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_BENCH_CONVS=scaling_convs,
-            SPARK_DRIVER_MEM=cfg["mem"], **(extra_env or {}),
-        )
-        cmd = [sys.executable, os.path.abspath(__file__), "--transcripts-only"]
-        if os.path.exists("/usr/bin/taskset"):
-            cmd = ["/usr/bin/taskset", "-c", cfg["affinity"]] + cmd
+    heap_4n = _heap_mb(default_driver_memory())
+    results = []
+    for cpus, heap in ((n, heap_4n // 4), (4 * n, heap_4n)):
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_DRIVER_MEM=f"{heap}m")
+        cmd = [taskset, "-c", _cpu_list(cores[:cpus]),
+               sys.executable, os.path.abspath(__file__), "--transcripts-only"]
         r = _run_scaling_child(cmd, env, cpus)
         print(
             f"local[{cpus}]: {r['turns_per_sec']:.0f} turns/sec "
-            f"(control {r.get('control_tps', 0):.0f})",
+            f"(control {r['control_tps']:.0f}, runs {r['runs_sec']})",
             file=sys.stderr,
         )
-        return r
-
-    if "--paired" in sys.argv:
-        # Interleaved pairs: the sequential protocol runs the two
-        # children ~30 min apart, so host-load DRIFT between the
-        # windows corrupts the ratio (measured: identical binaries
-        # swing 0.07..0.88 across hours). Here each efficiency sample
-        # is an N child immediately followed by a 4N child (~8 min
-        # apart), so slow drift cancels; one clean ~10-min window
-        # anywhere in the session yields one clean pair. Fewer runs per
-        # child (2) — the noise defense is pairing, not medians.
-        n_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "4"))
-
-        # Per-pair clean-window gate: a pair measured in a degraded
-        # window CANNOT qualify under the campaign criterion (raw
-        # >= 0.8 needs a clean host; the ctl >= 0.85 + normalized
-        # >= 1.0 alternative needs a clean control by definition), so
-        # burning ~15 min on a pair while the hypervisor is stealing
-        # is pure waste. Before each pair, run the 20s host probe
-        # (BENCH/host_probe.py); while its L2-resident compute probe
-        # reads below the gate, sleep and re-probe instead, up to a
-        # wait budget per pair — after which the pair runs anyway
-        # (a dirty pair still contributes normalized evidence).
-        gate = float(os.environ.get("SPARK_GRAFT_PAIR_GATE", "0.9"))
-        # rand_eff gate (default on, 0 disables): the L2 compute probe
-        # is blind to the memory-stall regime (controls read 0.95 while
-        # engine pairs land 0.43-0.47; see scaling_samples 08-19), but
-        # the random-gather probe feels exactly the sort/window access
-        # pattern that regime taxes. Gate threshold is deliberately
-        # modest until per-pair correlation data accumulates
-        # (pair_probes below records it for every pair).
-        rand_gate = float(os.environ.get("SPARK_GRAFT_PAIR_GATE_RAND", "0"))
-        gate_budget = int(os.environ.get("SPARK_GRAFT_PAIR_GATE_BUDGET", "1500"))
-
-        def _probe_host() -> dict | None:
-            probe = os.path.join(REPO, "BENCH", "host_probe.py")
-            if not os.path.exists(probe):
-                return None
-            try:
-                p = subprocess.run(
-                    [sys.executable, probe], capture_output=True, text=True,
-                    timeout=180,
-                )
-                return json.loads(p.stdout.strip().splitlines()[-1])
-            except Exception:
-                return None  # a broken probe must never block sampling
-
-        def _wait_for_clean_window(k: int) -> dict | None:
-            if gate <= 0:
-                return None
-            waited = 0.0
-            while True:
-                pr = _probe_host()
-                eff = pr and pr.get("compute_eff")
-                reff = pr and pr.get("rand_eff")
-                ok = eff is None or (
-                    eff >= gate and (rand_gate <= 0 or reff is None or reff >= rand_gate)
-                )
-                if ok:
-                    print(
-                        f"[paired] pair {k}: probe {eff}/rand {reff} — proceeding",
-                        file=sys.stderr,
-                    )
-                    return pr
-                if waited >= gate_budget:
-                    print(
-                        f"[paired] pair {k}: probe {eff}/rand {reff} below gate "
-                        f"({gate}/{rand_gate}) but wait budget exhausted "
-                        f"({waited:.0f}s) — proceeding dirty",
-                        file=sys.stderr,
-                    )
-                    return pr
-                print(
-                    f"[paired] pair {k}: probe {eff}/rand {reff} below gate "
-                    f"({gate}/{rand_gate}) — degraded window, sleeping 120s "
-                    f"({waited:.0f}/{gate_budget}s)",
-                    file=sys.stderr,
-                )
-                time.sleep(120)
-                waited += 120
-
-        # Engine-gated pairing: host probes mispredict the stall regime
-        # in both directions (pair 08-20 05:35 started at rand_eff 1.129
-        # and collapsed to 0.228; pair 08-20 05:57's regime flipped
-        # BETWEEN the two children — r8 ran 99s walls while r32 ran
-        # 50s), so the authoritative regime signal is the engine's own
-        # absolute throughput, which is input-size independent
-        # (turns/sec). The 32-core child runs FIRST — it is both the
-        # cheaper child (~3 min clean vs ~8 for local[8]) and the
-        # regime-sensitive one (32 threads saturate the stalled memory
-        # system; 8 barely feel it) — and each child self-aborts after
-        # its JIT-steady second warm-up when below its floor (see
-        # main_transcripts_only). A floor miss abandons the ATTEMPT
-        # (recorded with aborted: true in pair_samples.jsonl, never
-        # counted as evidence) and re-gates. The r8 floor also blocks
-        # the false qualifier where a clean r32 over a stalled r8
-        # inflates raw efficiency past 0.8: a banked pair now certifies
-        # that BOTH children ran at near-clean absolute throughput.
-        # After the attempt budget, one unguarded pair runs anyway so a
-        # long dirty stretch still contributes a normalized sample.
-        min32 = float(os.environ.get("SPARK_GRAFT_PAIR_MIN_TPS32", "2400000"))
-        min8 = float(os.environ.get("SPARK_GRAFT_PAIR_MIN_TPS8", "850000"))
-        max_attempts = int(os.environ.get("SPARK_GRAFT_PAIR_ATTEMPTS", "4"))
-        pair_log = os.path.join(REPO, "BENCH", "pair_samples.jsonl")
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-
-        def _record_abort(k: int, attempt: int, child: str, rec: dict, probe_rec) -> None:
-            line = {
-                "ts": time.time(),
-                "aborted": True,
-                "pair": k,
-                "attempt": attempt,
-                "child": child,
-                "tps": rec.get("turns_per_sec"),
-                "floor": min32 if child == "r32" else min8,
-                "probe": probe_rec
-                and {
-                    x: probe_rec.get(x)
-                    for x in ("compute_eff", "bandwidth_eff", "rand_eff")
-                },
-                "app": rec.get("app_id"),
+        results.append(r)
+    rn, r4n = results
+    print(
+        json.dumps(
+            {
+                "n": n,
+                "n_turns": rn["n_turns"],
+                "tps_n": round(rn["turns_per_sec"], 1),
+                "tps_4n": round(r4n["turns_per_sec"], 1),
+                "efficiency": round(r4n["turns_per_sec"] / (4 * rn["turns_per_sec"]), 3),
+                "control_efficiency": round(r4n["control_tps"] / (4 * rn["control_tps"]), 3),
+                "app_id_n": rn["app_id"],
+                "app_id_4n": r4n["app_id"],
             }
-            with open(pair_log, "a") as f:
-                f.write(json.dumps(line) + "\n")
-            print(
-                f"[paired] pair {k} attempt {attempt}: {child} at "
-                f"{rec.get('turns_per_sec')} tps is below its "
-                f"{line['floor']:.0f} floor — aborting attempt",
-                file=sys.stderr,
-            )
-
-        pairs = []
-        for k in range(n_pairs):
-            r8 = r32 = None
-            attempts_used = 0
-            gated = True
-            for attempt in range(max_attempts):
-                attempts_used = attempt + 1
-                probe_rec = _wait_for_clean_window(k)
-                r32 = _child(
-                    32,
-                    {"SPARK_GRAFT_SCALING_RUNS": "2",
-                     "SPARK_GRAFT_CHILD_MIN_TPS": str(min32)},
-                )
-                if r32.get("aborted") or (min32 > 0 and r32["turns_per_sec"] < min32):
-                    _record_abort(k, attempt, "r32", r32, probe_rec)
-                    r32 = None
-                    continue
-                r8 = _child(
-                    8,
-                    {"SPARK_GRAFT_SCALING_RUNS": "2",
-                     "SPARK_GRAFT_CHILD_MIN_TPS": str(min8)},
-                )
-                if r8.get("aborted") or (min8 > 0 and r8["turns_per_sec"] < min8):
-                    _record_abort(k, attempt, "r8", r8, probe_rec)
-                    r8 = None
-                    continue
-                break
-            if r8 is None or r32 is None:
-                gated = False
-                probe_rec = _wait_for_clean_window(k)
-                r32 = _child(32, {"SPARK_GRAFT_SCALING_RUNS": "2"})
-                r8 = _child(8, {"SPARK_GRAFT_SCALING_RUNS": "2"})
-            e = r32["turns_per_sec"] / (4 * r8["turns_per_sec"])
-            be = (
-                r32["best_tps"] / (4 * r8["best_tps"])
-                if r8.get("best_tps") and r32.get("best_tps")
-                else None
-            )
-            c8, c32 = r8.get("control_tps"), r32.get("control_tps")
-            ce = (c32 / (4 * c8)) if c8 and c32 else None
-            pairs.append(
-                {
-                    "r8": r8, "r32": r32, "eff": e, "best_eff": be, "ctl_eff": ce,
-                    "probe": probe_rec
-                    and {
-                        x: probe_rec.get(x)
-                        for x in ("compute_eff", "bandwidth_eff", "rand_eff")
-                    },
-                }
-            )
-            # Persist each pair the moment it completes (the campaign
-            # killed mid-invocation used to lose every in-flight pair;
-            # BENCH/campaign.py counts qualifying pairs from this file).
-            pair_rec = {
-                "ts": time.time(),
-                "eff": round(e, 3),
-                "best_eff": be and round(be, 3),
-                "ctl_eff": ce and round(ce, 3),
-                "norm_eff": ce and round(e / ce, 3),
-                "probe": pairs[-1]["probe"],
-                "apps": [r8.get("app_id"), r32.get("app_id")],
-                "runs_sec_8": r8.get("runs_sec"),
-                "runs_sec_32": r32.get("runs_sec"),
-                "n_turns": r8.get("n_turns"),
-                # gated=True certifies both children cleared their
-                # absolute-throughput floors (min8/min32); attempts is
-                # how many gated tries this pair took. gated=False =
-                # unguarded fallback pair after the attempt budget.
-                "gated": gated,
-                "attempts": attempts_used,
-                "floors": {"tps8": min8, "tps32": min32},
-                # raw eff re-based on the CLEAN local[8] anchor: a
-                # stalled r8 child deflates tps8 and so INFLATES eff;
-                # this is the efficiency the pair defends even if r8
-                # ran degraded (round-4 VERDICT item 2)
-                "eff_at_clean_tps8": round(
-                    r32["turns_per_sec"]
-                    / (4 * float(os.environ.get("SPARK_GRAFT_CLEAN_TPS8", "1150000"))),
-                    3,
-                ),
-            }
-            os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-            with open(os.path.join(REPO, "BENCH", "pair_samples.jsonl"), "a") as f:
-                f.write(json.dumps(pair_rec) + "\n")
-            print(f"[paired] pair {k}: eff={e:.3f} ctl={ce and round(ce,3)}", file=sys.stderr)
-        med = sorted(pairs, key=lambda p: p["eff"])[len(pairs) // 2]
-        results = {8: med["r8"], 32: med["r32"]}
-        pair_extra = {
-            "paired": n_pairs,
-            "pair_effs": [round(p["eff"], 3) for p in pairs],
-            "pair_best_effs": [p["best_eff"] and round(p["best_eff"], 3) for p in pairs],
-            "pair_ctl_effs": [p["ctl_eff"] and round(p["ctl_eff"], 3) for p in pairs],
-            "pair_probes": [p["probe"] for p in pairs],
-        }
-        best_eff_override = max(
-            [p["best_eff"] for p in pairs if p["best_eff"] is not None] or [None],
-            default=None,
         )
-    else:
-        results = {8: _child(8), 32: _child(32)}
-        pair_extra = {}
-        best_eff_override = None
-    tps8, tps32 = results[8]["turns_per_sec"], results[32]["turns_per_sec"]
-    eff = tps32 / (4 * tps8)
-    ctl8, ctl32 = results[8].get("control_tps"), results[32].get("control_tps")
-    ctl_eff = (ctl32 / (4 * ctl8)) if ctl8 and ctl32 else None
-    sample = {
-        "ts": time.time(),
-        "n_turns": results[8]["n_turns"],
-        "tps_8": round(tps8, 1),
-        "tps_32": round(tps32, 1),
-        "efficiency": round(eff, 3),
-        "control_tps_8": ctl8,
-        "control_tps_32": ctl32,
-        "control_efficiency": round(ctl_eff, 3) if ctl_eff else None,
-        "normalized_efficiency": round(eff / ctl_eff, 3) if ctl_eff else None,
-        "best_efficiency": (
-            round(best_eff_override, 3)
-            if best_eff_override is not None
-            else round(results[32]["best_tps"] / (4 * results[8]["best_tps"]), 3)
-            if results[8].get("best_tps") and results[32].get("best_tps")
-            else None
-        ),
-        "runs_sec_8": results[8].get("runs_sec"),
-        "runs_sec_32": results[32].get("runs_sec"),
-        "affinity_pinned": os.path.exists("/usr/bin/taskset"),
-        "mem": {k: v["mem"] for k, v in sizes.items()},
-        **pair_extra,
-    }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "scaling_samples.jsonl"), "a") as f:
-        f.write(json.dumps(sample) + "\n")
-    _write_scaling_md()
-    print(json.dumps(sample))
+    )
 
 
 def _run_scaling_child(cmd: list, env: dict, cpus: int, timeout: int = 3600) -> dict:
     """Run one scaling child, retrying once: the host occasionally
-    kills a child JVM outright (observed: local[32] vanished mid-run
-    with no hs_err file, /dev/shm wiped, kernel hrtimer-stall logged)
-    or leaves the py4j client hung on the dead gateway. Either way the
-    whole ~45-min sample used to die with the child's stderr lost."""
+    kills a child JVM outright (observed: a local[32] child vanished
+    mid-run with no hs_err file, /dev/shm wiped, kernel hrtimer-stall
+    logged) or leaves the py4j client hung on the dead gateway. Either
+    way the whole sample used to die with the child's stderr lost."""
     for attempt in (1, 2):
         try:
             p = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=timeout)
@@ -791,346 +433,13 @@ def _run_scaling_child(cmd: list, env: dict, cpus: int, timeout: int = 3600) -> 
     raise RuntimeError(f"local[{cpus}] scaling child failed twice")
 
 
-def _write_scaling_md() -> None:
-    """Regenerate BENCH/BASELINE.md from the full sample history."""
-    path = os.path.join(REPO, "BENCH", "scaling_samples.jsonl")
-    samples = []
-    if os.path.exists(path):
-        with open(path) as f:
-            samples = [json.loads(l) for l in f if l.strip()]
-    rows = []
-    for s in samples:
-        when = time.strftime("%m-%d %H:%M", time.localtime(s["ts"]))
-        if s.get("paired"):
-            when += f" \\*{s['paired']}p"
-        ctl = s.get("control_efficiency")
-        norm = s.get("normalized_efficiency")
-        best = s.get("best_efficiency")
-        rows.append(
-            f"| {when} | {s['n_turns']:,} | {s['tps_8']:,.0f} | {s['tps_32']:,.0f} "
-            f"| **{s['efficiency']:.3f}** | {best if best is not None else '—'} "
-            f"| {ctl if ctl is not None else '—'} "
-            f"| {norm if norm is not None else '—'} |"
-        )
-    # North-rule evidence: qualifying pairs from the per-pair log
-    # (BENCH/campaign.py _qualifies — raw >= 0.8, or ctl >= 0.85 with
-    # normalized >= 1.0), counted since the round-3 epoch.
-    epoch = 1787108000.0
-    clean8 = float(os.environ.get("SPARK_GRAFT_CLEAN_TPS8", "1150000"))
-    ppath = os.path.join(REPO, "BENCH", "pair_samples.jsonl")
-    prows: list = []
-    qual_ec8: list = []
-    if os.path.exists(ppath):
-        with open(ppath) as f:
-            for line in f:
-                s = json.loads(line)
-                if s.get("aborted") or "eff" not in s:
-                    continue
-                e, c, nrm = s["eff"], s.get("ctl_eff"), s.get("norm_eff")
-                q = e >= 0.8 or (c is not None and c >= 0.85 and (nrm or 0) >= 1.0)
-                ec8 = s.get("eff_at_clean_tps8")
-                if ec8 is None and s.get("runs_sec_32") and s.get("n_turns"):
-                    ec8 = round(s["n_turns"] / min(s["runs_sec_32"]) / (4 * clean8), 3)
-                when = time.strftime("%m-%d %H:%M", time.localtime(s["ts"]))
-                is_q = q and s["ts"] >= epoch
-                prows.append(
-                    f"| {when}{' **q**' if is_q else ''} | {e:.3f} "
-                    f"| {c if c is not None else '—'} | {nrm if nrm is not None else '—'} "
-                    f"| {ec8 if ec8 is not None else '—'} "
-                    f"| {'yes' if s.get('gated') else 'no'} | {s.get('attempts', '—')} |"
-                )
-                if is_q and ec8 is not None:
-                    qual_ec8.append(ec8)
-    best_raw = max(s["efficiency"] for s in samples) if samples else 0
-    # report the normalized figure of the best RAW sample (a normalized
-    # value is only meaningful when its control ran cache-resident;
-    # see the 03:33 row, whose control was disk-bound after eviction)
-    best_s = max(samples, key=lambda s: s["efficiency"]) if samples else {}
-    best = best_s.get("normalized_efficiency") or 0
-    md = f"""# BENCH/BASELINE — measured scaling (north rule: efficiency >= 0.8, N -> 4N)
-
-Sandbox proxy for the two-cluster-size criterion: the identical full
-transcript check-suite job — one fused row pass (required / enum /
-pattern x2 / bounds / length / dependency checks), the fused
-uniqueness+contiguity+ts-monotonicity window pass, broadcast-anti-join
-referential integrity, globally sorted violation rows, per-partition
-verdicts — over the same seeded cached input at local[8] (N) and
-local[32] (4N), in separate JVMs.
-
-Faithfulness of the proxy (see bench.py `main_scaling`):
-
-- **CPU affinity**: each child is `taskset`-pinned to exactly its core
-  count. An N-executor cluster has N cores total — GC, JIT, and Python
-  worker threads included. Without pinning, the local[8] JVM
-  parallelizes GC/JIT across all 32 host cores, inflating tps@N and
-  understating efficiency.
-- **Proportional memory**: 16g (N) vs 64g (4N) — a 4N cluster has 4x
-  the aggregate RAM; giving both children equal heaps would hand the
-  N child a cache advantage a real N-cluster does not have.
-- **Hardware-ceiling control**: each child also measures a trivial
-  cached-scan aggregation (`sum(length(text)), sum(turn_idx), count,
-  min/max(ts)` — no engine code, no regex, no shuffle). Its N->4N
-  efficiency is the ceiling ANY computation can reach on this box,
-  because one socket's memory system feeds all 32 local threads; a
-  real 4N cluster brings 4x memory channels. The engine's
-  **normalized efficiency** = engine / control is the share of the
-  hardware-achievable scaling the engine actually delivers — the
-  quantity the north rule is really about (engine shuffles/design,
-  not host memory channels).
-- Methodology per child: input pre-generated by a separate `--gen-only`
-  subprocess (the generator JVM's heap is fully released — a
-  `SparkSession.stop()` does NOT exit the py4j JVM), input cached
-  (this sandbox has ONE shared disk whose bandwidth does not grow
-  with threads; on a real cluster scan bandwidth scales with
-  executors), TWO warm-up runs (cache fill, then C2-JIT steady
-  state), min-of-N measured runs (N=5 sequential, N=2 paired; min —
-  not median — because hypervisor steal is strictly additive, so the
-  fastest run is the maximum-likelihood clean wall, the same estimator
-  as every per-query bench number), `res.unpersist()` between runs,
-  shuffle on tmpfs. The engine and its hardware control use the same
-  min-wall estimator so the normalized ratio cancels host state
-  instead of mixing estimators.
-
-Reproduce: `python bench.py --scaling`
-(env `SPARK_GRAFT_SCALING_CONVS`, default 16,000,000 conversations).
-
-Paired mode (`--scaling --paired`, rows marked `*Kp`): the sequential
-protocol runs the N and 4N children ~30 min apart, so host-load DRIFT
-between the two windows corrupts the ratio (identical binaries have
-measured 0.07..0.88 across hours of this shared VM). Paired mode
-interleaves K (default 4) back-to-back N→4N pairs, ~8 min apart within
-a pair, so slow drift cancels; the row reports the MEDIAN pair (its
-tps on both sides) and `best-run eff` is the best pair's best-run
-ratio. One clean ~10-min window anywhere in the session yields one
-clean pair. Each pair is preceded by a 20s host probe
-(`BENCH/host_probe.py`): while the L2-resident compute probe reads
-below 0.9 (env `SPARK_GRAFT_PAIR_GATE`), the harness sleeps instead
-of measuring — a pair taken in a degraded window cannot qualify under
-the evidence criterion, so the wall-clock is better spent waiting
-(bounded by `SPARK_GRAFT_PAIR_GATE_BUDGET`, default 25 min, after
-which the pair runs anyway for normalized evidence).
-
-Engine-gated pairing (since 08-20): the probe is only a prefilter —
-it mispredicted in both directions on 08-20 (a pair that started at
-rand_eff 1.129 collapsed to eff 0.228; another pair's regime flipped
-between its two children, r8 walls 99s against r32 walls 50s). The
-authoritative regime signal is the engine's own absolute throughput
-(turns/sec — input-size independent): the 4N child runs FIRST
-(cheaper, and 32 threads feel the memory-stall regime hardest), each
-child self-aborts after its JIT-steady second warm-up when below its
-floor (`SPARK_GRAFT_PAIR_MIN_TPS32`, default 2.4M tps, vs ~3.7M
-clean / 0.7-1.1M stalled; `SPARK_GRAFT_PAIR_MIN_TPS8`, default
-0.85M vs ~1.15M clean), and a floor miss abandons the attempt
-(logged to `pair_samples.jsonl` with `aborted: true`, never counted
-as evidence) and re-gates, up to `SPARK_GRAFT_PAIR_ATTEMPTS`
-(default 4) tries before one unguarded fallback pair. The r8 floor
-also blocks the false qualifier where a stalled N child under a
-clean 4N child inflates raw efficiency: a banked `gated: true` pair
-certifies both children ran at near-clean absolute throughput.
-
-## North-rule evidence: qualifying N->4N pairs
-
-The scaling criterion's evidence unit is the PAIR (per-pair log
-`BENCH/pair_samples.jsonl`; **q** = qualifying since the round-3
-epoch: raw eff >= 0.8, or control >= 0.85 with normalized >= 1.0).
-`eff@clean-r8` re-bases the pair's raw efficiency on the clean
-local[8] anchor (~1.15M turns/s, env `SPARK_GRAFT_CLEAN_TPS8`): a
-stalled r8 child deflates tps@N and so INFLATES raw eff, so this
-column is the efficiency the pair defends even under that suspicion.
-`gated` pairs additionally certify both children cleared their
-absolute engine-throughput floors (2.4M / 0.85M turns/s) at their
-JIT-steady second warm-up.
-
-| when | raw eff | ctl eff | normalized | eff@clean-r8 | gated | attempts |
-|---|---|---|---|---|---|---|
-{chr(10).join(prows) if prows else '| (no pairs recorded) | | | | | | |'}
-
-**Qualifying pairs since the round-3 epoch: {len(qual_ec8)} (criterion:
->= 3). Of these, {sum(1 for x in qual_ec8 if x >= 0.8)} also clear 0.8
-after r8-floor re-basing (eff@clean-r8 {sorted(x for x in qual_ec8 if x >= 0.8) if any(x >= 0.8 for x in qual_ec8) else '—'})
-— the criterion is met under both the raw reading and the stricter
-normalized one (which discards any pair whose raw figure could owe
-anything to a slow r8 denominator).**
-
-## Measured samples (full history, newest last)
-
-| when | turns | tps@N | tps@4N | efficiency | best-run eff | control eff | normalized |
-|---|---|---|---|---|---|---|---|
-{chr(10).join(rows)}
-
-**Best raw efficiency: {best_raw:.3f} (target >= 0.8, MET when >= 0.8); its
-normalized (engine / hardware-ceiling) value: {best:.3f}** — above 1.0 means
-the engine scales better than a trivial cached scan on this box.
-
-Row annotations: the 0.112 sample is the shuffle-file-necrosis defect
-described below (kept for honesty — its control row 0.884 is what
-exonerated the hardware); the 0.709 sample's control ran AFTER the
-engine runs had evicted the input cache, so it measured the shared
-disk (~600 MB/s at any core count), not memory — controls have run
-right after warm-up since. Low post-fix samples are host contention,
-not engine state: their per-run walls (scaling_samples.jsonl
-`runs_sec_32`) mix 3-7x outliers with runs at the clean ~30s rate in
-the SAME child (e.g. [190, 245, 32.4, 91.2, 52.9] — run 3 matches the
-0.877 sample's rate exactly) while the 8-core child stays within
-±20% and the cached control still scales at ~0.9; 32-thread waves are
-simply far more sensitive to host CPU steal (one slowed core gates a
-whole 32-task wave). The strongest exoneration is the 0.278 sample:
-in that window the CONTROL itself — a trivial cached scan with no
-engine code — scaled at only 0.437 (control tps@4N 23M vs the usual
-43-48M, i.e. the host delivered half its normal memory bandwidth), so
-no computation of any kind could have scaled there. The engine's
-scaling capability is the clean sample; the noise is the box.
-
-The 08-18 samples extend the story: the host has been below its clean
-memory bandwidth for 24+ consecutive hours (every control row since
-08-17 05:00 is <=0.9; the 08-18 controls 0.174 / 0.324 / 0.737 — in
-the 0.174 window adding cores REDUCED trivial-scan throughput). The
-engine's normalized efficiency in the first two of those windows:
-0.895 and 0.788 — the engine delivering ~80-90% of whatever scaling
-the hardware permits that hour, raw efficiency tracking the control
-almost 1:1. Per-run walls keep the bimodal steal signature (07:29
-runs_sec_32 = [115, 160, 112, 233, 358]: the 112s run is ~2.4x the
-throughput of the 358s run in the SAME child, identical binaries and
-data). Paired-mode sampling (above) exists because of exactly this
-regime. The first paired sample (the `*2p` row, cut at 2 of 4 pairs to
-free the box after a host-killed 32-core child JVM forced a retry) ran
-in the worst window measured so far: pair controls 0.125 and 0.622 —
-in pair 0 the host delivered 1/8 of its clean 32-thread bandwidth —
-yet the engine's normalized efficiency in that pair was 1.14, again
-outrunning the trivial cached scan on the same box in the same
-minutes.
-
-The 08-17 (08:22 / 09:00-11:00 era) samples ran in a persistently
-degraded host period: shuffle-heavy engine runs sat at 2-6x their
-clean-window walls at BOTH core counts and with BOTH engine versions —
-a same-session A/B of the pre- vs post-round-2 ordered-pass code on
-the identical cached 82.3M-turn input measured old = [117, 108, 308]s
-vs new = [63, 186, 53]s at local[32] (the NEW single-exchange fused
-pass is ~2x faster at the median; the rewrite is exonerated as the
-cause and is the expected improvement from 3 shuffles -> 1) — while
-the trivial cached-scan control still ran at full speed (43M tps@32,
-control efficiency 0.84 in the same sample). CPU-steal/timer trouble
-(kernel hrtimer-stall logged; one child JVM killed outright) hits
-exchange-heavy phases, not streaming scans.
-
-Round 3 closed the loop on WHY clean-window engine efficiency still
-sat at 0.4-0.7 while the control scaled 0.95: per-child Spark event
-logs (captured by default, `BENCH/analyze_eventlog.py`) showed the
-ordered-trio reduce stage — 4 WindowExec operators, two buffering
-whole groups into UnsafeExternalRowBuffers — inflating from 3.5us/row
-at 8 threads to 12-17us/row at 32 (1081 vs 290 CPU-s for the same
-stage; zero spill), a one-socket memory-contention tax the streaming
-control never pays. The pass was rewritten to a SINGLE streaming
-WindowExec (lag/lead + running aggregates + dense_rank distinct
-count + order-peer duplicate count over one spec; see PLANS.md
-"Round-3 scaling root-cause"). First A/B after the fix, same input and
-protocol, clean probe: local[32] 22.3s / 3.69M turns/s (previous
-best-ever 31s), local[8] 74.6s / 1.10M turns/s — RAW pair efficiency
-0.837 with control 0.943. Samples from 08-19 03:15 onward measure the
-rewritten operator.
-
-## Engine-side scaling properties (verified via plans + event logs)
-
-- One input scan per row pass (violations AND per-partition verdicts
-  derive from one persisted slim pass — round-1 judge item fixed).
-- The fused ordered checks (UniqueKey + Contiguous + Monotonic over
-  the same key prefix) share ONE hash exchange, one sort, and ONE
-  streaming WindowExec (round-3: no whole-group window buffering).
-- Broadcast joins for dims/vocabs (no unconditional broadcast hints —
-  AQE decides at runtime), map-side partial aggregation everywhere,
-  AQE skew-join splitting for skewed conv_ids, no driver-side loops.
-- Cache-accumulation leak fixed (round 2): repeated
-  `run_suite(persist=True)` runs unpersist per run; a leaked ~n_rows
-  cache per run previously overflowed the storage pool and GC-thrashed
-  the JVM (measured collapse to 1.0M tps@32).
-- Shuffle-file necrosis diagnosed and fixed (round 2): shuffle files
-  are reclaimed by ContextCleaner only when the JVM happens to GC the
-  ShuffleDependency; at a 64g heap GCs are so rare that back-to-back
-  runs piled dead shuffle data onto RAM-backed tmpfs until the box
-  strangled — measured run walls 117s -> 243s -> 446s at local[32]
-  (the 0.112-efficiency sample in the table) while the 16g/8-core
-  child, GCing often, stayed flat; the control scan in the same
-  session still scaled at 0.884, proving the hardware was fine. Fix:
-  blocking unpersist + one explicit System.gc() between runs, outside
-  the measured window (production runs pay neither). Next sample's
-  local[32] runs: flat, 4.4x faster.
-- Per-pass profiling (Spark event logs): the shuffle-bearing
-  conversation-window pass scales at ~1.0 efficiency for 4x cores;
-  the fused row pass (regex over cached text) is memory-bandwidth
-  bound in one JVM — exactly what the control row quantifies.
-
-Historical pre-control samples (round 1: 0.716 / 0.478 / 0.501 at
-82.3M turns; early round 2 under visible host contention: 0.309-0.421,
-with identical binaries swinging 2.1x between runs) are retained in
-git history of this file.
-"""
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
-
-
 def main_gen_only() -> None:
     from hjsonschema_spark.session import get_spark
 
-    spark = get_spark(app_name="bench-scaling-gen", cores=32)
+    spark = get_spark(app_name="bench-scaling-gen", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     _ensure_transcripts(spark)
     spark.stop()
-
-
-def main_skew_demo() -> None:
-    """Pathological group-skew demonstration (north rule: skewed
-    conv_ids; SURVEY §4.2). Generates a transcripts table whose first
-    SPARK_GRAFT_HOT_CONVS conversations have SPARK_GRAFT_HOT_LEN turns
-    each (default: 2 convs x 1M turns — 10x the domain bound the
-    Bounds check allows — atop 400k Zipf-length convs), then runs the
-    full check-suite child at local[32] twice: engine defaults (AQE
-    coalesce + skew-join ON) and AQE OFF. Prints one JSON line with
-    both walls + app ids; per-stage straggler decomposition comes from
-    BENCH/analyze_eventlog.py on the recorded event logs.
-
-    What it demonstrates: the fused ordered pass uses ONLY streaming
-    window frames (compile.py run_ordered_fused), so a mega-group costs
-    linear task time in one reducer — a straggler, never a
-    whole-group buffer/OOM. Agg-shaped checks are AQE/salting-handled;
-    a hash(conv_id) window cannot be split without breaking order
-    semantics, so the engine's defense at 10^12-turn scale is the
-    domain bound on group size (Bounds: turn_idx <= 100k) plus
-    streaming frames making the worst group linear-cost."""
-    n_convs = os.environ.get("SPARK_GRAFT_SKEW_CONVS", "400000")
-    hot = {
-        "SPARK_GRAFT_HOT_CONVS": os.environ.get("SPARK_GRAFT_HOT_CONVS", "2"),
-        "SPARK_GRAFT_HOT_LEN": os.environ.get("SPARK_GRAFT_HOT_LEN", "1000000"),
-    }
-    path = f"/tmp/spark_graft_bench_skew_{n_convs}_{hot['SPARK_GRAFT_HOT_CONVS']}x{hot['SPARK_GRAFT_HOT_LEN']}"
-    base_env = dict(
-        os.environ, SPARK_GRAFT_BENCH_CONVS=n_convs,
-        SPARK_GRAFT_TRANSCRIPTS_PATH=path, **hot,
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--gen-only"],
-            env=base_env, check=True, timeout=3600,
-        )
-    results = {}
-    for label, conf in (
-        ("aqe_on", {}),
-        ("aqe_off", {"spark.sql.adaptive.enabled": "false"}),
-    ):
-        env = dict(
-            base_env, SPARK_GRAFT_CPUS="32", SPARK_GRAFT_SCALING_RUNS="2",
-            SPARK_GRAFT_EXTRA_CONF=json.dumps(conf),
-        )
-        cmd = [sys.executable, os.path.abspath(__file__), "--transcripts-only"]
-        r = _run_scaling_child(cmd, env, 32)
-        results[label] = {
-            "wall_sec": round(r["wall_sec"], 2),
-            "runs_sec": r.get("runs_sec"),
-            "turns_per_sec": round(r["turns_per_sec"], 1),
-            "app_id": r.get("app_id"),
-            "n_turns": r["n_turns"],
-        }
-        print(f"[skew-demo] {label}: {results[label]}", file=sys.stderr)
-    print(json.dumps({"skew_demo": results, "table": path, "probe": _host_probe()}))
 
 
 def main_transcripts_once() -> None:
@@ -1151,19 +460,7 @@ def main_transcripts_once() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     df = spark.read.parquet(_ensure_transcripts(spark)).persist()
     run_transcripts_job(spark, df)  # warm-up 1: cache fill
-    w2 = run_transcripts_job(spark, df)  # warm-up 2: C2 JIT steady state
-    # self-abort below the regime floor, mirroring the scaling child
-    # (main_transcripts_only): lets main_default's headline gate retry
-    # after ~2 runs instead of paying the full min-of-5 in a stall
-    min_tps = float(os.environ.get("SPARK_GRAFT_CHILD_MIN_TPS", "0") or 0)
-    if min_tps > 0 and w2["turns_per_sec"] < min_tps:
-        print(
-            json.dumps(
-                {"aborted": True, "turns_per_sec": round(w2["turns_per_sec"], 1)}
-            )
-        )
-        spark.stop()
-        return
+    run_transcripts_job(spark, df)  # warm-up 2: C2 JIT steady state
     runs = [run_transcripts_job(spark, df) for _ in range(5)]
     out = min(runs, key=lambda r: r["wall_sec"])
     out["runs_sec"] = [round(r["wall_sec"], 2) for r in runs]
@@ -1181,7 +478,5 @@ if __name__ == "__main__":
         main_transcripts_once()
     elif "--gen-only" in sys.argv:
         main_gen_only()
-    elif "--skew-demo" in sys.argv:
-        main_skew_demo()
     else:
         main_default()

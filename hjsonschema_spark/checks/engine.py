@@ -12,6 +12,7 @@ Stages (all lazy until an output is consumed):
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -213,6 +214,35 @@ class ValidationResult:
         return self._summary
 
 
+def _remainder_columns(columns: list[str], declared: tuple, patterns: tuple) -> list[str]:
+    """Columns matched by NEITHER the declared names nor a pattern
+    (additionalProperties' remainder, Properties.hs:175-209);
+    uncompilable patterns are skipped silently (Properties.hs:150-155)."""
+    pats = []
+    for p in patterns:
+        try:
+            pats.append(re.compile(p))
+        except re.error:
+            pass
+    return [
+        col for col in columns
+        if col not in declared and not any(r.search(col) for r in pats)
+    ]
+
+
+def _empty_violations(df: DataFrame, key_columns: tuple) -> DataFrame:
+    """An empty violations frame: the key columns at their input types,
+    then the string tail."""
+    dtypes = dict(df.dtypes)
+    return df.sparkSession.createDataFrame(
+        [],
+        ", ".join(
+            [f"`{k}` {dtypes.get(k, 'string')}" for k in key_columns]
+            + [f"{c} string" for c in _VIOL_TAIL]
+        ),
+    )
+
+
 def _slim_pass(checked: DataFrame, key_columns: tuple) -> DataFrame:
     """The fused pass projected to keys + partition id + failure
     structs — no payload columns (text etc.), so it is cheap to persist
@@ -380,7 +410,6 @@ def run_suite(
     #   ColumnsAllowed computes the "matched by neither" remainder
     #   (additionalProperties=false, Properties.hs:175-209)
     import dataclasses
-    import re as _re
 
     from hjsonschema_spark.checks.ir import (
         ColumnsAllowed,
@@ -394,24 +423,15 @@ def run_suite(
     for c in resolved:
         if isinstance(c, RemainderColumns):
             # additionalProperties=SCHEMA over columns: instantiate the
-            # template for every column matched by NEITHER the declared
-            # names nor a pattern (Properties.hs:106-108, 199-209)
-            pats = []
-            for p in c.patterns:
-                try:
-                    pats.append(_re.compile(p))
-                except _re.error:
-                    pass  # skipped silently
-            declared = set(c.columns)
+            # template for every remainder column (Properties.hs:106-108)
             expanded.extend(
                 dataclasses.replace(c.check, column=col)
-                for col in df.columns
-                if col not in declared and not any(r.search(col) for r in pats)
+                for col in _remainder_columns(df.columns, c.columns, c.patterns)
             )
         elif isinstance(c, PatternColumns):
             try:
-                rx = _re.compile(c.name_regex)
-            except _re.error:
+                rx = re.compile(c.name_regex)
+            except re.error:
                 continue  # skipped silently (reference semantics)
             expanded.extend(
                 dataclasses.replace(c.check, column=col)
@@ -419,18 +439,7 @@ def run_suite(
                 if rx.search(col)
             )
         elif isinstance(c, ColumnsAllowed):
-            pats = []
-            for p in c.patterns:
-                try:
-                    pats.append(_re.compile(p))
-                except _re.error:
-                    pass  # skipped silently
-            declared = set(c.columns)
-            remainder = [
-                col
-                for col in df.columns
-                if col not in declared and not any(r.search(col) for r in pats)
-            ]
+            remainder = _remainder_columns(df.columns, c.columns, c.patterns)
             schema_verdicts.append(
                 (C.check_id(c), not remainder, len(remainder) or None)
             )
@@ -462,7 +471,6 @@ def run_suite(
     # time against df.schema, no per-row work (SURVEY §2.4 type row)
     from hjsonschema_spark.checks.ir import json_type_matches
 
-    dtypes = dict(df.dtypes)
     for c in resolved:
         if isinstance(c, TypeIs):
             actual = _dtype_of(df, c.column)
@@ -566,25 +574,8 @@ def run_suite(
     persisted: list[DataFrame] = []
     persist_slim = persist is True  # "viols" mode skips the big slim cache
     if persist_slim:
-        # Storage level is tunable because the slim frame is large (one
-        # row per input row): in-heap caching of ~10^8 rows competes
-        # with 32 concurrent task buffers for the unified memory pool
-        # and can degrade the whole job via GC/eviction. "disk" keeps
-        # the bytes off-heap (RAM-speed when spark.local.dir is tmpfs);
-        # "off" skips the cache — re-running the codegen'd row pass per
-        # consumer can be cheaper than caching when the input itself is
-        # memory-resident.
-        import os as _os
-
-        from pyspark import StorageLevel
-
-        mode = _os.environ.get("SPARK_GRAFT_SLIM_PERSIST", "memory")
-        if mode == "disk":
-            slim = slim.persist(StorageLevel.DISK_ONLY)
-            persisted.append(slim)
-        elif mode != "off":
-            slim = slim.persist()
-            persisted.append(slim)
+        slim = slim.persist()
+        persisted.append(slim)
     # an aggregate-only suite (no row checks) must not pay a row-pass
     # scan in the violations plan: size([]) > 0 is always false but
     # Catalyst does not fold the scan away, so skip the branch outright
@@ -678,22 +669,10 @@ def run_suite(
         # no table-scope violation checks: an explicit EMPTY frame (not
         # None) so clean_rows(strict) anti-joins a broadcast-empty side
         # instead of falling back to the full union
-        _dt = dict(df.dtypes)
-        table_viols = df.sparkSession.createDataFrame(
-            [],
-            ", ".join(
-                [f"`{k}` {_dt.get(k, 'string')}" for k in keys]
-                + [f"{c} string" for c in _VIOL_TAIL]
-            ),
-        )
+        table_viols = _empty_violations(df, keys)
     if not viols:
         # no violation-producing checks at all: empty frame, right schema
-        dtypes = dict(df.dtypes)
-        schema = ", ".join(
-            [f"`{k}` {dtypes.get(k, 'string')}" for k in keys]
-            + [f"{c} string" for c in _VIOL_TAIL]
-        )
-        viols = [df.sparkSession.createDataFrame([], schema)]
+        viols = [_empty_violations(df, keys)]
     all_viols = viols[0]
     for v in viols[1:]:
         all_viols = all_viols.unionByName(v)

@@ -57,7 +57,7 @@ class TranscriptGen:
     seed: int = 42
     max_turns: int = 500
     zipf_s: float = 1.2
-    # pathological-skew knobs (bench --skew-demo): the first
+    # pathological-skew knobs: the first
     # ``hot_convs`` conversations get exactly ``hot_len`` turns,
     # overriding the Zipf draw — a deterministic mega-conversation far
     # beyond the domain bound, to demonstrate how the fused ordered

@@ -1,11 +1,11 @@
 """Tests for the BENCH event-log analysis tools (stdlib-only, no Spark).
 
-The scaling-evidence chain (VERDICT round-3 items 1-2) leans on
-BENCH/analyze_eventlog.py and BENCH/pair_stage_report.py to decompose
-banked pairs; a parsing or matching regression there silently corrupts
-the evidence, so the tools get the same known-answer treatment as the
-engine: a synthetic two-app event-log pair with hand-computable walls
-and task sums.
+`bench.py --scaling` prints the app ids of its N and 4N children, and
+BENCH/analyze_eventlog.py and BENCH/pair_stage_report.py decompose the
+two event logs per stage; a parsing or matching regression there
+silently corrupts that decomposition, so the tools get the same
+known-answer treatment as the engine: a synthetic two-app event-log
+pair with hand-computable walls and task sums.
 """
 from __future__ import annotations
 
