@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from hjsonschema_spark.checks.engine import run_suite
 from hjsonschema_spark.checks.ir import CheckSuite, SuiteRegistry
+from hjsonschema_spark.session import local_relation
 
 _CKPT_SCHEMA = (
     "batch_id string, run_id string, suite string, check_version string, "
@@ -177,13 +178,12 @@ class CheckpointedRun:
     def _append_ckpt(
         self, spark, batch_id, run_id, suite_name, version, batch, n_rows, n_viol, wall, status
     ) -> None:
-        row = [
-            (
-                batch_id, run_id, suite_name, version, _snapshot_id(batch),
-                list(batch), len(batch), n_rows, n_viol, wall, status,
-            )
-        ]
-        spark.createDataFrame(row, _CKPT_SCHEMA).write.mode("append").parquet(self._ckpt_path)
+        row = (
+            batch_id, run_id, suite_name, version, _snapshot_id(batch),
+            list(batch), len(batch), n_rows, n_viol, wall, status,
+        )
+        # a JVM LocalRelation: no Python worker in either commit
+        local_relation(spark, (row,), _CKPT_SCHEMA).write.mode("append").parquet(self._ckpt_path)
 
     def violations(self, spark: SparkSession) -> DataFrame:
         """Committed violations only: rows from batches with a 'done'

@@ -573,7 +573,11 @@ def _pushdown_barrier(col: Column) -> Column:
     byte-identical; the CASE branches differ structurally so constant
     folding cannot erase the marker. Applied ONLY when run_suite
     actually fanned out (well-partitioned production inputs keep full
-    pushdown semantics)."""
+    pushdown semantics).
+
+    Version coupling: the pin relies on Catalyst treating
+    spark_partition_id() as nondeterministic; checked on pyspark 4.1.2
+    (tests/test_plans.py pins the plan shape)."""
     ghost = F.array(
         F.struct(
             F.lit(None).cast("string").alias("check"),
@@ -1126,24 +1130,61 @@ def run_table_aggregates(
         F.col("s.ok").alias("passed"),
     )
 
-_VERDICT_SELECT_DOC = None  # (verdict schema documented in engine.ValidationResult)
+
+def chi2_pvalue(stat: Column, dof: Column, n_obs: Column, n_ref: Column) -> Column:
+    """``operators.drift.chi2_sf`` as a JVM expression, with the drift
+    verdict's edge cases: an empty observed or reference side (or no
+    statistic) is a vacuous p = 1; an infinite or NaN statistic (an
+    observed-only category) is p = 0. The regularized upper incomplete
+    gamma Q(dof/2, stat/2) is commons-math3's ``Gamma.regularizedGammaQ``
+    (on Spark's own classpath) through ``reflect``, which returns the
+    double's string form; the cast back is exact."""
+    q = F.reflect(
+        F.lit("org.apache.commons.math3.special.Gamma"),
+        F.lit("regularizedGammaQ"),
+        dof.cast("double") / F.lit(2.0),
+        stat.cast("double") / F.lit(2.0),
+    ).cast("double")
+    return (
+        F.when(
+            (F.coalesce(n_obs, F.lit(0)) == 0) | (F.coalesce(n_ref, F.lit(0)) == 0) | stat.isNull(),
+            F.lit(1.0),
+        )
+        .when(F.isnan(stat) | (F.abs(stat) == F.lit(float("inf"))), F.lit(0.0))
+        .when((dof <= 0) | (stat <= 0), F.lit(1.0))
+        .otherwise(q)
+    )
 
 
-def _one_row_pvalue_udf(fn):
-    """Wrap a scalar p-value function (from operators.drift — standard
-    public formulas) as an Arrow-batched pandas UDF. It is only ever
-    applied to a ONE-row frame (the reduced drift statistic), so the
-    Python cost is a constant, not a per-row path."""
-    import pandas as _pd
+def ks_pvalue(d: Column, n1: Column, n2: Column) -> Column:
+    """``operators.drift.ks_sf`` as a JVM expression: the asymptotic
+    Kolmogorov series, term by term in the same order, stopping after
+    the first term below 1e-12 (at most 100). No statistic or an empty
+    side is a vacuous p = 1, as is d <= 0. The series is a one-row
+    ``aggregate`` over ``sequence(1, 100)``."""
+    ne = n1.cast("double") * n2.cast("double") / (n1 + n2).cast("double")
+    lam = (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne)) * d
 
-    @F.pandas_udf("double")
-    def _udf(*cols: pd.Series) -> pd.Series:
-        out = []
-        for vals in zip(*cols):
-            out.append(fn(*vals))
-        return _pd.Series(out, dtype="float64")
+    def step(acc: Column, j: Column) -> Column:
+        term = F.when(j % 2 == 1, F.lit(2.0)).otherwise(F.lit(-2.0)) * F.exp(
+            F.lit(-2) * j * j * lam * lam
+        )
+        return F.when(acc["done"], acc).otherwise(
+            F.struct((acc["s"] + term).alias("s"), (F.abs(term) < F.lit(1e-12)).alias("done"))
+        )
 
-    return _udf
+    series = F.aggregate(
+        F.sequence(F.lit(1), F.lit(100)),
+        F.struct(F.lit(0.0).alias("s"), F.lit(False).alias("done")),
+        step,
+    )["s"]
+    return (
+        F.when(
+            d.isNull() | (F.coalesce(n1, F.lit(0)) == 0) | (F.coalesce(n2, F.lit(0)) == 0) | (d <= 0),
+            F.lit(1.0),
+        )
+        .otherwise(F.least(F.lit(1.0), F.greatest(F.lit(0.0), series)))
+    )
 
 
 def run_chi2_drift(df: DataFrame, c: ChiSquareDrift, ref: DataFrame) -> DataFrame:
@@ -1152,13 +1193,11 @@ def run_chi2_drift(df: DataFrame, c: ChiSquareDrift, ref: DataFrame) -> DataFram
     Plan: groupBy histogram of the observed column (partial+final agg —
     the only pass over the big table), full outer join against the
     reference histogram (O(#categories) rows), window totals + one agg
-    to the (stat, dof, n) triple, Arrow-UDF p-value on that single row.
+    to the (stat, dof, n) triple, JVM p-value (chi2_pvalue) on that single row.
     Semantics match operators.drift.chi_squared_drift: expected counts
     scaled to the observed total; observed-only category ⇒ stat=+inf ⇒
     p=0; empty observed or reference side ⇒ vacuous pass."""
     from pyspark.sql import Window
-
-    from hjsonschema_spark.operators.drift import chi2_sf
 
     col = c.column
     obs = df.na.drop(subset=[col]).groupBy(col).agg(F.count(F.lit(1)).alias("_o"))
@@ -1181,23 +1220,14 @@ def run_chi2_drift(df: DataFrame, c: ChiSquareDrift, ref: DataFrame) -> DataFram
         F.coalesce(F.max("_nr"), F.lit(0.0)).alias("_n_ref"),
     )
 
-    import math
-
-    def _p(stat, dof, n_obs, n_ref) -> float:
-        if not n_obs or not n_ref or stat is None:
-            return 1.0  # vacuous: nothing to compare
-        if math.isinf(stat) or math.isnan(stat):
-            return 0.0
-        return chi2_sf(float(stat), int(dof))
-
-    p = _one_row_pvalue_udf(_p)(F.col("_stat"), F.col("_dof"), F.col("_n_obs"), F.col("_n_ref"))
-    return one.select(
+    p = chi2_pvalue(F.col("_stat"), F.col("_dof"), F.col("_n_obs"), F.col("_n_ref"))
+    return one.withColumn("_p", p).select(
         F.lit("table").alias("scope"),
         F.lit(None).cast("int").alias("partition_id"),
         F.lit(check_id(c)).alias("check"),
         F.col("_n_obs").cast("long").alias("n_rows"),
         F.lit(None).cast("long").alias("n_violations"),
-        (p >= F.lit(float(c.alpha))).alias("passed"),
+        (F.col("_p") >= F.lit(float(c.alpha))).alias("passed"),
     )
 
 
@@ -1207,13 +1237,11 @@ def run_ks_drift(df: DataFrame, c: KSDrift, ref: DataFrame) -> DataFrame:
     Plan: shared [lo, hi] from a lazy 1-row bounds agg (broadcast into
     both sides), one width-bucketed groupBy per side (the ONLY passes
     over the data; partial+final agg, spill-safe), cumulative-sum
-    windows over O(buckets) rows for the ECDF gap D, Arrow-UDF
-    asymptotic p-value on the single resulting row. Matches
+    windows over O(buckets) rows for the ECDF gap D, JVM asymptotic
+    p-value (ks_pvalue) on the single resulting row. Matches
     operators.drift.ks_two_sample (same bucketed-D estimator); empty
     side or degenerate range ⇒ vacuous pass."""
     from pyspark.sql import Window
-
-    from hjsonschema_spark.operators.drift import ks_sf
 
     col = c.column
     a = df.na.drop(subset=[col]).select(F.col(col).cast("double").alias("x"))
@@ -1255,17 +1283,12 @@ def run_ks_drift(df: DataFrame, c: KSDrift, ref: DataFrame) -> DataFrame:
         F.coalesce(F.max("_n2"), F.lit(0)).alias("_n2"),
     )
 
-    def _p(d, n1, n2) -> float:
-        if d is None or not n1 or not n2:
-            return 1.0  # vacuous
-        return ks_sf(float(d), int(n1), int(n2))
-
-    p = _one_row_pvalue_udf(_p)(F.col("_d"), F.col("_n1"), F.col("_n2"))
-    return one.select(
+    p = ks_pvalue(F.col("_d"), F.col("_n1"), F.col("_n2"))
+    return one.withColumn("_p", p).select(
         F.lit("table").alias("scope"),
         F.lit(None).cast("int").alias("partition_id"),
         F.lit(check_id(c)).alias("check"),
         F.col("_n1").cast("long").alias("n_rows"),
         F.lit(None).cast("long").alias("n_violations"),
-        (p >= F.lit(float(c.alpha))).alias("passed"),
+        (F.col("_p") >= F.lit(float(c.alpha))).alias("passed"),
     )

@@ -35,6 +35,7 @@ from hjsonschema_spark.checks.ir import (
     TableCheck,
     UniqueKey,
 )
+from hjsonschema_spark.session import cached_local_df
 
 _VIOL_TAIL = ["check", "column", "value"]
 
@@ -234,8 +235,9 @@ def _empty_violations(df: DataFrame, key_columns: tuple) -> DataFrame:
     """An empty violations frame: the key columns at their input types,
     then the string tail."""
     dtypes = dict(df.dtypes)
-    return df.sparkSession.createDataFrame(
-        [],
+    return cached_local_df(
+        df.sparkSession,
+        (),
         ", ".join(
             [f"`{k}` {dtypes.get(k, 'string')}" for k in key_columns]
             + [f"{c} string" for c in _VIOL_TAIL]
@@ -716,8 +718,6 @@ def run_suite(
             .orderBy(*keys, "check")
         )
 
-    from hjsonschema_spark.session import cached_local_df
-
     spark = df.sparkSession
 
     def _build_verdicts() -> DataFrame:
@@ -743,8 +743,9 @@ def run_suite(
         parts = [p() for p in verdict_parts]
         if schema_verdicts:
             parts.append(
-                spark.createDataFrame(
-                    [("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in schema_verdicts],
+                cached_local_df(
+                    spark,
+                    tuple(("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in schema_verdicts),
                     "scope string, partition_id int, check string, n_rows long, n_violations long, passed boolean",
                 )
             )

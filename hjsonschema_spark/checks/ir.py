@@ -911,7 +911,7 @@ class ChiSquareDrift(TableCheck):
     checks on role histograms" as a first-class suite check (one
     table-scope verdict row; passed = p_value >= alpha). Compiles to a
     single distributed groupBy + an O(#categories) join — the p-value
-    is an Arrow UDF over the ONE resulting row. A reference category
+    is a JVM expression over the ONE resulting row. A reference category
     absent from the observed side contributes its expected count; an
     observed category absent from the reference drives the statistic to
     +inf (p=0), matching operators.drift.chi_squared_drift."""
@@ -935,8 +935,8 @@ class KSDrift(TableCheck):
     North-star coverage: "KS drift checks on turn-length" as a
     first-class suite check. Compiles to one width-bucketed groupBy per
     side (shared [lo,hi] from a lazy 1-row bounds agg), cumulative-sum
-    windows over O(buckets) rows, and an Arrow-UDF p-value on the ONE
-    resulting row — no sample ever reaches the driver. The bucketed D
+    windows over O(buckets) rows, and a JVM-expression p-value on the
+    ONE resulting row — no sample ever reaches the driver. The bucketed D
     underestimates exact D by at most one bucket's mass."""
     kind: ClassVar[str] = "ks_drift"
     column: str = ""

@@ -83,10 +83,28 @@ def ks_sf(d: float, n1: int, n2: int) -> float:
 
 # -- chi-squared on categorical histograms ----------------------------------
 
+# Chi-squared drift compares categorical histograms on the driver; a
+# column with more categories than this is not categorical (an id, free
+# text) and its histogram would be as large as the table.
+MAX_CATEGORIES = 10_000
+
+
+def _collect_histogram(counts: DataFrame, col: str) -> dict:
+    """Collect a ``[col, n]`` frame to a dict, fetching at most
+    MAX_CATEGORIES + 1 rows; raise ValueError above the bound."""
+    rows = counts.limit(MAX_CATEGORIES + 1).collect()
+    if len(rows) > MAX_CATEGORIES:
+        raise ValueError(
+            f"histogram of {col!r} has more than {MAX_CATEGORIES} categories: "
+            "chi-squared drift needs a categorical column"
+        )
+    return {r[col]: r["n"] for r in rows}
+
+
 def histogram(df: DataFrame, col: str) -> dict:
-    """groupBy-count → driver dict (category cardinality assumed small,
-    e.g. the 5-role vocabulary)."""
-    return {r[col]: r["n"] for r in df.groupBy(col).agg(F.count(F.lit(1)).alias("n")).collect()}
+    """groupBy-count → driver dict, at most MAX_CATEGORIES categories
+    (e.g. the 5-role vocabulary)."""
+    return _collect_histogram(df.groupBy(col).agg(F.count(F.lit(1)).alias("n")), col)
 
 
 def chi_squared_drift(
@@ -95,9 +113,7 @@ def chi_squared_drift(
     """Pearson chi² of df[col]'s histogram against a reference
     histogram (dict value->count or DataFrame[col, n])."""
     obs = histogram(df, col)
-    ref = reference if isinstance(reference, Mapping) else {
-        r[col]: r["n"] for r in reference.collect()
-    }
+    ref = reference if isinstance(reference, Mapping) else _collect_histogram(reference, col)
     n_obs = sum(obs.values())
     n_ref = sum(ref.values())
     cats = sorted(set(obs) | set(ref), key=lambda x: (x is None, str(x)))

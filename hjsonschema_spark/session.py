@@ -1,11 +1,23 @@
-"""SparkSession construction with scale-oriented defaults.
+"""SparkSession construction with scale-oriented defaults, and the
+small relations the engine plans against.
 
 All engine entry points accept an existing SparkSession; this builder is
 for tests / bench / CLI use. Defaults fit the host they run on
 (local[N] over the CPUs this process may use, one JVM with half the
 host's memory) but every knob matters identically on a real cluster:
-AQE for runtime re-planning + skew-join splitting, Arrow for the
-pandas-UDF boundary, shuffle partitions sized to the core count.
+AQE for runtime re-planning + skew-join splitting (also inside cached
+plans, so a persisted violation union is coalesced like any other
+query), a generated-code cache that holds a whole suite under names
+that do not change between runs (so a repeated run_suite compiles
+nothing), Arrow for the pandas-UDF boundary, shuffle partitions sized
+to the core count. A caller that brings its own session, or runs the
+CLI under spark-submit, should pass those three settings itself (see
+README).
+
+``local_relation`` builds small relations (check-id lists, schema
+verdicts, empty frames, literal vocabularies, checkpoint ledger rows) as
+JVM ``LocalRelation``s (a ``LocalTableScan`` when executed): no Python
+worker runs to read them. ``cached_local_df`` memoizes the static ones.
 """
 
 from __future__ import annotations
@@ -23,6 +35,11 @@ _ICEBERG_AVAILABLE: bool | None = None
 _MEMINFO = "/proc/meminfo"
 _MAX_DRIVER_MB = 48 * 1024
 _FALLBACK_DRIVER_MB = 2 * 1024
+# Generated-class cache entries (spark.sql.codegen.cache.maxEntries,
+# default 100). A warm run of the 16-check transcript suite compiles
+# more distinct classes than 100, so the LRU evicted them and every run
+# recompiled and re-JIT-compiled the same sources.
+_CODEGEN_CACHE_ENTRIES = 2000
 
 
 def default_parallelism() -> int:
@@ -97,6 +114,16 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE re-plan cached plans too: otherwise run_suite's
+        # persisted violation union keeps every branch's full shuffle
+        # partition count, and each later scan of it pays for all of them
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # static conf: only takes effect when the session is created
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # the cache is keyed on the generated source; with the stage id
+        # in the class name, a stage that AQE numbers differently from
+        # one run to the next misses it
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Arrow: every pandas-UDF boundary is vectorized.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -129,20 +156,51 @@ def get_spark(
 _LOCAL_DF_MEMO: dict = {}
 
 
+def local_relation(spark: SparkSession, rows: tuple, schema: str):
+    """``rows`` as a JVM ``LocalRelation`` of DDL ``schema``: a
+    ``VALUES`` with named parameters (the parser binds each value as a
+    literal, so no quoting), cast column by column to the declared
+    types; no rows is a ``LIMIT 0`` projection, which the optimizer
+    also turns into an empty ``LocalRelation``. ``createDataFrame(list)`` would
+    plan a ``Scan ExistingRDD`` over a parallelized Python RDD instead,
+    and every collect of it forks Python workers to unpickle the rows."""
+    from pyspark.sql.types import StructType
+
+    fields = StructType.fromDDL(schema).fields
+    names = ["`" + f.name.replace("`", "``") + "`" for f in fields]
+    types = [f.dataType.simpleString() for f in fields]
+    if not rows:
+        cols = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in zip(names, types))
+        return spark.sql(f"SELECT {cols} LIMIT 0")
+    cols = ", ".join(
+        f"CAST(col{i + 1} AS {t}) AS {n}" for i, (n, t) in enumerate(zip(names, types))
+    )
+    # named markers: positional ones bind out of order in a VALUES of
+    # more than two multi-column rows (pyspark 4.1.2)
+    width = len(fields)
+    values = ", ".join(
+        "(" + ", ".join(f":p{r * width + i}" for i in range(width)) + ")"
+        for r in range(len(rows))
+    )
+    flat = [v for row in rows for v in row]
+    args = {f"p{k}": v for k, v in enumerate(flat)}
+    return spark.sql(f"SELECT {cols} FROM VALUES {values}", args=args)
+
+
 def cached_local_df(spark: SparkSession, rows: tuple, schema: str):
-    """Memoized createDataFrame for SMALL STATIC local relations (check
-    id lists, literal vocabularies). createDataFrame costs a py4j
-    round-trip burst (~30-80 ms) and bench/production loops rebuild the
-    identical relation every run. Keyed on the session OBJECT (not its
-    id — holding the reference also prevents id reuse after gc), so a
-    new session never sees a stale frame. Plan-construction memo only:
-    rows must be static configuration, never data-derived."""
+    """Memoized ``local_relation`` for SMALL STATIC relations: check id
+    lists, schema verdicts, empty frames, literal vocabularies. Building
+    one costs a py4j round-trip burst and bench/production loops
+    rebuild the identical relation every run. Keyed on the session OBJECT (not its id — holding the
+    reference also prevents id reuse after gc), so a new session never
+    sees a stale frame. Plan-construction memo only: rows must be
+    static configuration, never data-derived."""
     key = (spark, schema, rows)
     df = _LOCAL_DF_MEMO.get(key)
     if df is None:
         if len(_LOCAL_DF_MEMO) >= 256:
             _LOCAL_DF_MEMO.clear()
-        df = _LOCAL_DF_MEMO[key] = spark.createDataFrame(list(rows), schema)
+        df = _LOCAL_DF_MEMO[key] = local_relation(spark, rows, schema)
     return df
 
 

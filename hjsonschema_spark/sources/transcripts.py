@@ -57,14 +57,6 @@ class TranscriptGen:
     seed: int = 42
     max_turns: int = 500
     zipf_s: float = 1.2
-    # pathological-skew knobs: the first
-    # ``hot_convs`` conversations get exactly ``hot_len`` turns,
-    # overriding the Zipf draw — a deterministic mega-conversation far
-    # beyond the domain bound, to demonstrate how the fused ordered
-    # pass degrades (single straggler task, streaming memory, no
-    # buffering/OOM) when a group dwarfs its siblings.
-    hot_convs: int = 0
-    hot_len: int = 0
     # violation knobs
     dup_rate: float = 0.0
     null_role_rate: float = 0.0
@@ -85,8 +77,6 @@ class TranscriptGen:
         u = _u(self.seed, conv_n, salt="len") + 1e-12
         raw = F.ceil(F.pow(u, F.lit(-1.0 / self.zipf_s)))
         ln = F.least(F.lit(self.max_turns), F.greatest(F.lit(1), raw))
-        if self.hot_convs and self.hot_len:
-            ln = F.when(conv_n < self.hot_convs, F.lit(self.hot_len)).otherwise(ln)
         return ln.cast("int")
 
     def _role(self, conv_n: Column, turn: Column) -> Column:

@@ -7,7 +7,9 @@ from hjsonschema_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="hjsonschema_spark-tests", cores=8, shuffle_partitions=8)
+    # local[N] over the host's usable cores, get_spark's default shuffle
+    # partitions (see session.default_parallelism)
+    s = get_spark(app_name="hjsonschema_spark-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

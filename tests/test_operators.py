@@ -398,6 +398,16 @@ def test_ks_drift(spark):
     assert moved["drifted"] and moved["statistic"] > same["statistic"]
 
 
+def test_histogram_is_bounded(spark, monkeypatch):
+    """At most MAX_CATEGORIES + 1 categories reach the driver; above the
+    bound histogram() raises instead of collecting them all."""
+    monkeypatch.setattr(drift, "MAX_CATEGORIES", 3)
+    df = spark.range(10).select((F.col("id") % 4).alias("c"))
+    with pytest.raises(ValueError, match="more than 3 categories"):
+        drift.histogram(df, "c")
+    assert drift.histogram(df.filter(F.col("c") < 3), "c") == {0: 3, 1: 3, 2: 2}
+
+
 def test_ks_p_value_sanity():
     # D=0.5 on two 100-samples is wildly significant; D=0.05 is not
     assert drift.ks_sf(0.5, 100, 100) < 1e-10
