@@ -50,44 +50,64 @@ metacharacters / ``\\t \\n \\r``. Anything else — ``\\d \\w \\s \\b``
 — routes to the exact UDF path (round-4 ADVICE, columnar.py:106).
 
 Array sizes/elements are read by casting the variant to
-``array<variant>`` and using size/transform; per-element checks run in
-one ``transform`` lambda per row (JVM-interpreted, not codegen — still
-orders of magnitude cheaper than the per-document Python interpreter,
-and arrays here are per-row payload fields, not the engine's many-row
-x many-iteration hot path that CLAUDE.md's higher-order-function rule
-targets).
+``array<variant>`` and using size/transform: one ``transform`` builds
+each element's views once, as a struct, and a second builds the
+element's failures from that struct (JVM-interpreted, not codegen —
+still orders of magnitude cheaper than the per-document Python
+interpreter, and arrays here are per-row payload fields, not the
+engine's many-row x many-iteration hot path that CLAUDE.md's
+higher-order-function rule targets).
 
 Scale: the columnar plan runs in the JVM — no Python worker, no Arrow
 transfer, no per-document interpreter — and scales with executors like
 any other row check. Its work is staged as projections over the input:
 (1) the parsed variant; (2) the root's type class and views, and one
 ``try_variant_get`` per property or required key; (3) each property's
-views (``_views``: type class, string, decimal, double, boolean,
-array); (4) the failure array and verdict, built from column
-references only, after which the temporary columns are dropped. So
-each document is parsed once and each property extracted once. The
-staging is needed because every failure sits in a ``CaseWhen`` branch
-(guarded by the root being an object), and Catalyst's subexpression
-elimination does not reach into conditional branches: inlined, the
-parse and the extractions ran again for every keyword. It holds
-because ``CollapseProject`` does not inline a non-cheap expression
-that its consumer references more than once, and ``ColumnPruning``
-drops the views no failure reads. Both are Catalyst behaviour, not
-API; tests/test_columnar_json.py::test_staged_plan_parses_once pins
-them (on pyspark 4.1.2). The failure projection itself runs outside
-whole-stage codegen: ``array_compact`` is a higher-order ``filter``,
-which falls back to interpreted evaluation (a ``flatten`` of
-0/1-element arrays keeps codegen, but ran 10-20% slower in a trial on
-12k tool-call documents at 4 cores).
+views (``_VIEW_SQL``: type class, string, decimal, double, boolean,
+array), only those some failure reads; (4) the failure array and (5)
+the verdict, built from column references only, after which the
+temporary columns are dropped. So each document is parsed once and
+each property extracted once. The staging is needed because every
+failure sits in a ``CaseWhen`` branch (guarded by the root being an
+object), and Catalyst's subexpression elimination does not reach into
+conditional branches: inlined, the parse and the extractions ran again
+for every keyword. It holds because ``CollapseProject`` does not
+inline a non-cheap expression that its consumer references more than
+once. That is Catalyst behaviour, not API;
+tests/test_columnar_json.py::test_staged_plan_parses_once pins it (on
+pyspark 4.1.2).
+
+The stages are written as Spark SQL text and each is applied with one
+``selectExpr`` (the failures and the verdict with one ``withColumns``
+of one ``F.expr`` each, which replaces a same-named input column in
+place), then one ``drop``. Built from PySpark ``Column`` functions
+instead, the benchmark's 4-property schema cost 3.7k py4j round trips
+and about 0.2 s of driver time per call, as much as executing it on
+12k documents, because each function call crosses to the JVM several
+times (call-site capture included); as text it is about 90 round trips
+and 0.04 s (tests/test_columnar_json.py::test_build_round_trips_bounded).
+Every schema literal goes into the text through ``_str``: a string
+that could be read two ways (a quote, a backslash, a brace) becomes a
+hex binary literal cast to string, so ``spark.sql.parser.
+escapedStringLiterals`` and ``${var}`` substitution cannot change what
+it means; numbers become exact decimal literals (``_num``). The input
+column is read as ``F.col`` reads it (``_col_ref``); every other name
+is backtick-quoted. tests/test_columnar_differential.py checks both
+against the exact path under both parser settings. The failure
+projection itself runs outside whole-stage codegen: ``array_compact``
+is a higher-order ``filter``, which falls back to interpreted
+evaluation (a ``flatten`` of 0/1-element arrays keeps codegen, but ran
+10-20% slower in a trial on 12k tool-call documents at 4 cores).
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from decimal import Decimal
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SAFE_KEY = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -310,235 +330,276 @@ def liftable(schema: Any) -> bool:
     return True
 
 
-def _num_lit(v: Any) -> Column:
-    return F.lit(Decimal(repr(float(v))) if isinstance(v, float) else Decimal(v))
+_PLAIN = re.compile(r"[A-Za-z0-9_ $./()-]*")
 
 
-def _fail(
-    cond: Column, keyword: str, ipath: Column | str, spath: str, value: Column
-) -> Column:
+def _str(s: str) -> str:
+    """``s`` as a SQL string literal that means ``s`` whatever
+    ``spark.sql.parser.escapedStringLiterals`` is set to and that
+    ``${var}`` substitution leaves alone: quoted as it is when it holds
+    no quote, backslash or brace, else its UTF-8 bytes as a hex binary
+    literal cast to string (constant-folded to the same string literal)."""
+    if _PLAIN.fullmatch(s):
+        return f"'{s}'"
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
+def _num(v: Any) -> str:
+    """A decimal bound or enum member as a decimal literal: the same
+    value ``Decimal`` gives it, so the comparison stays exact."""
+    d = Decimal(repr(float(v))) if isinstance(v, float) else Decimal(v)
+    return f"({d:f}BD)"
+
+
+def _q(name: str) -> str:
+    """``name`` as one backtick-quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col_ref(name: str) -> str:
+    """``name`` read as ``F.col`` reads it: dots split nested fields,
+    and a backtick-quoted part (with doubled backticks inside) may hold
+    dots (Spark's ``UnresolvedAttribute.parseAttributeName``)."""
+    parts, cur, i, quoted = [], [], 0, False
+    while i < len(name):
+        c = name[i]
+        if quoted:
+            if c == "`" and name[i + 1 : i + 2] == "`":
+                cur.append(c)
+                i += 1
+            elif c == "`":
+                quoted = False
+                if name[i + 1 : i + 2] not in ("", "."):
+                    raise ValueError(f"bad column name {name!r}")
+            else:
+                cur.append(c)
+        elif c == "`":
+            if cur:
+                raise ValueError(f"bad column name {name!r}")
+            quoted = True
+        elif c == ".":
+            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
+                raise ValueError(f"bad column name {name!r}")
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(c)
+        i += 1
+    if quoted:
+        raise ValueError(f"bad column name {name!r}")
+    parts.append("".join(cur))
+    return ".".join(_q(p) for p in parts)
+
+
+def _and(*xs: str) -> str:
+    return "(" + " AND ".join(xs) + ")"
+
+
+def _or(xs: list[str]) -> str:
+    return "(" + " OR ".join(xs) + ")"
+
+
+def _not(x: str) -> str:
+    return f"(NOT {x})"
+
+
+_EMPTY_FAILS = f"CAST(array() AS {_FAIL_DDL})"
+
+
+def _fail(cond: str, keyword: str, ip: str, spath: str, value: str) -> str:
     """A failure struct when ``cond`` (guarded: never NULL) holds.
-    ``ipath`` may be a Column for per-element (indexed) paths."""
-    ip = F.lit(ipath) if isinstance(ipath, str) else ipath
-    return F.when(
-        cond,
-        F.struct(
-            F.lit(keyword).alias("keyword"),
-            ip.alias("instance_path"),
-            F.lit(spath).alias("schema_path"),
-            F.lit(f"{keyword} failed (columnar)").alias("message"),
-            value.cast("string").alias("value"),
-        ),
+    ``ip`` is SQL: a literal, or a per-element (indexed) path."""
+    return (
+        f"CASE WHEN {cond} THEN named_struct('keyword', {_str(keyword)}, "
+        f"'instance_path', {ip}, 'schema_path', {_str(spath)}, "
+        f"'message', {_str(f'{keyword} failed (columnar)')}, 'value', {value}) END"
     )
 
 
-def _views(vk: Column) -> dict[str, Column]:
-    """The reads of one variant instance that its failure expressions
-    share: the JSON type class (``schema_of_variant``) and the value as
-    string, decimal(38,18), double, boolean and array<variant> (each
-    NULL when the instance does not have that shape)."""
-    return {
-        "sch": F.schema_of_variant(vk),
-        "str": F.try_variant_get(vk, "$", "string"),
-        "dec": F.try_variant_get(vk, "$", "decimal(38,18)"),
-        "dbl": F.try_variant_get(vk, "$", "double"),
-        "bool": F.try_variant_get(vk, "$", "boolean"),
-        "arr": F.try_variant_get(vk, "$", "array<variant>"),
-    }
+# The reads of one variant instance that its failure expressions share:
+# the JSON type class, the value as string, decimal(38,18), double,
+# boolean and array<variant> (each NULL when the instance does not have
+# that shape), and whether it is present at all.
+_VIEW_SQL = {
+    "sch": "schema_of_variant({})",
+    "str": "try_variant_get({}, '$', 'string')",
+    "dec": "try_variant_get({}, '$', 'decimal(38,18)')",
+    "dbl": "try_variant_get({}, '$', 'double')",
+    "bool": "try_variant_get({}, '$', 'boolean')",
+    "arr": "try_variant_get({}, '$', 'array<variant>')",
+    "nn": "({} IS NOT NULL)",
+}
 
 
-def _has_class(sch: Column, cls: str) -> Column:
+class _Views:
+    """The views (``_VIEW_SQL``) of the variant ``src`` that some failure
+    reads, each defined once where it is staged: a projection column
+    for the root and each property, a field of a per-element struct for
+    array items. ``ref(n)`` is the SQL that reads view ``n`` there;
+    ``defs`` collects the definitions of the views read so far.
+    ``element``: ``src`` is a lambda variable that the failures cannot
+    see, so presence is a view too, not an inline test of ``src``."""
+
+    def __init__(self, src: str, ref: Callable[[str], str], element: bool = False):
+        self.src, self.ref, self.element = src, ref, element
+        self.defs: dict[str, str] = {}
+
+    def __getitem__(self, n: str) -> str:
+        self.defs.setdefault(n, _VIEW_SQL[n].format(self.src))
+        return self.ref(n)
+
+    @property
+    def present(self) -> str:
+        return self["nn"] if self.element else _VIEW_SQL["nn"].format(self.src)
+
+
+def _has_class(sch: str, cls: str) -> str:
     """``schema_of_variant`` output names JSON type ``cls`` (never NULL)."""
-    return F.coalesce(sch.startswith(cls), F.lit(False))
+    return f"coalesce(startswith({sch}, {_str(cls)}), false)"
 
 
-def _scalar_failures(
-    vk: Column, sub: dict, ip: Column | str, sp: str,
-    views: dict[str, Column] | None = None,
-) -> list[Column]:
+def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[str]:
     """Failure structs for one scalar-subschema instance (a property
-    value or an array element); every condition is vacuously false
-    when the instance is absent or the type class doesn't match the
-    keyword (reference type-mismatch ⇒ pass). ``views`` are the staged
-    ``_views(vk)`` columns; without them (inside a per-element lambda,
-    where nothing can be staged) they are built here."""
-    v = views or _views(vk)
-    present = vk.isNotNull()
+    value or an array element) with views ``v``; every condition is
+    vacuously false when the instance is absent or the type class
+    doesn't match the keyword (reference type-mismatch ⇒ pass)."""
+    present = v.present
     sch = v["sch"]
-    is_str = sch == "STRING"
-    is_bool = sch == "BOOLEAN"
-    is_null = sch == "VOID"
-    is_num = sch.isin("BIGINT", "DOUBLE", "FLOAT") | sch.startswith("DECIMAL")
-    as_str, as_dec, as_dbl, as_bool = v["str"], v["dec"], v["dbl"], v["bool"]
-    # mathematical integrality (reference Utils.hs:94-119: 1e3 and 1.0
-    # ARE integers): variant stores 1e3 as DOUBLE, so the type tag
-    # alone is not enough — test the VALUE for wholeness, exact
-    # decimal compare when in range, double beyond.
-    # (wholeness via % 1, NOT floor(): floor returns LongType and
-    # overflows silently past 2^63 — 1e23 must still be an integer)
-    is_intg = is_num & F.coalesce(
-        F.when(as_dec.isNotNull(), as_dec % F.lit(1) == 0),
-        as_dbl % F.lit(1.0) == 0.0,
-        F.lit(False),
-    )
-    out: list[Column] = []
+    as_str = v["str"]
+    is_str = f"({sch} = 'STRING')"
+    is_bool = f"({sch} = 'BOOLEAN')"
+    is_null = f"({sch} = 'VOID')"
+    is_num = f"({sch} IN ('BIGINT', 'DOUBLE', 'FLOAT') OR startswith({sch}, 'DECIMAL'))"
 
-    def num_cmp(op) -> Column:
+    def num_cmp(op: str, lit: str) -> str:
         # exact decimal compare when in range; double beyond (see
         # module docstring "known deviation")
-        return F.coalesce(
-            F.when(as_dec.isNotNull(), op(as_dec)), op(as_dbl), F.lit(False)
+        dec, dbl = v["dec"], v["dbl"]
+        return (
+            f"coalesce(CASE WHEN {dec} IS NOT NULL THEN ({dec} {op} {lit}) END, "
+            f"({dbl} {op} {lit}), false)"
         )
 
+    out: list[str] = []
     t = sub.get("type")
     if t is not None:
-        ok = {
-            "string": is_str,
-            "boolean": is_bool,
-            "null": is_null,
-            "number": is_num,
-            "integer": is_intg,
-        }[t]
-        out.append(_fail(present & ~ok, "type", ip, f"{sp}/type", as_str))
+        if t == "integer":
+            # mathematical integrality (reference Utils.hs:94-119: 1e3
+            # and 1.0 ARE integers): variant stores 1e3 as DOUBLE, so
+            # the type tag alone is not enough — test the VALUE for
+            # wholeness, exact decimal compare when in range, double
+            # beyond. (wholeness via % 1, NOT floor(): floor returns
+            # LongType and overflows silently past 2^63 — 1e23 must
+            # still be an integer)
+            dec, dbl = v["dec"], v["dbl"]
+            ok = _and(
+                is_num,
+                f"coalesce(CASE WHEN {dec} IS NOT NULL THEN (({dec} % 1) = 0) END, "
+                f"(({dbl} % 1.0D) = 0.0D), false)",
+            )
+        else:
+            ok = {
+                "string": is_str,
+                "boolean": is_bool,
+                "null": is_null,
+                "number": is_num,
+            }[t]
+        out.append(_fail(_and(present, _not(ok)), "type", ip, f"{sp}/type", as_str))
     if "enum" in sub:
         hits = []
-        # string members as ONE isin (an InSet hash lookup above 10
+        # string members as ONE IN (an InSet hash lookup above 10
         # members), not an OR chain of equalities
         strs = [m for m in sub["enum"] if isinstance(m, str)]
         if strs:
-            hits.append(is_str & as_str.isin(*strs))
+            hits.append(_and(is_str, f"({as_str} IN ({', '.join(map(_str, strs))}))"))
         for m in sub["enum"]:
             if isinstance(m, bool):
-                hits.append(is_bool & (as_bool == F.lit(m)))
+                hits.append(_and(is_bool, f"({v['bool']} = {str(m).lower()})"))
             elif m is None:
                 hits.append(is_null)
             elif not isinstance(m, str):  # number: mathematical equality
-                hits.append(is_num & num_cmp(lambda x, _m=m: x == _num_lit(_m)))
-        matched = F.coalesce(reduce_or(hits), F.lit(False))
-        out.append(_fail(present & ~matched, "enum", ip, f"{sp}/enum", as_str))
-    for kw, op in (
-        ("minimum", lambda b: (lambda x: x >= _num_lit(b))),
-        ("maximum", lambda b: (lambda x: x <= _num_lit(b))),
-    ):
+                hits.append(_and(is_num, num_cmp("=", _num(m))))
+        matched = f"coalesce({_or(hits)}, false)"
+        out.append(_fail(_and(present, _not(matched)), "enum", ip, f"{sp}/enum", as_str))
+    for kw, op in (("minimum", ">="), ("maximum", "<=")):
         if kw in sub:
-            cmp = op(sub[kw])
             if sub.get(f"exclusive{kw[0].upper()}{kw[1:]}", False) is True:
-                cmp = (
-                    (lambda x: x > _num_lit(sub[kw]))
-                    if kw == "minimum"
-                    else (lambda x: x < _num_lit(sub[kw]))
-                )
+                op = op[0]
+            cmp = num_cmp(op, _num(sub[kw]))
             out.append(
-                _fail(present & is_num & ~num_cmp(cmp), kw, ip, f"{sp}/{kw}", as_str)
+                _fail(_and(present, is_num, _not(cmp)), kw, ip, f"{sp}/{kw}", as_str)
             )
-    if "minLength" in sub:
-        out.append(
-            _fail(
-                present & is_str & (F.length(as_str) < F.lit(sub["minLength"])),
-                "minLength", ip, f"{sp}/minLength", as_str,
+    for kw, op in (("minLength", "<"), ("maxLength", ">")):
+        if kw in sub:
+            out.append(
+                _fail(
+                    _and(present, is_str, f"(length({as_str}) {op} {sub[kw]})"),
+                    kw, ip, f"{sp}/{kw}", as_str,
+                )
             )
-        )
-    if "maxLength" in sub:
-        out.append(
-            _fail(
-                present & is_str & (F.length(as_str) > F.lit(sub["maxLength"])),
-                "maxLength", ip, f"{sp}/maxLength", as_str,
-            )
-        )
     if "pattern" in sub:
         # unanchored search in both paths (rlike / re.search); the
         # liftable gate restricts syntax to the dual-dialect subset so
         # Java-vs-Python semantics cannot diverge here
+        hit = f"coalesce(rlike({as_str}, {_str(sub['pattern'])}), false)"
         out.append(
-            _fail(
-                present & is_str & ~F.coalesce(as_str.rlike(sub["pattern"]), F.lit(False)),
-                "pattern", ip, f"{sp}/pattern", as_str,
-            )
+            _fail(_and(present, is_str, _not(hit)), "pattern", ip, f"{sp}/pattern", as_str)
         )
     return out
 
 
-def _empty_fails() -> Column:
-    return F.array().cast(_FAIL_DDL)
-
-
-def _array_failures(v: dict[str, Column], sub: dict, ip: str, sp: str) -> Column:
-    """Array-of-scalars checks on one variant instance, given its
-    ``_views``: returns an ARRAY of failure structs (empty when the
-    instance is not an array — type-mismatch ⇒ vacuous, matching
-    validator._array which only runs on list instances). The ``type``
-    keyword itself is handled by the caller so its failure joins the
-    scalar struct stream."""
+def _array_failures(v: _Views, sub: dict, ip: str, sp: str, t: str) -> str:
+    """Array-of-scalars checks on one variant instance with views
+    ``v``: an ARRAY of failure structs (empty when the instance is not
+    an array — type-mismatch ⇒ vacuous, matching validator._array which
+    only runs on list instances). The ``type`` keyword itself is
+    handled by the caller so its failure joins the scalar struct
+    stream. ``t`` prefixes the lambda variables."""
     arr = v["arr"]
-    singles: list[Column] = []
-    if "maxItems" in sub:
-        singles.append(
-            _fail(
-                F.size(arr) > F.lit(sub["maxItems"]),
-                "maxItems", ip, f"{sp}/maxItems", v["str"],
-            )
-        )
-    if "minItems" in sub:
-        singles.append(
-            _fail(
-                F.size(arr) < F.lit(sub["minItems"]),
-                "minItems", ip, f"{sp}/minItems", v["str"],
-            )
-        )
-    parts: list[Column] = []
-    if singles:
-        parts.append(F.array_compact(F.array(*singles)))
+    singles = [
+        _fail(f"(size({arr}) {op} {sub[kw]})", kw, _str(ip), f"{sp}/{kw}", v["str"])
+        for kw, op in (("maxItems", ">"), ("minItems", "<"))
+        if kw in sub
+    ]
+    parts = [f"array_compact(array({', '.join(singles)}))"] if singles else []
     it = sub.get("items")
     if isinstance(it, dict) and it:
-        # per-element scalar checks in one transform pass; instance
-        # paths are computed per index (validator._array: ipath/i)
+        # per-element scalar checks: one transform builds each
+        # element's views once, as a struct; a second reads them to
+        # build the failures, with instance paths per index
+        # (validator._array: ipath/i)
+        x, e, i = (_q(f"{t}{n}") for n in ("x", "e", "i"))
+        ev = _Views(x, lambda n: f"{e}.{_q(n)}", element=True)
+        efails = _scalar_failures(
+            ev, it, f"concat({_str(ip + '/')}, CAST({i} AS STRING))", f"{sp}/items"
+        )
+        fields = ", ".join(f"'{n}', {d}" for n, d in ev.defs.items())
         parts.append(
-            F.flatten(
-                F.transform(
-                    arr,
-                    lambda x, i: F.array_compact(
-                        F.array(
-                            *_scalar_failures(
-                                x, it,
-                                F.concat(F.lit(f"{ip}/"), i.cast("string")),
-                                f"{sp}/items",
-                            )
-                        )
-                    ),
-                )
-            )
+            f"flatten(transform(transform({arr}, {x} -> named_struct({fields})), "
+            f"({e}, {i}) -> array_compact(array({', '.join(efails)}))))"
         )
     if not parts:
-        return _empty_fails()
+        return _EMPTY_FAILS
     total = parts[0]
     for p in parts[1:]:
-        total = F.concat(total, p)
-    return F.when(arr.isNotNull(), total).otherwise(_empty_fails())
+        total = f"concat({total}, {p})"
+    return f"CASE WHEN {arr} IS NOT NULL THEN {total} ELSE {_EMPTY_FAILS} END"
 
 
-def _nested_required_failure(
-    vk: Column, v: dict[str, Column], sub: dict, ip: str, sp: str
-) -> Column | None:
+def _nested_required_failure(v: _Views, sub: dict, ip: str, sp: str) -> str | None:
     """required inside a one-level nested object property: ONE failure
     listing applies only when the nested instance IS an object
     (validator._object runs only on dict instances)."""
     req = sub.get("required") or []
     if not req:
         return None
-    any_missing = reduce_or(
-        [F.try_variant_get(vk, f"$.{k}", "variant").isNull() for k in req]
+    any_missing = _or(
+        [f"(try_variant_get({v.src}, {_str(f'$.{k}')}, 'variant') IS NULL)" for k in req]
     )
     return _fail(
-        _has_class(v["sch"], "OBJECT") & any_missing, "required", ip,
+        _and(_has_class(v["sch"], "OBJECT"), any_missing), "required", _str(ip),
         f"{sp}/required", v["str"],
     )
-
-
-def reduce_or(cols: list[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out | c
-    return out
 
 
 def _temp_prefix(taken: list[str]) -> str:
@@ -562,96 +623,96 @@ def validate_json_column_columnar(
     Same output contract as draft4.udf.validate_json_column: NULL json
     ⇒ NULL verdict, unparseable json ⇒ (False, [parse failure]).
 
-    The work is staged as projections (see the module docstring,
-    "Scale"): the parsed variant; the root's views and one extraction
-    per property or required key; each property's views; the failure
-    array; the verdict. The first three stages' columns are named with
-    a prefix no input column starts with, and are dropped at the end."""
+    The work is staged as projections of SQL text (see the module
+    docstring, "Scale"): the parsed variant; the root's views and one
+    extraction per property or required key; each property's views;
+    the failure array; the verdict. The first three stages' columns
+    are named with a prefix no input column starts with, and are
+    dropped at the end. The last two go through ``withColumns``, which
+    replaces a same-named input column in place."""
     if not liftable(schema):
         raise ValueError("schema outside the columnar subset; use the UDF path")
     t = _temp_prefix([*df.columns, valid_col, failures_col])
-    j = F.col(json_col)
+    j = _col_ref(json_col)
+    var = _q(f"{t}v")
     props = schema.get("properties", {})
     keys = list(dict.fromkeys([*props, *(schema.get("required") or [])]))
     kcol = {k: f"{t}k{i}" for i, k in enumerate(keys)}
-    parsed = {f"{t}v": F.try_parse_json(j)}
-    var = F.col(f"{t}v")
-    root_views = _views(var)
-    extracted = {
-        **{f"{t}r_{n}": e for n, e in root_views.items()},
-        **{kcol[k]: F.try_variant_get(var, f"$.{k}", "variant") for k in keys},
+    root = _Views(var, lambda n: _q(f"{t}r_{n}"))
+    views = {
+        k: _Views(_q(kcol[k]), lambda n, c=kcol[k]: _q(f"{c}_{n}")) for k in props
     }
-    # unreferenced views are pruned by Catalyst
-    typed = {
-        f"{kcol[k]}_{n}": e for k in props for n, e in _views(F.col(kcol[k])).items()
-    }
-    root = {n: F.col(f"{t}r_{n}") for n in root_views}
     root_is_obj = _has_class(root["sch"], "OBJECT")
 
-    fails: list[Column] = []
-    fail_arrays: list[Column] = []
+    fails: list[str] = []
+    fail_arrays: list[str] = []
     if schema.get("type") in ("object", "array"):
         cls = "OBJECT" if schema["type"] == "object" else "ARRAY"
-        fails.append(_fail(~_has_class(root["sch"], cls), "type", "", "/type", root["str"]))
+        fails.append(_fail(_not(_has_class(root["sch"], cls)), "type", "''", "/type", root["str"]))
     if schema.get("required"):
         # ONE failure regardless of how many keys are missing (the
         # exact path reports a single required failure listing them);
         # required applies only to objects (type-mismatch => pass).
-        any_missing = reduce_or([F.col(kcol[k]).isNull() for k in schema["required"]])
-        fails.append(_fail(root_is_obj & any_missing, "required", "", "/required", j))
+        any_missing = _or([f"({_q(kcol[k])} IS NULL)" for k in schema["required"]])
+        fails.append(_fail(_and(root_is_obj, any_missing), "required", "''", "/required", j))
     for k, sub in props.items():
-        vk = F.col(kcol[k])
-        v = {n: F.col(f"{kcol[k]}_{n}") for n in root_views}
+        v = views[k]
         ip, sp = f"/{k}", f"/properties/{k}"
         if _scalar_liftable(sub):
             fails.extend(
-                F.when(root_is_obj, f) for f in _scalar_failures(vk, sub, ip, sp, v)
+                f"CASE WHEN {root_is_obj} THEN {f} END"
+                for f in _scalar_failures(v, sub, _str(ip), sp)
             )
             continue
         if sub.get("type") in ("array", "object"):
             cls = "ARRAY" if sub["type"] == "array" else "OBJECT"
             fails.append(
-                F.when(
-                    root_is_obj,
-                    _fail(
-                        vk.isNotNull() & ~_has_class(v["sch"], cls), "type", ip,
-                        f"{sp}/type", v["str"],
-                    ),
+                f"CASE WHEN {root_is_obj} THEN "
+                + _fail(
+                    _and(v.present, _not(_has_class(v["sch"], cls))), "type", _str(ip),
+                    f"{sp}/type", v["str"],
                 )
+                + " END"
             )
         if _array_liftable(sub):
             fail_arrays.append(
-                F.when(root_is_obj, _array_failures(v, sub, ip, sp)).otherwise(
-                    _empty_fails()
-                )
+                f"CASE WHEN {root_is_obj} THEN {_array_failures(v, sub, ip, sp, t)} "
+                f"ELSE {_EMPTY_FAILS} END"
             )
         else:  # nested required-only object
-            nf = _nested_required_failure(vk, v, sub, ip, sp)
+            nf = _nested_required_failure(v, sub, ip, sp)
             if nf is not None:
-                fails.append(F.when(root_is_obj, nf))
+                fails.append(f"CASE WHEN {root_is_obj} THEN {nf} END")
     if any(kw in schema for kw in ("items", "minItems", "maxItems")):
-        fail_arrays.append(_array_failures(root, schema, "", ""))
+        fail_arrays.append(_array_failures(root, schema, "", "", t))
 
-    parse_fail = F.struct(
-        F.lit("parse").alias("keyword"),
-        F.lit("").alias("instance_path"),
-        F.lit("").alias("schema_path"),
-        F.lit("invalid JSON").alias("message"),
-        F.substring(j, 1, 256).alias("value"),
-    )
-    fail_arr = F.array_compact(F.array(*fails)) if fails else _empty_fails()
+    fail_arr = f"array_compact(array({', '.join(fails)}))" if fails else _EMPTY_FAILS
     for fa in fail_arrays:
-        fail_arr = F.concat(fail_arr, fa)
-    failures = (
-        F.when(j.isNull(), F.lit(None))
-        .when(var.isNull(), F.array(parse_fail))
-        .otherwise(fail_arr)
+        fail_arr = f"concat({fail_arr}, {fa})"
+    parse_fail = (
+        "named_struct('keyword', 'parse', 'instance_path', '', 'schema_path', '', "
+        f"'message', 'invalid JSON', 'value', substring({j}, 1, 256))"
     )
-    valid = F.when(j.isNull(), F.lit(None)).otherwise(F.size(F.col(failures_col)) == 0)
-    stages = [parsed, extracted, typed, {failures_col: failures}, {valid_col: valid}]
+    failures = (
+        f"CASE WHEN {j} IS NULL THEN NULL WHEN {var} IS NULL THEN array({parse_fail}) "
+        f"ELSE {fail_arr} END"
+    )
+    valid = f"CASE WHEN {j} IS NULL THEN NULL ELSE size({_q(failures_col)}) = 0 END"
+    # the views no failure reads are never defined
+    stages = [
+        {f"{t}v": f"try_parse_json({j})"},
+        {
+            **{f"{t}r_{n}": d for n, d in root.defs.items()},
+            **{kcol[k]: f"try_variant_get({var}, {_str(f'$.{k}')}, 'variant')" for k in keys},
+        },
+        {f"{kcol[k]}_{n}": d for k in props for n, d in views[k].defs.items()},
+    ]
     for exprs in stages:
-        df = df.withColumns(exprs)
-    return df.drop(*[n for exprs in stages[:3] for n in exprs])
+        if exprs:
+            df = df.selectExpr("*", *(f"{e} AS {_q(n)}" for n, e in exprs.items()))
+    df = df.withColumns({failures_col: F.expr(failures)})
+    df = df.withColumns({valid_col: F.expr(valid)})
+    return df.drop(*[n for exprs in stages for n in exprs])
 
 
 def validate_json_column_auto(

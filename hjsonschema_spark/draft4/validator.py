@@ -241,6 +241,7 @@ class Draft4Validator:
         self.base_uri = _strip_fragment(urljoin(base_uri, root_id)) if (base_uri or root_id) else ""
         self.registry = _Registry(schema, self.base_uri, registry)
         self._regex_cache: dict[str, re.Pattern | None] = {}
+        self._enums: dict[int, tuple[dict, frozenset | None]] = {}
         if check_schema:
             self._check_schema()
 
@@ -270,6 +271,18 @@ class Draft4Validator:
                 self._regex_cache[pattern] = None
         return self._regex_cache[pattern]
 
+    def _enum_members(self, schema: dict) -> frozenset | None:
+        """The canonical forms of ``schema``'s enum members, or None when
+        two of them are equal (a non-unique enum is vacuous), computed
+        once per schema node. The entry holds the node, so no other
+        node can take its id."""
+        hit = self._enums.get(id(schema))
+        if hit is None:
+            cans = [canonical(v) for v in schema["enum"]]
+            members = frozenset(cans) if len(set(cans)) == len(cans) else None
+            hit = self._enums[id(schema)] = (schema, members)
+        return hit[1]
+
     def _v(
         self,
         schema: Any,
@@ -298,11 +311,9 @@ class Draft4Validator:
             if not any(isinstance(x, str) and _type_matches(instance, x) for x in types):
                 fails.append(Failure("type", ipath, spath + "/type", f"expected {types}, got {t}", _dump(instance)))
         if "enum" in schema and isinstance(schema["enum"], list):
-            vs = schema["enum"]
-            cans = [canonical(v) for v in vs]
-            if len(set(cans)) == len(cans):  # non-unique enum => vacuous
-                if canonical(instance) not in set(cans):
-                    fails.append(Failure("enum", ipath, spath + "/enum", "value not in enum", _dump(instance)))
+            members = self._enum_members(schema)
+            if members is not None and canonical(instance) not in members:
+                fails.append(Failure("enum", ipath, spath + "/enum", "value not in enum", _dump(instance)))
         for kw in _LATERAL:
             if kw in schema:
                 add(self._combinator(kw, schema[kw], instance, scope, visited, ipath, spath))

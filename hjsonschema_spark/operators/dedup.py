@@ -23,11 +23,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 from hjsonschema_spark.functions import doc_fingerprint, fan_out, token_shingles, tokens
 from hjsonschema_spark.functions.columns import exploded_shingles
+from hjsonschema_spark.session import local_relation
 
 _MERSENNE = (1 << 61) - 1
 
@@ -468,9 +472,15 @@ def connected_components(
                     # union by MIN so roots are already the min label
                     lo, hi = (ra, rb) if ra < rb else (rb, ra)
                     parent[hi] = lo
-            nodes = {a for a, _ in rows} | {b for _, b in rows}
-            out = [(n, find(n)) for n in sorted(nodes)]
-            return spark.createDataFrame(out, f"node {t}, cluster_id {t}")
+            nodes = sorted({a for a, _ in rows} | {b for _, b in rows})
+            # an Arrow table plans a LocalTableScan; a list of rows would
+            # plan a Python RDD scan that forks workers on every collect
+            schema = StructType.fromDDL(f"node {t}, cluster_id {t}")
+            at = to_arrow_type(schema["node"].dataType)
+            table = pa.table(
+                {"node": pa.array(nodes, at), "cluster_id": pa.array([find(n) for n in nodes], at)}
+            )
+            return spark.createDataFrame(table, schema)
 
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = (
@@ -673,7 +683,7 @@ def incremental_dedup(
     if hist_src is not None:
         hist = hist_src.groupBy("fingerprint").agg(F.min("first_id").alias("_hist_id"))
     else:
-        hist = spark.createDataFrame([], "fingerprint string, _hist_id long")
+        hist = local_relation(spark, (), "fingerprint string, _hist_id long")
     tagged = tagged.join(hist, "fingerprint", "left")
     result = tagged.select(
         id_col,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -402,6 +403,79 @@ def test_staged_plan_parses_once(spark, schema):
     for k in schema["properties"]:
         assert plan.count(f"$.{k},") == 1, (k, plan)
     assert out.columns == ["i", "j", "_failures_json", "_valid"]
+
+
+def test_element_views_built_once(spark):
+    """Each array element's views are built once, as a struct that the
+    failure lambda reads: every per-element read (type class, string,
+    decimal, double) appears once per ``items`` property in the
+    executed plan, not once per keyword that reads it."""
+    df = spark.createDataFrame([(1, '{"id": 1}')], "i int, j string")
+    out = validate_json_column_columnar(df, "j", ARRAY_BATTERY_SCHEMA)
+    plan = out.select("_valid", "_failures_json")._jdf.queryExecution().executedPlan().toString()
+    n_items = sum("items" in s for s in ARRAY_BATTERY_SCHEMA["properties"].values())
+    assert plan.count("schemaOfVariant(lambda ") == n_items, plan
+    reads = re.findall(r"try_variant_get\(lambda (\S+), \$, (\w+)", plan)
+    assert reads and len(reads) == len(set(reads)), reads
+    assert len({var for var, _ in reads}) == n_items
+
+
+# The benchmark's liftable schema: 4 properties, a 32-member enum.
+BENCH_SCHEMA = {
+    **STAGED_SCHEMA,
+    "properties": {
+        **STAGED_SCHEMA["properties"],
+        "tool": {"type": "string", "enum": [f"tool_{i:02d}" for i in range(32)]},
+    },
+}
+
+
+def test_build_round_trips_bounded(spark, monkeypatch):
+    """Building the plan is a few projections of SQL text, so its
+    driver cost does not grow with the keywords: at most 200 py4j round
+    trips for the benchmark's schema (about 90 on pyspark 4.1.2; a
+    builder calling PySpark functions per keyword made 3,745)."""
+    import py4j.clientserver as cs
+
+    df = spark.createDataFrame([(1, '{"tool": "tool_01"}')], "i int, j string")
+    validate_json_column_columnar(df, "j", BENCH_SCHEMA)
+    sent = []
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, *a, **k):
+        sent.append(1)
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    out = validate_json_column_columnar(df, "j", BENCH_SCHEMA)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 200, len(sent)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "INSET" in plan.upper() and plan.count("parseJson(") == 1, plan
+
+
+def test_json_col_resolves_like_f_col(spark):
+    """``json_col`` is read as ``F.col`` reads it: a dotted name is a
+    nested field, and backticks quote a name holding dots or spaces."""
+    doc, bad = '{"id": 1, "kind": "a"}', '{"kind": "z"}'
+    df = spark.createDataFrame(
+        [(1, (doc,), bad), (2, (bad,), doc)], "i int, s struct<j: string>, `a.b c` string"
+    )
+    nested = validate_json_column_columnar(df, "s.j", BATTERY_SCHEMA)
+    quoted = validate_json_column_columnar(df, "`a.b c`", BATTERY_SCHEMA)
+    assert [r._valid for r in nested.orderBy("i").collect()] == [True, False]
+    assert [r._valid for r in quoted.orderBy("i").collect()] == [False, True]
+    assert nested.columns == ["i", "s", "a.b c", "_failures_json", "_valid"]
+
+
+def test_output_names_replace_input_columns_in_place(spark):
+    """As with ``withColumns``: an input column named like an output
+    column is replaced where it stands."""
+    df = spark.createDataFrame([("x", '{"id": 1, "kind": "a"}', 0)], "_VALID string, j string, z int")
+    out = validate_json_column_columnar(df, "j", BATTERY_SCHEMA, failures_col="z")
+    assert out.columns == ["_valid", "j", "z"]
+    row = out.collect()[0]
+    assert row._valid is True and row.z == []
 
 
 def test_staged_names_avoid_input_columns(spark):

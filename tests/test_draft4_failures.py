@@ -72,3 +72,30 @@ def test_ref_sibling_keywords_ignored():
         "type": "string",  # must be IGNORED
     }
     assert Draft4Validator(schema).is_valid(123)
+
+
+def test_enum_non_unique_is_vacuous():
+    # a non-unique enum validates nothing (validator module docstring),
+    # also on a second instance through the same validator
+    v = Draft4Validator({"enum": [1, 1.0, "x"]})
+    assert v.validate(2) == [] and v.validate("y") == []
+
+
+def test_enum_numbers_by_mathematical_equality():
+    v = Draft4Validator({"enum": [1]})
+    assert v.validate(1) == [] and v.validate(1.0) == []
+    fs = v.validate(1.5)
+    assert [(f.keyword, f.instance_path, f.schema_path) for f in fs] == [("enum", "", "/enum")]
+
+
+def test_enum_nested_array_and_object_members():
+    v = Draft4Validator(
+        {"properties": {"a": {"enum": [[1, {"b": [2.0]}], {"c": None}]}}}
+    )
+    assert v.validate({"a": [1.0, {"b": [2]}]}) == []
+    assert v.validate({"a": {"c": None}}) == []
+    for bad in ([1, {"b": [3]}], [{"b": [2]}, 1], {"c": False}, {"c": None, "d": 1}):
+        fs = v.validate({"a": bad})
+        assert [(f.keyword, f.instance_path, f.schema_path) for f in fs] == [
+            ("enum", "/a", "/properties/a/enum")
+        ], bad

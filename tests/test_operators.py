@@ -496,6 +496,38 @@ def test_connected_components_driver_vs_distributed(spark):
     assert fast == dist and len(fast) > 0
 
 
+def test_driver_path_frames_plan_no_python_scan(spark, tmp_path, monkeypatch):
+    """connected_components' driver-path result and incremental_dedup's
+    empty history frame are LocalTableScans: a Scan ExistingRDD over a
+    Python RDD would fork Python workers on every collect."""
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (21, 20)]
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    base = spark.createDataFrame(edges, "id_a long, id_b long")
+    for t, conv in (("bigint", int), ("int", int), ("string", str)):
+        df = base.selectExpr(f"CAST(id_a AS {t}) AS id_a", f"CAST(id_b AS {t}) AS id_b")
+        out = dedup.connected_components(df)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+        assert out.dtypes == [("node", t), ("cluster_id", t)]
+        got = {(r["node"], r["cluster_id"]) for r in out.collect()}
+        assert got == {(conv(n), conv(c)) for n, c in want.items()}
+
+    made = []
+    real = dedup.local_relation
+    monkeypatch.setattr(dedup, "local_relation", lambda *a: made.append(real(*a)) or made[-1])
+    batch = spark.createDataFrame(
+        [(10, "alpha beta"), (11, "ALPHA  beta"), (12, "gamma")], "doc_id long, text string"
+    )
+    r = dedup.incremental_dedup(batch, str(tmp_path / "fp_state"), batch_id=1)
+    assert {x["doc_id"]: x["status"] for x in r.collect()} == {
+        10: "new", 11: "dup_in_batch", 12: "new"
+    }
+    r.unpersist()
+    (hist,) = made
+    assert "ExistingRDD" not in hist._jdf.queryExecution().executedPlan().toString()
+    assert hist.dtypes == [("fingerprint", "string"), ("_hist_id", "bigint")]
+
+
 def test_near_duplicate_clusters(spark, docs):
     out = {r["doc_id"]: r for r in dedup.near_duplicate_clusters(docs, threshold=0.3).collect()}
     # 1,2,3,8 all chain together (2 and 8 are exact dups of 1; 3 is a
