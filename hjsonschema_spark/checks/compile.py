@@ -1,21 +1,35 @@
-"""Check IR → Spark plan compiler.
+"""Check IR → Spark SQL text compiler.
 
-Row-level checks become guarded boolean ``Column``s fused into one
+Row-level checks become guarded boolean SQL expressions fused into one
 projection (the "single fused pass per partition" of the north star —
 Catalyst whole-stage-codegens the entire predicate set); table-level
 checks become dedicated aggregate / window / broadcast-join passes.
 
+Every pass is written as Spark SQL text and applied with one
+``selectExpr`` or a few ``F.expr`` (``withColumns``, ``agg``): no
+builder calls ``F.col`` or a ``Column`` method. Each such call crosses
+to the JVM several times (active-session lookup, a conf read, the
+call-site origin set and clear; on pyspark 4.1.2 the call-site capture
+also tries ``import IPython`` on every call), which made building the
+benchmark suite's plan cost 4.7k py4j round trips cold and 2.4k warm.
+As text it is a few hundred, with no memo, so a cold build costs what
+a warm one does. Literals and names go through ``sqltext`` (shared with
+the columnar draft-4 path), so ``spark.sql.parser.escapedStringLiterals``
+and ``${var}`` substitution cannot change a map key, an enum member or
+a regex.
+
 Three-valued-logic rule (SURVEY.md §2.5): every row predicate is
 wrapped so NULL input ⇒ pass (the columnar analogue of the reference's
 type-mismatch ⇒ vacuous pass, src/JSONSchema/Validator/Draft4.hs:28-33)
-and a NULL predicate result ⇒ fail-closed ``False`` only inside the
+and a NULL predicate result ⇒ fail-closed ``false`` only inside the
 guard, never leaking NULL into the verdict.
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
 from decimal import Decimal
-from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -62,69 +76,79 @@ from hjsonschema_spark.checks.ir import (
     TypeIs,
     UniqueKey,
 )
+from hjsonschema_spark.sqltext import col_ref, ident, lit, str_lit, struct
 
 FAILURE_STRUCT = "check string, column string, value string"
+_FAILURES_TYPE = f"array<struct<{FAILURE_STRUCT}>>"
+_INF = "CAST('Infinity' AS DOUBLE)"
 
 
-def _ctx_id() -> int:
-    """Identity of the live SparkContext — memo key component.
-
-    Unresolved Column expressions are plain JVM objects with no
-    DataFrame binding, so they are reusable across queries and runs in
-    one JVM; keying memos on the context identity only guards the
-    corner where a context is stopped and a new one started in the same
-    process (pandas_udf handles cache their _judf per context)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return id(sc) if sc is not None else 0
+def _and(xs) -> str:
+    return "(" + " AND ".join(xs) + ")"
 
 
-# (ctx_id, checks tuple) -> assembled _failures Column. Plan-construction
-# memo only: the expression is a pure function of the check configs
-# (frozen dataclasses), building it costs thousands of py4j round trips
-# (measured 0.19s for 6 checks, ~0.5s for the 13-check transcript
-# suite), and bench/production loops re-validate with identical suites
-# every run. No data or results are cached — every run still executes
-# the full computation from the inputs.
-_FUSED_MEMO: dict = {}
-_MEMO_CAP = 512
+def _or(xs) -> str:
+    return "(" + " OR ".join(xs) + ")"
 
 
-def _guard(col: Column, pred: Column) -> Column:
-    """NULL value => vacuous pass; NULL predicate => False."""
-    return F.when(col.isNull(), F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
+def _not(x: str) -> str:
+    return f"(NOT {x})"
 
 
-def _qcol(name: str) -> str:
-    """Column reference for SQL-string expressions; dotted paths become
-    struct-field access (`a`.`b`)."""
-    return ".".join(f"`{p}`" for p in name.split("."))
+def _guard(col: str, pred: str) -> str:
+    """NULL value => vacuous pass; NULL predicate => false."""
+    return f"CASE WHEN ({col} IS NULL) THEN true ELSE coalesce({pred}, false) END"
 
 
-def _sql_str(s: str) -> str:
-    return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
+def _empty(array_type: str) -> str:
+    return f"CAST(array() AS {array_type})"
+
+
+def _window(partition_by, order_by=()) -> str:
+    """A window specification over column names."""
+    parts = []
+    if partition_by:
+        parts.append("PARTITION BY " + ", ".join(map(col_ref, partition_by)))
+    if order_by:
+        parts.append("ORDER BY " + ", ".join(map(col_ref, order_by)))
+    return " ".join(parts)
+
+
+def _viol_tail(check: str, column: str | None, value: str) -> list[str]:
+    """The (check, column, value) string tail of a violation row."""
+    return [
+        f"{str_lit(check)} AS `check`",
+        f"CAST({lit(column)} AS STRING) AS `column`",
+        f"CAST({value} AS STRING) AS `value`",
+    ]
+
+
+def _failure(check: str, column: str | None, value: str) -> str:
+    """A failure struct<check, column, value> for the given check id,
+    column name and SQL value."""
+    return struct(
+        ("check", str_lit(check)), ("column", f"CAST({lit(column)} AS STRING)"), ("value", value)
+    )
+
+
+def _compilable(regex: str) -> bool:
+    try:
+        re.compile(regex)
+        return True
+    except re.error:
+        return False
 
 
 def _map_remainder_sql(c: MapKeysAllowed) -> str:
     """SQL for the map of entries matched by NEITHER the allowed keys
     nor any compilable pattern (Properties.hs:106-108 remainder rule;
     uncompilable patterns skipped silently per Properties.hs:150-155)."""
-    import re as _re
-
-    pats = []
-    for p in c.patterns:
-        try:
-            _re.compile(p)
-            pats.append(p)
-        except _re.error:
-            pass
     terms = []
     if c.keys:
-        terms.append(f"k IN ({', '.join(_sql_str(k) for k in c.keys)})")
-    terms += [f"k RLIKE {_sql_str(p)}" for p in pats]
+        terms.append(f"k IN ({', '.join(str_lit(k) for k in c.keys)})")
+    terms += [f"k RLIKE {str_lit(p)}" for p in c.patterns if _compilable(p)]
     allowed = " OR ".join(terms) if terms else "false"
-    return f"map_filter({_qcol(c.column)}, (k, v) -> NOT ({allowed}))"
+    return f"map_filter({col_ref(c.column)}, (k, v) -> NOT ({allowed}))"
 
 
 def check_id(c: Check) -> str:
@@ -215,6 +239,27 @@ def check_id(c: Check) -> str:
     raise ConfigInvalid(f"no id for {type(c).__name__}")
 
 
+def _pcre_name(column: str, regex: str) -> str:
+    """Name of the pre-computed column holding a pcre-mode Pattern's
+    match flag for (column, regex)."""
+    h = hashlib.sha1(f"{column}\0{regex}".encode()).hexdigest()[:16]
+    return f"_pcre_{h}"
+
+
+def _pcre_patterns(checks) -> dict:
+    """{column name: (column, regex)} of every pcre-mode Pattern under
+    ``checks``, combinator children included."""
+    out: dict = {}
+    for c in checks:
+        if isinstance(c, Pattern) and c.mode == "pcre":
+            out[_pcre_name(c.column, c.regex)] = (c.column, c.regex)
+        elif isinstance(c, (AllOf, AnyOf, OneOf, DependentSchema)):
+            out.update(_pcre_patterns(c.checks))
+        elif isinstance(c, Not):
+            out.update(_pcre_patterns((c.check,)))
+    return out
+
+
 def _pcre_predicate(column: str, regex: str) -> Column:
     """Vectorized Arrow-batched regex for full PCRE parity — the regex
     is compiled ONCE per python worker via closure, fixing the
@@ -228,290 +273,221 @@ def _pcre_predicate(column: str, regex: str) -> Column:
         rx = re.compile(regex)
         return s.map(lambda x: None if x is None else rx.search(x) is not None)
 
-    return _match(F.col(column))
+    return _match(column)
 
 
-def compile_row_predicate(c: RowCheck) -> Column:
-    """Check → boolean Column, True = pass. Total: never NULL."""
+def _sizes(col: str, lo, hi, measure: str = "size") -> str:
+    preds = []
+    if lo is not None:
+        preds.append(f"({measure}({col}) >= {lit(lo)})")
+    if hi is not None:
+        preds.append(f"({measure}({col}) <= {lit(hi)})")
+    return _and(preds)
+
+
+def _non_null_count(columns) -> str:
+    return "(" + " + ".join(f"CAST(({col_ref(x)} IS NOT NULL) AS INT)" for x in columns) + ")"
+
+
+def _forall(arr: str, pred: str) -> str:
+    """Every element ``x`` of ``arr`` satisfies the SQL predicate."""
+    return f"forall({arr}, x -> coalesce(({pred}), false))"
+
+
+def compile_row_predicate(c: RowCheck) -> str:
+    """Check → boolean SQL expression, true = pass. Total: never NULL."""
+    col = col_ref(c.column) if getattr(c, "column", "") else None
     if isinstance(c, Required):
-        return F.col(c.column).isNotNull()
+        return f"({col} IS NOT NULL)"
     if isinstance(c, Enum):
         if len(set(c.values)) != len(c.values):  # non-unique => vacuous
-            return F.lit(True)
-        return _guard(F.col(c.column), F.col(c.column).isin(*c.values))
+            return "true"
+        return _guard(col, f"({col} IN ({', '.join(lit(v) for v in c.values)}))")
     if isinstance(c, Bounds):
-        col = F.col(c.column)
         preds = []
         if c.min is not None:
-            preds.append(col > c.min if c.exclusive_min else col >= c.min)
+            preds.append(f"({col} {'>' if c.exclusive_min else '>='} {lit(c.min)})")
         if c.max is not None:
-            preds.append(col < c.max if c.exclusive_max else col <= c.max)
-        return _guard(col, reduce(lambda a, b: a & b, preds))
+            preds.append(f"({col} {'<' if c.exclusive_max else '<='} {lit(c.max)})")
+        return _guard(col, _and(preds))
     if isinstance(c, Length):
-        col = F.col(c.column)
-        preds = []
-        if c.min_len is not None:
-            preds.append(F.length(col) >= c.min_len)
-        if c.max_len is not None:
-            preds.append(F.length(col) <= c.max_len)
-        return _guard(col, reduce(lambda a, b: a & b, preds))
+        return _guard(col, _sizes(col, c.min_len, c.max_len, "length"))
     if isinstance(c, Pattern):
-        col = F.col(c.column)
         if c.mode == "pcre":
-            return _guard(col, _pcre_predicate(c.column, c.regex))
-        return _guard(col, col.rlike(c.regex))
+            return _guard(col, ident(_pcre_name(c.column, c.regex)))
+        return _guard(col, f"({col} RLIKE {str_lit(c.regex)})")
     if isinstance(c, MultipleOf):
         n = Decimal(str(c.n))
         if n <= 0:  # reference quirk: non-positive n => vacuous pass
-            return F.lit(True)
-        col = F.col(c.column)
+            return "true"
         dec = "decimal(38,12)"
-        return _guard(col, (col.cast(dec) % F.lit(n).cast(dec)) == 0)
+        return _guard(col, f"((CAST({col} AS {dec}) % CAST({lit(n)} AS {dec})) = 0)")
     if isinstance(c, ArraySize):
-        col = F.col(c.column)
-        preds = []
-        if c.min_items is not None:
-            preds.append(F.size(col) >= c.min_items)
-        if c.max_items is not None:
-            preds.append(F.size(col) <= c.max_items)
-        return _guard(col, reduce(lambda a, b: a & b, preds))
+        return _guard(col, _sizes(col, c.min_items, c.max_items))
     if isinstance(c, ArrayUnique):
-        col = F.col(c.column)
+        arr = col
         if c.numeric_canonical:
             # mathematical equality (Utils.hs:94-119): canonicalize to
             # decimal before comparing, so 1 == 1.0 == 1.00. try_cast,
             # not cast: non-numeric elements (string arrays under ANSI
             # mode) fall back to their raw string instead of throwing,
             # so the same check config is safe on any element type.
-            canon = F.transform(
-                col,
-                lambda x: F.coalesce(
-                    x.try_cast("decimal(38,18)").cast("string"), x.cast("string")
-                ),
+            arr = (
+                f"transform({col}, x -> coalesce(CAST(try_cast(x AS decimal(38,18)) AS STRING), "
+                f"CAST(x AS STRING)))"
             )
-            return _guard(col, F.size(F.array_distinct(canon)) == F.size(canon))
-        return _guard(col, F.size(F.array_distinct(col)) == F.size(col))
+        return _guard(col, f"(size(array_distinct({arr})) = size({arr}))")
     if isinstance(c, ArrayForAll):
-        col = F.col(c.column)
-        pred = F.expr(f"forall({c.column}, x -> coalesce(({c.element_predicate}), false))")
-        return _guard(col, pred)
+        return _guard(col, _forall(col, c.element_predicate))
     if isinstance(c, NonNullCount):
-        cnt = reduce(
-            lambda a, b: a + b, (F.col(x).isNotNull().cast("int") for x in c.columns)
-        )
+        cnt = _non_null_count(c.columns)
         preds = []
         if c.min_count is not None:
-            preds.append(cnt >= c.min_count)
+            preds.append(f"({cnt} >= {lit(c.min_count)})")
         if c.max_count is not None:
-            preds.append(cnt <= c.max_count)
+            preds.append(f"({cnt} <= {lit(c.max_count)})")
         # always applicable (the count itself is never NULL)
-        return reduce(lambda a, b: a & b, preds)
+        return _and(preds)
     if isinstance(c, MapSize):
-        col = F.col(c.column)
-        preds = []
-        if c.min_props is not None:
-            preds.append(F.size(col) >= c.min_props)
-        if c.max_props is not None:
-            preds.append(F.size(col) <= c.max_props)
-        return _guard(col, reduce(lambda a, b: a & b, preds))
+        return _guard(col, _sizes(col, c.min_props, c.max_props))
     if isinstance(c, MapRequiredKeys):
-        col = F.col(c.column)
-        keys_arr = f"array({', '.join(_sql_str(k) for k in c.keys)})"
-        pred = F.expr(
-            f"forall({keys_arr}, k -> map_contains_key({_qcol(c.column)}, k))"
-        )
-        return _guard(col, pred)
+        keys_arr = f"array({', '.join(str_lit(k) for k in c.keys)})"
+        return _guard(col, f"forall({keys_arr}, k -> map_contains_key({col}, k))")
     if isinstance(c, MapKeysAllowed):
-        col = F.col(c.column)
         rem = _map_remainder_sql(c)
         if c.additional == "none":
-            pred = F.expr(f"size({rem}) = 0")
-        else:
-            # additionalProperties=schema: every remainder VALUE must
-            # satisfy the predicate (Properties.hs:199-209); the lambda
-            # binds the value as `x` so the predicate language matches
-            # ArrayForAll's
-            pred = F.expr(
-                f"forall(map_values({rem}), x -> coalesce(({c.additional}), false))"
-            )
-        return _guard(col, pred)
+            return _guard(col, f"(size({rem}) = 0)")
+        # additionalProperties=schema: every remainder VALUE must
+        # satisfy the predicate (Properties.hs:199-209); the lambda
+        # binds the value as `x` so the predicate language matches
+        # ArrayForAll's
+        return _guard(col, _forall(f"map_values({rem})", c.additional))
     if isinstance(c, MapPatternValues):
-        import re as _re
-
-        try:
-            _re.compile(c.key_regex)
-        except _re.error:
-            return F.lit(True)  # pattern skipped silently (Properties.hs:150-155)
-        col = F.col(c.column)
-        matched = (
-            f"map_filter({_qcol(c.column)}, (k, v) -> k RLIKE {_sql_str(c.key_regex)})"
-        )
-        pred = F.expr(
-            f"forall(map_values({matched}), x -> coalesce(({c.value_predicate}), false))"
-        )
-        return _guard(col, pred)
+        if not _compilable(c.key_regex):
+            return "true"  # pattern skipped silently (Properties.hs:150-155)
+        matched = f"map_filter({col}, (k, v) -> k RLIKE {str_lit(c.key_regex)})"
+        return _guard(col, _forall(f"map_values({matched})", c.value_predicate))
     if isinstance(c, ArrayPositional):
-        col = F.col(c.column)
         n = len(c.element_predicates)
         # forall over a 1-element slice: empty slice (missing element)
         # => true, matching "a missing positional element passes"
         preds = [
-            F.expr(f"forall(slice({c.column}, {i + 1}, 1), x -> coalesce(({ep}), false))")
+            _forall(f"slice({col}, {i + 1}, 1)", ep)
             for i, ep in enumerate(c.element_predicates)
         ]
         if c.additional == "none":
-            preds.append(F.size(col) <= n)
+            preds.append(f"(size({col}) <= {n})")
         elif c.additional != "any":
-            preds.append(
-                F.expr(
-                    f"forall(slice({c.column}, {n + 1}, 1000000000), "
-                    f"x -> coalesce(({c.additional}), false))"
-                )
-            )
-        return _guard(col, reduce(lambda a, b: a & b, preds))
+            preds.append(_forall(f"slice({col}, {n + 1}, 1000000000)", c.additional))
+        return _guard(col, _and(preds))
     if isinstance(c, TypeIs):
-        # resolved statically in compile_fused_pass (schema conformance)
-        return F.lit(True)
+        # resolved statically in run_suite (schema conformance)
+        return "true"
     if isinstance(c, DependentSchema):
         # when_column absent => vacuous pass (Object.hs:160-183: the
         # dependency only fires when key k is present); present => the
         # whole row must satisfy every child (children carry their own
         # NULL guards, so a NULL in a child's column still passes it)
-        conj = reduce(
-            lambda a, b: a & b, (compile_row_predicate(k) for k in c.checks)
-        )
-        return F.when(F.col(c.when_column).isNull(), F.lit(True)).otherwise(
-            F.coalesce(conj, F.lit(False))
-        )
+        conj = _and(compile_row_predicate(k) for k in c.checks)
+        return _guard(col_ref(c.when_column), conj)
     if isinstance(c, NotNullIf):
-        cond = F.col(c.when_column).eqNullSafe(F.lit(c.equals))
-        pred = F.when(cond, F.col(c.column).isNotNull()).otherwise(
-            F.col(c.column).isNull() if c.only else F.lit(True)
-        )
-        return F.coalesce(pred, F.lit(False))
+        cond = f"({col_ref(c.when_column)} <=> {lit(c.equals)})"
+        otherwise = f"({col} IS NULL)" if c.only else "true"
+        return f"coalesce(CASE WHEN {cond} THEN ({col} IS NOT NULL) ELSE {otherwise} END, false)"
     if isinstance(c, AllOf):
-        return reduce(lambda a, b: a & b, (compile_row_predicate(k) for k in c.checks))
+        return _and(compile_row_predicate(k) for k in c.checks)
     if isinstance(c, AnyOf):
-        return reduce(lambda a, b: a | b, (compile_row_predicate(k) for k in c.checks))
+        return _or(compile_row_predicate(k) for k in c.checks)
     if isinstance(c, OneOf):
-        total = reduce(
-            lambda a, b: a + b,
-            (compile_row_predicate(k).cast("int") for k in c.checks),
-        )
-        return total == 1
+        total = " + ".join(f"CAST({compile_row_predicate(k)} AS INT)" for k in c.checks)
+        return f"(({total}) = 1)"
     if isinstance(c, Not):
-        return ~compile_row_predicate(c.check)
+        return _not(compile_row_predicate(c.check))
     if isinstance(c, Custom):
-        return F.coalesce(F.expr(c.expr), F.lit(False))
+        return f"coalesce(({c.expr}), false)"
     raise ConfigInvalid(f"not a row check: {type(c).__name__}")
 
 
-def _failed_leaf_ids(c: RowCheck) -> Column:
+def _failed_leaf_ids(c: RowCheck) -> str:
     """array<string> of the check ids of failed LEAF checks under `c`
     (AllOf branches recurse; any other node is its own leaf) — the
     per-branch failure detail the reference's applicator failures carry
     (Any.hs:364-410)."""
     if isinstance(c, AllOf):
-        return F.flatten(F.array(*[_failed_leaf_ids(k) for k in c.checks]))
-    return F.when(
-        ~compile_row_predicate(c), F.array(F.lit(check_id(c)))
-    ).otherwise(F.expr("cast(array() as array<string>)"))
+        return f"flatten(array({', '.join(_failed_leaf_ids(k) for k in c.checks)}))"
+    return (
+        f"CASE WHEN {_not(compile_row_predicate(c))} THEN array({str_lit(check_id(c))}) "
+        f"ELSE {_empty('array<string>')} END"
+    )
 
 
-def _violating_value(c: RowCheck) -> Column:
+def _branch_indices(checks, passing: bool) -> str:
+    """array<int> of the indices of the branches that pass (or fail)."""
+    flags = f"array({', '.join(compile_row_predicate(k) for k in checks)})"
+    hit = "b" if passing else "NOT b"
+    return f"filter(transform({flags}, (b, i) -> CASE WHEN {hit} THEN i END), x -> x IS NOT NULL)"
+
+
+def _violating_value(c: RowCheck) -> str:
     if isinstance(c, OneOf):
         # failure-detail parity with the reference's oneOf
         # (Any.hs:416-482): distinguish NoSuccesses from
         # TooManySuccesses and report the indices of passing branches
-        flags = F.array(*[compile_row_predicate(k) for k in c.checks])
-        passed_idx = F.filter(
-            F.transform(flags, lambda b, i: F.when(b, i)), lambda x: x.isNotNull()
+        passed_idx = _branch_indices(c.checks, passing=True)
+        n_passed = f"size({passed_idx})"
+        kind = f"CASE WHEN ({n_passed} = 0) THEN 'no_successes' ELSE 'too_many_successes' END"
+        return (
+            f"to_json({struct(('failure', kind), ('n_passed', n_passed), ('passed_branches', passed_idx))})"
         )
-        n_passed = F.size(passed_idx)
-        kind = F.when(n_passed == 0, F.lit("no_successes")).otherwise(
-            F.lit("too_many_successes")
-        )
-        return F.to_json(
-            F.struct(
-                kind.alias("failure"),
-                n_passed.alias("n_passed"),
-                passed_idx.alias("passed_branches"),
-            )
-        )
-    if isinstance(c, AllOf):
+    if isinstance(c, (AllOf, DependentSchema)):
         # per-branch detail (Any.hs:364-377): the indices of the
-        # failing branches (branch check-ids are in the check id)
-        flags = F.array(*[compile_row_predicate(k) for k in c.checks])
-        failed_idx = F.filter(
-            F.transform(flags, lambda b, i: F.when(~b, i)), lambda x: x.isNotNull()
-        )
-        return F.to_json(F.struct(failed_idx.alias("failed_branches")))
+        # failing branches (branch check-ids are in the check id); for
+        # DependentSchema, which child checks failed while when_column
+        # was present
+        return f"to_json({struct(('failed_branches', _branch_indices(c.checks, passing=False)))})"
     if isinstance(c, AnyOf):
         # per-branch failure detail (Any.hs:395-410): anyOf only fails
         # when EVERY branch fails — report each branch's failed leaf
         # check ids, mirroring AnyOfInvalid carrying all branches'
         # failures
-        branch_fails = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("branch"), _failed_leaf_ids(k).alias("failed")
-                )
-                for i, k in enumerate(c.checks)
-            ]
+        branches = ", ".join(
+            struct(("branch", str(i)), ("failed", _failed_leaf_ids(k)))
+            for i, k in enumerate(c.checks)
         )
-        return F.to_json(
-            F.struct(
-                F.lit("no_successes").alias("failure"),
-                branch_fails.alias("branch_failures"),
-            )
+        return (
+            f"to_json({struct(('failure', str_lit('no_successes')), ('branch_failures', f'array({branches})'))})"
         )
-    if isinstance(c, DependentSchema):
-        # which child checks failed while when_column was present
-        flags = F.array(*[compile_row_predicate(k) for k in c.checks])
-        failed_idx = F.filter(
-            F.transform(flags, lambda b, i: F.when(~b, i)), lambda x: x.isNotNull()
-        )
-        return F.to_json(F.struct(failed_idx.alias("failed_branches")))
     if isinstance(c, NonNullCount):
-        cnt = reduce(
-            lambda a, b: a + b, (F.col(x).isNotNull().cast("int") for x in c.columns)
-        )
-        return cnt.cast("string")
+        return f"CAST({_non_null_count(c.columns)} AS STRING)"
     if isinstance(c, MapRequiredKeys):
         # the missing keys (RequiredInvalid's leftovers, Object.hs:104)
-        keys_arr = f"array({', '.join(_sql_str(k) for k in c.keys)})"
-        return F.expr(
+        keys_arr = f"array({', '.join(str_lit(k) for k in c.keys)})"
+        return (
             f"array_join(array_sort(filter({keys_arr}, "
-            f"k -> NOT map_contains_key({_qcol(c.column)}, k))), ',')"
+            f"k -> NOT map_contains_key({col_ref(c.column)}, k))), ',')"
         )
     if isinstance(c, MapKeysAllowed):
         rem = _map_remainder_sql(c)
         if c.additional == "none":
-            return F.expr(f"array_join(array_sort(map_keys({rem})), ',')")
+            return f"array_join(array_sort(map_keys({rem})), ',')"
         # keys of remainder entries whose VALUE failed the predicate
         # (lambda binds the value as `x`, same language as the check)
-        return F.expr(
+        return (
             f"array_join(array_sort(map_keys(map_filter({rem}, "
             f"(k, x) -> NOT coalesce(({c.additional}), false)))), ',')"
         )
     if isinstance(c, MapPatternValues):
-        import re as _re
-
-        try:
-            _re.compile(c.key_regex)
-        except _re.error:
-            return F.lit(None).cast("string")  # vacuous check, never fails
-        matched = (
-            f"map_filter({_qcol(c.column)}, (k, v) -> k RLIKE {_sql_str(c.key_regex)})"
-        )
-        return F.expr(
+        if not _compilable(c.key_regex):
+            return "CAST(NULL AS STRING)"  # vacuous check, never fails
+        matched = f"map_filter({col_ref(c.column)}, (k, v) -> k RLIKE {str_lit(c.key_regex)})"
+        return (
             f"array_join(array_sort(map_keys(map_filter({matched}, "
             f"(k, x) -> NOT coalesce(({c.value_predicate}), false)))), ',')"
         )
     col = getattr(c, "column", None)
     if col:
-        return F.col(col).cast("string")
-    return F.lit(None).cast("string")
+        return f"CAST({col_ref(col)} AS STRING)"
+    return "CAST(NULL AS STRING)"
 
 
 def _primary_column(c: RowCheck) -> str | None:
@@ -522,7 +498,7 @@ def _primary_column(c: RowCheck) -> str | None:
     return getattr(c, "column", None) or getattr(c, "name", None)
 
 
-def _concat_conditional(pairs: list[tuple[Column, Column]], struct_type: str) -> Column:
+def _concat_conditional(pairs: list[tuple[str, str]], struct_type: str) -> str:
     """array of the failure structs whose condition fired, assembled as
     concat(CASE WHEN fail THEN array(struct) ELSE array() END, ...).
 
@@ -534,29 +510,25 @@ def _concat_conditional(pairs: list[tuple[Column, Column]], struct_type: str) ->
     hottest path interpreted (measured in plans/r06: no codegen id on
     the row-pass operators; the same class of defect as the CLAUDE.md
     no-HOFs-in-hot-paths invariant)."""
-    empty = F.lit([]).cast(f"array<{struct_type}>")
-    arrays = [F.when(cond, F.array(s)).otherwise(empty) for cond, s in pairs]
-    return F.concat(*arrays)
+    empty = _empty(f"array<{struct_type}>")
+    arms = [f"CASE WHEN {cond} THEN array({s}) ELSE {empty} END" for cond, s in pairs]
+    return f"concat({', '.join(arms)})"
 
 
-def _fused_failures_column(checks: tuple) -> Column:
+def _fused_failures(checks: tuple) -> str:
     pairs = [
         (
-            ~compile_row_predicate(c),
-            F.struct(
-                F.lit(check_id(c)).alias("check"),
-                F.lit(_primary_column(c)).cast("string").alias("column"),
-                _violating_value(c).alias("value"),
-            ),
+            _not(compile_row_predicate(c)),
+            _failure(check_id(c), _primary_column(c), _violating_value(c)),
         )
         for c in checks
     ]
     if not pairs:
-        return F.lit([]).cast(f"array<struct<{FAILURE_STRUCT}>>")
+        return _empty(_FAILURES_TYPE)
     return _concat_conditional(pairs, f"struct<{FAILURE_STRUCT}>")
 
 
-def _pushdown_barrier(col: Column) -> Column:
+def _pushdown_barrier(failures: str) -> str:
     """Append a never-firing NONDETERMINISTIC term to the fused array so
     PushDownPredicates cannot substitute the expression through this
     projection. Catalyst's InferFiltersFromGenerate adds
@@ -578,16 +550,11 @@ def _pushdown_barrier(col: Column) -> Column:
     Version coupling: the pin relies on Catalyst treating
     spark_partition_id() as nondeterministic; checked on pyspark 4.1.2
     (tests/test_plans.py pins the plan shape)."""
-    ghost = F.array(
-        F.struct(
-            F.lit(None).cast("string").alias("check"),
-            F.lit(None).cast("string").alias("column"),
-            F.lit(None).cast("string").alias("value"),
-        )
-    )
-    empty = F.lit([]).cast(f"array<struct<{FAILURE_STRUCT}>>")
-    return F.concat(
-        col, F.when(F.spark_partition_id() < F.lit(0), ghost).otherwise(empty)
+    null = "CAST(NULL AS STRING)"
+    ghost = f"array({struct(('check', null), ('column', null), ('value', null))})"
+    return (
+        f"concat({failures}, CASE WHEN (spark_partition_id() < 0) THEN {ghost} "
+        f"ELSE {_empty(_FAILURES_TYPE)} END)"
     )
 
 
@@ -597,26 +564,19 @@ def compile_fused_pass(
     """ALL row checks in one projection; appends ``_failures``:
     array<struct<check,column,value>> of the failed checks for the row.
     All validators run, all failures collected — no short-circuit
-    (src/JSONSchema/Types.hs:20-26). The assembled expression is
-    memoized per (SparkContext, check configs) — see _FUSED_MEMO.
-    barrier=True additionally blocks predicate pushdown through the
-    projection (see _pushdown_barrier) — set by run_suite iff it fanned
-    the input out."""
-    try:
-        key = (_ctx_id(), tuple(checks), barrier)
-        col = _FUSED_MEMO.get(key)
-        if col is None:
-            if len(_FUSED_MEMO) >= _MEMO_CAP:
-                _FUSED_MEMO.clear()
-            col = _fused_failures_column(tuple(checks))
-            if barrier:
-                col = _pushdown_barrier(col)
-            _FUSED_MEMO[key] = col
-    except TypeError:  # unhashable custom check config: build unmemoized
-        col = _fused_failures_column(tuple(checks))
-        if barrier:
-            col = _pushdown_barrier(col)
-    return df.withColumn("_failures", col)
+    (src/JSONSchema/Types.hs:20-26). barrier=True additionally blocks
+    predicate pushdown through the projection (see _pushdown_barrier) —
+    set by run_suite iff it fanned the input out. A pcre-mode Pattern's
+    match flag is a pandas UDF column computed in the projection below
+    and dropped after it (the one Python worker a suite can bring)."""
+    pcre = _pcre_patterns(checks)
+    if pcre:
+        df = df.withColumns({n: _pcre_predicate(col, rx) for n, (col, rx) in pcre.items()})
+    failures = _fused_failures(tuple(checks))
+    if barrier:
+        failures = _pushdown_barrier(failures)
+    out = df.withColumn("_failures", F.expr(failures))
+    return out.drop(*pcre) if pcre else out
 
 
 # --------------------------------------------------------------------------
@@ -624,14 +584,32 @@ def compile_fused_pass(
 #   key_columns... , check string, column string, value string
 # --------------------------------------------------------------------------
 
-def _as_violations(df: DataFrame, key_columns: tuple, check: str, column: str | None, value: Column) -> DataFrame:
-    cols = [F.col(k) for k in key_columns]
-    return df.select(
-        *cols,
-        F.lit(check).alias("check"),
-        F.lit(column).cast("string").alias("column"),
-        value.cast("string").alias("value"),
-    )
+def _refs(names) -> list[str]:
+    """Column references for names, duplicates dropped in order."""
+    return [col_ref(n) for n in dict.fromkeys(names)]
+
+
+def _as_violations(df: DataFrame, key_columns: tuple, check: str, column: str | None, value: str) -> DataFrame:
+    return df.selectExpr(*map(col_ref, key_columns), *_viol_tail(check, column, value))
+
+
+def _group_key_exprs(df: DataFrame, group_by, key_columns: tuple, keep: str | None = None) -> list[str]:
+    """Key-column projection for group-scoped violations: keys in the
+    group carry their value, the rest are typed NULLs (or, with
+    ``keep``, their value where the SQL condition ``keep`` holds)."""
+    dtypes = dict(df.dtypes)
+    out = []
+    for k in key_columns:
+        if k in group_by:
+            out.append(f"{col_ref(k)} AS {ident(k)}")
+        elif keep is None:
+            out.append(f"CAST(NULL AS {dtypes.get(k, 'string')}) AS {ident(k)}")
+        else:
+            out.append(
+                f"CAST(CASE WHEN {keep} THEN {col_ref(k)} ELSE NULL END "
+                f"AS {dtypes.get(k, 'string')}) AS {ident(k)}"
+            )
+    return out
 
 
 def run_unique_key(df: DataFrame, c: UniqueKey, key_columns: tuple) -> DataFrame:
@@ -642,20 +620,22 @@ def run_unique_key(df: DataFrame, c: UniqueKey, key_columns: tuple) -> DataFrame
     fits, but on boilerplate-heavy corpora it can be billions of rows —
     a broadcast hint there is an OOM, a shuffle join is not."""
     cols = list(c.columns)
-    slim = df.select(*dict.fromkeys([*cols, *key_columns]))
-    dup_keys = slim.groupBy(*cols).agg(F.count(F.lit(1)).alias("_n")).filter(F.col("_n") > 1)
+    slim = df.selectExpr(*_refs([*cols, *key_columns]))
+    dup_keys = slim.groupBy(*cols).count().filter("`count` > 1")
     tagged = slim.join(dup_keys, on=cols, how="inner")
-    return _as_violations(tagged, key_columns, check_id(c), ",".join(cols), F.col("_n"))
+    return _as_violations(tagged, key_columns, check_id(c), ",".join(cols), "`count`")
 
 
 def run_ref_integrity(df: DataFrame, c: RefIntegrity, vocab: DataFrame, key_columns: tuple) -> DataFrame:
     """Broadcast left-anti join; NULL FK passes (Required owns nulls)."""
     cols = list(c.columns)
     ref_cols = list(c.ref_columns or c.columns)
-    vocab_sel = vocab.select(*[F.col(rc).alias(cc) for rc, cc in zip(ref_cols, cols)]).dropDuplicates()
-    candidates = df.select(*dict.fromkeys([*cols, *key_columns])).na.drop(subset=cols)
+    vocab_sel = vocab.selectExpr(
+        *[f"{col_ref(rc)} AS {ident(cc)}" for rc, cc in zip(ref_cols, cols)]
+    ).dropDuplicates()
+    candidates = df.selectExpr(*_refs([*cols, *key_columns])).na.drop(subset=cols)
     viol = candidates.join(F.broadcast(vocab_sel), on=cols, how="left_anti")
-    value = F.concat_ws("|", *[F.col(x).cast("string") for x in cols])
+    value = "concat_ws('|', " + ", ".join(f"CAST({col_ref(x)} AS STRING)" for x in cols) + ")"
     return _as_violations(viol, key_columns, check_id(c), ",".join(cols), value)
 
 
@@ -664,30 +644,22 @@ def run_contiguous(df: DataFrame, c: Contiguous, key_columns: tuple) -> DataFram
     exactly start..start+n-1 — min==start, span==count, no dups.
     One hash aggregation, no window, no sort."""
     g = list(c.group_by)
-    o = F.col(c.order_column)
+    o = col_ref(c.order_column)
     agg = df.groupBy(*g).agg(
-        F.min(o).alias("_min"),
-        F.max(o).alias("_max"),
-        F.count(o).alias("_n"),
-        F.count_distinct(o).alias("_nd"),
+        F.expr(f"min({o}) AS _min"),
+        F.expr(f"max({o}) AS _max"),
+        F.expr(f"count({o}) AS _n"),
+        F.expr(f"count(DISTINCT {o}) AS _nd"),
     )
     bad = agg.filter(
-        (F.col("_min") != c.start)
-        | (F.col("_max") - F.col("_min") + 1 != F.col("_n"))
-        | (F.col("_nd") != F.col("_n"))
+        f"(_min != {lit(c.start)}) OR (_max - _min + 1 != _n) OR (_nd != _n)"
     )
     # group-scope violation row: key columns not in group_by are NULL
-    dtypes = dict(df.dtypes)
-    sel = [
-        (F.col(k) if k in g else F.lit(None).cast(dtypes.get(k, "string"))).alias(k)
-        for k in key_columns
-    ]
-    value = F.to_json(F.struct("_min", "_max", "_n", "_nd"))
-    return bad.select(
-        *sel,
-        F.lit(check_id(c)).alias("check"),
-        F.lit(c.order_column).alias("column"),
-        value.alias("value"),
+    return bad.selectExpr(
+        *_group_key_exprs(df, g, key_columns),
+        f"{str_lit(check_id(c))} AS `check`",
+        f"{str_lit(c.order_column)} AS `column`",
+        "to_json(struct(_min, _max, _n, _nd)) AS `value`",
     )
 
 
@@ -702,55 +674,39 @@ def run_functional_dependency(
     No tag-back join — violations are group rows (bounded by #groups),
     so nothing beyond the aggregation ever shuffles."""
     g = list(c.determinant)
-    dep = F.struct(*[F.col(x) for x in c.dependent])
+    dep = f"struct({', '.join(map(col_ref, c.dependent))})"
     agg = (
-        df.select(*dict.fromkeys([*g, *c.dependent]))
+        df.selectExpr(*_refs([*g, *c.dependent]))
         .groupBy(*g)
-        .agg(F.count_distinct(dep).alias("_nd"))
-        .filter(F.col("_nd") > 1)
+        .agg(F.expr(f"count(DISTINCT {dep}) AS _nd"))
+        .filter("_nd > 1")
     )
-    dtypes = dict(df.dtypes)
-    sel = [
-        (F.col(k) if k in g else F.lit(None).cast(dtypes.get(k, "string"))).alias(k)
-        for k in key_columns
-    ]
-    return agg.select(
-        *sel,
-        F.lit(check_id(c)).alias("check"),
-        F.lit(",".join(c.dependent)).alias("column"),
-        F.col("_nd").cast("string").alias("value"),
+    return agg.selectExpr(
+        *_group_key_exprs(df, g, key_columns),
+        f"{str_lit(check_id(c))} AS `check`",
+        f"{str_lit(','.join(c.dependent))} AS `column`",
+        "CAST(_nd AS STRING) AS `value`",
     )
 
 
-def _group_scope_select(df: DataFrame, group_by: list, key_columns: tuple) -> list:
-    """Key-column projection for group-scoped violations: keys in the
-    group carry their value, the rest are typed NULLs (same contract as
-    Contiguous/FunctionalDependency)."""
-    dtypes = dict(df.dtypes)
-    return [
-        (F.col(k) if k in group_by else F.lit(None).cast(dtypes.get(k, "string"))).alias(k)
-        for k in key_columns
-    ]
+_AGG_SQL = {
+    "avg": "avg({})",
+    "min": "min({})",
+    "max": "max({})",
+    "sum": "sum({})",
+    "count": "count({})",
+    "count_distinct": "count(DISTINCT {})",
+    "stddev": "stddev({})",  # sample stddev, matching SQL stddev_samp
+}
 
 
-def _seq_agg_expr(c: SequencePattern) -> Column:
-    ob = [F.col(x) for x in c.order_by]
-    return F.array_join(
-        F.filter(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(*ob, F.col(c.column).alias("_v")))
-                ),
-                lambda s: s["_v"],
-            ),
-            lambda v: v.isNotNull(),
-        ),
-        c.separator,
+def _seq_agg_expr(c: SequencePattern) -> str:
+    ob = ", ".join(map(col_ref, c.order_by))
+    collected = f"sort_array(collect_list(struct({ob}, {col_ref(c.column)} AS _v)))"
+    return (
+        f"array_join(filter(transform({collected}, s -> s._v), v -> v IS NOT NULL), "
+        f"{str_lit(c.separator)})"
     )
-
-
-def _group_bounds_expr(c: GroupAggBounds) -> Column:
-    return _AGG_FNS[c.agg](F.col(c.column)).cast("double")
 
 
 def run_group_scope_checks(
@@ -770,79 +726,53 @@ def run_group_scope_checks(
             needed += [*c.order_by, c.column]
         else:
             needed.append(c.column)
-    slim = df.select(*dict.fromkeys(needed))
-
-    mkey = (_ctx_id(), tuple(checks))
-    bundle = _GROUP_MEMO.get(mkey)
-    if bundle is None:
-        if len(_GROUP_MEMO) >= _MEMO_CAP:
-            _GROUP_MEMO.clear()
-        bundle = _GROUP_MEMO[mkey] = _group_scope_exprs(tuple(checks))
-    aggs, arr = bundle
-    agg = slim.groupBy(*g).agg(*aggs)
-    exploded = agg.select(*g, F.explode(arr).alias("_f"))
-    return exploded.select(
-        *_group_scope_select(df, g, key_columns),
-        F.col("_f.check").alias("check"),
-        F.col("_f.column").alias("column"),
-        F.col("_f.value").alias("value"),
-    )
-
-
-_GROUP_MEMO: dict = {}
-
-
-def _group_scope_exprs(checks: tuple) -> tuple:
-    """(agg expressions, violation array Column) for
-    run_group_scope_checks — DataFrame-independent, memoized per
-    config (same rationale as _FUSED_MEMO)."""
     aggs = []
-    for i, c in enumerate(checks):
-        expr = _seq_agg_expr(c) if isinstance(c, SequencePattern) else _group_bounds_expr(c)
-        aggs.append(expr.alias(f"_s{i}"))
-
     structs = []
     for i, c in enumerate(checks):
-        s = F.col(f"_s{i}")
+        s = f"_s{i}"
         if isinstance(c, SequencePattern):
+            aggs.append(F.expr(f"{_seq_agg_expr(c)} AS {s}"))
             # A group with zero non-NULL values joins to '' — vacuous
             # pass (matches GroupAggBounds' NULL-statistic rule and the
             # DuckDB oracle, whose string_agg yields NULL and skips).
-            bad = (F.length(s) > 0) & ~s.rlike(c.regex)
-            value = F.substring(s, 1, c.max_value_len)
+            bad = f"((length({s}) > 0) AND (NOT ({s} RLIKE {str_lit(c.regex)})))"
+            value = f"substring({s}, 1, {lit(c.max_value_len)})"
         else:
-            ok = F.lit(True)
+            stat = _AGG_SQL[c.agg].format(col_ref(c.column))
+            aggs.append(F.expr(f"CAST({stat} AS DOUBLE) AS {s}"))
+            ok = ["true"]
             if c.min is not None:
-                ok = ok & (s >= F.lit(float(c.min)))
+                ok.append(f"({s} >= {lit(float(c.min))})")
             if c.max is not None:
-                ok = ok & (s <= F.lit(float(c.max)))
-            bad = ~F.coalesce(ok, F.lit(True))
-            value = s.cast("string")
+                ok.append(f"({s} <= {lit(float(c.max))})")
+            bad = f"(NOT coalesce({_and(ok)}, true))"
+            value = f"CAST({s} AS STRING)"
         structs.append(
             (
                 bad,
-                F.struct(
-                    F.lit(check_id(c)).alias("check"),
-                    F.lit(c.column).cast("string").alias("column"),
-                    value.alias("value"),
-                ),
+                _failure(check_id(c), c.column, value),
             )
         )
     arr = _concat_conditional(structs, f"struct<{FAILURE_STRUCT}>")
-    return tuple(aggs), arr
+    agg = df.selectExpr(*_refs(needed)).groupBy(*g).agg(*aggs)
+    exploded = agg.selectExpr(*map(col_ref, g), f"explode({arr}) AS _f")
+    return exploded.selectExpr(
+        *_group_key_exprs(df, g, key_columns),
+        "_f.check AS `check`",
+        "_f.column AS `column`",
+        "_f.value AS `value`",
+    )
 
 
 def run_monotonic(df: DataFrame, c: Monotonic, key_columns: tuple) -> DataFrame:
-    from pyspark.sql import Window
-
-    needed = list(dict.fromkeys([*c.group_by, *c.order_by, c.column, *key_columns]))
-    w = Window.partitionBy(*c.group_by).orderBy(*c.order_by)
-    with_prev = df.select(*needed).withColumn("_prev", F.lag(F.col(c.column)).over(w))
-    bad = (
-        F.col(c.column) <= F.col("_prev") if c.strict else F.col(c.column) < F.col("_prev")
+    col = col_ref(c.column)
+    w = _window(c.group_by, c.order_by)
+    with_prev = df.selectExpr(*_refs([*c.group_by, *c.order_by, c.column, *key_columns])).withColumn(
+        "_prev", F.expr(f"lag({col}) OVER ({w})")
     )
-    viol = with_prev.filter(F.coalesce(bad, F.lit(False)))
-    value = F.concat_ws("<", F.col(c.column).cast("string"), F.col("_prev").cast("string"))
+    bad = f"({col} <= _prev)" if c.strict else f"({col} < _prev)"
+    viol = with_prev.filter(f"coalesce({bad}, false)")
+    value = f"concat_ws('<', CAST({col} AS STRING), CAST(_prev AS STRING))"
     return _as_violations(viol, key_columns, check_id(c), c.column, value)
 
 
@@ -875,49 +805,24 @@ def run_ordered_fused(
     suite at ~0.45 (event logs, BENCH/analyze_eventlog.py).
     """
     g = list(group_by)
+    monos = list(monos or [])
     # column-prune BEFORE the shuffle: the pass needs only keys, the
     # order column, and the monotonic columns — not the (wide) payload
-    needed = list(dict.fromkeys([*g, order_col, *(mc.column for mc in monos or []), *key_columns]))
+    needed = [*g, order_col, *(mc.column for mc in monos), *key_columns]
     # pin a single exchange: every window below is satisfied by hash(g)
-    base = df.select(*needed).repartition(*g)
-    # window/violation expressions are pure functions of the check
-    # configs — memoized like the fused row pass (_FUSED_MEMO)
-    mkey = (_ctx_id(), tuple(g), order_col, unique, contig, tuple(monos or []))
-    bundle = _ORDERED_MEMO.get(mkey)
-    if bundle is None:
-        if len(_ORDERED_MEMO) >= _MEMO_CAP:
-            _ORDERED_MEMO.clear()
-        bundle = _ORDERED_MEMO[mkey] = _ordered_exprs(
-            tuple(g), order_col, unique, contig, tuple(monos or [])
-        )
-    wincols, arr = bundle
+    base = df.selectExpr(*_refs(needed)).repartition(*g)
+    wincols, arr = _ordered_exprs(tuple(g), order_col, unique, contig, tuple(monos))
     if wincols:
-        base = base.withColumns(dict(wincols))
-    exploded = base.select(*[F.col(k) for k in dict.fromkeys([*g, *key_columns])],
-                           F.explode(arr).alias("_f"))
-    dtypes = dict(df.dtypes)
-    sel = [
-        (
-            F.col(k)
-            if k in g
-            else F.when(~F.col("_f.grp"), F.col(k))
-            .otherwise(F.lit(None))
-            .cast(dtypes.get(k, "string"))
-            .alias(k)
-        )
-        for k in key_columns
-    ]
+        base = base.selectExpr("*", *(f"{e} AS {name}" for name, e in wincols))
+    exploded = base.selectExpr(*_refs([*g, *key_columns]), f"explode({arr}) AS _f")
     return [
-        exploded.select(
-            *sel,
-            F.col("_f.check").alias("check"),
-            F.col("_f.column").alias("column"),
-            F.col("_f.value").alias("value"),
+        exploded.selectExpr(
+            *_group_key_exprs(df, g, key_columns, keep="NOT _f.grp"),
+            "_f.check AS `check`",
+            "_f.column AS `column`",
+            "_f.value AS `value`",
         )
     ]
-
-
-_ORDERED_MEMO: dict = {}
 
 
 def _ordered_exprs(
@@ -927,13 +832,11 @@ def _ordered_exprs(
     contig: "Contiguous | None",
     monos: tuple,
 ) -> tuple:
-    """(window columns to append in order, violation array Column) for
-    run_ordered_fused — DataFrame-independent, memoized per config."""
-    from pyspark.sql import Window
-
-    o = F.col(order_col)
+    """(window columns to append in order, violation array) for
+    run_ordered_fused, as SQL text."""
+    o = col_ref(order_col)
+    w_ord = _window(g, (order_col,))
     wincols: list = []
-    w_ord = Window.partitionBy(*g).orderBy(order_col)
     if unique is not None:
         # duplicate-key count as the ORDER-PEER group size: a RANGE
         # (current row, current row) frame over the (g, o) sort is
@@ -943,15 +846,10 @@ def _ordered_exprs(
         # second partition pass (NULL ties group together in both
         # formulations; NULL-keyed rows are filtered below anyway).
         wincols.append(
-            (
-                "_kc",
-                F.count(F.lit(1)).over(
-                    w_ord.rangeBetween(Window.currentRow, Window.currentRow)
-                ),
-            )
+            ("_kc", f"count(1) OVER ({w_ord} RANGE BETWEEN CURRENT ROW AND CURRENT ROW)")
         )
-    for i, mc in enumerate(monos or []):
-        wincols.append((f"_prev_{i}", F.lag(F.col(mc.column)).over(w_ord)))
+    for i, mc in enumerate(monos):
+        wincols.append((f"_prev_{i}", f"lag({col_ref(mc.column)}) OVER ({w_ord})"))
     if contig is not None:
         # Group statistics via RUNNING aggregates read at each group's
         # LAST row, not whole-group window frames. An unbounded
@@ -979,14 +877,14 @@ def _ordered_exprs(
         # with ONE withColumns call (eager per-op analysis made each
         # chained withColumn cost ~10 ms of driver time)
         wincols += [
-            ("_last", F.lead(F.lit(1)).over(w_ord).isNull()),
-            ("_mn", F.min(o).over(w_ord)),
-            ("_mx", F.max(o).over(w_ord)),
-            ("_n", F.count(o).over(w_ord)),
+            ("_last", f"(lead(1) OVER ({w_ord}) IS NULL)"),
+            ("_mn", f"min({o}) OVER ({w_ord})"),
+            ("_mx", f"max({o}) OVER ({w_ord})"),
+            ("_n", f"count({o}) OVER ({w_ord})"),
             (
                 "_nd",
-                F.dense_rank().over(w_ord)
-                - (F.row_number().over(w_ord) > F.count(o).over(w_ord)).cast("long"),
+                f"(dense_rank() OVER ({w_ord}) - CAST((row_number() OVER ({w_ord}) > "
+                f"count({o}) OVER ({w_ord})) AS BIGINT))",
             ),
         ]
     # Assemble every fused check's violation as an element of ONE
@@ -999,14 +897,14 @@ def _ordered_exprs(
     # the contract the docstring promises: one scan, one exchange.
     # Struct fields: check, column, value, grp (group-scope row ⇒ key
     # columns outside group_by are NULLed in the final select).
-    def _viol(cond, check, column, value, grp):
+    def _viol(cond: str, check: str, column: str, value: str, grp: bool):
         return (
             cond,
-            F.struct(
-                F.lit(check).alias("check"),
-                F.lit(column).cast("string").alias("column"),
-                value.cast("string").alias("value"),
-                F.lit(grp).alias("grp"),
+            struct(
+                ("check", str_lit(check)),
+                ("column", f"CAST({lit(column)} AS STRING)"),
+                ("value", f"CAST({value} AS STRING)"),
+                ("grp", lit(grp)),
             ),
         )
 
@@ -1015,70 +913,59 @@ def _ordered_exprs(
         # rows with a NULL in any unique-key column are never reported:
         # run_unique_key's equi-join back (and the SQL oracle's JOIN
         # USING) are NULL-rejecting — NULL policy belongs to Required
-        non_null_key = reduce(
-            lambda a, b: a & b, (F.col(c).isNotNull() for c in (*g, order_col))
-        )
+        non_null_key = _and(f"({col_ref(k)} IS NOT NULL)" for k in (*g, order_col))
         structs.append(
             _viol(
-                (F.col("_kc") > 1) & non_null_key,
+                f"((_kc > 1) AND {non_null_key})",
                 check_id(unique),
                 ",".join(unique.columns),
-                F.col("_kc"),
+                "_kc",
                 False,
             )
         )
     if contig is not None:
-        bad_grp = F.col("_last") & (
-            (F.col("_mn") != contig.start)
-            | (F.col("_mx") - F.col("_mn") + 1 != F.col("_n"))
-            | (F.col("_nd") != F.col("_n"))
+        bad_grp = (
+            f"(_last AND ((_mn != {lit(contig.start)}) OR (_mx - _mn + 1 != _n) OR (_nd != _n)))"
         )
         structs.append(
             _viol(
                 bad_grp,
                 check_id(contig),
                 contig.order_column,
-                F.to_json(
-                    F.struct(
-                        F.col("_mn").alias("_min"),
-                        F.col("_mx").alias("_max"),
-                        F.col("_n").alias("_n"),
-                        F.col("_nd").alias("_nd"),
-                    )
-                ),
+                f"to_json({struct(('_min', '_mn'), ('_max', '_mx'), ('_n', '_n'), ('_nd', '_nd'))})",
                 True,
             )
         )
-    for i, mc in enumerate(monos or []):
-        prev = F.col(f"_prev_{i}")
-        badp = F.col(mc.column) <= prev if mc.strict else F.col(mc.column) < prev
+    for i, mc in enumerate(monos):
+        col, prev = col_ref(mc.column), f"_prev_{i}"
+        badp = f"({col} <= {prev})" if mc.strict else f"({col} < {prev})"
         structs.append(
             _viol(
-                F.coalesce(badp, F.lit(False)),
+                f"coalesce({badp}, false)",
                 check_id(mc),
                 mc.column,
-                F.concat_ws("<", F.col(mc.column).cast("string"), prev.cast("string")),
+                f"concat_ws('<', CAST({col} AS STRING), CAST({prev} AS STRING))",
                 False,
             )
         )
     # concat-of-conditional-arrays instead of filter(array(...)):
     # the ArrayFilter HOF is CodegenFallback and would knock this
     # Project out of whole-stage codegen (see _concat_conditional)
-    arr = _concat_conditional(
-        structs, f"struct<{FAILURE_STRUCT}, grp boolean>"
-    )
+    arr = _concat_conditional(structs, f"struct<{FAILURE_STRUCT}, grp boolean>")
     return tuple(wincols), arr
 
 
-_AGG_FNS = {
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "sum": F.sum,
-    "count": F.count,
-    "count_distinct": F.count_distinct,
-    "stddev": F.stddev,  # sample stddev, matching SQL stddev_samp
-}
+def _verdict_tail(check: str, n_rows: str, passed: str) -> list[str]:
+    """The (scope, partition_id, check, n_rows, n_violations, passed)
+    columns of a table-scope verdict row."""
+    return [
+        "'table' AS scope",
+        "CAST(NULL AS INT) AS partition_id",
+        f"{check} AS `check`",
+        f"CAST({n_rows} AS BIGINT) AS n_rows",
+        "CAST(NULL AS BIGINT) AS n_violations",
+        f"{passed} AS passed",
+    ]
 
 
 def run_table_aggregates(
@@ -1091,143 +978,126 @@ def run_table_aggregates(
     aggs = []
     oks = []
     for i, c in enumerate(checks):
+        col, r = col_ref(c.column), f"_r{i}"
         if isinstance(c, NullRateMax):
-            aggs.append(F.avg(F.col(c.column).isNull().cast("double")).alias(f"_r{i}"))
-            oks.append(F.coalesce(F.col(f"_r{i}"), F.lit(0.0)) <= F.lit(float(c.max_rate)))
-        else:  # AggBounds
-            if c.agg == "quantile":
-                # exact interpolating percentile (== SQL quantile_cont)
-                a = F.percentile(F.col(c.column), F.lit(float(c.quantile)))
-            elif c.agg == "approx_quantile":
-                # Greenwald-Khanna sketch: map-side combinable, no
-                # per-value shuffle — the 10^12-row path
-                a = F.percentile_approx(
-                    F.col(c.column), F.lit(float(c.quantile)), F.lit(c.accuracy)
-                )
-            else:
-                a = _AGG_FNS[c.agg](F.col(c.column))
-            aggs.append(a.cast("double").alias(f"_r{i}"))
-            cond = F.lit(True)
-            if c.min is not None:
-                cond = cond & (F.col(f"_r{i}") >= F.lit(float(c.min)))
-            if c.max is not None:
-                cond = cond & (F.col(f"_r{i}") <= F.lit(float(c.max)))
-            # NULL statistic (empty/all-NULL input) => vacuous pass
-            oks.append(F.coalesce(cond, F.lit(True)))
-    wide = df.agg(*aggs)
-    rows = F.array(
-        *[
-            F.struct(F.lit(check_id(c)).alias("check"), ok.alias("ok"))
-            for c, ok in zip(checks, oks)
-        ]
+            aggs.append(f"avg(CAST(({col} IS NULL) AS DOUBLE)) AS {r}")
+            oks.append(f"(coalesce({r}, 0.0D) <= {lit(float(c.max_rate))})")
+            continue
+        # AggBounds
+        if c.agg == "quantile":
+            # exact interpolating percentile (== SQL quantile_cont)
+            stat = f"percentile({col}, {lit(float(c.quantile))}, 1)"
+        elif c.agg == "approx_quantile":
+            # Greenwald-Khanna sketch: map-side combinable, no
+            # per-value shuffle — the 10^12-row path
+            stat = f"percentile_approx({col}, {lit(float(c.quantile))}, {lit(c.accuracy)})"
+        else:
+            stat = _AGG_SQL[c.agg].format(col)
+        aggs.append(f"CAST({stat} AS DOUBLE) AS {r}")
+        cond = ["true"]
+        if c.min is not None:
+            cond.append(f"({r} >= {lit(float(c.min))})")
+        if c.max is not None:
+            cond.append(f"({r} <= {lit(float(c.max))})")
+        # NULL statistic (empty/all-NULL input) => vacuous pass
+        oks.append(f"coalesce({_and(cond)}, true)")
+    rows = ", ".join(
+        struct(("check", str_lit(check_id(c))), ("ok", ok))
+        for c, ok in zip(checks, oks)
     )
-    return wide.select(F.explode(rows).alias("s")).select(
-        F.lit("table").alias("scope"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.col("s.check").alias("check"),
-        F.lit(None).cast("long").alias("n_rows"),
-        F.lit(None).cast("long").alias("n_violations"),
-        F.col("s.ok").alias("passed"),
-    )
-
-
-def chi2_pvalue(stat: Column, dof: Column, n_obs: Column, n_ref: Column) -> Column:
-    """``operators.drift.chi2_sf`` as a JVM expression, with the drift
-    verdict's edge cases: an empty observed or reference side (or no
-    statistic) is a vacuous p = 1; an infinite or NaN statistic (an
-    observed-only category) is p = 0. The regularized upper incomplete
-    gamma Q(dof/2, stat/2) is commons-math3's ``Gamma.regularizedGammaQ``
-    (on Spark's own classpath) through ``reflect``, which returns the
-    double's string form; the cast back is exact."""
-    q = F.reflect(
-        F.lit("org.apache.commons.math3.special.Gamma"),
-        F.lit("regularizedGammaQ"),
-        dof.cast("double") / F.lit(2.0),
-        stat.cast("double") / F.lit(2.0),
-    ).cast("double")
     return (
-        F.when(
-            (F.coalesce(n_obs, F.lit(0)) == 0) | (F.coalesce(n_ref, F.lit(0)) == 0) | stat.isNull(),
-            F.lit(1.0),
-        )
-        .when(F.isnan(stat) | (F.abs(stat) == F.lit(float("inf"))), F.lit(0.0))
-        .when((dof <= 0) | (stat <= 0), F.lit(1.0))
-        .otherwise(q)
+        df.selectExpr(*aggs)
+        .selectExpr(f"explode(array({rows})) AS s")
+        .selectExpr(*_verdict_tail("s.check", "NULL", "s.ok"))
     )
 
 
-def ks_pvalue(d: Column, n1: Column, n2: Column) -> Column:
-    """``operators.drift.ks_sf`` as a JVM expression: the asymptotic
-    Kolmogorov series, term by term in the same order, stopping after
-    the first term below 1e-12 (at most 100). No statistic or an empty
-    side is a vacuous p = 1, as is d <= 0. The series is a one-row
-    ``aggregate`` over ``sequence(1, 100)``."""
-    ne = n1.cast("double") * n2.cast("double") / (n1 + n2).cast("double")
-    lam = (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne)) * d
-
-    def step(acc: Column, j: Column) -> Column:
-        term = F.when(j % 2 == 1, F.lit(2.0)).otherwise(F.lit(-2.0)) * F.exp(
-            F.lit(-2) * j * j * lam * lam
-        )
-        return F.when(acc["done"], acc).otherwise(
-            F.struct((acc["s"] + term).alias("s"), (F.abs(term) < F.lit(1e-12)).alias("done"))
-        )
-
-    series = F.aggregate(
-        F.sequence(F.lit(1), F.lit(100)),
-        F.struct(F.lit(0.0).alias("s"), F.lit(False).alias("done")),
-        step,
-    )["s"]
+def chi2_pvalue(stat: str, dof: str, n_obs: str, n_ref: str) -> str:
+    """``operators.drift.chi2_sf`` as a JVM expression over the SQL
+    expressions given, with the drift verdict's edge cases: an empty
+    observed or reference side (or no statistic) is a vacuous p = 1; an
+    infinite or NaN statistic (an observed-only category) is p = 0. The
+    regularized upper incomplete gamma Q(dof/2, stat/2) is
+    commons-math3's ``Gamma.regularizedGammaQ`` (on Spark's own
+    classpath) through ``reflect``, which returns the double's string
+    form; the cast back is exact."""
+    q = (
+        "CAST(reflect('org.apache.commons.math3.special.Gamma', 'regularizedGammaQ', "
+        f"CAST({dof} AS DOUBLE) / 2.0D, CAST({stat} AS DOUBLE) / 2.0D) AS DOUBLE)"
+    )
     return (
-        F.when(
-            d.isNull() | (F.coalesce(n1, F.lit(0)) == 0) | (F.coalesce(n2, F.lit(0)) == 0) | (d <= 0),
-            F.lit(1.0),
-        )
-        .otherwise(F.least(F.lit(1.0), F.greatest(F.lit(0.0), series)))
+        f"CASE WHEN (coalesce({n_obs}, 0) = 0) OR (coalesce({n_ref}, 0) = 0) OR ({stat} IS NULL) "
+        f"THEN 1.0D "
+        f"WHEN isnan({stat}) OR (abs({stat}) = {_INF}) THEN 0.0D "
+        f"WHEN ({dof} <= 0) OR ({stat} <= 0) THEN 1.0D "
+        f"ELSE {q} END"
+    )
+
+
+def ks_pvalue(d: str, n1: str, n2: str) -> str:
+    """``operators.drift.ks_sf`` as a JVM expression over the SQL
+    expressions given: the asymptotic Kolmogorov series, term by term
+    in the same order, stopping after the first term below 1e-12 (at
+    most 100). No statistic or an empty side is a vacuous p = 1, as is
+    d <= 0. The series is a one-row ``aggregate`` over
+    ``sequence(1, 100)``."""
+    ne = f"(CAST({n1} AS DOUBLE) * CAST({n2} AS DOUBLE) / CAST({n1} + {n2} AS DOUBLE))"
+    lam = f"((sqrt({ne}) + 0.12D + 0.11D / sqrt({ne})) * {d})"
+    term = f"(CASE WHEN (j % 2 = 1) THEN 2.0D ELSE -2.0D END * exp(-2 * j * j * {lam} * {lam}))"
+    series = (
+        f"aggregate(sequence(1, 100), {struct(('s', '0.0D'), ('done', 'false'))}, "
+        f"(acc, j) -> CASE WHEN acc.done THEN acc ELSE "
+        f"{struct(('s', f'acc.s + {term}'), ('done', f'abs({term}) < 1.0E-12D'))} END).s"
+    )
+    return (
+        f"CASE WHEN ({d} IS NULL) OR (coalesce({n1}, 0) = 0) OR (coalesce({n2}, 0) = 0) "
+        f"OR ({d} <= 0) THEN 1.0D "
+        f"ELSE least(1.0D, greatest(0.0D, {series})) END"
     )
 
 
 def run_chi2_drift(df: DataFrame, c: ChiSquareDrift, ref: DataFrame) -> DataFrame:
     """Chi² drift → ONE table-scope verdict row, fully lazy.
 
-    Plan: groupBy histogram of the observed column (partial+final agg —
-    the only pass over the big table), full outer join against the
-    reference histogram (O(#categories) rows), window totals + one agg
-    to the (stat, dof, n) triple, JVM p-value (chi2_pvalue) on that single row.
-    Semantics match operators.drift.chi_squared_drift: expected counts
-    scaled to the observed total; observed-only category ⇒ stat=+inf ⇒
-    p=0; empty observed or reference side ⇒ vacuous pass."""
-    from pyspark.sql import Window
-
-    col = c.column
-    obs = df.na.drop(subset=[col]).groupBy(col).agg(F.count(F.lit(1)).alias("_o"))
-    refh = ref.na.drop(subset=[col]).groupBy(col).agg(F.sum("n").alias("_r"))
-    joined = obs.join(refh, on=col, how="full").select(
-        F.coalesce(F.col("_o"), F.lit(0)).cast("double").alias("o"),
-        F.coalesce(F.col("_r"), F.lit(0)).cast("double").alias("r"),
+    Plan: one aggregation of the tagged union of the observed rows
+    (count 1 each) and the reference histogram rows (count n each)
+    builds both histograms side by side, per category (partial+final
+    agg — the only pass over the big table), and one global
+    aggregation collects the O(#categories) histogram into an array
+    with its totals; the statistic is folded over that array and the
+    JVM p-value (chi2_pvalue) computed on that single row. No join and
+    no unpartitioned window (a full outer histogram join, then window
+    totals over no partition, before). Semantics match
+    operators.drift.chi_squared_drift: expected counts scaled to the
+    observed total; observed-only category ⇒ stat=+inf ⇒ p=0; empty
+    observed or reference side ⇒ vacuous pass."""
+    col = col_ref(c.column)
+    obs = df.selectExpr(f"{col} AS _k", "1 AS _o", "0 AS _r")
+    refh = ref.selectExpr(f"{col} AS _k", "0 AS _o", "n AS _r")
+    hist = (
+        obs.unionByName(refh)
+        .filter("_k IS NOT NULL")
+        .groupBy("_k")
+        .agg(F.expr("CAST(sum(_o) AS DOUBLE) AS o"), F.expr("CAST(coalesce(sum(_r), 0) AS DOUBLE) AS r"))
     )
-    w = Window.partitionBy()  # O(#categories) rows — safe unpartitioned
-    t = joined.withColumn("_no", F.sum("o").over(w)).withColumn("_nr", F.sum("r").over(w))
+    one = hist.selectExpr(
+        "collect_list(struct(o, r)) AS _h", "coalesce(sum(o), 0.0D) AS _no", "coalesce(sum(r), 0.0D) AS _nr"
+    )
     # try_divide: empty reference => NULL expected => vacuous (ANSI-safe)
-    e = F.try_divide(F.col("r") * F.col("_no"), F.col("_nr"))
-    term = F.when(e > 0, F.try_divide(F.pow(F.col("o") - e, F.lit(2)), e)).otherwise(
-        F.when(F.col("o") > 0, F.lit(float("inf"))).otherwise(F.lit(0.0))
+    e = "try_divide(h.r * _no, _nr)"
+    term = (
+        f"CASE WHEN ({e} > 0) THEN try_divide(pow(h.o - {e}, 2), {e}) "
+        f"ELSE CASE WHEN (h.o > 0) THEN {_INF} ELSE 0.0D END END"
     )
-    one = t.agg(
-        F.sum(term).alias("_stat"),
-        F.greatest(F.lit(1), F.count(F.lit(1)) - 1).cast("int").alias("_dof"),
-        F.coalesce(F.max("_no"), F.lit(0.0)).alias("_n_obs"),
-        F.coalesce(F.max("_nr"), F.lit(0.0)).alias("_n_ref"),
+    stats = one.selectExpr(
+        f"aggregate(_h, 0.0D, (acc, h) -> acc + {term}) AS _stat",
+        "greatest(1, size(_h) - 1) AS _dof",
+        "_no",
+        "_nr",
     )
-
-    p = chi2_pvalue(F.col("_stat"), F.col("_dof"), F.col("_n_obs"), F.col("_n_ref"))
-    return one.withColumn("_p", p).select(
-        F.lit("table").alias("scope"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(check_id(c)).alias("check"),
-        F.col("_n_obs").cast("long").alias("n_rows"),
-        F.lit(None).cast("long").alias("n_violations"),
-        (F.col("_p") >= F.lit(float(c.alpha))).alias("passed"),
+    p = chi2_pvalue("_stat", "_dof", "_no", "_nr")
+    return stats.selectExpr(
+        *_verdict_tail(str_lit(check_id(c)), "_no", f"({p} >= {lit(float(c.alpha))})")
     )
 
 
@@ -1241,11 +1111,9 @@ def run_ks_drift(df: DataFrame, c: KSDrift, ref: DataFrame) -> DataFrame:
     p-value (ks_pvalue) on the single resulting row. Matches
     operators.drift.ks_two_sample (same bucketed-D estimator); empty
     side or degenerate range ⇒ vacuous pass."""
-    from pyspark.sql import Window
-
-    col = c.column
-    a = df.na.drop(subset=[col]).select(F.col(col).cast("double").alias("x"))
-    b = ref.na.drop(subset=[col]).select(F.col(col).cast("double").alias("x"))
+    x = f"CAST({col_ref(c.column)} AS DOUBLE) AS x"
+    a = df.na.drop(subset=[c.column]).selectExpr(x)
+    b = ref.na.drop(subset=[c.column]).selectExpr(x)
     # ONE tagged union feeds both the bounds agg and the bucket counts:
     # the per-side bucketed() formulation scanned the input 6 times
     # (each side's groupBy dragged its own copy of the 2-scan bounds
@@ -1254,41 +1122,27 @@ def run_ks_drift(df: DataFrame, c: KSDrift, ref: DataFrame) -> DataFrame:
     # per-side histograms become conditional sums in a single groupBy —
     # no full-outer histogram join. Counts, bucket set, and therefore
     # D / p / passed are identical (guide §1.2: fewer passes).
-    u = a.withColumn("_g", F.lit(1)).unionByName(b.withColumn("_g", F.lit(0)))
-    bounds = u.agg(F.min("x").alias("_lo"), F.max("x").alias("_hi"))
+    u = a.selectExpr("x", "1 AS _g").unionByName(b.selectExpr("x", "0 AS _g"))
+    bounds = u.selectExpr("min(x) AS _lo", "max(x) AS _hi")
 
     nb = int(c.buckets)
     t = u.crossJoin(F.broadcast(bounds))
-    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(nb))
+    width = f"((_hi - _lo) / {lit(float(nb))})"
     # try_divide: degenerate range (hi == lo) => NULL => bucket 0
-    bkt = F.coalesce(
-        F.least(F.lit(nb - 1), F.floor(F.try_divide(F.col("x") - F.col("_lo"), width)).cast("int")),
-        F.lit(0),
+    bkt = f"coalesce(least({nb - 1}, CAST(floor(try_divide(x - _lo, {width})) AS INT)), 0)"
+    hist = t.groupBy(F.expr(f"{bkt} AS _b")).agg(
+        F.expr("sum(_g) AS _na"), F.expr("sum(1 - _g) AS _nb")
     )
-    hist = t.groupBy(bkt.alias("_b")).agg(
-        F.sum("_g").alias("_na"),
-        F.sum(F.lit(1) - F.col("_g")).alias("_nb"),
+    cum = "ORDER BY _b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    one = hist.selectExpr(
+        f"try_divide(sum(_na) OVER ({cum}), sum(_na) OVER ()) AS _ca",
+        f"try_divide(sum(_nb) OVER ({cum}), sum(_nb) OVER ()) AS _cb",
+        "sum(_na) OVER () AS _n1",
+        "sum(_nb) OVER () AS _n2",
+    ).selectExpr(
+        "max(abs(_ca - _cb)) AS _d", "coalesce(max(_n1), 0) AS _n1", "coalesce(max(_n2), 0) AS _n2"
     )
-    w_cum = Window.partitionBy().orderBy("_b").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    cum = hist.select(
-        F.try_divide(F.sum("_na").over(w_cum), F.sum("_na").over(w_all)).alias("_ca"),
-        F.try_divide(F.sum("_nb").over(w_cum), F.sum("_nb").over(w_all)).alias("_cb"),
-        F.sum("_na").over(w_all).alias("_n1"),
-        F.sum("_nb").over(w_all).alias("_n2"),
-    )
-    one = cum.agg(
-        F.max(F.abs(F.col("_ca") - F.col("_cb"))).alias("_d"),
-        F.coalesce(F.max("_n1"), F.lit(0)).alias("_n1"),
-        F.coalesce(F.max("_n2"), F.lit(0)).alias("_n2"),
-    )
-
-    p = ks_pvalue(F.col("_d"), F.col("_n1"), F.col("_n2"))
-    return one.withColumn("_p", p).select(
-        F.lit("table").alias("scope"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(check_id(c)).alias("check"),
-        F.col("_n1").cast("long").alias("n_rows"),
-        F.lit(None).cast("long").alias("n_violations"),
-        (F.col("_p") >= F.lit(float(c.alpha))).alias("passed"),
+    p = ks_pvalue("_d", "_n1", "_n2")
+    return one.selectExpr(
+        *_verdict_tail(str_lit(check_id(c)), "_n1", f"({p} >= {lit(float(c.alpha))})")
     )

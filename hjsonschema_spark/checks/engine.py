@@ -12,11 +12,12 @@ Stages (all lazy until an output is consumed):
 
 from __future__ import annotations
 
+import gc
 import re
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hjsonschema_spark.checks import compile as C
@@ -36,6 +37,7 @@ from hjsonschema_spark.checks.ir import (
     UniqueKey,
 )
 from hjsonschema_spark.session import cached_local_df
+from hjsonschema_spark.sqltext import col_ref, ident, str_lit, struct
 
 _VIOL_TAIL = ["check", "column", "value"]
 
@@ -96,13 +98,13 @@ class ValidationResult:
             )
         return (
             self._slim.groupBy(*group_columns)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((F.size("_failures") > 0).cast("long")).alias("n_violations"),
-            )
-            .withColumn("passed", F.col("n_violations") == 0)
+            .agg(*_row_counts())
+            .withColumn("passed", F.expr("n_violations = 0"))
         )
     _summary: dict[str, Any] | None = field(default=None, repr=False)
+    # (Observation or None, violation union, check ids): the per-check
+    # counts observed on the union as it is computed — see summary()
+    _counts: tuple | None = field(default=None, repr=False)
     _persisted: tuple = field(default=(), repr=False)
     # violations before the byte-stability global sort — clean_rows'
     # anti-join must not inherit a useless sort node
@@ -139,7 +141,7 @@ class ValidationResult:
         equality anti-join by construction; quarantine whole groups via
         group_verdicts() if that is the policy.
         """
-        passed_row = F.size("_failures") == 0
+        passed_row = "size(_failures) = 0"
         if self._fanned:
             # PushDownPredicates substitutes the filter through the
             # _failures projection AND the fan-out exchange, landing
@@ -155,7 +157,7 @@ class ValidationResult:
             # bound-folded away). Rows are unchanged. Only applied when
             # the input was actually fanned out, so well-partitioned
             # production inputs keep full filter pushdown.
-            passed_row = passed_row | (F.spark_partition_id() < F.lit(0))
+            passed_row = f"({passed_row}) OR (spark_partition_id() < 0)"
         base = self.checked.filter(passed_row).drop("_failures")
         if not strict:
             return base
@@ -177,7 +179,7 @@ class ValidationResult:
         structs attached (`_failures`: array<struct<check,column,value>>)
         — the write-aside side of the validate-and-filter pattern. Same
         fused pass as everything else; no extra scan."""
-        return self.checked.filter(F.size("_failures") > 0)
+        return self.checked.filter("size(_failures) > 0")
 
     def passed(self) -> bool:
         """True iff zero violation rows AND every table/schema-scope
@@ -186,7 +188,7 @@ class ValidationResult:
         if self.summary()["n_violations"] > 0:
             return False
         bad = (
-            self.verdicts.filter(F.col("scope").isin("table", "schema") & ~F.col("passed"))
+            self.verdicts.filter("scope IN ('table', 'schema') AND NOT passed")
             .limit(1)
             .count()
         )
@@ -197,20 +199,42 @@ class ValidationResult:
 
         blocking=True waits for the blocks to actually drop — use it
         between back-to-back suite runs in one session, where async
-        eviction lets caches from N runs coexist and overflow the pool."""
+        eviction lets caches from N runs coexist and overflow the pool.
+        It also runs Python's cycle collector: py4j proxies sit in
+        reference cycles (each caches its method handles), so the JVM
+        keeps every dead run's frames, executed plans and broadcast
+        relations until that collector happens to run (measured: the
+        driver heap left after a full JVM GC grew by 60-120 MB per
+        benchmark-suite run without it, and stayed flat with it)."""
         for d in self._persisted:
             d.unpersist(blocking=blocking)
+        if blocking:
+            gc.collect()
 
     def summary(self) -> dict[str, Any]:
+        """Violation totals, overall and per check (checks with none
+        are left out). Read from the counts observed on the violation
+        union while an output computed it, so after ``violations``,
+        ``verdicts`` or ``violations_sample`` of a persisted run this
+        starts no Spark job. If no output has computed the union yet,
+        it computes it once (a ``noop`` write) to fire the observation."""
         if self._summary is None:
-            counts = {
-                r["check"]: r["n"]
-                for r in self.violations.groupBy("check").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
+            obs, viols, ids = self._counts
+            if obs is None:  # unpersisted: observe a pass of its own
+                obs = Observation()
+                viols = _observe(viols, obs, ids)
+            # a pending observation would block get; pyspark 4.1.2 has
+            # no public completion test, so read the JVM promise
+            if not obs._jo.future().isCompleted():
+                viols.write.format("noop").mode("overwrite").save()
+            # a union the optimizer proves empty loses its observation,
+            # which then completes with an empty row
+            got = obs.get if obs._jo.getRow().length() else {"n": 0}
+            counts = dict(zip(ids, got.get("by_check") or ()))
             self._summary = {
                 "suite": self.suite.name,
-                "n_violations": sum(counts.values()),
-                "by_check": counts,
+                "n_violations": got["n"],
+                "by_check": {k: n for k, n in counts.items() if n},
             }
         return self._summary
 
@@ -239,9 +263,41 @@ def _empty_violations(df: DataFrame, key_columns: tuple) -> DataFrame:
         df.sparkSession,
         (),
         ", ".join(
-            [f"`{k}` {dtypes.get(k, 'string')}" for k in key_columns]
+            [f"{ident(k)} {dtypes.get(k, 'string')}" for k in key_columns]
             + [f"{c} string" for c in _VIOL_TAIL]
         ),
+    )
+
+
+def _sorted(viols: DataFrame, key_columns: tuple) -> DataFrame:
+    """Violation rows in the byte-stable (key_columns, check) order.
+    The sort keys are the frame's own columns: given names, ``orderBy``
+    would build them with ``F.col``, whose call-site capture costs round
+    trips (and an IPython import attempt) on every call."""
+    return viols.orderBy(*[viols[k] for k in (*key_columns, "check")])
+
+
+def _observe(viols: DataFrame, obs: Observation, check_ids) -> DataFrame:
+    """``viols`` with ``obs`` counting its rows (``n``) and each check
+    id's rows (``by_check``, in ``check_ids`` order). Sums of CASE, not
+    ``count_if``: the optimizer pushes count_if's comparisons into every
+    union branch as extra columns, which compiled two more classes and
+    cost about 0.2 s of a cold run's violations phase (4 cores)."""
+    by_check = ", ".join(
+        f"sum(CASE WHEN check = {str_lit(i)} THEN 1 ELSE 0 END)" for i in check_ids
+    )
+    return viols.observe(
+        obs,
+        F.expr("count(1) AS n"),
+        *([F.expr(f"array({by_check}) AS by_check")] if check_ids else []),
+    )
+
+
+def _row_counts() -> tuple:
+    """(n_rows, n_violations) aggregates over fused-pass rows."""
+    return (
+        F.expr("count(1) AS n_rows"),
+        F.expr("sum(CAST((size(_failures) > 0) AS BIGINT)) AS n_violations"),
     )
 
 
@@ -250,7 +306,9 @@ def _slim_pass(checked: DataFrame, key_columns: tuple) -> DataFrame:
     structs — no payload columns (text etc.), so it is cheap to persist
     and BOTH the violation rows and the per-partition verdicts derive
     from ONE execution (one input scan) of the row pass."""
-    return checked.select(*key_columns, F.spark_partition_id().alias("_pid"), "_failures")
+    return checked.selectExpr(
+        *map(col_ref, key_columns), "spark_partition_id() AS _pid", "_failures"
+    )
 
 
 def _row_violations(slim: DataFrame, key_columns: tuple) -> DataFrame:
@@ -260,9 +318,9 @@ def _row_violations(slim: DataFrame, key_columns: tuple) -> DataFrame:
     # evaluate TWICE per row — once in the Filter condition, once in
     # the Project feeding the explode (plans/r06 suite_violations
     # before-plan, operators (2)+(3))
-    f = F.explode("_failures").alias("f")
-    return slim.select(*key_columns, f).select(
-        *key_columns, "f.check", "f.column", "f.value"
+    keys = [col_ref(k) for k in key_columns]
+    return slim.selectExpr(*keys, "explode(_failures) AS f").selectExpr(
+        *keys, "f.check", "f.column", "f.value"
     )
 
 
@@ -271,18 +329,15 @@ def _partition_verdicts(slim: DataFrame) -> DataFrame:
     pass itself (NOT a second count scan of the input): n_rows = rows
     seen, n_violations = rows with >=1 failure."""
     return (
-        slim.groupBy(F.col("_pid").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((F.size("_failures") > 0).cast("long")).alias("n_violations"),
-        )
-        .select(
-            F.lit("partition").alias("scope"),
+        slim.groupBy(F.expr("_pid AS partition_id"))
+        .agg(*_row_counts())
+        .selectExpr(
+            "'partition' AS scope",
             "partition_id",
-            F.lit(None).cast("string").alias("check"),
+            "CAST(NULL AS STRING) AS `check`",
             "n_rows",
             "n_violations",
-            (F.col("n_violations") == 0).alias("passed"),
+            "(n_violations = 0) AS passed",
         )
     )
 
@@ -301,39 +356,34 @@ def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     dtypes = dict(df.dtypes)
     numeric = {c for c in cols if dtypes.get(c, "").startswith(_NUMERIC_PREFIXES)}
     aggs = []
+    rows = []
     for c in cols:
+        ref = col_ref(c)
         aggs += [
-            F.count(F.lit(1)).alias(f"{c}__n"),
-            F.avg(F.col(c).isNull().cast("double")).alias(f"{c}__null_rate"),
-            F.min(F.col(c).cast("string")).alias(f"{c}__min"),
-            F.max(F.col(c).cast("string")).alias(f"{c}__max"),
-            F.approx_count_distinct(c).alias(f"{c}__approx_distinct"),
+            f"count(1) AS {ident(c + '__n')}",
+            f"avg(CAST(({ref} IS NULL) AS DOUBLE)) AS {ident(c + '__null_rate')}",
+            f"min(CAST({ref} AS STRING)) AS {ident(c + '__min')}",
+            f"max(CAST({ref} AS STRING)) AS {ident(c + '__max')}",
+            f"approx_count_distinct({ref}) AS {ident(c + '__approx_distinct')}",
         ]
         if c in numeric:
             aggs.append(
-                F.percentile_approx(F.col(c).cast("double"), [0.5, 0.95, 0.99], 10000).alias(
-                    f"{c}__pct"
-                )
+                f"percentile_approx(CAST({ref} AS DOUBLE), array(0.5D, 0.95D, 0.99D), 10000) "
+                f"AS {ident(c + '__pct')}"
             )
-    wide = df.agg(*aggs)
-    null_d = F.lit(None).cast("double")
-    struct_rows = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"{c}__n").alias("n"),
-                F.col(f"{c}__null_rate").alias("null_rate"),
-                F.col(f"{c}__min").alias("min"),
-                F.col(f"{c}__max").alias("max"),
-                F.col(f"{c}__approx_distinct").alias("approx_distinct"),
-                (F.col(f"{c}__pct")[0] if c in numeric else null_d).alias("p50"),
-                (F.col(f"{c}__pct")[1] if c in numeric else null_d).alias("p95"),
-                (F.col(f"{c}__pct")[2] if c in numeric else null_d).alias("p99"),
-            )
-            for c in cols
+        pct = [
+            f"{col_ref(c + '__pct')}[{i}]" if c in numeric else "CAST(NULL AS DOUBLE)"
+            for i in range(3)
         ]
-    )
-    return wide.select(F.explode(struct_rows).alias("s")).select("s.*")
+        rows.append(
+            struct(
+                ("column", str_lit(c)),
+                *[(f, col_ref(f"{c}__{f}")) for f in ("n", "null_rate", "min", "max", "approx_distinct")],
+                *zip(("p50", "p95", "p99"), pct),
+            )
+        )
+    wide = df.selectExpr(*aggs)
+    return wide.selectExpr(f"explode(array({', '.join(rows)})) AS s").selectExpr("s.*")
 
 
 def _fuse_ordered_checks(
@@ -497,7 +547,7 @@ def run_suite(
 
         t = _dtype_of(df, c.column)
         label = f"json_type_{c.column}_{c.json_type or c.type_name}"
-        qcol = ".".join(f"`{p}`" for p in c.column.split("."))
+        qcol = col_ref(c.column)
         if c.json_type and t is not None:
             if c.json_type == "integer" and (t in _FLOATING or t.startswith("decimal")):
                 return _Custom(name=label, expr=f"{qcol} = floor({qcol})")
@@ -678,11 +728,18 @@ def run_suite(
     all_viols = viols[0]
     for v in viols[1:]:
         all_viols = all_viols.unionByName(v)
+    # summary()'s counts are observed on the union as it is computed.
+    # Persisted, the observation sits under the cache, so the first
+    # output that fills it counts each row once. Unpersisted, every
+    # output re-executes the union (the global sort's sampling job runs
+    # it twice), so summary() observes a pass of its own instead.
+    obs = None
     if persist:
-        all_viols = all_viols.persist()
+        obs = Observation()
+        all_viols = _observe(all_viols, obs, viol_check_ids).persist()
         persisted.append(all_viols)
     # global sort => byte-stable violation output across partition counts
-    sorted_viols = all_viols.orderBy(*keys, "check")
+    sorted_viols = _sorted(all_viols, keys)
 
     # Bounded violation output for web-scale runs: at 10^12 rows one
     # broken check makes the violations table as large as the input.
@@ -696,27 +753,25 @@ def run_suite(
     # exact cap. Exact per-check totals remain in `verdicts`.
     sample = None
     if max_violations_per_check is not None:
-        from pyspark.sql import Window as _W
-
         k = int(max_violations_per_check)
         if k <= 0:
             raise ConfigInvalid("max_violations_per_check must be positive")
         # oversample so P(hash thinning keeps < k of an over-cap check)
         # is negligible (Binomial(n, budget/n) tail, budget ~ k + 4*sqrt(k))
         budget = k + 4 * int(k**0.5) + 50
-        counts = all_viols.groupBy("check").agg(F.count(F.lit(1)).alias("_n_check"))
-        key_cols = [F.col(c) for c in keys]
-        h = F.pmod(F.xxhash64(*key_cols, F.col("check")), F.col("_n_check"))
+        counts = all_viols.groupBy("check").count()
+        key_refs = [col_ref(c) for c in keys]
+        h = f"pmod(xxhash64({', '.join(key_refs)}, `check`), `count`)"
         pre = all_viols.join(F.broadcast(counts), "check").filter(
-            (F.col("_n_check") <= budget) | (h < F.lit(budget))
+            f"(`count` <= {budget}) OR ({h} < {budget})"
         )
-        w = _W.partitionBy("check").orderBy(*keys, "column", "value")
+        order = ", ".join([*key_refs, "`column`", "`value`"])
         sample = (
-            pre.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(*keys, *_VIOL_TAIL)
-            .orderBy(*keys, "check")
+            pre.withColumn("_rn", F.expr(f"row_number() OVER (PARTITION BY `check` ORDER BY {order})"))
+            .filter(f"_rn <= {k}")
+            .selectExpr(*key_refs, *map(ident, _VIOL_TAIL))
         )
+        sample = _sorted(sample, keys)
 
     spark = df.sparkSession
 
@@ -724,21 +779,14 @@ def run_suite(
         ids_df = cached_local_df(
             spark, tuple((i,) for i in viol_check_ids), "check string"
         )
-        table_verdicts = (
-            ids_df.join(
-                all_viols.groupBy("check").agg(F.count(F.lit(1)).alias("n_violations")),
-                "check",
-                "left",
-            )
-            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)).cast("long"))
-            .select(
-                F.lit("check").alias("scope"),
-                F.lit(None).cast("int").alias("partition_id"),
-                "check",
-                F.lit(None).cast("long").alias("n_rows"),
-                "n_violations",
-                (F.col("n_violations") == 0).alias("passed"),
-            )
+        n = "CAST(coalesce(`count`, 0) AS BIGINT)"
+        table_verdicts = ids_df.join(all_viols.groupBy("check").count(), "check", "left").selectExpr(
+            "'check' AS scope",
+            "CAST(NULL AS INT) AS partition_id",
+            "`check`",
+            "CAST(NULL AS BIGINT) AS n_rows",
+            f"{n} AS n_violations",
+            f"({n} = 0) AS passed",
         )
         parts = [p() for p in verdict_parts]
         if schema_verdicts:
@@ -766,4 +814,5 @@ def run_suite(
         _table_viols_unsorted=table_viols,
         _persisted=tuple(persisted),
         _fanned=fanned,
+        _counts=(obs, all_viols, tuple(viol_check_ids)),
     )

@@ -7,7 +7,7 @@ analogue, src/JSONSchema/Draft4.hs:134-148), with named-suite ``Ref``
 nodes resolved at compile time with lateral cycle detection (the $ref
 analogue, src/JSONSchema/Validator/Draft4/Any.hs:56-98).
 
-Row-level checks compile to guarded ``pyspark.sql.Column`` booleans and
+Row-level checks compile to guarded boolean Spark SQL expressions and
 are fused into ONE projection per table pass; table-level checks
 compile to aggregation / window / broadcast-join passes. Keyword
 semantics mirror the reference per SURVEY.md §2 (e.g. NULL input =>

@@ -86,13 +86,13 @@ and about 0.2 s of driver time per call, as much as executing it on
 12k documents, because each function call crosses to the JVM several
 times (call-site capture included); as text it is about 90 round trips
 and 0.04 s (tests/test_columnar_json.py::test_build_round_trips_bounded).
-Every schema literal goes into the text through ``_str``: a string
-that could be read two ways (a quote, a backslash, a brace) becomes a
-hex binary literal cast to string, so ``spark.sql.parser.
+Every schema literal goes into the text through ``sqltext.str_lit``:
+a string that could be read two ways (a quote, a backslash, a brace)
+becomes a hex binary literal cast to string, so ``spark.sql.parser.
 escapedStringLiterals`` and ``${var}`` substitution cannot change what
-it means; numbers become exact decimal literals (``_num``). The input
-column is read as ``F.col`` reads it (``_col_ref``); every other name
-is backtick-quoted. tests/test_columnar_differential.py checks both
+it means; numbers become exact decimal literals (``num_lit``). The
+input column is read as ``F.col`` reads it (``col_ref``); every other
+name is backtick-quoted (``ident``). tests/test_columnar_differential.py checks both
 against the exact path under both parser settings. The failure
 projection itself runs outside whole-stage codegen: ``array_compact``
 is a higher-order ``filter``, which falls back to interpreted
@@ -109,6 +109,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hjsonschema_spark.sqltext import col_ref, ident, num_lit, str_lit
 
 _SAFE_KEY = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 _SCALAR_TYPES = ("string", "integer", "number", "boolean", "null")
@@ -330,67 +332,6 @@ def liftable(schema: Any) -> bool:
     return True
 
 
-_PLAIN = re.compile(r"[A-Za-z0-9_ $./()-]*")
-
-
-def _str(s: str) -> str:
-    """``s`` as a SQL string literal that means ``s`` whatever
-    ``spark.sql.parser.escapedStringLiterals`` is set to and that
-    ``${var}`` substitution leaves alone: quoted as it is when it holds
-    no quote, backslash or brace, else its UTF-8 bytes as a hex binary
-    literal cast to string (constant-folded to the same string literal)."""
-    if _PLAIN.fullmatch(s):
-        return f"'{s}'"
-    return f"CAST(X'{s.encode().hex()}' AS STRING)"
-
-
-def _num(v: Any) -> str:
-    """A decimal bound or enum member as a decimal literal: the same
-    value ``Decimal`` gives it, so the comparison stays exact."""
-    d = Decimal(repr(float(v))) if isinstance(v, float) else Decimal(v)
-    return f"({d:f}BD)"
-
-
-def _q(name: str) -> str:
-    """``name`` as one backtick-quoted identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _col_ref(name: str) -> str:
-    """``name`` read as ``F.col`` reads it: dots split nested fields,
-    and a backtick-quoted part (with doubled backticks inside) may hold
-    dots (Spark's ``UnresolvedAttribute.parseAttributeName``)."""
-    parts, cur, i, quoted = [], [], 0, False
-    while i < len(name):
-        c = name[i]
-        if quoted:
-            if c == "`" and name[i + 1 : i + 2] == "`":
-                cur.append(c)
-                i += 1
-            elif c == "`":
-                quoted = False
-                if name[i + 1 : i + 2] not in ("", "."):
-                    raise ValueError(f"bad column name {name!r}")
-            else:
-                cur.append(c)
-        elif c == "`":
-            if cur:
-                raise ValueError(f"bad column name {name!r}")
-            quoted = True
-        elif c == ".":
-            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
-                raise ValueError(f"bad column name {name!r}")
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if quoted:
-        raise ValueError(f"bad column name {name!r}")
-    parts.append("".join(cur))
-    return ".".join(_q(p) for p in parts)
-
-
 def _and(*xs: str) -> str:
     return "(" + " AND ".join(xs) + ")"
 
@@ -410,9 +351,9 @@ def _fail(cond: str, keyword: str, ip: str, spath: str, value: str) -> str:
     """A failure struct when ``cond`` (guarded: never NULL) holds.
     ``ip`` is SQL: a literal, or a per-element (indexed) path."""
     return (
-        f"CASE WHEN {cond} THEN named_struct('keyword', {_str(keyword)}, "
-        f"'instance_path', {ip}, 'schema_path', {_str(spath)}, "
-        f"'message', {_str(f'{keyword} failed (columnar)')}, 'value', {value}) END"
+        f"CASE WHEN {cond} THEN named_struct('keyword', {str_lit(keyword)}, "
+        f"'instance_path', {ip}, 'schema_path', {str_lit(spath)}, "
+        f"'message', {str_lit(f'{keyword} failed (columnar)')}, 'value', {value}) END"
     )
 
 
@@ -455,7 +396,7 @@ class _Views:
 
 def _has_class(sch: str, cls: str) -> str:
     """``schema_of_variant`` output names JSON type ``cls`` (never NULL)."""
-    return f"coalesce(startswith({sch}, {_str(cls)}), false)"
+    return f"coalesce(startswith({sch}, {str_lit(cls)}), false)"
 
 
 def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[str]:
@@ -511,21 +452,21 @@ def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[str]:
         # members), not an OR chain of equalities
         strs = [m for m in sub["enum"] if isinstance(m, str)]
         if strs:
-            hits.append(_and(is_str, f"({as_str} IN ({', '.join(map(_str, strs))}))"))
+            hits.append(_and(is_str, f"({as_str} IN ({', '.join(map(str_lit, strs))}))"))
         for m in sub["enum"]:
             if isinstance(m, bool):
                 hits.append(_and(is_bool, f"({v['bool']} = {str(m).lower()})"))
             elif m is None:
                 hits.append(is_null)
             elif not isinstance(m, str):  # number: mathematical equality
-                hits.append(_and(is_num, num_cmp("=", _num(m))))
+                hits.append(_and(is_num, num_cmp("=", num_lit(m))))
         matched = f"coalesce({_or(hits)}, false)"
         out.append(_fail(_and(present, _not(matched)), "enum", ip, f"{sp}/enum", as_str))
     for kw, op in (("minimum", ">="), ("maximum", "<=")):
         if kw in sub:
             if sub.get(f"exclusive{kw[0].upper()}{kw[1:]}", False) is True:
                 op = op[0]
-            cmp = num_cmp(op, _num(sub[kw]))
+            cmp = num_cmp(op, num_lit(sub[kw]))
             out.append(
                 _fail(_and(present, is_num, _not(cmp)), kw, ip, f"{sp}/{kw}", as_str)
             )
@@ -541,7 +482,7 @@ def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[str]:
         # unanchored search in both paths (rlike / re.search); the
         # liftable gate restricts syntax to the dual-dialect subset so
         # Java-vs-Python semantics cannot diverge here
-        hit = f"coalesce(rlike({as_str}, {_str(sub['pattern'])}), false)"
+        hit = f"coalesce(rlike({as_str}, {str_lit(sub['pattern'])}), false)"
         out.append(
             _fail(_and(present, is_str, _not(hit)), "pattern", ip, f"{sp}/pattern", as_str)
         )
@@ -557,7 +498,7 @@ def _array_failures(v: _Views, sub: dict, ip: str, sp: str, t: str) -> str:
     stream. ``t`` prefixes the lambda variables."""
     arr = v["arr"]
     singles = [
-        _fail(f"(size({arr}) {op} {sub[kw]})", kw, _str(ip), f"{sp}/{kw}", v["str"])
+        _fail(f"(size({arr}) {op} {sub[kw]})", kw, str_lit(ip), f"{sp}/{kw}", v["str"])
         for kw, op in (("maxItems", ">"), ("minItems", "<"))
         if kw in sub
     ]
@@ -568,10 +509,10 @@ def _array_failures(v: _Views, sub: dict, ip: str, sp: str, t: str) -> str:
         # element's views once, as a struct; a second reads them to
         # build the failures, with instance paths per index
         # (validator._array: ipath/i)
-        x, e, i = (_q(f"{t}{n}") for n in ("x", "e", "i"))
-        ev = _Views(x, lambda n: f"{e}.{_q(n)}", element=True)
+        x, e, i = (ident(f"{t}{n}") for n in ("x", "e", "i"))
+        ev = _Views(x, lambda n: f"{e}.{ident(n)}", element=True)
         efails = _scalar_failures(
-            ev, it, f"concat({_str(ip + '/')}, CAST({i} AS STRING))", f"{sp}/items"
+            ev, it, f"concat({str_lit(ip + '/')}, CAST({i} AS STRING))", f"{sp}/items"
         )
         fields = ", ".join(f"'{n}', {d}" for n, d in ev.defs.items())
         parts.append(
@@ -594,10 +535,10 @@ def _nested_required_failure(v: _Views, sub: dict, ip: str, sp: str) -> str | No
     if not req:
         return None
     any_missing = _or(
-        [f"(try_variant_get({v.src}, {_str(f'$.{k}')}, 'variant') IS NULL)" for k in req]
+        [f"(try_variant_get({v.src}, {str_lit(f'$.{k}')}, 'variant') IS NULL)" for k in req]
     )
     return _fail(
-        _and(_has_class(v["sch"], "OBJECT"), any_missing), "required", _str(ip),
+        _and(_has_class(v["sch"], "OBJECT"), any_missing), "required", str_lit(ip),
         f"{sp}/required", v["str"],
     )
 
@@ -633,14 +574,14 @@ def validate_json_column_columnar(
     if not liftable(schema):
         raise ValueError("schema outside the columnar subset; use the UDF path")
     t = _temp_prefix([*df.columns, valid_col, failures_col])
-    j = _col_ref(json_col)
-    var = _q(f"{t}v")
+    j = col_ref(json_col)
+    var = ident(f"{t}v")
     props = schema.get("properties", {})
     keys = list(dict.fromkeys([*props, *(schema.get("required") or [])]))
     kcol = {k: f"{t}k{i}" for i, k in enumerate(keys)}
-    root = _Views(var, lambda n: _q(f"{t}r_{n}"))
+    root = _Views(var, lambda n: ident(f"{t}r_{n}"))
     views = {
-        k: _Views(_q(kcol[k]), lambda n, c=kcol[k]: _q(f"{c}_{n}")) for k in props
+        k: _Views(ident(kcol[k]), lambda n, c=kcol[k]: ident(f"{c}_{n}")) for k in props
     }
     root_is_obj = _has_class(root["sch"], "OBJECT")
 
@@ -653,7 +594,7 @@ def validate_json_column_columnar(
         # ONE failure regardless of how many keys are missing (the
         # exact path reports a single required failure listing them);
         # required applies only to objects (type-mismatch => pass).
-        any_missing = _or([f"({_q(kcol[k])} IS NULL)" for k in schema["required"]])
+        any_missing = _or([f"({ident(kcol[k])} IS NULL)" for k in schema["required"]])
         fails.append(_fail(_and(root_is_obj, any_missing), "required", "''", "/required", j))
     for k, sub in props.items():
         v = views[k]
@@ -661,7 +602,7 @@ def validate_json_column_columnar(
         if _scalar_liftable(sub):
             fails.extend(
                 f"CASE WHEN {root_is_obj} THEN {f} END"
-                for f in _scalar_failures(v, sub, _str(ip), sp)
+                for f in _scalar_failures(v, sub, str_lit(ip), sp)
             )
             continue
         if sub.get("type") in ("array", "object"):
@@ -669,7 +610,7 @@ def validate_json_column_columnar(
             fails.append(
                 f"CASE WHEN {root_is_obj} THEN "
                 + _fail(
-                    _and(v.present, _not(_has_class(v["sch"], cls))), "type", _str(ip),
+                    _and(v.present, _not(_has_class(v["sch"], cls))), "type", str_lit(ip),
                     f"{sp}/type", v["str"],
                 )
                 + " END"
@@ -697,19 +638,19 @@ def validate_json_column_columnar(
         f"CASE WHEN {j} IS NULL THEN NULL WHEN {var} IS NULL THEN array({parse_fail}) "
         f"ELSE {fail_arr} END"
     )
-    valid = f"CASE WHEN {j} IS NULL THEN NULL ELSE size({_q(failures_col)}) = 0 END"
+    valid = f"CASE WHEN {j} IS NULL THEN NULL ELSE size({ident(failures_col)}) = 0 END"
     # the views no failure reads are never defined
     stages = [
         {f"{t}v": f"try_parse_json({j})"},
         {
             **{f"{t}r_{n}": d for n, d in root.defs.items()},
-            **{kcol[k]: f"try_variant_get({var}, {_str(f'$.{k}')}, 'variant')" for k in keys},
+            **{kcol[k]: f"try_variant_get({var}, {str_lit(f'$.{k}')}, 'variant')" for k in keys},
         },
         {f"{kcol[k]}_{n}": d for k in props for n, d in views[k].defs.items()},
     ]
     for exprs in stages:
         if exprs:
-            df = df.selectExpr("*", *(f"{e} AS {_q(n)}" for n, e in exprs.items()))
+            df = df.selectExpr("*", *(f"{e} AS {ident(n)}" for n, e in exprs.items()))
     df = df.withColumns({failures_col: F.expr(failures)})
     df = df.withColumns({valid_col: F.expr(valid)})
     return df.drop(*[n for exprs in stages for n in exprs])

@@ -24,8 +24,11 @@ def validate_json_column(
     valid_col: str = "_valid",
     failures_col: str = "_failures_json",
 ) -> DataFrame:
-    """Append ``_valid`` (boolean; NULL json => NULL) and
-    ``_failures_json`` (array of failure structs) columns."""
+    """Add ``_failures_json`` (array of failure structs) and ``_valid``
+    (boolean; NULL json => NULL) columns, with the columnar path's
+    output contract (``withColumns``): an input column of the same name
+    (matched as the session resolves names) is replaced where it
+    stands, the others are appended in that order."""
     from pyspark.sql.types import ArrayType, BooleanType, StructField, StructType, StringType
 
     fail_struct = StructType(
@@ -37,10 +40,19 @@ def validate_json_column(
             StructField("value", StringType()),
         ]
     )
-    result_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(valid_col, BooleanType()), StructField(failures_col, ArrayType(fail_struct))]
-    )
+    added = {failures_col: ArrayType(fail_struct), valid_col: BooleanType()}
+    case_sensitive = df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
+    fold = (lambda n: n) if case_sensitive else str.lower
+    by_fold = {fold(n): n for n in added}
+    fields = [
+        StructField(by_fold[fold(f.name)], added[by_fold[fold(f.name)]])
+        if fold(f.name) in by_fold
+        else f
+        for f in df.schema.fields
+    ]
+    n_in = len(fields)
+    fields += [StructField(n, t) for n, t in added.items() if n not in {f.name for f in fields}]
+    result_schema = StructType(fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # compiled once per worker (fixes the reference's rebuild-per-
@@ -65,9 +77,11 @@ def validate_json_column(
                 errs = v.validate(doc)
                 valids.append(not errs)
                 fails.append([f.as_row() for f in errs])
-            out = pdf.copy()
-            out[valid_col] = pd.Series(valids, index=pdf.index, dtype="object")
+            # input columns by position, renamed as the output names
+            # them; then the verdicts, in place or appended
+            out = {fields[i].name: pdf.iloc[:, i] for i in range(n_in)}
             out[failures_col] = pd.Series(fails, index=pdf.index, dtype="object")
-            yield out
+            out[valid_col] = pd.Series(valids, index=pdf.index, dtype="object")
+            yield pd.DataFrame(out)
 
     return df.mapInPandas(run, result_schema)

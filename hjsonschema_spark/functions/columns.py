@@ -47,7 +47,7 @@ def fan_out(
     if df.storageLevel != StorageLevel.NONE and n_parts >= max(2, n // 2):
         return df
     if by:
-        return df.repartition(n, *[F.col(c) for c in by])
+        return df.repartition(n, *by)
     return df.repartition(n)
 
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import StructType
 from hjsonschema_spark.functions import doc_fingerprint, fan_out, token_shingles, tokens
 from hjsonschema_spark.functions.columns import exploded_shingles
 from hjsonschema_spark.session import local_relation
+from hjsonschema_spark.sqltext import col_ref, lit, str_lit
 
 _MERSENNE = (1 << 61) - 1
 
@@ -89,43 +90,29 @@ def minhash_signatures(
     # entirely (one fewer pass; identical signatures)
     ex = exploded_shingles(df, id_col, text_col, k=shingle_k, distinct=False)
     aggs, sig = _minhash_exprs(num_hashes, seed, hash_mode)
+    key = col_ref(id_col)
     if hash_mode == "md5":
-        ex = ex.select(F.col(id_col), F.substring(F.md5("shingle"), 1, 16).alias("_b"))
+        ex = ex.selectExpr(key, "substring(md5(shingle), 1, 16) AS _b")
     else:
-        ex = ex.select(F.col(id_col), F.xxhash64("shingle", F.lit(seed)).alias("_h"))
-    wide = ex.groupBy(id_col).agg(*aggs)
-    return wide.select(F.col(id_col), sig.alias("signature"))
-
-
-_MINHASH_MEMO: dict = {}
+        ex = ex.selectExpr(key, f"xxhash64(shingle, {lit(seed)}) AS _h")
+    wide = ex.groupBy(id_col).agg(*map(F.expr, aggs))
+    return wide.selectExpr(key, f"{sig} AS signature")
 
 
 def _minhash_exprs(num_hashes: int, seed: int, hash_mode: str) -> tuple:
-    """(per-permutation min aggregates, signature array Column) —
-    DataFrame-independent, memoized per config: building 64 aggregate
-    Columns costs ~0.3 s of py4j round trips per call (measured), and
-    bench/production loops re-derive identical signatures every run."""
-    from hjsonschema_spark.checks.compile import _ctx_id
-    from hjsonschema_spark.functions import portable_hash60
-
-    key = (_ctx_id(), num_hashes, seed, hash_mode)
-    bundle = _MINHASH_MEMO.get(key)
-    if bundle is None:
-        if len(_MINHASH_MEMO) >= 64:
-            _MINHASH_MEMO.clear()
-        if hash_mode == "md5":
-            aggs = [
-                F.min(portable_hash60(F.concat(F.lit(f"{i}:"), F.col("_b")))).alias(f"_m{i}")
-                for i in range(num_hashes)
-            ]
-        else:
-            aggs = [
-                F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"_m{i}")
-                for i in range(num_hashes)
-            ]
-        sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-        bundle = _MINHASH_MEMO[key] = (tuple(aggs), sig)
-    return bundle
+    """(per-permutation min aggregates, signature array) as SQL text
+    over the per-shingle hash column (``_b`` for md5, ``_h`` for
+    xxhash64). Text, not PySpark functions: 64 aggregate Columns built
+    call by call cost ~0.3 s of py4j round trips per build."""
+    if hash_mode == "md5":
+        # portable_hash60 of f"{i}:" + _b
+        perm = "CAST(conv(substring(md5(concat({}, _b)), 1, 15), 16, 10) AS BIGINT)"
+        terms = [perm.format(str_lit(f"{i}:")) for i in range(num_hashes)]
+    else:
+        terms = [f"xxhash64(_h, {i})" for i in range(num_hashes)]
+    aggs = [f"min({t}) AS _m{i}" for i, t in enumerate(terms)]
+    sig = "array(" + ", ".join(f"_m{i}" for i in range(num_hashes)) + ")"
+    return aggs, sig
 
 
 def _band_hash_expr(num_hashes: int, bands: int, hash_mode: str) -> Column:
@@ -138,54 +125,33 @@ def _band_hash_expr(num_hashes: int, bands: int, hash_mode: str) -> Column:
     runtime; element_at is a flat O(1) read of the same slots. Band key
     strings are identical (concat_ws over the same casts in the same
     order), so md5/xxhash64 band keys — and therefore buckets, pairs,
-    and the DuckDB oracle — are unchanged. Memoized like the other
-    minhash bundles (~0.2 s of py4j per build otherwise)."""
-    from hjsonschema_spark.checks.compile import _ctx_id
+    and the DuckDB oracle — are unchanged. Built as one SQL text."""
+    rows = num_hashes // bands
 
-    key = (_ctx_id(), "bands", num_hashes, bands, hash_mode)
-    arr = _MINHASH_MEMO.get(key)
-    if arr is None:
-        if len(_MINHASH_MEMO) >= 64:
-            _MINHASH_MEMO.clear()
-        rows = num_hashes // bands
+    def joined(b: int) -> str:
+        slots = ", ".join(
+            f"CAST(element_at(signature, {i + 1}) AS STRING)"
+            for i in range(b * rows, (b + 1) * rows)
+        )
+        return f"concat_ws(',', {slots})"
 
-        def joined(b: int) -> Column:
-            return F.concat_ws(
-                ",",
-                *[
-                    F.element_at("signature", i + 1).cast("string")
-                    for i in range(b * rows, (b + 1) * rows)
-                ],
-            )
-
-        if hash_mode == "md5":
-            arr = F.array(*[F.md5(joined(b)) for b in range(bands)])
-        else:
-            arr = F.array(*[F.xxhash64(joined(b), F.lit(b)) for b in range(bands)])
-        _MINHASH_MEMO[key] = arr
-    return arr
+    if hash_mode == "md5":
+        keys = [f"md5({joined(b)})" for b in range(bands)]
+    else:
+        keys = [f"xxhash64({joined(b)}, {b})" for b in range(bands)]
+    return F.expr(f"array({', '.join(keys)})")
 
 
 def _minhash_est_expr(num_hashes: int) -> Column:
     """Signature-agreement rate as `num_hashes` codegen-safe equality
-    terms over sig_a/sig_b (memoized: ~192 py4j round trips per build
-    otherwise). Signature slots are non-null (every doc has >=1
-    shingle), so when/otherwise(0) matches the filter(zip_with) count."""
-    from hjsonschema_spark.checks.compile import _ctx_id
-
-    key = (_ctx_id(), "est", num_hashes)
-    est = _MINHASH_MEMO.get(key)
-    if est is None:
-        if len(_MINHASH_MEMO) >= 64:
-            _MINHASH_MEMO.clear()
-        agree = None
-        for i in range(1, num_hashes + 1):
-            t = F.when(
-                F.element_at("sig_a", i) == F.element_at("sig_b", i), 1
-            ).otherwise(0)
-            agree = t if agree is None else agree + t
-        est = _MINHASH_MEMO[key] = agree / F.lit(float(num_hashes))
-    return est
+    terms over sig_a/sig_b, built as one SQL text. Signature slots are
+    non-null (every doc has >=1 shingle), so CASE ... ELSE 0 matches the
+    filter(zip_with) count."""
+    agree = " + ".join(
+        f"CASE WHEN (element_at(sig_a, {i}) = element_at(sig_b, {i})) THEN 1 ELSE 0 END"
+        for i in range(1, num_hashes + 1)
+    )
+    return F.expr(f"(({agree}) / {float(num_hashes)!r}D)")
 
 
 def minhash_lsh_pairs(

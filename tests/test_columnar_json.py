@@ -478,6 +478,21 @@ def test_output_names_replace_input_columns_in_place(spark):
     assert row._valid is True and row.z == []
 
 
+def test_exact_path_output_contract_matches_columnar(spark):
+    """Both routes of validate_json_column_auto return the same columns
+    in the same order: an input ``_valid`` is replaced where it stands
+    (not duplicated), ``_failures_json`` is appended."""
+    df = spark.createDataFrame(
+        [(1, '{"id": 1, "kind": "a"}', False), (2, '{"kind": "z"}', True)], "i int, j string, _valid boolean"
+    )
+    exact = validate_json_column_auto(df, "j", BATTERY_SCHEMA, registry={})
+    columnar = validate_json_column_auto(df, "j", BATTERY_SCHEMA)
+    assert exact.columns == columnar.columns == ["i", "j", "_valid", "_failures_json"]
+    assert exact.dtypes == columnar.dtypes
+    for out in (exact, columnar):
+        assert [r._valid for r in out.orderBy("i").collect()] == [True, False]
+
+
 def test_staged_names_avoid_input_columns(spark):
     """Input columns named like the staged temporaries survive, and the
     verdicts do not change."""

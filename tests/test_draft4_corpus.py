@@ -68,6 +68,8 @@ def test_corpus_case(schema, data, valid):
 
 
 def test_corpus_size():
+    if not SUITE.is_dir():
+        pytest.fail(f"draft-4 test corpus not found: {SUITE} is not a directory", pytrace=False)
     # BASELINE.md: 96 groups / 322 cases across 32 files before skips
     assert len(ALL_CASES) >= 250
 

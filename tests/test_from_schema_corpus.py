@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
 import pytest
 
@@ -117,6 +118,8 @@ def _collect_cases():
 
 
 def test_columnar_engine_matches_corpus(spark):
+    if not os.path.isdir(CORPUS):
+        pytest.fail(f"draft-4 test corpus not found: {CORPUS} is not a directory", pytrace=False)
     groups = _collect_cases()
     assert len(groups) >= 30  # the lift covers a real slice of the corpus
     n_cases = 0

@@ -197,9 +197,7 @@ def test_chi2_pvalue_matches_operator(spark):
     grid = [(s, dof, 100.0, 80.0) for s in stats for dof in (1, 2, 4, 7, 30)]
     grid += [(5.0, 3, 0.0, 80.0), (5.0, 3, 100.0, 0.0), (float("inf"), 1, 0.0, 0.0)]
     df = spark.createDataFrame(grid, "stat double, dof int, n_obs double, n_ref double")
-    got = df.select(
-        "*", C.chi2_pvalue(F.col("stat"), F.col("dof"), F.col("n_obs"), F.col("n_ref")).alias("p")
-    ).collect()
+    got = df.selectExpr("*", f"{C.chi2_pvalue('stat', 'dof', 'n_obs', 'n_ref')} AS p").collect()
     assert len(got) == len(grid)
     for r in got:
         want = _chi2_expected(r["stat"], r["dof"], r["n_obs"], r["n_ref"])
@@ -212,7 +210,7 @@ def test_ks_pvalue_matches_operator(spark):
     sizes = ((0, 100), (100, 0), (1, 1), (100, 100), (1000, 50), (10**6, 10**6))
     grid = [(d, n1, n2) for d in ds for n1, n2 in sizes]
     df = spark.createDataFrame(grid, "d double, n1 long, n2 long")
-    got = df.select("*", C.ks_pvalue(F.col("d"), F.col("n1"), F.col("n2")).alias("p")).collect()
+    got = df.selectExpr("*", f"{C.ks_pvalue('d', 'n1', 'n2')} AS p").collect()
     assert len(got) == len(grid)
     for r in got:
         want = _ks_expected(r["d"], r["n1"], r["n2"])
