@@ -1066,8 +1066,7 @@ def run_chi2_drift(df: DataFrame, c: ChiSquareDrift, ref: DataFrame) -> DataFram
     aggregation collects the O(#categories) histogram into an array
     with its totals; the statistic is folded over that array and the
     JVM p-value (chi2_pvalue) computed on that single row. No join and
-    no unpartitioned window (a full outer histogram join, then window
-    totals over no partition, before). Semantics match
+    no unpartitioned window. Semantics match
     operators.drift.chi_squared_drift: expected counts scaled to the
     observed total; observed-only category ⇒ stat=+inf ⇒ p=0; empty
     observed or reference side ⇒ vacuous pass."""
