@@ -76,7 +76,7 @@ from hjsonschema_spark.checks.ir import (
     TypeIs,
     UniqueKey,
 )
-from hjsonschema_spark.sqltext import col_ref, ident, lit, str_lit, struct
+from hjsonschema_spark.sqltext import col_ref, concat_conditional, ident, lit, str_lit, struct
 
 FAILURE_STRUCT = "check string, column string, value string"
 _FAILURES_TYPE = f"array<struct<{FAILURE_STRUCT}>>"
@@ -498,23 +498,6 @@ def _primary_column(c: RowCheck) -> str | None:
     return getattr(c, "column", None) or getattr(c, "name", None)
 
 
-def _concat_conditional(pairs: list[tuple[str, str]], struct_type: str) -> str:
-    """array of the failure structs whose condition fired, assembled as
-    concat(CASE WHEN fail THEN array(struct) ELSE array() END, ...).
-
-    Semantically identical to array_compact(array(CASE WHEN fail THEN
-    struct END, ...)) but stays inside whole-stage codegen:
-    array_compact lowers to the ArrayFilter higher-order function,
-    which is CodegenFallback — ONE such expression knocked the entire
-    fused-pass Project/Filter out of codegen, running the engine's
-    hottest path interpreted (measured in plans/r06: no codegen id on
-    the row-pass operators; the same class of defect as the CLAUDE.md
-    no-HOFs-in-hot-paths invariant)."""
-    empty = _empty(f"array<{struct_type}>")
-    arms = [f"CASE WHEN {cond} THEN array({s}) ELSE {empty} END" for cond, s in pairs]
-    return f"concat({', '.join(arms)})"
-
-
 def _fused_failures(checks: tuple) -> str:
     pairs = [
         (
@@ -525,7 +508,7 @@ def _fused_failures(checks: tuple) -> str:
     ]
     if not pairs:
         return _empty(_FAILURES_TYPE)
-    return _concat_conditional(pairs, f"struct<{FAILURE_STRUCT}>")
+    return concat_conditional(pairs, f"struct<{FAILURE_STRUCT}>")
 
 
 def _pushdown_barrier(failures: str) -> str:
@@ -753,7 +736,7 @@ def run_group_scope_checks(
                 _failure(check_id(c), c.column, value),
             )
         )
-    arr = _concat_conditional(structs, f"struct<{FAILURE_STRUCT}>")
+    arr = concat_conditional(structs, f"struct<{FAILURE_STRUCT}>")
     agg = df.selectExpr(*_refs(needed)).groupBy(*g).agg(*aggs)
     exploded = agg.selectExpr(*map(col_ref, g), f"explode({arr}) AS _f")
     return exploded.selectExpr(
@@ -950,8 +933,8 @@ def _ordered_exprs(
         )
     # concat-of-conditional-arrays instead of filter(array(...)):
     # the ArrayFilter HOF is CodegenFallback and would knock this
-    # Project out of whole-stage codegen (see _concat_conditional)
-    arr = _concat_conditional(structs, f"struct<{FAILURE_STRUCT}, grp boolean>")
+    # Project out of whole-stage codegen (see sqltext.concat_conditional)
+    arr = concat_conditional(structs, f"struct<{FAILURE_STRUCT}, grp boolean>")
     return tuple(wincols), arr
 
 

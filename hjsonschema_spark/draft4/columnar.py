@@ -93,11 +93,13 @@ escapedStringLiterals`` and ``${var}`` substitution cannot change what
 it means; numbers become exact decimal literals (``num_lit``). The
 input column is read as ``F.col`` reads it (``col_ref``); every other
 name is backtick-quoted (``ident``). tests/test_columnar_differential.py checks both
-against the exact path under both parser settings. The failure
-projection itself runs outside whole-stage codegen: ``array_compact``
-is a higher-order ``filter``, which falls back to interpreted
-evaluation (a ``flatten`` of 0/1-element arrays keeps codegen, but ran
-10-20% slower in a trial on 12k tool-call documents at 4 cores).
+against the exact path under both parser settings. The failure array
+is built by the Check IR's rule, ``sqltext.concat_conditional``: a
+``concat`` of ``CASE WHEN cond THEN array(failure) ELSE <empty> END``,
+which stays inside whole-stage codegen (``array_compact`` over an
+``array`` of nullable structs is a higher-order ``filter`` and ran
+interpreted). Only array items, read through ``transform``, still run
+interpreted.
 """
 
 from __future__ import annotations
@@ -110,7 +112,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hjsonschema_spark.sqltext import col_ref, ident, num_lit, str_lit
+from hjsonschema_spark.sqltext import col_ref, concat_conditional, ident, num_lit, str_lit
 
 _SAFE_KEY = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 _SCALAR_TYPES = ("string", "integer", "number", "boolean", "null")
@@ -123,10 +125,12 @@ _ROOT_KEYWORDS = (
     {"properties", "required", "additionalProperties"} | _ARRAY_KEYWORDS
 )
 
-_FAIL_DDL = (
-    "array<struct<keyword:string,instance_path:string,"
-    "schema_path:string,message:string,value:string>>"
+_FAIL_STRUCT = (
+    "struct<keyword:string,instance_path:string,"
+    "schema_path:string,message:string,value:string>"
 )
+# the failure column's type, on this path and on the exact one (udf.py)
+_FAIL_DDL = f"array<{_FAIL_STRUCT}>"
 
 # Escapes whose syntax AND semantics are identical in Python re and
 # Java regex: metacharacter literals plus \t \n \r. Shorthand classes
@@ -347,13 +351,14 @@ def _not(x: str) -> str:
 _EMPTY_FAILS = f"CAST(array() AS {_FAIL_DDL})"
 
 
-def _fail(cond: str, keyword: str, ip: str, spath: str, value: str) -> str:
-    """A failure struct when ``cond`` (guarded: never NULL) holds.
-    ``ip`` is SQL: a literal, or a per-element (indexed) path."""
-    return (
-        f"CASE WHEN {cond} THEN named_struct('keyword', {str_lit(keyword)}, "
+def _fail(cond: str, keyword: str, ip: str, spath: str, value: str) -> tuple[str, str]:
+    """(``cond``, a failure struct): the failure fires when ``cond``
+    (guarded: never NULL) holds. ``ip`` is SQL: a literal, or a
+    per-element (indexed) path."""
+    return cond, (
+        f"named_struct('keyword', {str_lit(keyword)}, "
         f"'instance_path', {ip}, 'schema_path', {str_lit(spath)}, "
-        f"'message', {str_lit(f'{keyword} failed (columnar)')}, 'value', {value}) END"
+        f"'message', {str_lit(f'{keyword} failed (columnar)')}, 'value', {value})"
     )
 
 
@@ -399,11 +404,12 @@ def _has_class(sch: str, cls: str) -> str:
     return f"coalesce(startswith({sch}, {str_lit(cls)}), false)"
 
 
-def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[str]:
-    """Failure structs for one scalar-subschema instance (a property
-    value or an array element) with views ``v``; every condition is
-    vacuously false when the instance is absent or the type class
-    doesn't match the keyword (reference type-mismatch ⇒ pass)."""
+def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[tuple[str, str]]:
+    """(condition, failure struct) pairs for one scalar-subschema
+    instance (a property value or an array element) with views ``v``;
+    every condition is vacuously false when the instance is absent or
+    the type class doesn't match the keyword (reference type-mismatch ⇒
+    pass)."""
     present = v.present
     sch = v["sch"]
     as_str = v["str"]
@@ -492,23 +498,23 @@ def _scalar_failures(v: _Views, sub: dict, ip: str, sp: str) -> list[str]:
 def _array_failures(v: _Views, sub: dict, ip: str, sp: str, t: str) -> str:
     """Array-of-scalars checks on one variant instance with views
     ``v``: an ARRAY of failure structs (empty when the instance is not
-    an array — type-mismatch ⇒ vacuous, matching validator._array which
-    only runs on list instances). The ``type`` keyword itself is
-    handled by the caller so its failure joins the scalar struct
-    stream. ``t`` prefixes the lambda variables."""
+    an array — type-mismatch ⇒ vacuous, matching the exact validator,
+    whose array checks run only on list instances). The ``type``
+    keyword itself is handled by the caller so its failure joins the
+    scalar struct stream. ``t`` prefixes the lambda variables."""
     arr = v["arr"]
     singles = [
         _fail(f"(size({arr}) {op} {sub[kw]})", kw, str_lit(ip), f"{sp}/{kw}", v["str"])
         for kw, op in (("maxItems", ">"), ("minItems", "<"))
         if kw in sub
     ]
-    parts = [f"array_compact(array({', '.join(singles)}))"] if singles else []
+    parts = [concat_conditional(singles, _FAIL_STRUCT)] if singles else []
     it = sub.get("items")
     if isinstance(it, dict) and it:
         # per-element scalar checks: one transform builds each
         # element's views once, as a struct; a second reads them to
         # build the failures, with instance paths per index
-        # (validator._array: ipath/i)
+        # (the exact validator's ipath/i)
         x, e, i = (ident(f"{t}{n}") for n in ("x", "e", "i"))
         ev = _Views(x, lambda n: f"{e}.{ident(n)}", element=True)
         efails = _scalar_failures(
@@ -517,7 +523,7 @@ def _array_failures(v: _Views, sub: dict, ip: str, sp: str, t: str) -> str:
         fields = ", ".join(f"'{n}', {d}" for n, d in ev.defs.items())
         parts.append(
             f"flatten(transform(transform({arr}, {x} -> named_struct({fields})), "
-            f"({e}, {i}) -> array_compact(array({', '.join(efails)}))))"
+            f"({e}, {i}) -> {concat_conditional(efails, _FAIL_STRUCT)}))"
         )
     if not parts:
         return _EMPTY_FAILS
@@ -527,10 +533,10 @@ def _array_failures(v: _Views, sub: dict, ip: str, sp: str, t: str) -> str:
     return f"CASE WHEN {arr} IS NOT NULL THEN {total} ELSE {_EMPTY_FAILS} END"
 
 
-def _nested_required_failure(v: _Views, sub: dict, ip: str, sp: str) -> str | None:
+def _nested_required_failure(v: _Views, sub: dict, ip: str, sp: str) -> tuple[str, str] | None:
     """required inside a one-level nested object property: ONE failure
     listing applies only when the nested instance IS an object
-    (validator._object runs only on dict instances)."""
+    (the exact validator checks objects only on dict instances)."""
     req = sub.get("required") or []
     if not req:
         return None
@@ -585,7 +591,7 @@ def validate_json_column_columnar(
     }
     root_is_obj = _has_class(root["sch"], "OBJECT")
 
-    fails: list[str] = []
+    fails: list[tuple[str, str]] = []
     fail_arrays: list[str] = []
     if schema.get("type") in ("object", "array"):
         cls = "OBJECT" if schema["type"] == "object" else "ARRAY"
@@ -601,19 +607,16 @@ def validate_json_column_columnar(
         ip, sp = f"/{k}", f"/properties/{k}"
         if _scalar_liftable(sub):
             fails.extend(
-                f"CASE WHEN {root_is_obj} THEN {f} END"
-                for f in _scalar_failures(v, sub, str_lit(ip), sp)
+                (_and(root_is_obj, cond), f) for cond, f in _scalar_failures(v, sub, str_lit(ip), sp)
             )
             continue
         if sub.get("type") in ("array", "object"):
             cls = "ARRAY" if sub["type"] == "array" else "OBJECT"
             fails.append(
-                f"CASE WHEN {root_is_obj} THEN "
-                + _fail(
-                    _and(v.present, _not(_has_class(v["sch"], cls))), "type", str_lit(ip),
-                    f"{sp}/type", v["str"],
+                _fail(
+                    _and(root_is_obj, v.present, _not(_has_class(v["sch"], cls))), "type",
+                    str_lit(ip), f"{sp}/type", v["str"],
                 )
-                + " END"
             )
         if _array_liftable(sub):
             fail_arrays.append(
@@ -623,11 +626,11 @@ def validate_json_column_columnar(
         else:  # nested required-only object
             nf = _nested_required_failure(v, sub, ip, sp)
             if nf is not None:
-                fails.append(f"CASE WHEN {root_is_obj} THEN {nf} END")
+                fails.append((_and(root_is_obj, nf[0]), nf[1]))
     if any(kw in schema for kw in ("items", "minItems", "maxItems")):
         fail_arrays.append(_array_failures(root, schema, "", "", t))
 
-    fail_arr = f"array_compact(array({', '.join(fails)}))" if fails else _EMPTY_FAILS
+    fail_arr = concat_conditional(fails, _FAIL_STRUCT)
     for fa in fail_arrays:
         fail_arr = f"concat({fail_arr}, {fa})"
     parse_fail = (

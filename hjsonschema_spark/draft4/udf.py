@@ -1,19 +1,22 @@
 """Draft-4 validation of a JSON string column — the row-wise reference
 semantics (one document at a time, src/JSONSchema/Types.hs:20-26)
-running distributed: the validator is compiled ONCE per Python worker
-(driver ships the schema dict; closure materializes the validator
-lazily), and rows stream through Arrow batches via mapInPandas — never
-per-row Python UDF calls."""
+running distributed. The driver ships the schema dict; each Python
+task compiles it once into a ``Draft4Validator`` (a tree of closures
+holding the checks of the keywords each schema node has, with bounds,
+enum members and regexes converted, see draft4/validator.py) and runs
+every document of its Arrow batches through it via mapInPandas —
+never per-row Python UDF calls, and no schema dict read per document.
+"""
 
 from __future__ import annotations
 
-import json
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-FAILURE_FIELDS = "array<struct<keyword:string,instance_path:string,schema_path:string,message:string,value:string>>"
+from hjsonschema_spark.sqltext import col_parts
 
 
 def validate_json_column(
@@ -28,19 +31,17 @@ def validate_json_column(
     (boolean; NULL json => NULL) columns, with the columnar path's
     output contract (``withColumns``): an input column of the same name
     (matched as the session resolves names) is replaced where it
-    stands, the others are appended in that order."""
-    from pyspark.sql.types import ArrayType, BooleanType, StructField, StructType, StringType
+    stands, the others are appended in that order.
 
-    fail_struct = StructType(
-        [
-            StructField("keyword", StringType()),
-            StructField("instance_path", StringType()),
-            StructField("schema_path", StringType()),
-            StructField("message", StringType()),
-            StructField("value", StringType()),
-        ]
-    )
-    added = {failures_col: ArrayType(fail_struct), valid_col: BooleanType()}
+    ``json_col`` is read as ``F.col`` reads it: a top-level column
+    (matched as the session resolves names) is read in place; any other
+    reference (a nested field, say ``s.j``) is computed into one extra
+    input column that the output leaves out."""
+    from pyspark.sql.types import BooleanType, DataType, StructField, StructType
+
+    from hjsonschema_spark.draft4.columnar import _FAIL_DDL
+
+    added = {failures_col: DataType.fromDDL(_FAIL_DDL), valid_col: BooleanType()}
     case_sensitive = df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
     fold = (lambda n: n) if case_sensitive else str.lower
     by_fold = {fold(n): n for n in added}
@@ -54,8 +55,18 @@ def validate_json_column(
     fields += [StructField(n, t) for n, t in added.items() if n not in {f.name for f in fields}]
     result_schema = StructType(fields)
 
+    parts = col_parts(json_col)
+    same = [i for i, n in enumerate(df.columns) if len(parts) == 1 and fold(n) == fold(parts[0])]
+    if len(same) == 1:
+        doc_at = same[0]
+    else:
+        df, doc_at = df.select("*", F.col(json_col)), n_in
+    # mapInPandas reads its input columns by name, and a name with a dot
+    # would read as a nested field: hand it positional names
+    df = df.toDF(*(f"_{i}" for i in range(len(df.columns))))
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # compiled once per worker (fixes the reference's rebuild-per-
+        # compiled once per task (fixes the reference's rebuild-per-
         # recursion anti-pattern, Spec.hs:144-150)
         from hjsonschema_spark.draft4.validator import Draft4Validator, loads_json
 
@@ -63,7 +74,7 @@ def validate_json_column(
         for pdf in batches:
             valids: list[bool | None] = []
             fails: list[list | None] = []
-            for s in pdf[json_col]:
+            for s in pdf.iloc[:, doc_at]:
                 if s is None:
                     valids.append(None)
                     fails.append(None)

@@ -1,12 +1,30 @@
-"""From-scratch JSON Schema Draft-4 validator.
+"""From-scratch JSON Schema Draft-4 validator, compiled once per schema.
 
 Behavioral spec is the reference's validator corpus (seagreen/hjsonschema;
-semantics cited per file:line in SURVEY.md §2) — the code is a new design:
-one recursive function over (schema, instance) with a keyword dispatch
-table, not a port of the reference's profunctor Spec machinery.
+semantics cited per file:line in SURVEY.md §2) — the code is a new design,
+not a port of the reference's profunctor Spec machinery. It keeps the
+reference's two steps (examples/TwoStep.hs:35-48): the constructor
+compiles each (schema node, resolution scope) into one closure, and
+``validate`` runs the closures over a document without reading the
+schema dicts again. A node's closure holds only the checks of the
+keywords it has, in the order failures are reported (type, enum,
+allOf, anyOf, oneOf, not, then the number, string, array or object
+keywords); what it captures is converted once:
+
+- type tests specialized per name (an ``int`` is an integer without
+  building a ``Fraction``);
+- bounds as an int, or as their exact ``Decimal``, and ``multipleOf``
+  as a ``Fraction``; enum members as their canonical forms;
+- regexes compiled, failure messages formatted, schema-path suffixes
+  and property tables built;
+- the compiled children, shared per (node, scope); a ``$ref`` resolves
+  and compiles its target the first time it runs and keeps it.
 
 Semantics replicated exactly (cross-checked against the vendored
-JSON-Schema-Test-Suite draft4 corpus):
+JSON-Schema-Test-Suite draft4 corpus; tests/test_draft4_kat.py pins
+every failure field of the earlier interpreting validator, and
+tests/test_draft4_differential.py compares accept/reject with the
+independent ``jsonschema`` package):
 
 - numbers are mathematical: ``1``, ``1.0``, ``1.00`` are equal; booleans
   are NOT numbers (reference: Scientific + OrdValue,
@@ -23,17 +41,20 @@ JSON-Schema-Test-Suite draft4 corpus):
   an uncompilable regex is itself a failure, while uncompilable
   patternProperties keys are skipped silently (Properties.hs:150-155).
 
-Numbers are canonicalized to ``fractions.Fraction`` via decimal literal
-interpretation, mirroring aeson's ``Scientific`` arbitrary-precision
-decimals (floats that reach us as Python floats are read back through
-``repr`` — i.e. their shortest decimal form — which matches how the
-JSON text would have been parsed).
+Numbers compare as exact decimals, mirroring aeson's ``Scientific``
+arbitrary-precision decimals (floats that reach us as Python floats are
+read back through ``repr`` — i.e. their shortest decimal form — which
+matches how the JSON text would have been parsed). Non-finite floats
+are not JSON; a numeric keyword that reads one raises or compares it as
+``Decimal`` infinity.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 from decimal import Decimal
 from fractions import Fraction
@@ -101,16 +122,6 @@ def _json_type(v: Any) -> str:
     raise TypeError(f"not a JSON value: {type(v)}")
 
 
-def _type_matches(v: Any, t: str) -> bool:
-    jt = _json_type(v)
-    if t == "integer":
-        # integral numbers are integers; 1.0 is an integer (reference
-        # Any.hs:338-341 via SCI.isInteger; the contrary
-        # zeroTerminatedFloats.json is optional and skipped)
-        return jt == "number" and _to_fraction(v).denominator == 1
-    return jt == t
-
-
 def canonical(v: Any) -> Any:
     """Hashable canonical form under deep mathematical equality."""
     if v is None:
@@ -143,8 +154,8 @@ def _strip_fragment(uri: str) -> str:
 
 def _index_ids(doc: Any, base: str, out: dict[str, tuple[Any, str]]) -> None:
     """Map every resolvable URI (base + inline ``id`` re-basings) to
-    (subschema, PRE-id scope). ``_v`` is the single place a node's own
-    ``id`` is applied, so stored scopes must not include it (a relative
+    (subschema, PRE-id scope). Compiling a node is the single place its
+    own ``id`` is applied, so stored scopes must not include it (a relative
     id like ``"folder/"`` is not idempotent under urljoin)."""
     scope = base
     if isinstance(doc, dict):
@@ -194,7 +205,7 @@ class _Registry:
         node, node_scope = start
         for token in [t for t in frag.split("/") if frag][1:] if frag.startswith("/") else []:
             # apply this node's own id before descending PAST it; the
-            # final node's id is left for _v to apply
+            # final node's id is left for its compile to apply
             if isinstance(node, dict) and isinstance(node.get("id"), str) and node["id"]:
                 node_scope = urljoin(node_scope, node["id"])
             tok = _pointer_escape(token)
@@ -216,16 +227,213 @@ class _Registry:
 
 
 # ---------------------------------------------------------------------------
-# the validator
+# the compiler: one closure per (schema node, resolution scope)
 # ---------------------------------------------------------------------------
 
-_LATERAL = ("allOf", "anyOf", "oneOf", "not")  # visited set carries through
+# A compiled check: (instance, visited, instance_path, schema_path, out)
+# -> None, appending its failures to ``out``. ``visited`` is the set of
+# absolute $ref URIs taken at this data level; paths are JSON pointers.
+Check = Callable[[Any, frozenset, str, str, list], None]
+
+_FRESH: frozenset = frozenset()  # descending into items/properties resets visited
+_NUMBER = (int, float, Decimal)
+
+
+def _chain(checks: list) -> Any:
+    """One check running ``checks`` in order; None when there are none."""
+    checks = tuple(c for c in checks if c is not None)
+    if not checks:
+        return None
+    if len(checks) == 1:
+        return checks[0]
+
+    def check(inst, visited, ipath, spath, out):
+        for c in checks:
+            c(inst, visited, ipath, spath, out)
+
+    return check
+
+
+def _is_integer(v: Any) -> bool:
+    # integral numbers are integers; 1.0 is an integer (reference
+    # Any.hs:338-341 via SCI.isInteger; the contrary
+    # zeroTerminatedFloats.json is optional and skipped)
+    if isinstance(v, int):
+        return not isinstance(v, bool)
+    return isinstance(v, (float, Decimal)) and _to_fraction(v).denominator == 1
+
+
+_CLASS_OF = {"string": str, "array": list, "object": dict, "boolean": bool}
+_TEST_OF = {
+    "null": lambda v: v is None,
+    "number": _is_number,
+    "integer": _is_integer,
+    **{t: (lambda v, c=c: isinstance(v, c)) for t, c in _CLASS_OF.items()},
+}
+
+
+def _type_check(req: Any) -> Check:
+    types = [req] if isinstance(req, str) else list(req)
+    names = [t for t in types if isinstance(t, str)]
+    label = f"expected {types}, got "
+
+    def fail(inst, ipath, spath, out):
+        out.append(Failure("type", ipath, spath + "/type", label + _json_type(inst), _dump(inst)))
+
+    if len(names) == 1 and names[0] in _CLASS_OF:  # the common case, inlined
+        cls = _CLASS_OF[names[0]]
+
+        def check(inst, visited, ipath, spath, out):
+            if not isinstance(inst, cls):
+                fail(inst, ipath, spath, out)
+
+        return check
+    # an unknown type name matches nothing
+    tests = tuple(_TEST_OF.get(t, lambda v: False) for t in names)
+
+    def check(inst, visited, ipath, spath, out):
+        for test in tests:
+            if test(inst):
+                return
+        fail(inst, ipath, spath, out)
+
+    return check
+
+
+def _enum_check(members: list) -> Check | None:
+    """Deep mathematical membership; a non-unique enum is vacuous."""
+    cans = [canonical(v) for v in members]
+    if len(set(cans)) != len(cans):
+        return None
+    cans_set = frozenset(cans)
+    strs = frozenset(v for v in members if isinstance(v, str))
+
+    def check(inst, visited, ipath, spath, out):
+        if isinstance(inst, str):
+            if inst in strs:
+                return
+        elif canonical(inst) in cans_set:
+            return
+        out.append(Failure("enum", ipath, spath + "/enum", "value not in enum", _dump(inst)))
+
+    return check
+
+
+def _multiple_of_check(m: Any) -> Check | None:
+    n = _to_fraction(m)
+    if not n > 0:
+        return None  # multipleOf <= 0 is vacuous (Number.hs:25-29)
+    ni = n.numerator if n.denominator == 1 else None
+    msg = f"not a multiple of {m}"
+
+    def check(x, visited, ipath, spath, out):
+        if ni is not None and type(x) is int:
+            if x % ni == 0:
+                return
+        elif (_to_fraction(x) / n).denominator == 1:
+            return
+        out.append(Failure("multipleOf", ipath, spath + "/multipleOf", msg, _dump(x)))
+
+    return check
+
+
+_OVER = {
+    ("maximum", True): (operator.ge, ">= exclusive maximum"),
+    ("maximum", False): (operator.gt, "> maximum"),
+    ("minimum", True): (operator.le, "<= exclusive minimum"),
+    ("minimum", False): (operator.lt, "< minimum"),
+}
+
+
+def _bound_check(kw: str, m: Any, exclusive: bool) -> Check:
+    """``maximum``/``minimum``, compared exactly: against an int when
+    the bound is integral, else against its exact ``Decimal``."""
+    f = _to_fraction(m)
+    b = f.numerator if f.denominator == 1 else Decimal(repr(m)) if isinstance(m, float) else Decimal(m)
+    over, text = _OVER[kw, exclusive]
+    sp, msg = "/" + kw, f"{text} {m}"
+
+    def check(x, visited, ipath, spath, out):
+        # a float compares as its shortest decimal form, as _to_fraction reads it
+        if over(Decimal(repr(x)) if isinstance(x, float) else x, b):
+            out.append(Failure(kw, ipath, spath + sp, msg, _dump(x)))
+
+    return check
+
+
+def _size_check(kw: str, m: Any, template: str) -> Check:
+    """max/minLength, max/minItems, max/minProperties: the instance's
+    length against ``m``; ``template`` words the failure."""
+    sp = "/" + kw
+    over, op = (operator.gt, ">") if kw.startswith("max") else (operator.lt, "<")
+
+    def check(x, visited, ipath, spath, out):
+        n = len(x)
+        if over(n, m):
+            out.append(Failure(kw, ipath, spath + sp, template.format(n=n, op=op, m=m), _dump(x)))
+
+    return check
+
+
+def _compile_re(pattern: str) -> re.Pattern | None:
+    try:
+        return re.compile(pattern)
+    except re.error:
+        return None
+
+
+def _pattern_check(pattern: str) -> Check:
+    """Unanchored search (String.hs:68-77); an uncompilable regex is
+    itself a failure."""
+    rx = _compile_re(pattern)
+    if rx is None:
+        msg = f"unusable regex {pattern!r}"
+
+        def check(s, visited, ipath, spath, out):
+            out.append(Failure("pattern", ipath, spath + "/pattern", msg, _dump(s)))
+
+        return check
+    search, msg = rx.search, f"does not match {pattern!r}"
+
+    def check(s, visited, ipath, spath, out):
+        if search(s) is None:
+            out.append(Failure("pattern", ipath, spath + "/pattern", msg, _dump(s)))
+
+    return check
+
+
+def _unique_check(xs, visited, ipath, spath, out):
+    if len({canonical(x) for x in xs}) != len(xs):
+        out.append(Failure("uniqueItems", ipath, spath + "/uniqueItems", "duplicate items", _dump(xs)))
+
+
+def _when(cls: Any, checks: list) -> Check | None:
+    """Run ``checks`` only on instances of ``cls`` (type mismatch is a
+    vacuous pass, Draft4.hs:28-33)."""
+    body = _chain(checks)
+    if body is None:
+        return None
+    if cls is _NUMBER:
+        def check(inst, visited, ipath, spath, out):
+            if isinstance(inst, _NUMBER) and not isinstance(inst, bool):
+                body(inst, visited, ipath, spath, out)
+    else:
+        def check(inst, visited, ipath, spath, out):
+            if isinstance(inst, cls):
+                body(inst, visited, ipath, spath, out)
+    return check
 
 
 class Draft4Validator:
-    """Compile once (driver-side), validate many (pure, reusable) —
-    the analogue of the reference's two-step checkSchema flow
-    (examples/TwoStep.hs:35-48)."""
+    """Compile once, validate many: the reference's two-step checkSchema
+    flow (examples/TwoStep.hs:35-48).
+
+    The constructor turns each (schema node, resolution scope) into one
+    closure that holds only the checks of the keywords present on that
+    node, with its bounds, enum members, regexes and messages converted
+    once; a ``$ref`` resolves and compiles its target the first time it
+    runs and keeps it. ``validate`` runs the closures and reads no
+    schema dict (tests/test_draft4_kat.py pins it)."""
 
     def __init__(
         self,
@@ -240,10 +448,12 @@ class Draft4Validator:
         root_id = schema.get("id") if isinstance(schema.get("id"), str) else ""
         self.base_uri = _strip_fragment(urljoin(base_uri, root_id)) if (base_uri or root_id) else ""
         self.registry = _Registry(schema, self.base_uri, registry)
-        self._regex_cache: dict[str, re.Pattern | None] = {}
-        self._enums: dict[int, tuple[dict, frozenset | None]] = {}
         if check_schema:
             self._check_schema()
+        # (id(node), scope) -> (node, check); the entry holds the node,
+        # so no other node can take its id
+        self._compiled: dict[tuple[int, str], tuple[Any, Check | None]] = {}
+        self._root = self._compile(schema, self.base_uri)
 
     def _check_schema(self) -> None:
         from hjsonschema_spark.draft4.metaschema import META_SCHEMA
@@ -256,221 +466,319 @@ class Draft4Validator:
     # -- public API ----------------------------------------------------
 
     def validate(self, instance: Any) -> list[Failure]:
-        return self._v(self.schema, instance, self.base_uri, frozenset(), "", "")
+        out: list[Failure] = []
+        if self._root is not None:
+            self._root(instance, _FRESH, "", "", out)
+        return out
 
     def is_valid(self, instance: Any) -> bool:
         return not self.validate(instance)
 
-    # -- internals -------------------------------------------------------
+    # -- compiler --------------------------------------------------------
 
-    def _compile_re(self, pattern: str) -> re.Pattern | None:
-        if pattern not in self._regex_cache:
-            try:
-                self._regex_cache[pattern] = re.compile(pattern)
-            except re.error:
-                self._regex_cache[pattern] = None
-        return self._regex_cache[pattern]
-
-    def _enum_members(self, schema: dict) -> frozenset | None:
-        """The canonical forms of ``schema``'s enum members, or None when
-        two of them are equal (a non-unique enum is vacuous), computed
-        once per schema node. The entry holds the node, so no other
-        node can take its id."""
-        hit = self._enums.get(id(schema))
+    def _compile(self, node: Any, scope: str) -> Check | None:
+        """The check for ``node`` under ``scope``; None when it can never
+        fail (a non-object schema validates nothing)."""
+        if not isinstance(node, dict):
+            return None
+        key = (id(node), scope)
+        hit = self._compiled.get(key)
         if hit is None:
-            cans = [canonical(v) for v in schema["enum"]]
-            members = frozenset(cans) if len(set(cans)) == len(cans) else None
-            hit = self._enums[id(schema)] = (schema, members)
+            hit = self._compiled[key] = (node, self._build(node, scope))
         return hit[1]
 
-    def _v(
-        self,
-        schema: Any,
-        instance: Any,
-        scope: str,
-        visited: frozenset,
-        ipath: str,
-        spath: str,
-    ) -> list[Failure]:
-        if not isinstance(schema, dict):
-            return []  # non-object schema validates nothing
-        if isinstance(schema.get("id"), str) and schema["id"]:
-            scope = urljoin(scope, schema["id"])
-        if "$ref" in schema and isinstance(schema["$ref"], str):
+    def _build(self, s: dict, scope: str) -> Check | None:
+        sid = s.get("id")
+        if isinstance(sid, str) and sid:
+            scope = urljoin(scope, sid)
+        ref = s.get("$ref")
+        if isinstance(ref, str):
             # $ref disables all sibling keywords (Spec.hs:129-133)
-            return self._ref(schema["$ref"], instance, scope, visited, ipath, spath)
+            return self._ref(ref, scope)
 
-        fails: list[Failure] = []
-        add = fails.extend
-        t = _json_type(instance)
+        checks: list = []
+        if "type" in s:
+            checks.append(_type_check(s["type"]))
+        if isinstance(s.get("enum"), list):
+            checks.append(_enum_check(s["enum"]))
+        checks += [self._all_of(s, scope), self._any_of(s, scope), self._one_of(s, scope)]
+        if "not" in s:
+            checks.append(self._not(s["not"], scope))
 
-        # ---- any-type keywords
-        if "type" in schema:
-            req = schema["type"]
-            types = [req] if isinstance(req, str) else list(req)
-            if not any(isinstance(x, str) and _type_matches(instance, x) for x in types):
-                fails.append(Failure("type", ipath, spath + "/type", f"expected {types}, got {t}", _dump(instance)))
-        if "enum" in schema and isinstance(schema["enum"], list):
-            members = self._enum_members(schema)
-            if members is not None and canonical(instance) not in members:
-                fails.append(Failure("enum", ipath, spath + "/enum", "value not in enum", _dump(instance)))
-        for kw in _LATERAL:
-            if kw in schema:
-                add(self._combinator(kw, schema[kw], instance, scope, visited, ipath, spath))
+        nums: list = []
+        if _is_number(s.get("multipleOf")):
+            nums.append(_multiple_of_check(s["multipleOf"]))
+        for kw in ("maximum", "minimum"):
+            if _is_number(s.get(kw)):
+                excl = bool(s.get("exclusive" + kw[0].upper() + kw[1:], False))
+                nums.append(_bound_check(kw, s[kw], excl))
+        checks.append(_when(_NUMBER, nums))
 
-        # ---- numbers
-        if _is_number(instance):
-            x = _to_fraction(instance)
-            if "multipleOf" in schema and _is_number(schema["multipleOf"]):
-                n = _to_fraction(schema["multipleOf"])
-                if n > 0 and (x / n).denominator != 1:
-                    fails.append(Failure("multipleOf", ipath, spath + "/multipleOf", f"not a multiple of {schema['multipleOf']}", _dump(instance)))
-            if "maximum" in schema and _is_number(schema["maximum"]):
-                m = _to_fraction(schema["maximum"])
-                if schema.get("exclusiveMaximum", False):
-                    if x >= m:
-                        fails.append(Failure("maximum", ipath, spath + "/maximum", f">= exclusive maximum {schema['maximum']}", _dump(instance)))
-                elif x > m:
-                    fails.append(Failure("maximum", ipath, spath + "/maximum", f"> maximum {schema['maximum']}", _dump(instance)))
-            if "minimum" in schema and _is_number(schema["minimum"]):
-                m = _to_fraction(schema["minimum"])
-                if schema.get("exclusiveMinimum", False):
-                    if x <= m:
-                        fails.append(Failure("minimum", ipath, spath + "/minimum", f"<= exclusive minimum {schema['minimum']}", _dump(instance)))
-                elif x < m:
-                    fails.append(Failure("minimum", ipath, spath + "/minimum", f"< minimum {schema['minimum']}", _dump(instance)))
+        strs = [
+            _size_check(kw, s[kw], "length {n} {op} {m}")
+            for kw in ("maxLength", "minLength")
+            if _is_number(s.get(kw))
+        ]
+        if isinstance(s.get("pattern"), str):
+            strs.append(_pattern_check(s["pattern"]))
+        checks.append(_when(str, strs))
 
-        # ---- strings
-        elif isinstance(instance, str):
-            if "maxLength" in schema and _is_number(schema["maxLength"]):
-                if len(instance) > schema["maxLength"]:
-                    fails.append(Failure("maxLength", ipath, spath + "/maxLength", f"length {len(instance)} > {schema['maxLength']}", _dump(instance)))
-            if "minLength" in schema and _is_number(schema["minLength"]):
-                if len(instance) < schema["minLength"]:
-                    fails.append(Failure("minLength", ipath, spath + "/minLength", f"length {len(instance)} < {schema['minLength']}", _dump(instance)))
-            if "pattern" in schema and isinstance(schema["pattern"], str):
-                rx = self._compile_re(schema["pattern"])
-                if rx is None:
-                    fails.append(Failure("pattern", ipath, spath + "/pattern", f"unusable regex {schema['pattern']!r}", _dump(instance)))
-                elif rx.search(instance) is None:
-                    fails.append(Failure("pattern", ipath, spath + "/pattern", f"does not match {schema['pattern']!r}", _dump(instance)))
+        checks.append(_when(list, self._array(s, scope)))
+        checks.append(_when(dict, self._object(s, scope)))
+        return _chain(checks)
 
-        # ---- arrays (descend => visited resets, Spec.hs:146-150)
-        elif isinstance(instance, list):
-            add(self._array(schema, instance, scope, ipath, spath))
+    def _ref(self, ref: str, scope: str) -> Check:
+        """Resolved, compiled and kept on first use. The visited set
+        carries through $ref and the combinators at one data level and
+        resets on descent (Spec.hs:146-150)."""
+        abs_uri: str | None = None
+        target: Any = None  # (check,) once resolved; () when unresolvable
+        unresolved = f"could not resolve {ref!r} in scope {scope!r}"
+        loop = f"ref loop at {ref!r}"
 
-        # ---- objects
-        elif isinstance(instance, dict):
-            add(self._object(schema, instance, scope, visited, ipath, spath))
+        def check(inst, visited, ipath, spath, out):
+            nonlocal abs_uri, target
+            if abs_uri is None:
+                abs_uri = urljoin(scope, ref) if scope else ref
+            if abs_uri in visited:
+                out.append(Failure("$ref", ipath, spath + "/$ref", loop, _dump(inst)))
+                return
+            if target is None:
+                hit = self.registry.resolve(ref, scope)
+                target = () if hit is None else (self._compile(*hit),)
+            if not target:
+                out.append(Failure("$ref", ipath, spath + "/$ref", unresolved, _dump(inst)))
+            elif target[0] is not None:
+                target[0](inst, visited | {abs_uri}, ipath, spath + "/$ref", out)
 
-        return fails
+        return check
 
-    def _ref(self, ref: str, instance: Any, scope: str, visited: frozenset, ipath: str, spath: str) -> list[Failure]:
-        abs_uri = urljoin(scope, ref) if scope else ref
-        if abs_uri in visited:
-            return [Failure("$ref", ipath, spath + "/$ref", f"ref loop at {ref!r}", _dump(instance))]
-        resolved = self.registry.resolve(ref, scope)
-        if resolved is None:
-            return [Failure("$ref", ipath, spath + "/$ref", f"could not resolve {ref!r} in scope {scope!r}", _dump(instance))]
-        target, new_scope = resolved
-        return self._v(target, instance, new_scope, visited | {abs_uri}, ipath, spath + "/$ref")
+    def _branches(self, s: dict, kw: str, scope: str) -> tuple[list, int] | None:
+        """(compiled branches with their schema-path suffixes, number of
+        branches that can never fail), or None when ``kw`` is absent or
+        not a list."""
+        subs = s.get(kw)
+        if not isinstance(subs, list):
+            return None
+        checks, trivial = [], 0
+        for i, sub in enumerate(subs):
+            c = self._compile(sub, scope)
+            if c is None:
+                trivial += 1
+            else:
+                checks.append((c, f"/{kw}/{i}"))
+        return checks, trivial
 
-    def _combinator(self, kw: str, sub: Any, instance: Any, scope: str, visited: frozenset, ipath: str, spath: str) -> list[Failure]:
-        sp = f"{spath}/{kw}"
-        if kw == "not":
-            inner = self._v(sub, instance, scope, visited, ipath, sp)
-            if not inner:
-                return [Failure("not", ipath, sp, "matched disallowed schema", _dump(instance))]
-            return []
-        if not isinstance(sub, list):
-            return []
-        branch_fails = [self._v(s, instance, scope, visited, ipath, f"{sp}/{i}") for i, s in enumerate(sub)]
-        n_pass = sum(1 for b in branch_fails if not b)
-        if kw == "allOf":
-            return [f for b in branch_fails for f in b]
-        if kw == "anyOf":
+    def _all_of(self, s: dict, scope: str) -> Check | None:
+        got = self._branches(s, "allOf", scope)
+        if not got or not got[0]:
+            return None
+        branches = tuple(got[0])
+
+        def check(inst, visited, ipath, spath, out):
+            for c, sfx in branches:
+                c(inst, visited, ipath, spath + sfx, out)
+
+        return check
+
+    def _any_of(self, s: dict, scope: str) -> Check | None:
+        """Passes when a branch passes; else every branch's failures, or
+        one ``anyOf`` failure when there are no branches."""
+        got = self._branches(s, "anyOf", scope)
+        if got is None or got[1]:
+            return None
+        branches = tuple(got[0])
+
+        def check(inst, visited, ipath, spath, out):
+            fails: list = []
+            for c, sfx in branches:
+                mine: list = []
+                c(inst, visited, ipath, spath + sfx, mine)
+                if not mine:
+                    return
+                fails += mine
+            if fails:
+                out += fails
+            else:
+                out.append(Failure("anyOf", ipath, spath + "/anyOf", "no branch matched", _dump(inst)))
+
+        return check
+
+    def _one_of(self, s: dict, scope: str) -> Check | None:
+        got = self._branches(s, "oneOf", scope)
+        if got is None:
+            return None
+        branches, trivial = tuple(got[0]), got[1]
+
+        def check(inst, visited, ipath, spath, out):
+            n_pass = trivial
+            for c, sfx in branches:
+                mine: list = []
+                c(inst, visited, ipath, spath + sfx, mine)
+                n_pass += not mine
             if n_pass == 0:
-                return [f for b in branch_fails for f in b] or [
-                    Failure("anyOf", ipath, sp, "no branch matched", _dump(instance))
-                ]
-            return []
-        if kw == "oneOf":
-            if n_pass == 0:
-                return [Failure("oneOf", ipath, sp, "no branch matched", _dump(instance))]
-            if n_pass > 1:
-                return [Failure("oneOf", ipath, sp, f"{n_pass} branches matched", _dump(instance))]
-        return []
+                out.append(Failure("oneOf", ipath, spath + "/oneOf", "no branch matched", _dump(inst)))
+            elif n_pass > 1:
+                out.append(Failure("oneOf", ipath, spath + "/oneOf", f"{n_pass} branches matched", _dump(inst)))
 
-    def _array(self, schema: dict, xs: list, scope: str, ipath: str, spath: str) -> list[Failure]:
-        fails: list[Failure] = []
-        fresh: frozenset = frozenset()  # descend resets the visited set
-        if "maxItems" in schema and _is_number(schema["maxItems"]) and len(xs) > schema["maxItems"]:
-            fails.append(Failure("maxItems", ipath, spath + "/maxItems", f"{len(xs)} items > {schema['maxItems']}", _dump(xs)))
-        if "minItems" in schema and _is_number(schema["minItems"]) and len(xs) < schema["minItems"]:
-            fails.append(Failure("minItems", ipath, spath + "/minItems", f"{len(xs)} items < {schema['minItems']}", _dump(xs)))
-        if schema.get("uniqueItems") is True:
-            if len({canonical(x) for x in xs}) != len(xs):
-                fails.append(Failure("uniqueItems", ipath, spath + "/uniqueItems", "duplicate items", _dump(xs)))
-        items = schema.get("items")
+        return check
+
+    def _not(self, sub: Any, scope: str) -> Check:
+        inner = self._compile(sub, scope)
+
+        def check(inst, visited, ipath, spath, out):
+            sp = spath + "/not"
+            if inner is not None:
+                mine: list = []
+                inner(inst, visited, ipath, sp, mine)
+                if mine:
+                    return
+            out.append(Failure("not", ipath, sp, "matched disallowed schema", _dump(inst)))
+
+        return check
+
+    def _array(self, s: dict, scope: str) -> list:
+        checks = [
+            _size_check(kw, s[kw], "{n} items {op} {m}")
+            for kw in ("maxItems", "minItems")
+            if _is_number(s.get(kw))
+        ]
+        if s.get("uniqueItems") is True:
+            checks.append(_unique_check)
+        items = s.get("items")
         if isinstance(items, dict):
-            for i, x in enumerate(xs):
-                fails.extend(self._v(items, x, scope, fresh, f"{ipath}/{i}", spath + "/items"))
+            each = self._compile(items, scope)
+            if each is not None:
+                def check(xs, visited, ipath, spath, out):
+                    sp = spath + "/items"
+                    for i, x in enumerate(xs):
+                        each(x, _FRESH, f"{ipath}/{i}", sp, out)
+
+                checks.append(check)
         elif isinstance(items, list):
-            for i, x in enumerate(xs):
-                if i < len(items):
-                    fails.extend(self._v(items[i], x, scope, fresh, f"{ipath}/{i}", f"{spath}/items/{i}"))
-            extra = xs[len(items):]
-            add = schema.get("additionalItems")
-            if extra and add is False:
-                fails.append(Failure("additionalItems", ipath, spath + "/additionalItems", f"{len(extra)} additional items not allowed", _dump(extra)))
-            elif isinstance(add, dict):
-                for j, x in enumerate(extra, start=len(items)):
-                    fails.extend(self._v(add, x, scope, fresh, f"{ipath}/{j}", spath + "/additionalItems"))
-        return fails
+            checks.append(self._tuple_items(items, s.get("additionalItems"), scope))
+        return checks
 
-    def _object(self, schema: dict, obj: dict, scope: str, visited: frozenset, ipath: str, spath: str) -> list[Failure]:
-        fails: list[Failure] = []
-        fresh: frozenset = frozenset()
-        if "maxProperties" in schema and _is_number(schema["maxProperties"]) and len(obj) > schema["maxProperties"]:
-            fails.append(Failure("maxProperties", ipath, spath + "/maxProperties", f"{len(obj)} props > {schema['maxProperties']}", _dump(obj)))
-        if "minProperties" in schema and _is_number(schema["minProperties"]) and len(obj) < schema["minProperties"]:
-            fails.append(Failure("minProperties", ipath, spath + "/minProperties", f"{len(obj)} props < {schema['minProperties']}", _dump(obj)))
-        if isinstance(schema.get("required"), list):
-            missing = [k for k in schema["required"] if isinstance(k, str) and k not in obj]
-            if missing:
-                fails.append(Failure("required", ipath, spath + "/required", f"missing required {missing}", _dump(obj)))
+    def _tuple_items(self, items: list, add: Any, scope: str) -> Check:
+        """Positional ``items``, then ``additionalItems`` for the rest."""
+        n = len(items)
+        each = tuple((self._compile(sub, scope), f"/items/{i}") for i, sub in enumerate(items))
+        add_check = self._compile(add, scope)
 
-        props = schema.get("properties") if isinstance(schema.get("properties"), dict) else {}
-        pprops = schema.get("patternProperties") if isinstance(schema.get("patternProperties"), dict) else {}
-        for k, v in obj.items():
-            matched = False
-            if k in props:
-                matched = True
-                fails.extend(self._v(props[k], v, scope, fresh, f"{ipath}/{k}", f"{spath}/properties/{k}"))
-            for pat, sub in pprops.items():
-                rx = self._compile_re(pat)
-                if rx is None:
-                    continue  # uncompilable patternProperties keys skipped silently
-                if rx.search(k):
-                    matched = True
-                    fails.extend(self._v(sub, v, scope, fresh, f"{ipath}/{k}", f"{spath}/patternProperties/{pat}"))
-            if not matched:
-                add = schema.get("additionalProperties")
-                if add is False:
-                    fails.append(Failure("additionalProperties", f"{ipath}/{k}", spath + "/additionalProperties", f"unexpected property {k!r}", _dump(v)))
-                elif isinstance(add, dict):
-                    fails.extend(self._v(add, v, scope, fresh, f"{ipath}/{k}", spath + "/additionalProperties"))
+        def check(xs, visited, ipath, spath, out):
+            for i, (c, sfx) in enumerate(each[: len(xs)]):
+                if c is not None:
+                    c(xs[i], _FRESH, f"{ipath}/{i}", spath + sfx, out)
+            if len(xs) <= n:
+                return
+            if add is False:
+                extra = xs[n:]
+                out.append(Failure("additionalItems", ipath, spath + "/additionalItems",
+                                   f"{len(extra)} additional items not allowed", _dump(extra)))
+            elif add_check is not None:
+                sp = spath + "/additionalItems"
+                for j in range(n, len(xs)):
+                    add_check(xs[j], _FRESH, f"{ipath}/{j}", sp, out)
 
-        deps = schema.get("dependencies")
+        return check
+
+    def _object(self, s: dict, scope: str) -> list:
+        checks = [
+            _size_check(kw, s[kw], "{n} props {op} {m}")
+            for kw in ("maxProperties", "minProperties")
+            if _is_number(s.get(kw))
+        ]
+        if isinstance(s.get("required"), list):
+            req = tuple(k for k in s["required"] if isinstance(k, str))
+
+            def required(obj, visited, ipath, spath, out):
+                missing = [k for k in req if k not in obj]
+                if missing:
+                    out.append(Failure("required", ipath, spath + "/required",
+                                       f"missing required {missing}", _dump(obj)))
+
+            checks.append(required)
+        checks.append(self._members(s, scope))
+        deps = s.get("dependencies")
         if isinstance(deps, dict):
-            for k, dep in deps.items():
+            checks.append(self._dependencies(deps, scope))
+        return checks
+
+    def _members(self, s: dict, scope: str) -> Check | None:
+        """properties / patternProperties / additionalProperties, one
+        pass over the instance's members in their order."""
+        props = s.get("properties") if isinstance(s.get("properties"), dict) else {}
+        pprops = s.get("patternProperties") if isinstance(s.get("patternProperties"), dict) else {}
+        named = {k: (self._compile(sub, scope), f"/properties/{k}") for k, sub in props.items()}
+        patterned = tuple(
+            (rx.search, self._compile(sub, scope), f"/patternProperties/{pat}")
+            for pat, sub in pprops.items()
+            # uncompilable patternProperties keys are skipped silently
+            # (Properties.hs:150-155)
+            if (rx := _compile_re(pat)) is not None
+        )
+        add = s.get("additionalProperties")
+        add_check = self._compile(add, scope)
+        if add is not False and add_check is None and not patterned:
+            # nothing reads which members matched: visit the named ones
+            named = {k: v for k, v in named.items() if v[0] is not None}
+            if not named:
+                return None
+
+            def check(obj, visited, ipath, spath, out):
+                for k, v in obj.items():
+                    hit = named.get(k)
+                    if hit is not None:
+                        hit[0](v, _FRESH, f"{ipath}/{k}", spath + hit[1], out)
+
+            return check
+
+        def check(obj, visited, ipath, spath, out):
+            for k, v in obj.items():
+                matched = False
+                hit = named.get(k)
+                if hit is not None:
+                    matched = True
+                    if hit[0] is not None:
+                        hit[0](v, _FRESH, f"{ipath}/{k}", spath + hit[1], out)
+                for search, c, sfx in patterned:
+                    if search(k):
+                        matched = True
+                        if c is not None:
+                            c(v, _FRESH, f"{ipath}/{k}", spath + sfx, out)
+                if matched:
+                    continue
+                if add is False:
+                    out.append(Failure("additionalProperties", f"{ipath}/{k}", spath + "/additionalProperties",
+                                       f"unexpected property {k!r}", _dump(v)))
+                elif add_check is not None:
+                    add_check(v, _FRESH, f"{ipath}/{k}", spath + "/additionalProperties", out)
+
+        return check
+
+    def _dependencies(self, deps: dict, scope: str) -> Check | None:
+        """Property form: the listed members must be present. Schema
+        form: lateral over the whole object, so ``visited`` carries."""
+        each = []
+        for k, dep in deps.items():
+            if isinstance(dep, list):
+                each.append((k, tuple(dep), None, f"/dependencies/{k}"))
+            elif isinstance(dep, dict) and (c := self._compile(dep, scope)) is not None:
+                each.append((k, None, c, f"/dependencies/{k}"))
+        if not each:
+            return None
+        each = tuple(each)
+
+        def check(obj, visited, ipath, spath, out):
+            for k, names, c, sfx in each:
                 if k not in obj:
                     continue
-                if isinstance(dep, list):
-                    miss = [d for d in dep if d not in obj]
-                    if miss:
-                        fails.append(Failure("dependencies", ipath, f"{spath}/dependencies/{k}", f"{k!r} requires missing {miss}", _dump(obj)))
-                elif isinstance(dep, dict):
-                    # schema-form dependency is lateral over the whole object
-                    fails.extend(self._v(dep, obj, scope, visited, ipath, f"{spath}/dependencies/{k}"))
-        return fails
+                if c is not None:
+                    c(obj, visited, ipath, spath + sfx, out)
+                    continue
+                miss = [d for d in names if d not in obj]
+                if miss:
+                    out.append(Failure("dependencies", ipath, spath + sfx,
+                                       f"{k!r} requires missing {miss}", _dump(obj)))
+
+        return check

@@ -17,8 +17,10 @@ literal and name they put into that text goes through this module:
   (same type, same value).
 - ``ident``: one backtick-quoted identifier.
 - ``col_ref``: a column name read as ``F.col`` reads it (dots split
-  nested fields, backticks quote a part).
+  nested fields, backticks quote a part); ``col_parts`` gives the parts.
 - ``struct``: a struct of named fields, as ``F.struct`` builds it.
+- ``concat_conditional``: an array of the structs whose condition
+  holds, the one way failure arrays are built.
 """
 
 from __future__ import annotations
@@ -80,10 +82,11 @@ def ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def col_ref(name: str) -> str:
-    """``name`` read as ``F.col`` reads it: dots split nested fields,
-    and a backtick-quoted part (with doubled backticks inside) may hold
-    dots (Spark's ``UnresolvedAttribute.parseAttributeName``)."""
+def col_parts(name: str) -> list[str]:
+    """The name parts of ``name`` as ``F.col`` splits it: dots split
+    nested fields, and a backtick-quoted part (with doubled backticks
+    inside) may hold dots (Spark's
+    ``UnresolvedAttribute.parseAttributeName``)."""
     parts, cur, i, quoted = [], [], 0, False
     while i < len(name):
         c = name[i]
@@ -112,10 +115,33 @@ def col_ref(name: str) -> str:
     if quoted:
         raise ValueError(f"bad column name {name!r}")
     parts.append("".join(cur))
-    return ".".join(ident(p) for p in parts)
+    return parts
+
+
+def col_ref(name: str) -> str:
+    """``name`` read as ``F.col`` reads it (see ``col_parts``)."""
+    return ".".join(ident(p) for p in col_parts(name))
 
 
 def struct(*fields: tuple[str, str]) -> str:
     """``struct(value AS name, ...)`` over (name, SQL expression) pairs:
     the struct ``F.struct`` builds from aliased columns."""
     return "struct(" + ", ".join(f"{v} AS {ident(k)}" for k, v in fields) + ")"
+
+
+def concat_conditional(pairs: list[tuple[str, str]], struct_type: str) -> str:
+    """The array of the structs whose condition holds, over (condition,
+    struct) pairs: concat(CASE WHEN cond THEN array(struct) ELSE array()
+    END, ...). The rule for every failure array built as SQL text.
+
+    It means array_compact(array(CASE WHEN cond THEN struct END, ...))
+    but stays inside whole-stage codegen: array_compact lowers to the
+    ArrayFilter higher-order function, which is CodegenFallback. ONE
+    such expression knocked the Check IR's entire fused-pass
+    Project/Filter out of codegen, running its hottest path
+    interpreted (plans/r06: no codegen id on the row-pass operators)."""
+    empty = f"CAST(array() AS array<{struct_type}>)"
+    if not pairs:
+        return empty
+    arms = [f"CASE WHEN {cond} THEN array({s}) ELSE {empty} END" for cond, s in pairs]
+    return f"concat({', '.join(arms)})"

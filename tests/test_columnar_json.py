@@ -493,6 +493,23 @@ def test_exact_path_output_contract_matches_columnar(spark):
         assert [r._valid for r in out.orderBy("i").collect()] == [True, False]
 
 
+def test_both_routes_read_json_col_as_f_col(spark):
+    """A nested, backtick-quoted or case-folded ``json_col`` means on
+    the exact path what it means on the columnar path (the exact path
+    once read it as a pandas label and failed with KeyError), and the
+    exact path adds no column of its own to the output."""
+    df = spark.createDataFrame(
+        [(1, ('{"id": 1, "kind": "a"}',), '{"kind": "a"}'), (2, ('{"kind": "z"}',), '{"id": 3, "kind": "b"}')],
+        "i int, s struct<j: string>, `d.j` string",
+    )
+    for name, want in (("s.j", [True, False]), ("S.J", [True, False]), ("`d.j`", [False, True]), ("`D.J`", [False, True])):
+        exact = validate_json_column_auto(df, name, BATTERY_SCHEMA, registry={})
+        columnar = validate_json_column_auto(df, name, BATTERY_SCHEMA)
+        assert exact.columns == columnar.columns == ["i", "s", "d.j", "_failures_json", "_valid"]
+        for out in (exact, columnar):
+            assert [r._valid for r in out.orderBy("i").collect()] == want, name
+
+
 def test_staged_names_avoid_input_columns(spark):
     """Input columns named like the staged temporaries survive, and the
     verdicts do not change."""
