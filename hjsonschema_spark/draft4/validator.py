@@ -233,13 +233,13 @@ class _Registry:
 # A compiled check: (instance, visited, instance_path, schema_path, out)
 # -> None, appending its failures to ``out``. ``visited`` is the set of
 # absolute $ref URIs taken at this data level; paths are JSON pointers.
-Check = Callable[[Any, frozenset, str, str, list], None]
+_Check = Callable[[Any, frozenset, str, str, list], None]
 
 _FRESH: frozenset = frozenset()  # descending into items/properties resets visited
 _NUMBER = (int, float, Decimal)
 
 
-def _chain(checks: list) -> Any:
+def _chain(checks: list) -> _Check | None:
     """One check running ``checks`` in order; None when there are none."""
     checks = tuple(c for c in checks if c is not None)
     if not checks:
@@ -272,7 +272,7 @@ _TEST_OF = {
 }
 
 
-def _type_check(req: Any) -> Check:
+def _type_check(req: Any) -> _Check:
     types = [req] if isinstance(req, str) else list(req)
     names = [t for t in types if isinstance(t, str)]
     label = f"expected {types}, got "
@@ -300,7 +300,7 @@ def _type_check(req: Any) -> Check:
     return check
 
 
-def _enum_check(members: list) -> Check | None:
+def _enum_check(members: list) -> _Check | None:
     """Deep mathematical membership; a non-unique enum is vacuous."""
     cans = [canonical(v) for v in members]
     if len(set(cans)) != len(cans):
@@ -319,7 +319,7 @@ def _enum_check(members: list) -> Check | None:
     return check
 
 
-def _multiple_of_check(m: Any) -> Check | None:
+def _multiple_of_check(m: Any) -> _Check | None:
     n = _to_fraction(m)
     if not n > 0:
         return None  # multipleOf <= 0 is vacuous (Number.hs:25-29)
@@ -345,7 +345,7 @@ _OVER = {
 }
 
 
-def _bound_check(kw: str, m: Any, exclusive: bool) -> Check:
+def _bound_check(kw: str, m: Any, exclusive: bool) -> _Check:
     """``maximum``/``minimum``, compared exactly: against an int when
     the bound is integral, else against its exact ``Decimal``."""
     f = _to_fraction(m)
@@ -361,7 +361,7 @@ def _bound_check(kw: str, m: Any, exclusive: bool) -> Check:
     return check
 
 
-def _size_check(kw: str, m: Any, template: str) -> Check:
+def _size_check(kw: str, m: Any, template: str) -> _Check:
     """max/minLength, max/minItems, max/minProperties: the instance's
     length against ``m``; ``template`` words the failure."""
     sp = "/" + kw
@@ -382,7 +382,7 @@ def _compile_re(pattern: str) -> re.Pattern | None:
         return None
 
 
-def _pattern_check(pattern: str) -> Check:
+def _pattern_check(pattern: str) -> _Check:
     """Unanchored search (String.hs:68-77); an uncompilable regex is
     itself a failure."""
     rx = _compile_re(pattern)
@@ -407,7 +407,7 @@ def _unique_check(xs, visited, ipath, spath, out):
         out.append(Failure("uniqueItems", ipath, spath + "/uniqueItems", "duplicate items", _dump(xs)))
 
 
-def _when(cls: Any, checks: list) -> Check | None:
+def _when(cls: Any, checks: list) -> _Check | None:
     """Run ``checks`` only on instances of ``cls`` (type mismatch is a
     vacuous pass, Draft4.hs:28-33)."""
     body = _chain(checks)
@@ -452,7 +452,7 @@ class Draft4Validator:
             self._check_schema()
         # (id(node), scope) -> (node, check); the entry holds the node,
         # so no other node can take its id
-        self._compiled: dict[tuple[int, str], tuple[Any, Check | None]] = {}
+        self._compiled: dict[tuple[int, str], tuple[Any, _Check | None]] = {}
         self._root = self._compile(schema, self.base_uri)
 
     def _check_schema(self) -> None:
@@ -476,7 +476,7 @@ class Draft4Validator:
 
     # -- compiler --------------------------------------------------------
 
-    def _compile(self, node: Any, scope: str) -> Check | None:
+    def _compile(self, node: Any, scope: str) -> _Check | None:
         """The check for ``node`` under ``scope``; None when it can never
         fail (a non-object schema validates nothing)."""
         if not isinstance(node, dict):
@@ -487,7 +487,7 @@ class Draft4Validator:
             hit = self._compiled[key] = (node, self._build(node, scope))
         return hit[1]
 
-    def _build(self, s: dict, scope: str) -> Check | None:
+    def _build(self, s: dict, scope: str) -> _Check | None:
         sid = s.get("id")
         if isinstance(sid, str) and sid:
             scope = urljoin(scope, sid)
@@ -527,7 +527,7 @@ class Draft4Validator:
         checks.append(_when(dict, self._object(s, scope)))
         return _chain(checks)
 
-    def _ref(self, ref: str, scope: str) -> Check:
+    def _ref(self, ref: str, scope: str) -> _Check:
         """Resolved, compiled and kept on first use. The visited set
         carries through $ref and the combinators at one data level and
         resets on descent (Spec.hs:146-150)."""
@@ -569,7 +569,7 @@ class Draft4Validator:
                 checks.append((c, f"/{kw}/{i}"))
         return checks, trivial
 
-    def _all_of(self, s: dict, scope: str) -> Check | None:
+    def _all_of(self, s: dict, scope: str) -> _Check | None:
         got = self._branches(s, "allOf", scope)
         if not got or not got[0]:
             return None
@@ -581,7 +581,7 @@ class Draft4Validator:
 
         return check
 
-    def _any_of(self, s: dict, scope: str) -> Check | None:
+    def _any_of(self, s: dict, scope: str) -> _Check | None:
         """Passes when a branch passes; else every branch's failures, or
         one ``anyOf`` failure when there are no branches."""
         got = self._branches(s, "anyOf", scope)
@@ -604,7 +604,7 @@ class Draft4Validator:
 
         return check
 
-    def _one_of(self, s: dict, scope: str) -> Check | None:
+    def _one_of(self, s: dict, scope: str) -> _Check | None:
         got = self._branches(s, "oneOf", scope)
         if got is None:
             return None
@@ -623,7 +623,7 @@ class Draft4Validator:
 
         return check
 
-    def _not(self, sub: Any, scope: str) -> Check:
+    def _not(self, sub: Any, scope: str) -> _Check:
         inner = self._compile(sub, scope)
 
         def check(inst, visited, ipath, spath, out):
@@ -659,7 +659,7 @@ class Draft4Validator:
             checks.append(self._tuple_items(items, s.get("additionalItems"), scope))
         return checks
 
-    def _tuple_items(self, items: list, add: Any, scope: str) -> Check:
+    def _tuple_items(self, items: list, add: Any, scope: str) -> _Check:
         """Positional ``items``, then ``additionalItems`` for the rest."""
         n = len(items)
         each = tuple((self._compile(sub, scope), f"/items/{i}") for i, sub in enumerate(items))
@@ -704,7 +704,7 @@ class Draft4Validator:
             checks.append(self._dependencies(deps, scope))
         return checks
 
-    def _members(self, s: dict, scope: str) -> Check | None:
+    def _members(self, s: dict, scope: str) -> _Check | None:
         """properties / patternProperties / additionalProperties, one
         pass over the instance's members in their order."""
         props = s.get("properties") if isinstance(s.get("properties"), dict) else {}
@@ -756,7 +756,7 @@ class Draft4Validator:
 
         return check
 
-    def _dependencies(self, deps: dict, scope: str) -> Check | None:
+    def _dependencies(self, deps: dict, scope: str) -> _Check | None:
         """Property form: the listed members must be present. Schema
         form: lateral over the whole object, so ``visited`` carries."""
         each = []
