@@ -506,8 +506,6 @@ def _fused_failures(checks: tuple) -> str:
         )
         for c in checks
     ]
-    if not pairs:
-        return _empty(_FAILURES_TYPE)
     return concat_conditional(pairs, f"struct<{FAILURE_STRUCT}>")
 
 
