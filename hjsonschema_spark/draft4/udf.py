@@ -1,11 +1,12 @@
 """Draft-4 validation of a JSON string column — the row-wise reference
 semantics (one document at a time, src/JSONSchema/Types.hs:20-26)
-running distributed. The driver ships the schema dict; each Python
-task compiles it once into a ``Draft4Validator`` (a tree of closures
-holding the checks of the keywords each schema node has, with bounds,
-enum members and regexes converted, see draft4/validator.py) and runs
-every document of its Arrow batches through it via mapInPandas —
-never per-row Python UDF calls, and no schema dict read per document.
+running distributed. The driver compiles the schema once to check it
+and ships the schema dict; each Python task compiles it once into a
+``Draft4Validator`` (a tree of closures holding the checks of the
+keywords each schema node has, with bounds, enum members and regexes
+converted, see draft4/validator.py) and runs every document of its
+Arrow batches through it via mapInPandas — never per-row Python UDF
+calls, and no schema dict read per document.
 """
 
 from __future__ import annotations
@@ -40,7 +41,11 @@ def validate_json_column(
     from pyspark.sql.types import BooleanType, DataType, StructField, StructType
 
     from hjsonschema_spark.draft4.columnar import _FAIL_DDL
+    from hjsonschema_spark.draft4.validator import Draft4Validator
 
+    # compiled here once too, so a schema that cannot compile fails at
+    # this call with SchemaInvalid, not inside every task of the job
+    Draft4Validator(schema, registry=registry)
     added = {failures_col: DataType.fromDDL(_FAIL_DDL), valid_col: BooleanType()}
     case_sensitive = df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
     fold = (lambda n: n) if case_sensitive else str.lower
@@ -68,7 +73,7 @@ def validate_json_column(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # compiled once per task (fixes the reference's rebuild-per-
         # recursion anti-pattern, Spec.hs:144-150)
-        from hjsonschema_spark.draft4.validator import Draft4Validator, loads_json
+        from hjsonschema_spark.draft4.validator import loads_json
 
         v = Draft4Validator(schema, registry=registry)
         for pdf in batches:

@@ -45,8 +45,14 @@ Numbers compare as exact decimals, mirroring aeson's ``Scientific``
 arbitrary-precision decimals (floats that reach us as Python floats are
 read back through ``repr`` — i.e. their shortest decimal form — which
 matches how the JSON text would have been parsed). Non-finite floats
-are not JSON; a numeric keyword that reads one raises or compares it as
+are not JSON: as a keyword value one makes the schema uncompilable, and
+in an instance a numeric keyword raises on it or compares it as
 ``Decimal`` infinity.
+
+A keyword value the compile step cannot use (``"type": 12``, a
+non-finite bound) raises ``SchemaInvalid`` naming the schema node when
+the validator is built, even where no document would reach the node;
+a ``$ref`` target is compiled, and so checked, when first taken.
 """
 
 from __future__ import annotations
@@ -68,8 +74,9 @@ def loads_json(s: str | bytes) -> Any:
 
 
 class SchemaInvalid(Exception):
-    """Raised when a schema fails meta-schema validation (analogue of
-    the reference's HVSchema / SchemaInvalid error path)."""
+    """Raised when a schema fails meta-schema validation or holds a
+    keyword value the compile step cannot use (analogue of the
+    reference's HVSchema / SchemaInvalid error path)."""
 
 
 @dataclass(frozen=True)
@@ -169,6 +176,18 @@ def _index_ids(doc: Any, base: str, out: dict[str, tuple[Any, str]]) -> None:
     elif isinstance(doc, list):
         for v in doc:
             _index_ids(v, scope, out)
+
+
+def _pointer_to(target: Any, doc: Any, at: str = "") -> str | None:
+    """The JSON pointer of ``target`` (by identity) inside ``doc``."""
+    if doc is target:
+        return at
+    items = doc.items() if isinstance(doc, dict) else enumerate(doc) if isinstance(doc, list) else ()
+    for k, v in items:
+        got = _pointer_to(target, v, f"{at}/{str(k).replace('~', '~0').replace('/', '~1')}")
+        if got is not None:
+            return got
+    return None
 
 
 def _pointer_escape(token: str) -> str:
@@ -276,18 +295,6 @@ def _type_check(req: Any) -> _Check:
     types = [req] if isinstance(req, str) else list(req)
     names = [t for t in types if isinstance(t, str)]
     label = f"expected {types}, got "
-
-    def fail(inst, ipath, spath, out):
-        out.append(Failure("type", ipath, spath + "/type", label + _json_type(inst), _dump(inst)))
-
-    if len(names) == 1 and names[0] in _CLASS_OF:  # the common case, inlined
-        cls = _CLASS_OF[names[0]]
-
-        def check(inst, visited, ipath, spath, out):
-            if not isinstance(inst, cls):
-                fail(inst, ipath, spath, out)
-
-        return check
     # an unknown type name matches nothing
     tests = tuple(_TEST_OF.get(t, lambda v: False) for t in names)
 
@@ -295,7 +302,7 @@ def _type_check(req: Any) -> _Check:
         for test in tests:
             if test(inst):
                 return
-        fail(inst, ipath, spath, out)
+        out.append(Failure("type", ipath, spath + "/type", label + _json_type(inst), _dump(inst)))
 
     return check
 
@@ -323,16 +330,11 @@ def _multiple_of_check(m: Any) -> _Check | None:
     n = _to_fraction(m)
     if not n > 0:
         return None  # multipleOf <= 0 is vacuous (Number.hs:25-29)
-    ni = n.numerator if n.denominator == 1 else None
     msg = f"not a multiple of {m}"
 
     def check(x, visited, ipath, spath, out):
-        if ni is not None and type(x) is int:
-            if x % ni == 0:
-                return
-        elif (_to_fraction(x) / n).denominator == 1:
-            return
-        out.append(Failure("multipleOf", ipath, spath + "/multipleOf", msg, _dump(x)))
+        if (_to_fraction(x) / n).denominator != 1:
+            out.append(Failure("multipleOf", ipath, spath + "/multipleOf", msg, _dump(x)))
 
     return check
 
@@ -484,7 +486,18 @@ class Draft4Validator:
         key = (id(node), scope)
         hit = self._compiled.get(key)
         if hit is None:
-            hit = self._compiled[key] = (node, self._build(node, scope))
+            try:
+                built = self._build(node, scope)
+            except (TypeError, ValueError, ArithmeticError) as e:
+                # a keyword value the compile step cannot use (``"type":
+                # 12``, a non-finite bound): name the node it sits on
+                where = next(
+                    (f"{uri}#{p}" for uri, doc in self.registry.docs.items()
+                     if (p := _pointer_to(node, doc)) is not None),
+                    "an unknown node",
+                )
+                raise SchemaInvalid(f"cannot compile the schema at {where}: {e!r}") from e
+            hit = self._compiled[key] = (node, built)
         return hit[1]
 
     def _build(self, s: dict, scope: str) -> _Check | None:
@@ -719,19 +732,8 @@ class Draft4Validator:
         )
         add = s.get("additionalProperties")
         add_check = self._compile(add, scope)
-        if add is not False and add_check is None and not patterned:
-            # nothing reads which members matched: visit the named ones
-            named = {k: v for k, v in named.items() if v[0] is not None}
-            if not named:
-                return None
-
-            def check(obj, visited, ipath, spath, out):
-                for k, v in obj.items():
-                    hit = named.get(k)
-                    if hit is not None:
-                        hit[0](v, _FRESH, f"{ipath}/{k}", spath + hit[1], out)
-
-            return check
+        if not named and not patterned and add is not False and add_check is None:
+            return None
 
         def check(obj, visited, ipath, spath, out):
             for k, v in obj.items():

@@ -510,6 +510,17 @@ def test_both_routes_read_json_col_as_f_col(spark):
             assert [r._valid for r in out.orderBy("i").collect()] == want, name
 
 
+def test_exact_path_rejects_uncompilable_schema_at_call(spark):
+    """A keyword value no document reaches still fails the exact path
+    when it is called, on the driver, naming the schema node — not as
+    an error inside every Python task of the job."""
+    from hjsonschema_spark.draft4 import SchemaInvalid
+
+    df = spark.createDataFrame([(1, '{"b": 1}')], "i int, j string")
+    with pytest.raises(SchemaInvalid, match="#/properties/a"):
+        validate_json_column_auto(df, "j", {"properties": {"a": {"type": 12}}}, registry={})
+
+
 def test_staged_names_avoid_input_columns(spark):
     """Input columns named like the staged temporaries survive, and the
     verdicts do not change."""

@@ -154,10 +154,17 @@ def test_validate_reads_no_schema_dict():
 
 
 def test_unusable_keyword_value_raises_at_construction():
-    """A keyword value the compile step cannot use raises when the
-    validator is built, not when the first document reaches it;
-    ``check_schema=True`` reports it as SchemaInvalid first."""
-    with pytest.raises(TypeError):
+    """A keyword value the compile step cannot use raises SchemaInvalid
+    naming its node when the validator is built, not when the first
+    document reaches it; a $ref target when the $ref is first taken."""
+    with pytest.raises(SchemaInvalid, match="at #/properties/a: TypeError"):
         Draft4Validator({"properties": {"a": {"type": 12}}})
+    with pytest.raises(SchemaInvalid, match="at #/items/1: OverflowError"):
+        Draft4Validator({"items": [{}, {"maximum": float("inf")}]})
     with pytest.raises(SchemaInvalid):
         Draft4Validator({"properties": {"a": {"type": 12}}}, check_schema=True)
+    v = Draft4Validator({"properties": {"b": {"$ref": "other.json#/d~1e"}}},
+                        registry={"other.json": {"d/e": {"multipleOf": float("nan")}}})
+    assert v.validate({"a": 1}) == []
+    with pytest.raises(SchemaInvalid, match="at other.json#/d~1e: ValueError"):
+        v.validate({"b": 1})
