@@ -5,7 +5,7 @@ Recasts the Draft-4 JSON-Schema validation vocabulary of the reference
 checks over large tables of multi-turn transcripts:
 
 - row-level predicates (type / enum / pattern / bounds / length) compiled
-  to ``pyspark.sql.Column`` expressions and fused into ONE pass per
+  to Spark SQL expressions and fused into ONE pass per
   partition (reference analogue: ``JSONSchema.Types.validate`` concatMap,
   src/JSONSchema/Types.hs:20-26 — all validators run, all failures kept);
 - table-scope checks (uniqueness, referential integrity, ordering,

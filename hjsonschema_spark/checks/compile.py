@@ -84,7 +84,9 @@ _INF = "CAST('Infinity' AS DOUBLE)"
 
 
 def _and(xs) -> str:
-    return "(" + " AND ".join(xs) + ")"
+    """Conjunction; of nothing, true (an empty schema accepts all)."""
+    xs = list(xs)
+    return "(" + " AND ".join(xs) + ")" if xs else "true"
 
 
 def _or(xs) -> str:
@@ -413,7 +415,7 @@ def _failed_leaf_ids(c: RowCheck) -> str:
     (AllOf branches recurse; any other node is its own leaf) — the
     per-branch failure detail the reference's applicator failures carry
     (Any.hs:364-410)."""
-    if isinstance(c, AllOf):
+    if isinstance(c, AllOf) and c.checks:
         return f"flatten(array({', '.join(_failed_leaf_ids(k) for k in c.checks)}))"
     return (
         f"CASE WHEN {_not(compile_row_predicate(c))} THEN array({str_lit(check_id(c))}) "
@@ -765,7 +767,7 @@ def run_ordered_fused(
     unique: UniqueKey | None = None,
     contig: Contiguous | None = None,
     monos: list[Monotonic] | None = None,
-) -> list[DataFrame]:
+) -> DataFrame:
     """Fused per-group ordered pass: uniqueness + contiguity +
     monotonicity checks that share (group_by, order_col) evaluate over
     ONE hash(group_by) exchange, one (group_by, order_col) sort, and
@@ -796,14 +798,12 @@ def run_ordered_fused(
     if wincols:
         base = base.selectExpr("*", *(f"{e} AS {name}" for name, e in wincols))
     exploded = base.selectExpr(*_refs([*g, *key_columns]), f"explode({arr}) AS _f")
-    return [
-        exploded.selectExpr(
-            *_group_key_exprs(df, g, key_columns, keep="NOT _f.grp"),
-            "_f.check AS `check`",
-            "_f.column AS `column`",
-            "_f.value AS `value`",
-        )
-    ]
+    return exploded.selectExpr(
+        *_group_key_exprs(df, g, key_columns, keep="NOT _f.grp"),
+        "_f.check AS `check`",
+        "_f.column AS `column`",
+        "_f.value AS `value`",
+    )
 
 
 def _ordered_exprs(

@@ -1,17 +1,23 @@
 """Suite execution: the reference's `validate` lifecycle
 (src/JSONSchema/Draft4.hs:62-81) recast as a handful of Spark jobs.
 
-Stages (all lazy until an output is consumed):
-  1. config self-validation + Ref resolution  [driver, cheap]
-  2. ONE fused row-level projection over the table
-  3. table-level passes (agg / window / broadcast-join), one per check
-  4. outputs: violations table (globally ordered by key — the
+Stages:
+  1. ``plan_suite`` [driver, no Spark]: config self-validation, Ref
+     resolution, schema-scope expansion and verdicts, the absent-column
+     and vocabulary checks, and every fusion decision, made from the
+     suite and the input's StructType into a frozen ``SuitePlan``
+  2. ``run_suite`` executes the plan, lazily until an output is
+     consumed: ONE fused row-level projection over the table, then one
+     pass per table-level group (ordered window, group aggregation,
+     single checks)
+  3. outputs: violations table (globally ordered by key — the
      byte-stable contract), per-partition + per-check verdicts,
      per-column stats (null-rate, min/max, HLL distinct)
 """
 
 from __future__ import annotations
 
+import dataclasses
 import gc
 import re
 from dataclasses import dataclass, field
@@ -19,38 +25,47 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hjsonschema_spark.checks import compile as C
 from hjsonschema_spark.checks.ir import (
+    AggBounds,
     CheckSuite,
+    ChiSquareDrift,
+    ColumnsAllowed,
     ConfigInvalid,
     Contiguous,
+    Custom,
     FunctionalDependency,
     GroupAggBounds,
+    KSDrift,
     Monotonic,
     NullRateMax,
+    PatternColumns,
     RefIntegrity,
+    RemainderColumns,
     RowCheck,
     SequencePattern,
     SuiteRegistry,
     TableCheck,
+    TypeIs,
     UniqueKey,
+    json_type_matches,
+    referenced_columns,
 )
+from hjsonschema_spark.functions import fan_out
 from hjsonschema_spark.session import cached_local_df
 from hjsonschema_spark.sqltext import col_ref, ident, str_lit, struct
 
 _VIOL_TAIL = ["check", "column", "value"]
 
 
-def _dtype_of(df: DataFrame, name: str) -> str | None:
+def _dtype_of(schema: StructType, name: str) -> str | None:
     """Spark simpleString of a column, resolving dotted paths into
     StructType fields (`a.b.c`) — the nested-object flattening surface
     (from_schema's Schema.hs properties recursion). None if absent."""
-    from pyspark.sql.types import StructType
-
-    parts = name.split(".")
-    dt = df.schema
-    for p in parts:
+    dt = schema
+    for p in name.split("."):
         if not isinstance(dt, StructType) or p not in dt.fieldNames():
             return None
         dt = dt[p].dataType
@@ -223,6 +238,12 @@ class ValidationResult:
             if obs is None:  # unpersisted: observe a pass of its own
                 obs = Observation()
                 viols = _observe(viols, obs, ids)
+            elif not obs._jo.future().isCompleted():
+                # an output may have computed the union already: its
+                # observation is completed by a QueryExecutionListener
+                # on Spark's asynchronous listener bus, so let the
+                # events already posted land first
+                viols.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
             # a pending observation would block get; pyspark 4.1.2 has
             # no public completion test, so read the JVM promise
             if not obs._jo.future().isCompleted():
@@ -386,44 +407,220 @@ def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     return wide.selectExpr(f"explode(array({', '.join(rows)})) AS s").selectExpr("s.*")
 
 
-def _fuse_ordered_checks(
-    df: DataFrame, table_checks: list, keys: tuple
-) -> tuple[list, list[DataFrame]]:
-    """Detect UniqueKey / Contiguous / Monotonic checks sharing the
-    same (group_by, order_column) and evaluate them in ONE window pass
-    (one shuffle) via C.run_ordered_fused. Returns (unfused leftovers,
-    fused violation DataFrames)."""
-    groups: dict[tuple, dict] = {}
-    for c in table_checks:
+def _type_ok(schema: StructType, c: TypeIs) -> bool:
+    """Does the column's declared type conform to a TypeIs?"""
+    t = _dtype_of(schema, c.column)
+    if c.json_type:
+        return t is not None and json_type_matches(c.json_type, t)
+    return t == c.type_name
+
+
+def _typeis_row(schema: StructType, c: TypeIs) -> Custom:
+    """`type` NESTED inside a combinator is a per-VALUE test in the
+    reference (Any.hs:320-341), not a static column property — e.g.
+    anyOf[{type: integer}, {minimum: 2}] over a double column must test
+    integrality row by row (1.0 IS a draft-4 integer, isInteger at
+    Any.hs:338-341). So `integer` on a floating column becomes
+    x = floor(x), and a family match or mismatch becomes a constant."""
+    t = _dtype_of(schema, c.column) or ""
+    if c.json_type == "integer" and (t in ("float", "double") or t.startswith("decimal")):
+        expr = f"{col_ref(c.column)} = floor({col_ref(c.column)})"
+    else:
+        expr = "true" if _type_ok(schema, c) else "false"
+    return Custom(name=f"json_type_{c.column}_{c.json_type or c.type_name}", expr=expr)
+
+
+_AGGREGATES = (NullRateMax, AggBounds)
+_GROUP_SCOPE = (SequencePattern, GroupAggBounds)
+_RUN_DRIFT = {ChiSquareDrift: C.run_chi2_drift, KSDrift: C.run_ks_drift}
+_RUN_SINGLE = {
+    UniqueKey: C.run_unique_key,
+    Contiguous: C.run_contiguous,
+    Monotonic: C.run_monotonic,
+    FunctionalDependency: C.run_functional_dependency,
+}
+
+
+@dataclass(frozen=True)
+class SuitePlan:
+    """Everything a suite run will do, decided by ``plan_suite`` from
+    the suite and the input's schema alone; ``run_suite`` only executes
+    it. Every field is a tuple over Check IR values, in execution order."""
+
+    # fused into the one row pass; nested TypeIs rewritten to row tests
+    row_checks: tuple
+    # (check id, passed, n_violations or None) of ColumnsAllowed and
+    # top-level TypeIs, resolved against the schema
+    schema_verdicts: tuple
+    aggregates: tuple  # NullRateMax + AggBounds: one aggregation pass
+    drift: tuple  # ChiSquareDrift / KSDrift: one verdict pass each
+    # (group_by, order column, UniqueKey | None, Contiguous | None,
+    # Monotonics): two or more checks over one window pass
+    ordered_groups: tuple
+    # (group_by, checks): SequencePattern + GroupAggBounds sharing a
+    # group_by, one hash aggregation each
+    group_scope: tuple
+    singles: tuple  # every other table check, one pass each, suite order
+    viol_check_ids: tuple  # sorted ids of the violation-producing checks
+
+
+def plan_suite(
+    suite: CheckSuite,
+    schema: StructType,
+    registry: SuiteRegistry | None = None,
+    vocab_names: tuple = (),
+) -> SuitePlan:
+    """Plan a suite against a table schema: no DataFrame, no session.
+
+    Raises ConfigInvalid for a bad config, an unresolvable Ref, a
+    column the table lacks, or a vocabulary not in ``vocab_names``."""
+    suite.validate_config()  # schema validated before data (Draft4.hs:134-148)
+    reg = registry or SuiteRegistry()
+    if suite.name not in reg.suites:
+        reg = SuiteRegistry({**reg.suites, suite.name: suite})
+
+    # schema-scope resolution — all static, no per-row work:
+    #   PatternColumns expands its row-check template over the matching
+    #   column names (patternProperties analogue, Properties.hs:119-172;
+    #   uncompilable regexes skipped silently per Properties.hs:150-155);
+    #   RemainderColumns over the "matched by neither" remainder
+    #   (additionalProperties=SCHEMA, Properties.hs:106-108), which
+    #   ColumnsAllowed requires to be empty (additionalProperties=false,
+    #   Properties.hs:175-209)
+    columns = schema.fieldNames()
+    checks: list = []
+    verdicts: list = []
+    for c in reg.resolve(suite.name):
+        if isinstance(c, RemainderColumns):
+            names = _remainder_columns(columns, c.columns, c.patterns)
+            checks += [dataclasses.replace(c.check, column=n) for n in names]
+        elif isinstance(c, PatternColumns):
+            try:
+                rx = re.compile(c.name_regex)
+            except re.error:
+                continue
+            checks += [dataclasses.replace(c.check, column=n) for n in columns if rx.search(n)]
+        elif isinstance(c, ColumnsAllowed):
+            extra = _remainder_columns(columns, c.columns, c.patterns)
+            verdicts.append((C.check_id(c), not extra, len(extra) or None))
+        else:
+            checks.append(c)
+
+    # fail fast on misspelled columns: a table's schema is global and
+    # static, so a check naming an absent column is a CONFIG error here
+    # — a deliberate divergence from per-document JSON semantics
+    # (missing key => vacuous pass), which the row-wise Draft4Validator
+    # keeps. TypeIs is exempt (absence = failing schema verdict).
+    wanted = set(suite.key_columns).union(*map(referenced_columns, checks))
+    absent = sorted(n for n in wanted - set(columns) if _dtype_of(schema, n) is None)
+    if absent:
+        raise ConfigInvalid(f"suite {suite.name!r} references columns not in the table: {absent}")
+    unsupported = [c for c in checks if not isinstance(c, (RowCheck, TableCheck))]
+    if unsupported:
+        raise ConfigInvalid(f"unsupported checks: {[type(c).__name__ for c in unsupported]}")
+
+    # top-level `type` is static schema conformance (SURVEY §2.4 type
+    # row) and stays out of the row pass; nested, it is a row test
+    for c in checks:
+        if isinstance(c, TypeIs):
+            ok = _type_ok(schema, c)
+            verdicts.append((C.check_id(c), ok, None if ok else 1))
+
+    def rewrite(c):
+        return _typeis_row(schema, c) if isinstance(c, TypeIs) else c.map_children(rewrite)
+
+    row_checks = tuple(
+        c.map_children(rewrite)
+        for c in checks
+        if isinstance(c, RowCheck) and not isinstance(c, TypeIs)
+    )
+    table = [c for c in checks if isinstance(c, TableCheck)]
+    drift = tuple(c for c in table if type(c) in _RUN_DRIFT)
+    rest = [c for c in table if not isinstance(c, _AGGREGATES) and type(c) not in _RUN_DRIFT]
+    for c in (*drift, *rest):
+        if isinstance(c, (RefIntegrity, *_RUN_DRIFT)) and c.ref_name not in vocab_names:
+            raise ConfigInvalid(f"{c.kind}: no vocab table named {c.ref_name!r}")
+
+    # UniqueKey / Contiguous / Monotonic checks sharing one
+    # (group_by, order column) fuse into ONE window pass (one shuffle)
+    slots: dict[tuple, list] = {}  # -> [unique, contig, monos]
+    for c in rest:
         if isinstance(c, Contiguous):
-            groups.setdefault((tuple(c.group_by), c.order_column), {}).setdefault("contig", c)
+            slot = slots.setdefault((tuple(c.group_by), c.order_column), [None, None, []])
+            slot[1] = slot[1] or c
         elif isinstance(c, Monotonic) and len(c.order_by) == 1:
-            groups.setdefault((tuple(c.group_by), c.order_by[0]), {}).setdefault("monos", []).append(c)
-    for c in table_checks:
-        if isinstance(c, UniqueKey):
-            for (g, o), slot in groups.items():
-                if tuple(c.columns) == g + (o,) and "unique" not in slot:
-                    slot["unique"] = c
-                    break
-    fused_checks: set[int] = set()
-    fused_viols: list[DataFrame] = []
-    for (g, o), slot in groups.items():
-        members = ([slot.get("unique")] if slot.get("unique") else []) + (
-            [slot.get("contig")] if slot.get("contig") else []
-        ) + slot.get("monos", [])
-        if len(members) < 2:
-            continue  # a single check gains nothing from the fused pass
-        fused_viols.extend(
-            C.run_ordered_fused(
-                df, g, o, keys,
-                unique=slot.get("unique"),
-                contig=slot.get("contig"),
-                monos=slot.get("monos", []),
-            )
-        )
-        fused_checks.update(id(m) for m in members)
-    remaining = [c for c in table_checks if id(c) not in fused_checks]
-    return remaining, fused_viols
+            slots.setdefault((tuple(c.group_by), c.order_by[0]), [None, None, []])[2].append(c)
+    for c in rest:
+        slot = isinstance(c, UniqueKey) and slots.get((tuple(c.columns[:-1]), c.columns[-1]))
+        if slot:
+            slot[0] = slot[0] or c
+    ordered, fused = [], set()
+    for (g, o), (unique, contig, monos) in slots.items():
+        members = [m for m in (unique, contig) if m] + monos
+        if len(members) > 1:  # a lone check gains nothing from the fused pass
+            ordered.append((g, o, unique, contig, tuple(monos)))
+            fused.update(map(id, members))
+
+    # group-scoped checks sharing a group_by fuse into ONE hash
+    # aggregation — k checks, one shuffle
+    by_group: dict[tuple, list] = {}
+    for c in rest:
+        if isinstance(c, _GROUP_SCOPE):
+            by_group.setdefault(tuple(c.group_by), []).append(c)
+    return SuitePlan(
+        row_checks=row_checks,
+        schema_verdicts=tuple(verdicts),
+        aggregates=tuple(c for c in table if isinstance(c, _AGGREGATES)),
+        drift=drift,
+        ordered_groups=tuple(ordered),
+        group_scope=tuple((g, tuple(cs)) for g, cs in by_group.items()),
+        singles=tuple(c for c in rest if id(c) not in fused and not isinstance(c, _GROUP_SCOPE)),
+        # every violation-producing check gets a check-scope verdict
+        # row, passed=True when it found nothing
+        viol_check_ids=tuple(sorted({C.check_id(c) for c in (*row_checks, *rest)})),
+    )
+
+
+def _union(frames: list, df: DataFrame, key_columns: tuple) -> DataFrame:
+    """The frames unioned by name in order; an empty violations frame
+    with the right schema when there are none."""
+    if not frames:
+        return _empty_violations(df, key_columns)
+    out = frames[0]
+    for v in frames[1:]:
+        out = out.unionByName(v)
+    return out
+
+
+def _violation_sample(viols: DataFrame, key_columns: tuple, k: int) -> DataFrame:
+    """At most ``k`` violation rows per check. At 10^12 rows one broken
+    check makes the violations table as large as the input. The sample
+    is deterministic (pure function of the data, not of partitioning)
+    and unbiased, and it never uses a window over the full violation
+    set (a per-check window would put one check's 10^12 rows in one
+    reducer): rows are pre-thinned by a uniform hash threshold — keep
+    iff pmod(xxhash64(keys, check), n_check) < budget, expected
+    `budget` survivors per over-cap check — and only the ~budget-sized
+    survivor set pays a row_number window for the exact cap. Exact
+    per-check totals remain in `verdicts`."""
+    if k <= 0:
+        raise ConfigInvalid("max_violations_per_check must be positive")
+    # oversample so P(hash thinning keeps < k of an over-cap check)
+    # is negligible (Binomial(n, budget/n) tail, budget ~ k + 4*sqrt(k))
+    budget = k + 4 * int(k**0.5) + 50
+    counts = viols.groupBy("check").count()
+    key_refs = [col_ref(c) for c in key_columns]
+    h = f"pmod(xxhash64({', '.join(key_refs)}, `check`), `count`)"
+    pre = viols.join(F.broadcast(counts), "check").filter(
+        f"(`count` <= {budget}) OR ({h} < {budget})"
+    )
+    order = ", ".join([*key_refs, "`column`", "`value`"])
+    sample = (
+        pre.withColumn("_rn", F.expr(f"row_number() OVER (PARTITION BY `check` ORDER BY {order})"))
+        .filter(f"_rn <= {k}")
+        .selectExpr(*key_refs, *map(ident, _VIOL_TAIL))
+    )
+    return _sorted(sample, key_columns)
 
 
 def run_suite(
@@ -435,7 +632,7 @@ def run_suite(
     persist: "bool | str" = False,
     max_violations_per_check: int | None = None,
 ) -> ValidationResult:
-    """Compile + execute a suite against a DataFrame.
+    """Plan a suite against a DataFrame (``plan_suite``) and execute it.
 
     persist=True caches the fused-pass output and the (unsorted)
     violations union so that consuming violations AND verdicts AND
@@ -449,147 +646,8 @@ def run_suite(
     union pipeline a second time (sample job + output job), doubling
     every scan and shuffle below the sort (guide §2.4; measured on
     suite_violations_lineitem)."""
-    suite.validate_config()  # schema validated before data (Draft4.hs:134-148)
-    reg = registry or SuiteRegistry().add(suite)
-    if suite.name not in reg.suites:
-        reg.add(suite)
-    resolved = reg.resolve(suite.name)
-
-    # schema-scope resolution — all static, no per-row work:
-    #   PatternColumns expands its row-check template over the matching
-    #   column names (patternProperties analogue, Properties.hs:119-172;
-    #   uncompilable regexes skipped silently per Properties.hs:150-155);
-    #   ColumnsAllowed computes the "matched by neither" remainder
-    #   (additionalProperties=false, Properties.hs:175-209)
-    import dataclasses
-
-    from hjsonschema_spark.checks.ir import (
-        ColumnsAllowed,
-        PatternColumns,
-        RemainderColumns,
-        TypeIs,
-    )
-
-    expanded: list = []
-    schema_verdicts: list[tuple[str, bool, int | None]] = []
-    for c in resolved:
-        if isinstance(c, RemainderColumns):
-            # additionalProperties=SCHEMA over columns: instantiate the
-            # template for every remainder column (Properties.hs:106-108)
-            expanded.extend(
-                dataclasses.replace(c.check, column=col)
-                for col in _remainder_columns(df.columns, c.columns, c.patterns)
-            )
-        elif isinstance(c, PatternColumns):
-            try:
-                rx = re.compile(c.name_regex)
-            except re.error:
-                continue  # skipped silently (reference semantics)
-            expanded.extend(
-                dataclasses.replace(c.check, column=col)
-                for col in df.columns
-                if rx.search(col)
-            )
-        elif isinstance(c, ColumnsAllowed):
-            remainder = _remainder_columns(df.columns, c.columns, c.patterns)
-            schema_verdicts.append(
-                (C.check_id(c), not remainder, len(remainder) or None)
-            )
-        else:
-            expanded.append(c)
-    resolved = tuple(expanded)
-
-    # fail fast on misspelled columns (schema validated before data,
-    # Draft4.hs:134-148): a table's schema is global and static, so a
-    # check naming an absent column is a CONFIG error here — a
-    # deliberate divergence from per-document JSON semantics (missing
-    # key => vacuous pass), which the row-wise Draft4Validator keeps.
-    # TypeIs is exempt (absence = failing schema verdict, above).
-    from hjsonschema_spark.checks.ir import referenced_columns
-
-    present = set(df.columns)
-    wanted: set[str] = set(suite.key_columns)
-    for c in resolved:
-        wanted |= referenced_columns(c)
-    absent = sorted(
-        n for n in wanted - present if _dtype_of(df, n) is None
-    )
-    if absent:
-        raise ConfigInvalid(
-            f"suite {suite.name!r} references columns not in the table: {absent}"
-        )
-
-    # static schema conformance (`type` lifted): resolved at compile
-    # time against df.schema, no per-row work (SURVEY §2.4 type row)
-    from hjsonschema_spark.checks.ir import json_type_matches
-
-    for c in resolved:
-        if isinstance(c, TypeIs):
-            actual = _dtype_of(df, c.column)
-            if c.json_type:
-                ok = actual is not None and json_type_matches(c.json_type, actual)
-            else:
-                ok = actual == c.type_name
-            schema_verdicts.append((C.check_id(c), ok, None if ok else 1))
-
-    # `type` NESTED inside a combinator is a per-VALUE test in the
-    # reference (Any.hs:320-341), not a static column property — e.g.
-    # anyOf[{type: integer}, {minimum: 2}] over a double column must
-    # test integrality row by row (1.0 IS a draft-4 integer, isInteger
-    # at Any.hs:338-341). Rewrite nested TypeIs against the actual
-    # column type: `integer` on a floating column becomes x = floor(x);
-    # family matches/mismatches become constants. Top-level TypeIs
-    # stays a static schema verdict (above).
-    _FLOATING = ("float", "double")
-
-    def _typeis_rowpred(c) -> "ir.Custom":
-        from hjsonschema_spark.checks.ir import Custom as _Custom
-
-        t = _dtype_of(df, c.column)
-        label = f"json_type_{c.column}_{c.json_type or c.type_name}"
-        qcol = col_ref(c.column)
-        if c.json_type and t is not None:
-            if c.json_type == "integer" and (t in _FLOATING or t.startswith("decimal")):
-                return _Custom(name=label, expr=f"{qcol} = floor({qcol})")
-            ok = json_type_matches(c.json_type, t)
-        else:
-            ok = t == c.type_name
-        return _Custom(name=label, expr="true" if ok else "false")
-
-    def _rewrite_nested(c):
-        from hjsonschema_spark.checks.ir import (
-            AllOf as _All, AnyOf as _Any, DependentSchema as _Dep,
-            Not as _Not, OneOf as _One,
-        )
-
-        if isinstance(c, TypeIs):
-            return _typeis_rowpred(c)
-        if isinstance(c, (_All, _Any, _One)):
-            return type(c)(checks=tuple(_rewrite_nested(k) for k in c.checks))
-        if isinstance(c, _Not):
-            return _Not(check=_rewrite_nested(c.check))
-        if isinstance(c, _Dep):
-            return _Dep(
-                when_column=c.when_column,
-                checks=tuple(_rewrite_nested(k) for k in c.checks),
-            )
-        return c
-
-    resolved = tuple(
-        _rewrite_nested(c) if not isinstance(c, TypeIs) else c for c in resolved
-    )
-
-    # top-level TypeIs is fully resolved as a schema verdict above —
-    # keep it out of the fused pass entirely (its failure-struct value
-    # expression would reference the column, which may not even exist)
-    row_checks = [
-        c for c in resolved if isinstance(c, RowCheck) and not isinstance(c, TypeIs)
-    ]
-    table_checks = [c for c in resolved if isinstance(c, TableCheck)]
-    missing = [c for c in resolved if not isinstance(c, (RowCheck, TableCheck))]
-    if missing:
-        raise ConfigInvalid(f"unsupported checks: {[type(c).__name__ for c in missing]}")
-
+    vocab_tables = vocab_tables or {}
+    plan = plan_suite(suite, df.schema, registry, tuple(vocab_tables))
     keys = suite.key_columns
     # Adaptive scan fan-out (guide §2.5 input skew / §6 split sizing):
     # a small single-file parquet input yields as few as ONE busy scan
@@ -605,17 +663,14 @@ def run_suite(
     # cheap partial agg measured as a net LOSS (drift_suite +7%,
     # conversation_checks +15% before this guard).
     fanned = False
-    if row_checks:
-        from hjsonschema_spark.functions import fan_out
-
-        _df_in = df
-        df = fan_out(df, by=tuple(suite.key_columns))
-        fanned = df is not _df_in
+    if plan.row_checks:
+        wide = fan_out(df, by=tuple(keys))
+        fanned, df = wide is not df, wide
     # barrier=fanned: keep Catalyst's inferred size(_failures)>0 filter
     # (InferFiltersFromGenerate, below the violations explode) from
     # being substituted through the fan-out exchange into the serial
     # scan task — see compile._pushdown_barrier
-    checked = C.compile_fused_pass(df, row_checks, barrier=fanned)
+    checked = C.compile_fused_pass(df, plan.row_checks, barrier=fanned)
     # NOTE: the full `checked` frame (input + _failures) is never
     # persisted — it carries the whole payload (text included), so a
     # cache write costs more than re-running the codegen'd fused pass.
@@ -624,110 +679,34 @@ def run_suite(
     # it, so the input is scanned exactly ONCE per row pass.
     slim = _slim_pass(checked, keys)
     persisted: list[DataFrame] = []
-    persist_slim = persist is True  # "viols" mode skips the big slim cache
-    if persist_slim:
+    if persist is True:  # "viols" mode skips the big slim cache
         slim = slim.persist()
         persisted.append(slim)
     # an aggregate-only suite (no row checks) must not pay a row-pass
     # scan in the violations plan: size([]) > 0 is always false but
     # Catalyst does not fold the scan away, so skip the branch outright
-    viols = [_row_violations(slim, keys)] if row_checks else []
-    # verdict frames are assembled lazily (ValidationResult._verdicts_src):
-    # each part is a zero-arg factory; config validation stays eager
-    verdict_parts: list = [lambda: _partition_verdicts(slim)]
-
-    # every NullRateMax + AggBounds folds into ONE lazy aggregation pass
-    # (column-pruned scan of just the checked columns, no eager .first()
-    # jobs)
-    from hjsonschema_spark.checks.ir import AggBounds
-
-    agg_level = [c for c in table_checks if isinstance(c, (NullRateMax, AggBounds))]
-    table_checks = [c for c in table_checks if not isinstance(c, (NullRateMax, AggBounds))]
-    if agg_level:
-        verdict_parts.append(lambda: C.run_table_aggregates(df, agg_level))
-
-    # distribution-drift checks (north star: chi² on role histograms,
-    # KS on turn-length) produce table-scope verdict rows, not
-    # violation rows — fully lazy plans, reference side from vocab_tables
-    from hjsonschema_spark.checks.ir import ChiSquareDrift, KSDrift
-
-    drift_checks = [c for c in table_checks if isinstance(c, (ChiSquareDrift, KSDrift))]
-    table_checks = [c for c in table_checks if not isinstance(c, (ChiSquareDrift, KSDrift))]
-    for c in drift_checks:
-        ref = (vocab_tables or {}).get(c.ref_name)
-        if ref is None:
-            raise ConfigInvalid(f"{type(c).__name__}: no vocab table named {c.ref_name!r}")
-        runner = C.run_chi2_drift if isinstance(c, ChiSquareDrift) else C.run_ks_drift
-        verdict_parts.append(lambda r=runner, ck=c, rf=ref: r(df, ck, rf))
-
-    # every violation-producing check gets a check-scope verdict row,
-    # passed=True when it found nothing (resolved before fusion so
-    # fused members keep their ids)
-    from hjsonschema_spark.checks.ir import TypeIs as _TypeIs
-
-    viol_check_ids = sorted(
-        {C.check_id(c) for c in row_checks if not isinstance(c, _TypeIs)}
-        | {C.check_id(c) for c in table_checks}
-    )
-
-    table_checks, fused_viols = _fuse_ordered_checks(df, table_checks, keys)
-    viols.extend(fused_viols)
-
-    # group-scoped checks (SequencePattern + GroupAggBounds) sharing a
-    # group_by fuse into ONE hash aggregation — k checks, one shuffle
-    group_scope = [
-        c for c in table_checks if isinstance(c, (SequencePattern, GroupAggBounds))
+    row_viols = [_row_violations(slim, keys)] if plan.row_checks else []
+    table_viols = [
+        C.run_ordered_fused(df, g, o, keys, unique=u, contig=ct, monos=ms)
+        for g, o, u, ct, ms in plan.ordered_groups
     ]
-    table_checks = [
-        c for c in table_checks if not isinstance(c, (SequencePattern, GroupAggBounds))
+    table_viols += [C.run_group_scope_checks(df, cs, keys) for _, cs in plan.group_scope]
+    table_viols += [
+        C.run_ref_integrity(df, c, vocab_tables[c.ref_name], keys)
+        if isinstance(c, RefIntegrity)
+        else _RUN_SINGLE[type(c)](df, c, keys)
+        for c in plan.singles
     ]
-    by_group: dict[tuple, list] = {}
-    for c in group_scope:
-        by_group.setdefault(tuple(c.group_by), []).append(c)
-    for cs in by_group.values():
-        viols.append(C.run_group_scope_checks(df, cs, keys))
-
-    for c in table_checks:
-        if isinstance(c, UniqueKey):
-            v = C.run_unique_key(df, c, keys)
-        elif isinstance(c, RefIntegrity):
-            vt = (vocab_tables or {}).get(c.ref_name)
-            if vt is None:
-                raise ConfigInvalid(f"ref_integrity: no vocab table named {c.ref_name!r}")
-            v = C.run_ref_integrity(df, c, vt, keys)
-        elif isinstance(c, Contiguous):
-            v = C.run_contiguous(df, c, keys)
-        elif isinstance(c, Monotonic):
-            v = C.run_monotonic(df, c, keys)
-        elif isinstance(c, FunctionalDependency):
-            v = C.run_functional_dependency(df, c, keys)
-        else:
-            raise ConfigInvalid(f"unsupported table check {type(c).__name__}")
-        viols.append(v)
-
     # table-scope-only union for clean_rows(strict): base rows there are
     # already filtered to _failures == [], so row-scope violation keys
     # can never match the anti-join — joining against them only forces
     # the fused row pass to run a second time inside the clean_rows job
     # (a full extra input scan, measured ~2.4s of 7.2s on the bench's
-    # clean_rows_lineitem). Same output, one fewer scan.
-    n_table_branches = len(viols) - (1 if row_checks else 0)
-    if n_table_branches > 0:
-        tv = viols[1] if row_checks else viols[0]
-        for v in viols[(2 if row_checks else 1):]:
-            tv = tv.unionByName(v)
-        table_viols = tv
-    else:
-        # no table-scope violation checks: an explicit EMPTY frame (not
-        # None) so clean_rows(strict) anti-joins a broadcast-empty side
-        # instead of falling back to the full union
-        table_viols = _empty_violations(df, keys)
-    if not viols:
-        # no violation-producing checks at all: empty frame, right schema
-        viols = [_empty_violations(df, keys)]
-    all_viols = viols[0]
-    for v in viols[1:]:
-        all_viols = all_viols.unionByName(v)
+    # clean_rows_lineitem). Same output, one fewer scan. With no table
+    # checks it is an explicit EMPTY frame (not None), so clean_rows
+    # anti-joins a broadcast-empty side instead of the full union.
+    table_union = _union(table_viols, df, keys)
+    all_viols = _union(row_viols + table_viols, df, keys)
     # summary()'s counts are observed on the union as it is computed.
     # Persisted, the observation sits under the cache, so the first
     # output that fills it counts each row once. Unpersisted, every
@@ -736,51 +715,23 @@ def run_suite(
     obs = None
     if persist:
         obs = Observation()
-        all_viols = _observe(all_viols, obs, viol_check_ids).persist()
+        all_viols = _observe(all_viols, obs, plan.viol_check_ids).persist()
         persisted.append(all_viols)
     # global sort => byte-stable violation output across partition counts
-    sorted_viols = _sorted(all_viols, keys)
-
-    # Bounded violation output for web-scale runs: at 10^12 rows one
-    # broken check makes the violations table as large as the input.
-    # The sample is deterministic (pure function of the data, not of
-    # partitioning) and unbiased, and it never uses a window over the
-    # full violation set (a per-check window would put one check's
-    # 10^12 rows in one reducer): rows are pre-thinned by a uniform
-    # hash threshold — keep iff pmod(xxhash64(keys, check), n_check) <
-    # budget, expected `budget` survivors per over-cap check — and only
-    # the ~budget-sized survivor set pays a row_number window for the
-    # exact cap. Exact per-check totals remain in `verdicts`.
+    violations = _sorted(all_viols, keys)
     sample = None
     if max_violations_per_check is not None:
-        k = int(max_violations_per_check)
-        if k <= 0:
-            raise ConfigInvalid("max_violations_per_check must be positive")
-        # oversample so P(hash thinning keeps < k of an over-cap check)
-        # is negligible (Binomial(n, budget/n) tail, budget ~ k + 4*sqrt(k))
-        budget = k + 4 * int(k**0.5) + 50
-        counts = all_viols.groupBy("check").count()
-        key_refs = [col_ref(c) for c in keys]
-        h = f"pmod(xxhash64({', '.join(key_refs)}, `check`), `count`)"
-        pre = all_viols.join(F.broadcast(counts), "check").filter(
-            f"(`count` <= {budget}) OR ({h} < {budget})"
-        )
-        order = ", ".join([*key_refs, "`column`", "`value`"])
-        sample = (
-            pre.withColumn("_rn", F.expr(f"row_number() OVER (PARTITION BY `check` ORDER BY {order})"))
-            .filter(f"_rn <= {k}")
-            .selectExpr(*key_refs, *map(ident, _VIOL_TAIL))
-        )
-        sample = _sorted(sample, keys)
-
+        sample = _violation_sample(all_viols, keys, int(max_violations_per_check))
     spark = df.sparkSession
 
+    # verdict frames are assembled lazily (ValidationResult._verdicts_src);
+    # parts in order: partition, table aggregates, drift, schema, check
     def _build_verdicts() -> DataFrame:
         ids_df = cached_local_df(
-            spark, tuple((i,) for i in viol_check_ids), "check string"
+            spark, tuple((i,) for i in plan.viol_check_ids), "check string"
         )
         n = "CAST(coalesce(`count`, 0) AS BIGINT)"
-        table_verdicts = ids_df.join(all_viols.groupBy("check").count(), "check", "left").selectExpr(
+        check_verdicts = ids_df.join(all_viols.groupBy("check").count(), "check", "left").selectExpr(
             "'check' AS scope",
             "CAST(NULL AS INT) AS partition_id",
             "`check`",
@@ -788,31 +739,31 @@ def run_suite(
             f"{n} AS n_violations",
             f"({n} = 0) AS passed",
         )
-        parts = [p() for p in verdict_parts]
-        if schema_verdicts:
+        parts = [_partition_verdicts(slim)]
+        if plan.aggregates:
+            parts.append(C.run_table_aggregates(df, plan.aggregates))
+        parts += [_RUN_DRIFT[type(c)](df, c, vocab_tables[c.ref_name]) for c in plan.drift]
+        if plan.schema_verdicts:
             parts.append(
                 cached_local_df(
                     spark,
-                    tuple(("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in schema_verdicts),
+                    tuple(("schema", None, cid, None, n_bad, ok) for cid, ok, n_bad in plan.schema_verdicts),
                     "scope string, partition_id int, check string, n_rows long, n_violations long, passed boolean",
                 )
             )
-        all_verdicts = parts[0]
-        for v in parts[1:] + [table_verdicts]:
-            all_verdicts = all_verdicts.unionByName(v)
-        return all_verdicts
+        return _union(parts + [check_verdicts], df, keys)
 
     return ValidationResult(
         suite=suite,
         checked=checked,
-        violations=sorted_viols,
+        violations=violations,
         _verdicts_src=_build_verdicts,
         stats=column_stats(df) if include_stats else None,
         violations_sample=sample,
         _slim=slim,
         _viols_unsorted=all_viols,
-        _table_viols_unsorted=table_viols,
+        _table_viols_unsorted=table_union,
         _persisted=tuple(persisted),
         _fanned=fanned,
-        _counts=(obs, all_viols, tuple(viol_check_ids)),
+        _counts=(obs, all_viols, plan.viol_check_ids),
     )

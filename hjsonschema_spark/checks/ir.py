@@ -17,6 +17,7 @@ src/JSONSchema/Validator/Draft4.hs:28-33).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from dataclasses import dataclass, field, fields
 from typing import Any, ClassVar
@@ -83,6 +84,19 @@ class Check:
 
     def children(self) -> tuple["Check", ...]:
         return ()
+
+    def map_children(self, fn) -> "Check":
+        """This node with ``fn`` applied to every child check: each
+        Check field and each member of a tuple-of-Check field. A node
+        without children is returned as is."""
+        new = {}
+        for f in fields(self):
+            v = getattr(self, f.name)
+            if isinstance(v, Check):
+                new[f.name] = fn(v)
+            elif isinstance(v, tuple) and v and isinstance(v[0], Check):
+                new[f.name] = tuple(map(fn, v))
+        return dataclasses.replace(self, **new) if new else self
 
 
 # --------------------------------------------------------------------------
@@ -612,8 +626,6 @@ class PatternColumns(SchemaCheck):
             raise ConfigInvalid(
                 "pattern_columns: check must be a row check with a `column` field"
             )
-        import dataclasses
-
         dataclasses.replace(self.check, column="_template_").validate_config()
 
 
@@ -643,8 +655,6 @@ class RemainderColumns(SchemaCheck):
             raise ConfigInvalid(
                 "remainder_columns: check must be a row check with a `column` field"
             )
-        import dataclasses
-
         dataclasses.replace(self.check, column="_template_").validate_config()
 
 
@@ -1030,19 +1040,23 @@ class SuiteRegistry:
             out.extend(self._resolve_check(c, _visiting | {name}))
         return tuple(out)
 
-    def _resolve_check(self, c: Check, visiting: frozenset) -> list[Check]:
+    def _resolve_check(self, c: Check, visiting: frozenset) -> tuple:
+        """``c`` with every Ref inlined. Where checks are a conjunction
+        (a suite, AllOf, DependentSchema) a Ref splices its suite's
+        checks in; anywhere else a $ref is one schema (Ref.hs), so it
+        becomes one check: the AllOf of its suite's checks when there
+        are several."""
         if isinstance(c, Ref):
-            return list(self.resolve(c.suite, visiting))
-        if isinstance(c, (AllOf, AnyOf, OneOf)):
-            kids = tuple(k for ch in c.children() for k in self._resolve_check(ch, visiting))
-            return [type(c)(checks=kids)]
-        if isinstance(c, DependentSchema):
+            return self.resolve(c.suite, visiting)
+        if isinstance(c, (AllOf, DependentSchema)):
             kids = tuple(k for ch in c.checks for k in self._resolve_check(ch, visiting))
-            return [DependentSchema(when_column=c.when_column, checks=kids)]
-        if isinstance(c, Not) and isinstance(c.check, Ref):
-            inner = self.resolve(c.check.suite, visiting)
-            return [Not(check=AllOf(checks=inner))]
-        return [c]
+            return (dataclasses.replace(c, checks=kids),)
+
+        def one(ch: Check) -> Check:
+            got = self._resolve_check(ch, visiting)
+            return got[0] if len(got) == 1 else AllOf(checks=got)
+
+        return (c.map_children(one),)
 
     @staticmethod
     def _ref_targets(suite: "CheckSuite") -> set[str]:

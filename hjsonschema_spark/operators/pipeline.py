@@ -364,39 +364,3 @@ def leakage_safe_split(
         fp.join(rep, "_fp"), id_col="group_id", fractions=fractions, salt=salt
     )
     return assigned.select(id_col, "group_id", "split")
-
-
-def leakage_safe_split_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    fractions: dict[str, float] | None = None,
-    salt: str = "",
-) -> DataFrame:
-    """NEAR-duplicate-safe split: `leakage_safe_split` generalized from
-    byte-identical groups to an arbitrary near-dup pair graph (MinHash
-    LSH, SimHash, embedding LSH — anything emitting (id_a, id_b)).
-    The split keys on the pair graph's connected-component
-    representative, so transitively linked documents (A~B, B~C) land in
-    ONE split even when A and C never paired directly — partial cluster
-    separation is exactly how eval contamination sneaks through
-    pairwise-only dedup.
-
-    Plan: connected components over the PAIRS ONLY (iterative, bounded
-    by nodes-in-pairs — the corpus is never touched by the loop), one
-    left equi-join corpus->cluster (documents in no pair are their own
-    singleton representative), then the split_by_hash projection on the
-    representative. At 100 TB the join's right side is only the near-dup
-    node set; AQE broadcasts it when it fits.
-    """
-    from hjsonschema_spark.operators.dedup import connected_components
-
-    cc = connected_components(pairs)
-    labeled = df.select(F.col(id_col)).join(
-        cc.select(F.col("node").alias(id_col), "cluster_id"), id_col, "left"
-    )
-    labeled = labeled.withColumn(
-        "group_id", F.coalesce(F.col("cluster_id"), F.col(id_col))
-    )
-    assigned = split_by_hash(labeled, id_col="group_id", fractions=fractions, salt=salt)
-    return assigned.select(id_col, "group_id", "split")

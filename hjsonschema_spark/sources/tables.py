@@ -33,14 +33,6 @@ def read_table(
     return spark.read.parquet(name_or_path)
 
 
-def append_table(df: DataFrame, name_or_path: str) -> None:
-    """Append rows (Iceberg commit when available, parquet append else)."""
-    if iceberg_available(df.sparkSession) and "/" not in name_or_path:
-        df.writeTo(name_or_path).append()
-    else:
-        df.write.mode("append").parquet(name_or_path)
-
-
 def overwrite_table(df: DataFrame, name_or_path: str) -> None:
     if iceberg_available(df.sparkSession) and "/" not in name_or_path:
         df.writeTo(name_or_path).createOrReplace()

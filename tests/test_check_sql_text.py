@@ -192,6 +192,9 @@ def test_summary_starts_no_job_after_violations(spark, table, vocab):
     jobs = sc.statusTracker().getJobIdsForGroup("summary-no-job")
     res.unpersist(blocking=True)
     assert jobs == []
+    # summary() drains Spark's listener bus, which completes the
+    # observation, through a Spark internal: pin that it still exists
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     counts = Counter(r.check for r in viols)
     assert summary["n_violations"] == len(viols) > 0
     assert summary["by_check"] == dict(counts)

@@ -233,6 +233,32 @@ def test_ref_resolution_and_cycles():
         reg.resolve("nope")
 
 
+def test_multi_check_ref_is_one_combinator_branch(spark):
+    """A $ref is one schema, so under anyOf/oneOf/not a suite of two
+    checks is ONE branch: (a AND b) OR c, not a OR b OR c. A suite of
+    none is the empty schema, which accepts every row."""
+    reg = SuiteRegistry().add(
+        CheckSuite(name="ab", key_columns=KEYS, checks=(Required(column="a"), Required(column="b")))
+    )
+    reg.add(CheckSuite(name="empty", key_columns=KEYS))
+    df = spark.createDataFrame(
+        [("x", 1, 1, None, None), ("x", 2, 1, 1, None), ("x", 3, None, None, None),
+         ("x", 4, None, None, 1), ("x", 5, 1, 1, 1)],
+        "conv_id string, turn_idx int, a int, b int, c int",
+    )
+    branches = (Ref(suite="ab"), Required(column="c"))
+
+    def failing(check):
+        res = run_suite(df, _suite(check), registry=reg)
+        return sorted(r["turn_idx"] for r in res.violations.collect())
+
+    assert failing(AnyOf(checks=branches)) == [1, 3]
+    assert failing(OneOf(checks=branches)) == [1, 3, 5]
+    assert failing(Not(check=AnyOf(checks=branches))) == [2, 4, 5]
+    assert failing(AnyOf(checks=(Ref(suite="empty"), Required(column="c")))) == []
+    assert failing(Not(check=Ref(suite="empty"))) == [1, 2, 3, 4, 5]
+
+
 def test_combinator_failure_detail(spark):
     """Failure-tree parity (Any.hs:364-482 semantics): oneOf violations
     distinguish NoSuccesses from TooManySuccesses with passing-branch

@@ -10,8 +10,6 @@ the EXACT call shapes the Iceberg runtime expects:
   .option("as-of-timestamp", ts).format("iceberg").load(name)``
   (Iceberg Spark reader options; snapshot pinning is the north-rule
   reproducible-run requirement),
-- append: ``df.writeTo(name).append()`` (DataFrameWriterV2 atomic
-  append commit),
 - overwrite: ``df.writeTo(name).createOrReplace()``,
 - a name containing "/" is a filesystem path and must take the parquet
   branch even when the Iceberg runtime is present.
@@ -61,9 +59,6 @@ class FakeWriterV2:
     def __init__(self, calls, name):
         self.calls = calls
         self.name = name
-
-    def append(self):
-        self.calls.append(("writeTo.append", self.name))
 
     def createOrReplace(self):
         self.calls.append(("writeTo.createOrReplace", self.name))
@@ -143,18 +138,6 @@ def test_read_parquet_fallback_without_iceberg(iceberg_off):
     spark = FakeSpark()
     assert tables.read_table(spark, "db.t") == "parquet-df"
     assert spark.calls == [("parquet", "db.t")]
-
-
-def test_append_shape(iceberg_on):
-    df = FakeDF()
-    tables.append_table(df, "db.verdicts")
-    assert df.calls == [("writeTo.append", "db.verdicts")]
-
-
-def test_append_parquet_fallback(iceberg_off):
-    df = FakeDF()
-    tables.append_table(df, "db.verdicts")
-    assert df.calls == [("write.parquet", "append", "db.verdicts")]
 
 
 def test_overwrite_shape(iceberg_on):

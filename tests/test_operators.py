@@ -1,5 +1,5 @@
-"""Operator tests: dedup, similarity, text analysis, drift, multimodal
-plumbing, and the draft4 JSON-column UDF."""
+"""Operator tests: dedup, similarity, text analysis, drift, and the
+draft4 JSON-column UDF."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hjsonschema_spark.operators import dedup, drift, similarity, text
-from hjsonschema_spark.operators import multimodal as mm
 from hjsonschema_spark.sources import TranscriptGen
 
 
@@ -414,24 +413,6 @@ def test_ks_p_value_sanity():
     assert drift.ks_sf(0.05, 100, 100) > 0.5
     assert drift.chi2_sf(0.1, 4) > 0.99
     assert drift.chi2_sf(100.0, 4) < 1e-6
-
-
-def test_multimodal_features_and_frames(spark):
-    media = mm.synth_media(spark, n=48)
-    feats = mm.extract_features(media, decoder="fake")
-    rows = feats.collect()
-    assert len(rows) == 48
-    for r in rows:
-        assert r["n_bytes"] > 0 and 0 <= r["byte_mean"] <= 255 and r["byte_entropy"] > 0
-    # deterministic across re-runs
-    again = {r["media_id"]: r["phash"] for r in mm.extract_features(media, decoder="fake").collect()}
-    first = {r["media_id"]: r["phash"] for r in rows}
-    assert again == first
-    frames = mm.sample_frames(media, every_ms=5000)
-    vids = media.filter("kind = 'video'").count()
-    assert frames.select("media_id").distinct().count() == vids
-    with pytest.raises(Exception, match="NotImplementedError|real decoders"):
-        mm.extract_features(media, decoder="real").collect()
 
 
 def test_draft4_json_udf(spark):

@@ -278,22 +278,3 @@ def test_leakage_safe_split_never_splits_duplicates(spark):
     assert all(g[i] == i and g[1000 + i] == i for i in range(200))
     # and the split actually uses more than one bucket
     assert len({r["split"] for r in rows_out}) == 3
-
-
-def test_leakage_safe_split_clusters_transitive(spark):
-    """A~B, B~C but never A~C: all three must share a split; documents
-    in no pair get singleton groups and still split deterministically."""
-    from hjsonschema_spark.operators.pipeline import leakage_safe_split_clusters
-
-    docs = spark.createDataFrame([(i, f"d{i}") for i in range(50)], "doc_id long, text string")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    out = leakage_safe_split_clusters(docs, pairs, fractions={"train": 0.5, "test": 0.5})
-    rows = {r["doc_id"]: (r["group_id"], r["split"]) for r in out.collect()}
-    assert len(rows) == 50
-    assert rows[1][0] == rows[2][0] == rows[3][0] == 1  # min-id representative
-    assert rows[1][1] == rows[2][1] == rows[3][1]       # one split for the chain
-    assert rows[10][1] == rows[11][1]
-    assert rows[20][0] == 20  # singleton keeps its own id
-    assert len({s for _, s in rows.values()}) == 2  # both splits in use
