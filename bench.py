@@ -7,8 +7,9 @@ line: {"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 --transcripts-only: print one JSON line with the north-star metric
-(turns validated/sec for the full transcript check-suite) — used as the
-child job of --scaling.
+(turns validated/sec for the full transcript check-suite, min of
+SCALING_RUNS runs after two warm-ups) — the child job of both the
+default mode and --scaling.
 
 --scaling: run the identical transcripts job at local[N] and local[4N]
 (separate JVMs — Spark master is fixed per process), N being a quarter
@@ -36,7 +37,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_parallelism()
 N_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "400000"))
 N_PARTS = int(os.environ.get("SPARK_GRAFT_BENCH_PARTS", "128"))
-# measured engine runs per scaling child, after its two warm-ups
+# measured engine runs per transcripts child, after its two warm-ups
 SCALING_RUNS = 5
 
 HEADLINE = [
@@ -192,7 +193,7 @@ def main_default() -> None:
     # exit the parent's py4j JVM — its heap would starve the child
     # (same trap as --gen-only, see main_scaling).
     proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--transcripts-once"],
+        [sys.executable, os.path.abspath(__file__), "--transcripts-only"],
         capture_output=True, text=True, timeout=1200,
     )
     tj = json.loads(proc.stdout.strip().splitlines()[-1])
@@ -294,7 +295,7 @@ def main_transcripts_only() -> None:
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": elog_dir,
     }
-    spark = get_spark(app_name=f"bench-scaling-{CPUS}", cores=CPUS, extra_conf=extra)
+    spark = get_spark(app_name=f"bench-transcripts-{CPUS}", cores=CPUS, extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
     df = spark.read.parquet(_ensure_transcripts(spark)).persist()
     # two warm-ups: the first fills the cache, the second lets C2 JIT
@@ -442,40 +443,11 @@ def main_gen_only() -> None:
     spark.stop()
 
 
-def main_transcripts_once() -> None:
-    """Transcripts throughput in a fresh JVM (the main bench's
-    subprocess child — see main_default for why it must be isolated).
-    TWO warm-ups (cache fill, then C2-JIT steady state — same protocol
-    as the scaling children) then min-of-5 on the cached input: steal
-    noise on this shared VM is strictly one-sided (a single cold-shot
-    run varied 5s..195s across host windows, measured), so the fastest
-    run is the closest estimate of real capability — the same
-    documented estimator every other headline query in this file uses
-    (min-of-2 in main_default). Round 2's apparent −18% headline
-    regression was an artifact of this child using median-of-3 in a
-    degraded window while a same-session A/B showed the code 2× faster."""
-    from hjsonschema_spark.session import get_spark
-
-    spark = get_spark(app_name="bench-transcripts-once", cores=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    df = spark.read.parquet(_ensure_transcripts(spark)).persist()
-    run_transcripts_job(spark, df)  # warm-up 1: cache fill
-    run_transcripts_job(spark, df)  # warm-up 2: C2 JIT steady state
-    runs = [run_transcripts_job(spark, df) for _ in range(5)]
-    out = min(runs, key=lambda r: r["wall_sec"])
-    out["runs_sec"] = [round(r["wall_sec"], 2) for r in runs]
-    out["median_sec"] = sorted(round(r["wall_sec"], 2) for r in runs)[2]
-    print(json.dumps(out))
-    spark.stop()
-
-
 if __name__ == "__main__":
     if "--scaling" in sys.argv:
         main_scaling()
     elif "--transcripts-only" in sys.argv:
         main_transcripts_only()
-    elif "--transcripts-once" in sys.argv:
-        main_transcripts_once()
     elif "--gen-only" in sys.argv:
         main_gen_only()
     else:

@@ -76,6 +76,7 @@ from hjsonschema_spark.checks.ir import (
     TypeIs,
     UniqueKey,
 )
+from hjsonschema_spark.operators.drift import ecdf_gap
 from hjsonschema_spark.sqltext import col_ref, concat_conditional, ident, lit, str_lit, struct
 
 FAILURE_STRUCT = "check string, column string, value string"
@@ -1084,11 +1085,10 @@ def run_chi2_drift(df: DataFrame, c: ChiSquareDrift, ref: DataFrame) -> DataFram
 def run_ks_drift(df: DataFrame, c: KSDrift, ref: DataFrame) -> DataFrame:
     """Two-sample KS drift → ONE table-scope verdict row, fully lazy.
 
-    Plan: shared [lo, hi] from a lazy 1-row bounds agg (broadcast into
-    both sides), one width-bucketed groupBy per side (the ONLY passes
-    over the data; partial+final agg, spill-safe), cumulative-sum
-    windows over O(buckets) rows for the ECDF gap D, JVM asymptotic
-    p-value (ks_pvalue) on the single resulting row. Matches
+    Plan: the tagged union of both sides goes through
+    operators.drift.ecdf_gap (the bucketed-ECDF pass that
+    ks_two_sample_df shares), then the JVM asymptotic p-value
+    (ks_pvalue) on the single resulting row. Matches
     operators.drift.ks_two_sample (same bucketed-D estimator); empty
     side or degenerate range ⇒ vacuous pass."""
     x = f"CAST({col_ref(c.column)} AS DOUBLE) AS x"
@@ -1103,25 +1103,7 @@ def run_ks_drift(df: DataFrame, c: KSDrift, ref: DataFrame) -> DataFrame:
     # no full-outer histogram join. Counts, bucket set, and therefore
     # D / p / passed are identical (guide §1.2: fewer passes).
     u = a.selectExpr("x", "1 AS _g").unionByName(b.selectExpr("x", "0 AS _g"))
-    bounds = u.selectExpr("min(x) AS _lo", "max(x) AS _hi")
-
-    nb = int(c.buckets)
-    t = u.crossJoin(F.broadcast(bounds))
-    width = f"((_hi - _lo) / {lit(float(nb))})"
-    # try_divide: degenerate range (hi == lo) => NULL => bucket 0
-    bkt = f"coalesce(least({nb - 1}, CAST(floor(try_divide(x - _lo, {width})) AS INT)), 0)"
-    hist = t.groupBy(F.expr(f"{bkt} AS _b")).agg(
-        F.expr("sum(_g) AS _na"), F.expr("sum(1 - _g) AS _nb")
-    )
-    cum = "ORDER BY _b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-    one = hist.selectExpr(
-        f"try_divide(sum(_na) OVER ({cum}), sum(_na) OVER ()) AS _ca",
-        f"try_divide(sum(_nb) OVER ({cum}), sum(_nb) OVER ()) AS _cb",
-        "sum(_na) OVER () AS _n1",
-        "sum(_nb) OVER () AS _n2",
-    ).selectExpr(
-        "max(abs(_ca - _cb)) AS _d", "coalesce(max(_n1), 0) AS _n1", "coalesce(max(_n2), 0) AS _n2"
-    )
+    one = ecdf_gap(u, int(c.buckets))
     p = ks_pvalue("_d", "_n1", "_n2")
     return one.selectExpr(
         *_verdict_tail(str_lit(check_id(c)), "_n1", f"({p} >= {lit(float(c.alpha))})")

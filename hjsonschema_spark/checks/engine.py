@@ -475,9 +475,9 @@ def plan_suite(
     Raises ConfigInvalid for a bad config, an unresolvable Ref, a
     column the table lacks, or a vocabulary not in ``vocab_names``."""
     suite.validate_config()  # schema validated before data (Draft4.hs:134-148)
-    reg = registry or SuiteRegistry()
-    if suite.name not in reg.suites:
-        reg = SuiteRegistry({**reg.suites, suite.name: suite})
+    # the suite passed is the one planned, even when the registry holds
+    # another of the same name
+    reg = SuiteRegistry({**(registry.suites if registry else {}), suite.name: suite})
 
     # schema-scope resolution — all static, no per-row work:
     #   PatternColumns expands its row-check template over the matching

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from hjsonschema_spark.checks.compile import compile_row_predicate
 from hjsonschema_spark.checks.ir import (
     AllOf,
     AnyOf,
@@ -117,45 +118,12 @@ def _deref(sub: dict, root: dict, visiting: frozenset) -> tuple[dict, frozenset]
     return sub, visiting
 
 
-def _sql_quote(v: Any) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    return "'" + str(v).replace("'", "''") + "'"
-
-
 def _element_predicate(sub: dict, root: dict, visiting: frozenset) -> str:
-    """SQL predicate over element variable `x` for an items subschema.
-    Supports the scalar keyword subset; anything else is ConfigInvalid
-    (the element of an array column is a scalar)."""
+    """SQL predicate over element variable `x` for an items subschema:
+    its keywords lift to checks on a column named `x`, which binds to
+    the lambda variable. Supports the scalar keyword subset; anything
+    else is ConfigInvalid (the element of an array column is a scalar)."""
     sub, visiting = _deref(sub, root, visiting)
-    preds: list[str] = []
-    if "minimum" in sub:
-        op = ">" if sub.get("exclusiveMinimum") else ">="
-        preds.append(f"x {op} {_sql_quote(sub['minimum'])}")
-    if "maximum" in sub:
-        op = "<" if sub.get("exclusiveMaximum") else "<="
-        preds.append(f"x {op} {_sql_quote(sub['maximum'])}")
-    if "minLength" in sub:
-        preds.append(f"length(x) >= {int(sub['minLength'])}")
-    if "maxLength" in sub:
-        preds.append(f"length(x) <= {int(sub['maxLength'])}")
-    if "pattern" in sub:
-        preds.append(f"x RLIKE {_sql_quote(sub['pattern'])}")
-    if "enum" in sub:
-        vals = sub["enum"]
-        if not all(isinstance(v, _SCALAR) and not isinstance(v, type(None)) for v in vals):
-            raise ConfigInvalid("from_schema: items.enum members must be scalars")
-        preds.append(f"x IN ({', '.join(_sql_quote(v) for v in vals)})")
-    if "multipleOf" in sub:
-        n = sub["multipleOf"]
-        if isinstance(n, (int, float)) and n > 0:
-            preds.append(
-                f"(cast(x as decimal(38,12)) % cast({_sql_quote(n)} as decimal(38,12))) = 0"
-            )
     unsupported = set(sub) - {
         "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
         "minLength", "maxLength", "pattern", "enum", "multipleOf",
@@ -166,7 +134,17 @@ def _element_predicate(sub: dict, root: dict, visiting: frozenset) -> str:
             f"from_schema: items keywords not liftable to an element predicate: "
             f"{sorted(unsupported)}"
         )
-    return "(" + ") AND (".join(preds) + ")" if preds else "true"
+    vals = sub.get("enum", ())
+    if not all(isinstance(v, _SCALAR) and v is not None for v in vals):
+        raise ConfigInvalid("from_schema: items.enum members must be scalars")
+    checks = _lift_column("x", {k: v for k, v in sub.items() if k != "type"}, root, visiting)
+    if vals and len(set(vals)) == len(vals):
+        # a NULL element is the JSON value null, which a unique enum of
+        # scalars does not hold (a NULL column is an absent property)
+        checks.append(Required(column="x"))
+    for c in checks:
+        c.validate_config()
+    return compile_row_predicate(AllOf(checks=tuple(checks)))
 
 
 def _lift_column(col: str, sub: dict, root: dict, visiting: frozenset) -> list[RowCheck]:

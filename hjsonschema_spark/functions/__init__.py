@@ -2,7 +2,6 @@
 no Python in the hot path."""
 
 from hjsonschema_spark.functions.columns import (  # noqa: F401
-    char_shingles,
     cosine_similarity,
     doc_fingerprint,
     fan_out,

@@ -239,14 +239,6 @@ def exploded_shingles(
     )
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct k-character shingles of the normalized text."""
-    s = normalize_text(col)
-    n = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(F.lit(1), n - (k - 1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(s, i, k)))
-
-
 def hyperplane_band_sketches(
     vec: Column,
     dim: int,

@@ -15,14 +15,13 @@ Scale notes (the part that matters at 100 TB):
 - ``ngram_jaccard_pairs``: exact verification path (explode-join on
   shared shingles). Quadratic in bucket size — use on candidates or
   small corpora; it is the correctness oracle for LSH.
-- ``simhash_signatures``: vectorized Arrow UDF (numpy bit-twiddling),
-  near-dups via banded hamming join.
+- ``simhash_signatures_columnar``: 60-bit SimHash as pure column
+  expressions (md5 token hashes, per-bit sums, no UDF); near-dups via
+  a banded hamming join.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -246,60 +245,19 @@ def ngram_jaccard_pairs(
     return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", seed: int = 42
-) -> DataFrame:
-    """64-bit SimHash per doc via a vectorized Arrow UDF (numpy) —
-    Python is unavoidable for the 64-way bit accumulation, so it runs
-    Arrow-batched, never per-row."""
-    df = fan_out(df, by=(id_col,))
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _simhash(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            toks = [w for w in t.lower().split() if w]
-            if not toks:
-                continue
-            hs = np.array([_hash64(w, seed) for w in toks], dtype=np.uint64)
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(np.int64)
-            acc = (2 * bits - 1).sum(axis=0)
-            out[i] = np.int64(((acc > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum().astype(np.uint64).view(np.int64))
-        return pd.Series(out)
-
-    return df.select(F.col(id_col), _simhash(F.col(text_col)).alias("simhash"))
-
-
-def _hash64(token: str, seed: int) -> int:
-    """Deterministic 64-bit token hash (FNV-1a variant, seed-mixed)."""
-    h = (0xCBF29CE484222325 ^ (seed * 0x9E3779B97F4A7C15)) & 0xFFFFFFFFFFFFFFFF
-    for ch in token.encode("utf-8"):
-        h ^= ch
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
 def simhash_signatures_columnar(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_bits: int = 60
 ) -> DataFrame:
     """SimHash as PURE column expressions — zero UDF. The per-bit ±1
     accumulation becomes n_bits small integer sums: explode tokens,
     hash each once (``portable_hash60``), sum (2*bit-1) per bit
-    position, rebuild the signature from the sums' signs.
+    position, rebuild the signature from the sums' signs. It stays in
+    whole-stage codegen with map-side partial aggregation, and the
+    md5-based hash is computable in DuckDB, so the full near-dup
+    pipeline has a driver SQL oracle.
 
-    Two reasons this variant exists alongside the Arrow-UDF one:
-    - scale: it stays in whole-stage codegen with map-side partial
-      aggregation — no Arrow serialization of every document text;
-    - verifiability: the md5-based hash is computable in DuckDB, so
-      the full near-dup pipeline gets a driver SQL oracle (the UDF
-      path's FNV hash has no SQL twin).
-
-    Docs with zero tokens get signature 0 (the UDF path's convention).
-    Default 60 bits = what fits portable_hash60; hamming semantics are
-    unchanged, thresholds comparable to the 64-bit variant."""
+    Docs with zero tokens get signature 0. Default 60 bits = what fits
+    portable_hash60."""
     from hjsonschema_spark.functions import portable_hash60
 
     df = fan_out(df, by=(id_col,))
@@ -311,7 +269,7 @@ def simhash_signatures_columnar(
     ).select(F.col(id_col), portable_hash60(F.col("_tok")).alias("_h"))
     h = F.col("_h")
     # NULL token (empty doc) falls to otherwise(-1) in every bit: all
-    # sums negative => all bits 0 => signature 0, matching the UDF path
+    # sums negative => all bits 0 => signature 0
     sums = [
         F.sum(
             F.when(F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -333,30 +291,22 @@ def simhash_near_duplicates(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    seed: int = 42,
     n_bands: int | None = None,
-    engine: str = "columnar",
 ) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming. Banding on
-    n_bands equal bit-chunks: pairs within distance n_bands-1 share at
-    least one exact chunk (pigeonhole), so candidates come from an
-    equi-join. n_bands defaults to max_hamming+1 (full recall); more
-    bands = more candidates = slower but never less recall.
-
-    engine: 'columnar' (default — 60-bit pure-column md5 signatures,
-    whole-stage codegen + map-side combine, no Arrow serialization of
-    the text; oracle-checkable, see ``simhash_signatures_columnar``)
-    or 'udf' (64-bit FNV Arrow-UDF signatures, opt-in)."""
-    sig_bits = 60 if engine == "columnar" else 64
+    """Near-dup pairs with hamming(simhash) <= max_hamming over the
+    60-bit ``simhash_signatures_columnar``. Banding on n_bands equal
+    bit-chunks: pairs within distance n_bands-1 share at least one
+    exact chunk (pigeonhole), so candidates come from an equi-join.
+    n_bands defaults to the smallest divisor of 60 above max_hamming
+    (full recall); more bands = more candidates = slower but never
+    less recall."""
+    sig_bits = 60
     if n_bands is None:
         n_bands = next(b for b in range(max_hamming + 1, sig_bits + 1) if sig_bits % b == 0)
     assert sig_bits % n_bands == 0, f"n_bands must divide {sig_bits}"
     width = sig_bits // n_bands
     mask = (1 << width) - 1
-    if engine == "columnar":
-        sigs = simhash_signatures_columnar(df, text_col, id_col, sig_bits)
-    else:
-        sigs = simhash_signatures(df, text_col, id_col, seed)
+    sigs = simhash_signatures_columnar(df, text_col, id_col, sig_bits)
     chunks = F.array(
         *[
             F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))

@@ -18,6 +18,8 @@ from typing import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hjsonschema_spark.sqltext import col_ref, lit
+
 
 # -- p-value math (public-domain standard algorithms) -----------------------
 
@@ -188,7 +190,11 @@ def chi2_two_sample_df(df: DataFrame, col: str, group_col: str) -> DataFrame:
     row_total = F.col("o_a") + F.col("o_b")
     e_a = row_total * F.col("n_a") / n
     e_b = row_total * F.col("n_b") / n
-    contrib = (F.col("o_a") - e_a) ** 2 / e_a + (F.col("o_b") - e_b) ** 2 / e_b
+    # try_divide: a group with no rows has zero expected counts, which
+    # makes the statistic NULL instead of raising under ANSI mode
+    contrib = F.try_divide((F.col("o_a") - e_a) ** 2, e_a) + F.try_divide(
+        (F.col("o_b") - e_b) ** 2, e_b
+    )
     return cont.select(contrib.alias("contrib")).agg(
         F.round(F.sum("contrib"), 6).alias("statistic"),
         (F.count(F.lit(1)) - 1).cast("long").alias("dof"),
@@ -230,37 +236,45 @@ def psi_df(df: DataFrame, col: str, group_col: str, smoothing: float = 0.5) -> D
     )
 
 
+def ecdf_gap(tagged: DataFrame, buckets: int) -> DataFrame:
+    """The bucketed-ECDF gap of a tagged sample: one row (_d, _n1, _n2).
+
+    ``tagged`` has a DOUBLE ``x`` (non-NULL) and an INT ``_g``: 1 for
+    the first sample, 0 for the second, NULL for a row that sets the
+    [lo, hi] bounds but is counted on neither side. One lazy 1-row
+    bounds agg is broadcast into one width-bucketed groupBy (the only
+    passes over the data; partial+final agg, spill-safe), and
+    cumulative-sum windows over O(buckets) rows give D = max |F1 - F2|.
+    try_divide keeps the degenerate inputs defined: a single-valued
+    range puts every row in bucket 0 (D = 0), and an empty side gives
+    a NULL D with its n = 0."""
+    bounds = tagged.selectExpr("min(x) AS _lo", "max(x) AS _hi")
+    t = tagged.crossJoin(F.broadcast(bounds))
+    width = f"((_hi - _lo) / {lit(float(buckets))})"
+    # try_divide: degenerate range (hi == lo) => NULL => bucket 0
+    bkt = f"coalesce(least({buckets - 1}, CAST(floor(try_divide(x - _lo, {width})) AS INT)), 0)"
+    hist = t.groupBy(F.expr(f"{bkt} AS _b")).agg(
+        F.expr("sum(_g) AS _na"), F.expr("sum(1 - _g) AS _nb")
+    )
+    cum = "ORDER BY _b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    return hist.selectExpr(
+        f"try_divide(sum(_na) OVER ({cum}), sum(_na) OVER ()) AS _ca",
+        f"try_divide(sum(_nb) OVER ({cum}), sum(_nb) OVER ()) AS _cb",
+        "sum(_na) OVER () AS _n1",
+        "sum(_nb) OVER () AS _n2",
+    ).selectExpr(
+        "max(abs(_ca - _cb)) AS _d", "coalesce(max(_n1), 0) AS _n1", "coalesce(max(_n2), 0) AS _n2"
+    )
+
+
 def ks_two_sample_df(df: DataFrame, col: str, group_col: str, buckets: int = 1024) -> DataFrame:
     """Bucketed-ECDF KS statistic between the two groups named by
-    boolean `group_col`. One row: (d_stat, n_a, n_b). Bucket counts are
-    one distributed agg; the cumulative max runs over `buckets` rows."""
-    from pyspark.sql import Window
-
-    bounds = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
-    b = df.crossJoin(F.broadcast(bounds))
-    bucket = F.least(
-        F.lit(buckets - 1),
-        F.floor((F.col(col) - F.col("lo")) / ((F.col("hi") - F.col("lo")) / buckets)).cast("int"),
+    boolean `group_col` (``ecdf_gap``; a NULL group only widens the
+    bounds). One row: (d_stat, n_a, n_b); an empty group gives a NULL
+    d_stat."""
+    tagged = df.na.drop(subset=[col]).selectExpr(
+        f"CAST({col_ref(col)} AS DOUBLE) AS x", f"CAST({col_ref(group_col)} AS INT) AS _g"
     )
-    counts = (
-        b.na.drop(subset=[col])
-        .groupBy(bucket.alias("bucket"))
-        .agg(
-            F.sum(F.col(group_col).cast("long")).alias("c_a"),
-            F.sum((~F.col(group_col)).cast("long")).alias("c_b"),
-        )
-    )
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy()
-    ecdf = (
-        counts.withColumn("cum_a", F.sum("c_a").over(w))
-        .withColumn("cum_b", F.sum("c_b").over(w))
-        .withColumn("n_a", F.sum("c_a").over(wt))
-        .withColumn("n_b", F.sum("c_b").over(wt))
-    )
-    diff = F.abs(F.col("cum_a") / F.col("n_a") - F.col("cum_b") / F.col("n_b"))
-    return ecdf.agg(
-        F.round(F.max(diff), 6).alias("d_stat"),
-        F.max("n_a").cast("long").alias("n_a"),
-        F.max("n_b").cast("long").alias("n_b"),
+    return ecdf_gap(tagged, buckets).selectExpr(
+        "round(_d, 6) AS d_stat", "CAST(_n1 AS BIGINT) AS n_a", "CAST(_n2 AS BIGINT) AS n_b"
     )

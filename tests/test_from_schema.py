@@ -228,17 +228,23 @@ def test_pointer_escapes_and_array_indexing():
     assert by_col["p"].min == 1 and by_col["q"].max == 9 and by_col["r"].min == 5
 
 
-def test_sql_quote_escaping():
-    """Enum values and patterns with single quotes must not break the
-    generated element-predicate SQL."""
-    from hjsonschema_spark.checks.from_schema import _element_predicate, _sql_quote
+def test_sql_quote_escaping(spark):
+    """Enum values and patterns with single quotes keep their meaning in
+    the element predicate: run on Spark, not compared as SQL text."""
+    from hjsonschema_spark.checks import run_suite
 
-    assert _sql_quote("o'brien") == "'o''brien'"
-    pred = _element_predicate(
-        {"enum": ["o'brien", "plain"], "pattern": "^[a-z']+$"}, {}, frozenset()
+    suite = suite_from_schema(
+        {"type": "object",
+         "properties": {
+             "k": {"type": "integer"},
+             "a": {"items": {"enum": ["o'brien", "plain"], "pattern": "^[a-z']+$"}},
+         }},
+        name="quotes", key_columns=("k",),
     )
-    assert "x IN ('o''brien', 'plain')" in pred
-    assert "x RLIKE '^[a-z'']+$'" in pred
+    rows = [(1, ["o'brien", "plain"]), (2, ["o''brien"]), (3, ["obrien"]), (4, ["O'brien"])]
+    df = spark.createDataFrame(rows, "k long, a array<string>")
+    failed = {r["k"] for r in run_suite(df, suite).violations.collect()}
+    assert failed == {2, 3, 4}
 
 
 def test_items_unsupported_keyword_raises():

@@ -213,38 +213,17 @@ def test_simhash_columnar(spark, docs):
     assert all(0 <= s < (1 << 60) for s in sigs.values())
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_near_duplicates(
-            docs, max_hamming=8, engine="columnar"
-        ).collect()
+        for r in dedup.simhash_near_duplicates(docs, max_hamming=8).collect()
     }
     assert pairs[(1, 2)] == 0 and pairs[(1, 8)] == 0
     assert (1, 3) in pairs  # one-word difference => small hamming
-    # zero-token docs get signature 0, matching the UDF path's convention
+    # zero-token docs get signature 0
     empty = spark.createDataFrame([(1, ""), (2, "!!!")], "doc_id long, text string")
     es = {
         r["doc_id"]: r["simhash"]
         for r in dedup.simhash_signatures_columnar(empty).collect()
     }
     assert es == {1: 0, 2: 0}
-
-
-def test_simhash_near_duplicates(spark, docs):
-    # the opt-in Arrow-UDF engine (default is columnar since round 3)
-    sigs = {r["doc_id"]: r["simhash"] for r in dedup.simhash_signatures(docs).collect()}
-    assert sigs[1] == sigs[2] == sigs[8]  # same tokens => same simhash
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_near_duplicates(docs, max_hamming=8, engine="udf").collect()
-    }
-    assert pairs[(1, 2)] == 0 and pairs[(1, 8)] == 0
-    assert (1, 3) in pairs  # one-word difference => small hamming
-
-    # default engine is columnar — same qualitative pairs, no Arrow UDF
-    dpairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_near_duplicates(docs, max_hamming=8).collect()
-    }
-    assert dpairs[(1, 2)] == 0 and dpairs[(1, 8)] == 0
 
 
 @pytest.fixture(scope="module")
@@ -395,6 +374,29 @@ def test_ks_drift(spark):
     assert not same["drifted"]
     moved = drift.ks_two_sample(clean, "len", drifted, "len")
     assert moved["drifted"] and moved["statistic"] > same["statistic"]
+
+
+_DRIFT_DDL = "value double, cat string, grp boolean"
+
+
+def test_ks_two_sample_df_degenerate_inputs(spark):
+    """Under ANSI mode: a single-valued column gives D = 0, a group with
+    no rows a NULL D, and a NULL group widens the bounds but is counted
+    on neither side."""
+    flat = spark.createDataFrame([(1.0, "a", True), (1.0, "a", True), (1.0, "a", False)], _DRIFT_DDL)
+    assert tuple(drift.ks_two_sample_df(flat, "value", "grp").first()) == (0.0, 2, 1)
+    one = spark.createDataFrame([(1.0, "a", True), (2.0, "b", True)], _DRIFT_DDL)
+    assert tuple(drift.ks_two_sample_df(one, "value", "grp").first()) == (None, 2, 0)
+    unknown = spark.createDataFrame(
+        [(0.0, "a", True), (1.0, "a", False), (10.0, "a", None)], _DRIFT_DDL
+    )
+    assert tuple(drift.ks_two_sample_df(unknown, "value", "grp").first()) == (1.0, 1, 1)
+
+
+def test_chi2_two_sample_df_one_group(spark):
+    """A group with no rows gives a NULL statistic under ANSI mode."""
+    one = spark.createDataFrame([(1.0, "a", True), (2.0, "b", True)], _DRIFT_DDL)
+    assert tuple(drift.chi2_two_sample_df(one, "cat", "grp").first()) == (None, 1)
 
 
 def test_histogram_is_bounded(spark, monkeypatch):

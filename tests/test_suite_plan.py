@@ -177,6 +177,13 @@ def test_plan_does_not_change_the_callers_registry():
     assert set(reg.suites) == {"base"}
 
 
+def test_the_suite_passed_is_planned_over_a_same_named_registry_entry():
+    v1 = CheckSuite(name="t", key_columns=KEYS, checks=(Required(column="role"),))
+    v2 = CheckSuite(name="t", key_columns=KEYS, checks=(Bounds(column="score", min=0),))
+    plan = plan_suite(v2, SCHEMA, SuiteRegistry().add(v1))
+    assert plan.row_checks == (Bounds(column="score", min=0),)
+
+
 # --- Ref resolution: a $ref is one schema, so one branch (Ref.hs) ----------
 
 INNER = CheckSuite(name="inner", key_columns=KEYS, checks=(Required(column="a"), Required(column="b")))
